@@ -506,10 +506,6 @@ def decontaminate(
 # PII detection / redaction
 # ---------------------------------------------------------------------------
 
-# Patterns are written to the COMMON subset of Java regex (Spark) and
-# RE2 (DuckDB oracle): no lookaround, no backreferences, \b and {m,n}
-# only.  Order matters for redaction: longer/more-specific first so a
-# card number is not half-eaten by the phone pattern.
 PII_PATTERNS: Dict[str, str] = {
     "credit_card": r"\b(?:[0-9][ -]?){12,18}[0-9]\b",
     # local part: POSSESSIVE and RFC-5321-bounded ({1,64}+).  The naive
@@ -535,6 +531,16 @@ PII_PATTERNS: Dict[str, str] = {
     ),
     "ipv4": r"\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b",
 }
+"""PII kind -> pattern, in **Java regex** syntax: the patterns are
+evaluated by the JVM's ``regexp_*`` functions (``regexp_count``,
+``regexp_extract_all``, ``regexp_replace``), never by Python's ``re``.
+The email pattern's possessive quantifier (``{1,64}+``) needs Python >=
+3.11 ``re`` and is not RE2; a consumer compiling these outside the JVM
+must drop the possessive ``+`` (the DuckDB oracle in ``__spark_entry__``
+does), which changes no match.  Beyond that they stay inside the common
+subset of Java regex and RE2: no lookaround, no backreferences, ``\b``
+and ``{m,n}`` only.  Order matters for redaction: longer/more-specific
+first so a card number is not half-eaten by the phone pattern."""
 
 # Required-literal prefilters: a kind whose pattern demands a specific
 # character gets a cheap `contains` gate so non-candidate rows never

@@ -15,10 +15,18 @@ Physical plan of ``validate(df, suite)``:
   Phase B: window/uniqueness expectations (each needs a shuffle by key;
     two-phase hash aggregation, see operators/window_ops.py).
   Phase C: job expectations (user SQL, referential joins, drift).
-  Phase D: violation samples — only for FAILING map expectations and only
-    when result_format > BOOLEAN_ONLY: the condition-annotated projection
-    is computed once, persisted, and each failing expectation takes a
-    ``limit(k)`` slice (limits push into the scan).
+  Phase D: violation samples, only when result_format > BOOLEAN_ONLY.
+    FAILING map expectations: the condition-annotated projection is
+    computed once, persisted, and each failing expectation takes a
+    ``limit(k)`` slice (limits push into the scan).  Shared-window
+    groups sample inside their phase-B job (``_fused_window_group``):
+    a JVM top-k per member keeps the k smallest violating rows by the
+    group's sample columns (deterministic), planned as
+    ``WindowGroupLimit`` Partial before the member exchange and Final
+    after it.  COMPLETE's cap (``max_complete_collect``) is above
+    ``spark.sql.optimizer.windowGroupLimitThreshold``, so Spark plans
+    only the Final limit: every flagged row crosses the member
+    exchange, still in that one job.
 
 Driver-side job orchestration: the phases above are *independent Spark
 jobs* with a small dependency DAG (samples and aggregate followups need
@@ -52,7 +60,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any, Dict, List, Optional, Tuple, Union
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -149,33 +157,6 @@ class _PlannedItem:
     considered_alias: Optional[str] = None
     unexpected_alias: Optional[str] = None
     agg_aliases: Dict[str, str] = field(default_factory=dict)
-
-
-def _per_partition_flag_caps(flag_names: List[str], limit: int):
-    """mapInPandas generator factory: emit at most ``limit`` rows per
-    flag column per PARTITION (the iterator covers one task's partition;
-    counters persist across its Arrow batches).  Input is pre-filtered to
-    violating rows, so Arrow only ever carries the (rare) violations."""
-
-    def take(iterator):
-        taken = {fn: 0 for fn in flag_names}
-        for pdf in iterator:
-            if all(t >= limit for t in taken.values()):
-                break
-            keep = None
-            for fn in flag_names:
-                room = limit - taken[fn]
-                if room <= 0:
-                    continue
-                hits = pdf[fn].fillna(False).astype(bool)
-                idx = pdf.index[hits][:room]
-                taken[fn] += len(idx)
-                sel = pdf.index.isin(idx)
-                keep = sel if keep is None else (keep | sel)
-            if keep is not None and keep.any():
-                yield pdf[keep]
-
-    return take
 
 
 def plan_window_groups(
@@ -863,17 +844,25 @@ class SuiteValidator:
         time (round-3 phase_profile: the recompute was ~45 s at 1x1 /
         ~12 s at 4x1 on the 24.69M-turn corpus).
 
-        Sample bounding is exact rather than oversampled: the
-        ``mapInPandas`` per-partition caps emit at most ``limit`` rows
-        per member per task, and a small repartition funnel (16 -> 1
-        partitions, re-capping at each level) bounds the driver collect
-        to ``limit * len(members)`` at ANY shuffle-partition count.
-        Each cap level preserves min(limit, violations) rows per member,
-        so a member can never be starved by a denser member — the
-        round-3 starvation re-pool loop is structurally unnecessary.
-        COMPLETE formats pool too (limit = max_complete_collect): with
-        exact per-member caps the collect is the same size the
-        dedicated per-member jobs would fetch, in one job instead of N.
+        Sample bounding is a JVM top-k per member, in the same job: each
+        flagged row explodes into the indices of the poolable members
+        whose flag it carries, and ``row_number() over (partition by
+        member order by <sample columns>) <= limit`` keeps each member's
+        ``limit`` smallest rows by the group's sample columns.  Spark
+        plans that filter as ``WindowGroupLimit`` — a ``Partial`` node
+        before the exchange and a ``Final`` one after it — so the
+        shuffle carries at most ``limit`` rows per member per task and
+        the driver collects at most ``limit * len(members)``.  No Python
+        worker starts, a member can never be starved by a denser one,
+        and the sample is deterministic: the same rows at any shuffle
+        partition count or job concurrency.
+
+        Spark infers the partial limit only up to
+        ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000).
+        Above it — COMPLETE's ``max_complete_collect`` — only the Final
+        limit remains: every flagged row crosses the member exchange,
+        which is still less than the full-table window shuffle one
+        dedicated sample job per failing member would pay.
 
         Returns False — caller falls back to the count-only agg and
         dedicated sample jobs — if the fused machinery fails for any
@@ -891,8 +880,8 @@ class SuiteValidator:
                 scoped = scoped.filter(domain_gate(members[0].domain))
             flag_names = [f"__gx_pf{i}" for i in range(len(members))]
             poolable = [
-                (fn, m)
-                for fn, m in zip(flag_names, members)
+                (i, fn, m)
+                for i, (fn, m) in enumerate(zip(flag_names, members))
                 if m.compiled.pool_sample is not None
                 and m.compiled.sample_columns is not None
             ]
@@ -901,7 +890,7 @@ class SuiteValidator:
                 # job with less machinery
                 return False
             cols: List[str] = []
-            for _, m in poolable:
+            for _, _, m in poolable:
                 for c in m.compiled.sample_columns(index_cols):
                     if c not in cols:
                         cols.append(c)
@@ -921,30 +910,40 @@ class SuiteValidator:
                     for fn in flag_names
                 ],
             )
-            pf = [fn for fn, _ in poolable]
-            any_flag = F.col(pf[0])
-            for fn in pf[1:]:
+            any_flag = F.col(poolable[0][1])
+            for _, fn, _ in poolable[1:]:
                 any_flag = any_flag | F.col(fn)
-            # Arrow only ever carries the (rare) violating rows; every
-            # funnel stage keeps at most ``limit`` rows per member per
-            # partition, so each repartition shuffles bounded data and
-            # the final single partition emits <= limit * len(pf) rows
-            capped = proj.filter(any_flag).mapInPandas(
-                _per_partition_flag_caps(pf, limit), proj.schema
-            )
-            for width in (16, 1):
-                capped = capped.repartition(width).mapInPandas(
-                    _per_partition_flag_caps(pf, limit), proj.schema
+            # one output row per (flagged row, member whose flag it
+            # carries); the member index partitions the top-k window
+            member = F.explode(
+                F.filter(
+                    F.array(
+                        *[F.when(F.col(fn), F.lit(i)) for i, fn, _ in poolable]
+                    ),
+                    lambda x: x.isNotNull(),
                 )
-            rows = [r.asDict() for r in capped.collect()]
-            vals = obs.get  # complete: the collect consumed every stage
+            ).alias("__gx_m")
+            rank = F.row_number().over(
+                Window.partitionBy("__gx_m").orderBy(*cols)
+            )
+            top = (
+                proj.filter(any_flag)
+                .select(*cols, member)
+                .select("*", rank.alias("__gx_rn"))
+                .filter(F.col("__gx_rn") <= limit)
+            )
+            rows = sorted(
+                (r.asDict() for r in top.collect()),
+                key=lambda r: (r["__gx_m"], r["__gx_rn"]),
+            )
+            vals = obs.get  # complete: the map-side sort consumed every row
             for fn, m in zip(flag_names, members):
                 metrics[f"window_unexpected::{id(m)}"] = int(vals[fn] or 0)
-            for fn, m in poolable:
+            for i, _, m in poolable:
                 if not metrics[f"window_unexpected::{id(m)}"]:
                     continue  # passing members need no sample
                 try:
-                    mine = [r for r in rows if r[fn]][:limit]
+                    mine = [r for r in rows if r["__gx_m"] == i]
                     prefetched[id(m)] = (
                         "wsample",
                         "ok",

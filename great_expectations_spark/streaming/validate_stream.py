@@ -429,6 +429,9 @@ def windowed_categorical_drift(
     )
 
 
+_EPHEMERAL_RUN = "ephemeral-"
+
+
 def _stable_run_id(checkpoint_location) -> str:
     """Run id for the near-dedup band store.  It must be STABLE across
     process restarts of the SAME query: after a crash the restarted
@@ -438,7 +441,8 @@ def _stable_run_id(checkpoint_location) -> str:
     an earlier run's rows and silently drop the whole replayed batch as
     duplicates.  The checkpoint location identifies the query (it also
     owns the epoch sequence); only an ephemeral query with no
-    checkpoint gets a random id."""
+    checkpoint gets a random id, marked ``_EPHEMERAL_RUN`` because it
+    can never be restarted (so never replays an epoch)."""
     import hashlib
     import uuid
 
@@ -446,7 +450,7 @@ def _stable_run_id(checkpoint_location) -> str:
         return hashlib.md5(
             str(checkpoint_location).encode("utf-8")
         ).hexdigest()
-    return uuid.uuid4().hex
+    return _EPHEMERAL_RUN + uuid.uuid4().hex
 
 
 def compact_band_state(
@@ -463,6 +467,19 @@ def compact_band_state(
     every future run (``_visible_band_state`` only hides the CURRENT
     run's same-or-later epochs), so verdicts are unchanged.
 
+    Each checkpointed run's LAST epoch keeps its own ``(run_id, epoch)``
+    lineage: a query that crashed after writing that epoch's keys but
+    before its commit replays the epoch on restart, and the replay must
+    still see those keys as its own (hidden) rather than as prior
+    registrations — folded, they would drop the whole replayed batch.
+    Runs without a checkpoint never replay, so they fold entirely.
+    The kept epoch is never folded, not even once its run committed it
+    (the store cannot see commits), so the store always holds one
+    unfolded epoch per checkpointed run beside the compacted table.
+    Stores written before ephemeral run ids carried the
+    ``_EPHEMERAL_RUN`` prefix hold checkpoint-less runs under plain
+    uuid-hex ids; their last epochs stay unfolded the same way.
+
     Run BETWEEN streaming runs, not while a query is writing: the swap
     is staging-dir + directory rename, which is not atomic against a
     concurrent epoch append (the streaming query itself is crash-safe;
@@ -477,7 +494,9 @@ def compact_band_state(
     the dedup filter silently forget its history (the reader refuses to
     start on a half-swapped store; see ``streaming_near_dedup``).
 
-    Returns ``{"keys": n, "files_before": a, "files_after": b}``."""
+    Returns ``{"keys": n, "files_before": a, "files_after": b}``, where
+    ``n`` counts the rows written: the distinct keys plus the rows of the
+    kept epochs, so a key can count more than once."""
     import math
 
     jvm = spark._jvm
@@ -507,23 +526,33 @@ def compact_band_state(
         return n
 
     files_before = _count_parquet_files(hpath)
-    distinct = (
-        spark.read.parquet(state_path)
-        .select("band", "bucket")
+    state = spark.read.parquet(state_path)
+    last = state.groupBy("run_id").agg(F.max("epoch").alias("__last"))
+    keep = (F.col("epoch") == F.col("__last")) & ~F.col("run_id").startswith(
+        _EPHEMERAL_RUN
+    )
+    folded = (
+        state.join(F.broadcast(last), "run_id")
+        .select(
+            "band",
+            "bucket",
+            F.when(keep, F.col("run_id"))
+            .otherwise(F.lit("__compacted__"))
+            .alias("run_id"),
+            F.when(keep, F.col("epoch")).otherwise(F.lit(-1)).alias("epoch"),
+        )
         .distinct()
         .persist()
     )
-    n = distinct.count()
+    n = folded.count()
     staging = state_path.rstrip("/") + ".__compacting__"
     (
-        distinct.withColumn("run_id", F.lit("__compacted__"))
-        .withColumn("epoch", F.lit(-1))
-        .repartition(max(1, math.ceil(n / keys_per_file)))
+        folded.repartition(max(1, math.ceil(n / keys_per_file)))
         .sortWithinPartitions("band", "bucket")
         .write.mode("overwrite")
         .parquet(staging)
     )
-    distinct.unpersist()
+    folded.unpersist()
     spath = jvm.org.apache.hadoop.fs.Path(staging)
     # swap: old -> backup, staging -> live, then GC the backup.  Every
     # rename return value is CHECKED (HDFS-style rename reports failure

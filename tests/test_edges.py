@@ -721,3 +721,79 @@ def test_band_state_compaction_crash_recovery(spark, tmp_path):
     assert stats["keys"] == n0
     assert os.path.exists(state)
     assert not os.path.exists(state + ".__precompact__")
+
+
+def test_band_state_compaction_keeps_crashed_epoch_replayable(
+    spark, tmp_path
+):
+    """A query that crashed after writing epoch 0's band keys but before
+    its commit, then a compaction, then the restart: the replayed epoch
+    must still see its own keys as its own (they keep their lineage
+    through the fold) and keep its rows, while history from other runs
+    folds to the compacted lineage and stays in force."""
+    from pyspark.sql import functions as F
+
+    from great_expectations_spark.functions.dedup import minhash_band_keys
+    from great_expectations_spark.streaming.validate_stream import (
+        _stable_run_id,
+        compact_band_state,
+        streaming_near_dedup,
+    )
+
+    def words(tag):
+        return " ".join(f"{tag}{j}" for j in range(30))
+
+    ckpt = str(tmp_path / "ckpt")
+    state = str(tmp_path / "state")
+    src = tmp_path / "src"
+    src.mkdir()
+    schema = "doc_id long, ord long, text string"
+
+    def band_rows(df, run_id, epoch):
+        return minhash_band_keys(
+            df, "doc_id", text_column="text", extra_columns=["ord"]
+        ).select("band", "bucket").distinct().select(
+            "band", "bucket", F.lit(run_id).alias("run_id"),
+            F.lit(epoch).alias("epoch"),
+        )
+
+    # an earlier run registered "old" over two epochs
+    old = spark.createDataFrame([(7, 1, words("old"))], schema)
+    band_rows(old, "earlier-run", 0).write.parquet(state)
+    band_rows(old, "earlier-run", 1).write.mode("append").parquet(state)
+    # the crashed attempt wrote epoch 0's keys for its batch: a new
+    # document and a near-duplicate of "old"
+    spark.createDataFrame(
+        [(1, 10, words("new")), (2, 11, words("old"))], schema
+    ).coalesce(1).write.parquet(str(src / "b0"))
+    batch = spark.read.parquet(str(src / "b0"))
+    band_rows(batch, _stable_run_id(ckpt), 0).write.mode("append").parquet(
+        state
+    )
+
+    compact_band_state(spark, state)
+    lineage = {
+        (r["run_id"], r["epoch"])
+        for r in spark.read.parquet(state)
+        .select("run_id", "epoch").distinct().collect()
+    }
+    assert lineage == {
+        ("__compacted__", -1),
+        ("earlier-run", 1),
+        (_stable_run_id(ckpt), 0),
+    }
+
+    survivors = {}
+    q = streaming_near_dedup(
+        spark.readStream.schema(schema).parquet(str(src) + "/*"),
+        "doc_id", "ord", column="text", state_path=state,
+        on_survivors=lambda e, df: survivors.update(
+            {r["doc_id"]: e for r in df.collect()}
+        ),
+        checkpoint_location=ckpt,
+        trigger_once=True,
+    )
+    q.awaitTermination(120)
+    # the replay keeps its new document; the near-duplicate of the
+    # earlier run's document still drops
+    assert set(survivors) == {1}

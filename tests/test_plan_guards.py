@@ -228,3 +228,69 @@ def test_image_near_dup_plan_banded_not_all_pairs(spark):
     assert "BatchEvalPython" not in plan
     # the candidate join is an equi-join on (table, key)
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
+
+
+# --- fused window violation samples ----------------------------------------
+
+
+@pytest.fixture(scope="module")
+def transcripts(spark):
+    from great_expectations_spark.datagen.transcripts import (
+        generate_transcripts,
+    )
+
+    return generate_transcripts(
+        spark, n_conversations=300, hot_conversations=1, hot_turns=600,
+        partitions=4,
+    )
+
+
+def test_window_samples_plan_is_jvm_top_k(transcripts, monkeypatch):
+    """The fused window job caps each member's violation sample with a
+    JVM top-k: ``WindowGroupLimit`` Partial before the exchange (at most
+    ``limit`` rows per member per task cross the shuffle) and Final
+    after it.  No plan on the validate path has an Arrow/Python stage,
+    and with ``mapInPandas`` unusable ``validate`` still succeeds with
+    every window sample served — no Python worker starts."""
+    from great_expectations_spark.datagen.transcripts import default_suite
+    from great_expectations_spark.plans.planner import SuiteValidator
+
+    plans = []
+    refused = []
+    cls = type(transcripts)
+    collect = cls.collect
+
+    def spy(self):
+        plans.append(_plan(self))
+        return collect(self)
+
+    def refuse(self, *args, **kwargs):
+        refused.append(args)
+        raise AssertionError("mapInPandas on the validate path")
+
+    monkeypatch.setattr(cls, "collect", spy)
+    monkeypatch.setattr(cls, "mapInPandas", refuse)
+    res = SuiteValidator().validate(transcripts, default_suite(), "SUMMARY")
+
+    assert not refused
+    assert not any(
+        r.exception_info and r.exception_info.get("raised_exception")
+        for r in res.results
+    )
+    for plan in plans:
+        _assert_jvm_only(plan)
+    topk = [p for p in plans if "WindowGroupLimit" in p]
+    assert len(topk) == 1, plans
+    assert "Partial" in topk[0] and "Final" in topk[0], topk[0]
+    # the partial limit sits below the exchange that groups by member
+    partial = topk[0].index("Partial")
+    assert topk[0].rfind("Exchange hashpartitioning", 0, partial) != -1
+    uniq = next(
+        r for r in res.results
+        if r.expectation_config["expectation_type"]
+        == "expect_compound_columns_to_be_unique"
+    )
+    assert uniq.result["unexpected_count"] > 0
+    assert len(uniq.result["partial_unexpected_list"]) == min(
+        20, uniq.result["unexpected_count"]
+    )

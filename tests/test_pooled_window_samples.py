@@ -183,8 +183,8 @@ def test_partial_cap_respected_per_member(spark, convs, window_suite):
 def test_complete_format_uses_fused_pool(
     spark, convs, window_suite, monkeypatch
 ):
-    # COMPLETE pools too now (exact per-member caps make the collect the
-    # same size as the dedicated jobs'): full lists, one fused job
+    # COMPLETE pools too (the top-k keeps only its Final limit above
+    # Spark's windowGroupLimitThreshold): full lists, one fused job
     calls = []
     _spy_fused(monkeypatch, calls)
     res = SuiteValidator(job_concurrency=1).validate(
@@ -192,3 +192,76 @@ def test_complete_format_uses_fused_pool(
     )
     assert calls == [{"members": 3, "fused": True, "served": 3}]
     _assert_window_contents(res, list_key="unexpected_list")
+
+
+@pytest.fixture(scope="module")
+def spread(spark):
+    # 40 conversations of 6 turns over 4 input partitions; a ts regression
+    # at turn 3 of every 4th conversation (10 violations) and one
+    # contiguity gap (conversation c01 lacks turn 2)
+    rows = []
+    for c in range(40):
+        cid = f"c{c:02d}"
+        for t in range(6):
+            if c == 1 and t == 2:
+                continue
+            ts = c * 100 + t * 10
+            if c % 4 == 0 and t == 3:
+                ts -= 15
+            rows.append((cid, t, ts))
+    return spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, ts long"
+    ).repartition(4)
+
+
+def test_cap_is_exact_and_deterministic_across_partitions(spark, spread):
+    suite = (
+        ExpectationSuite("spread")
+        .add(
+            "expect_column_values_to_be_increasing",
+            column="ts",
+            partition_by="conv_id",
+            order_by="turn_idx",
+        )
+        .add(
+            "expect_sequence_to_be_contiguous",
+            group_column="conv_id",
+            index_column="turn_idx",
+        )
+    )
+    cap = 3
+    rf = {"result_format": "SUMMARY", "partial_unexpected_count": cap}
+    assert spread.rdd.getNumPartitions() >= 4
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    seen = []
+    try:
+        for parts in ("1", "4"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            for jc in (1, 8):
+                by = _by_type(
+                    SuiteValidator(job_concurrency=jc).validate(
+                        spread, suite, result_format=rf
+                    )
+                )
+                inc = by["expect_column_values_to_be_increasing"].result
+                seq = by["expect_sequence_to_be_contiguous"].result
+                assert inc["unexpected_count"] == 10
+                assert seq["unexpected_count"] == 1
+                for r in (inc, seq):
+                    assert len(r["partial_unexpected_list"]) == min(
+                        cap, r["unexpected_count"]
+                    )
+                seen.append(
+                    (
+                        inc["partial_unexpected_list"],
+                        seq["partial_unexpected_list"],
+                    )
+                )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert all(s == seen[0] for s in seen), seen
+    # the sample is the k smallest violating rows by the sample columns
+    assert seen[0] == (
+        [c * 100 + 15 for c in (0, 4, 8)],
+        [{"conv_id": "c01", "turn_idx": 3}],
+    )
