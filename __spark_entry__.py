@@ -1335,7 +1335,8 @@ def _grouped_jobs_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _grouped_shared_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared grouped window pass (`runner._grouped_window_counts_shared`):
+    """Shared grouped window pass (`planner.window_group_counts` with the
+    partition column as group prefix):
     a monotonicity expectation and a compound-uniqueness expectation on
     the same (day, user_id) / event_id window spec compute BOTH per-day
     counts in one projection + one groupBy(day) — a single shuffle, with

@@ -14,11 +14,11 @@ Two execution strategies over a partitioned table:
 * ``validate_by_partition`` — the scale path: ONE
   ``groupBy(partition_col)`` pass computes every partition's bundled
   counters simultaneously, plus one grouped pass per window *group* —
-  window expectations sharing a (partition_by, order_by) spec and domain
-  compute all their flags in a single projection and one
-  ``groupBy(partition_col)`` (uniqueness expectations whose keys equal
-  the window spec ride the same pass as an adjacent-duplicate flag,
-  mirroring ``SuiteValidator._run_window_phase``) — producing an
+  the planner's own window evaluators with the partition column as a
+  group prefix (``planner.window_group_counts`` for flag windows sharing
+  a (partition_by, order_by) spec and domain, each set window's
+  ``execute``), so every window is partition-local and its counts equal
+  a per-partition ``SuiteValidator.validate`` — producing an
   ExpectationSuiteValidationResult per partition with counts (BASIC, no
   samples).  10^5 partitions = still ~3 Spark jobs.  The independent
   grouped passes (bundled agg, each window group, each grouped job
@@ -35,30 +35,26 @@ import uuid
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Dict, List, Optional, Sequence, Union
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from great_expectations_spark.checkpoint.manifest import (
     CheckpointManifest,
     ManifestEntry,
 )
-from great_expectations_spark.core.result_format import (
-    format_map_output,
-    map_expectation_success,
-    parse_result_format,
-)
+from great_expectations_spark.core.result_format import parse_result_format
 from great_expectations_spark.core.results import (
     ExpectationSuiteValidationResult,
     ExpectationValidationResult,
     build_suite_statistics,
     convert_to_json_serializable,
 )
-from great_expectations_spark.core.domain import domain_gate
 from great_expectations_spark.core.suite import ExpectationSuite
 from great_expectations_spark.plans.planner import (
     SuiteValidator,
-    _PlannedItem,
     plan_window_groups,
+    window_group_counts,
+    window_metric,
 )
 from great_expectations_spark.plans.specs import (
     CompiledAggregate,
@@ -373,7 +369,9 @@ def validate_by_partition(
     """Single-pass per-partition validation (counts; BASIC, no samples).
 
     Bundled counters: one groupBy(partition).agg(...) job.  Each window
-    expectation adds one grouped two-phase job.  Schema checks evaluate
+    group (expectations sharing a window spec) and each set window adds
+    one grouped job; windows are partition-local, so their counts equal
+    a per-partition ``validate``.  Schema checks evaluate
     once and fan out.  Job expectations with a ``grouped`` hook
     (referential exist-in-other-table, two-sample KS/PSI/chi² drift, and
     the one-sample distribution family — KL divergence, chi-square GoF,
@@ -398,19 +396,14 @@ def validate_by_partition(
     )
     validator._check_columns_exist(df, items)
 
-    # --- plan the grouped window passes: the SAME shared planning step
-    # SuiteValidator._run_window_phase uses (one projection + one
-    # groupBy(partition) per (partition_by, order_by, domain) group,
-    # uniqueness expectations adopted as duplicate flags), with global
-    # windows kept on the dedicated per-partition path (prepending the
-    # partition column is the semantics there, not a nesting no-op);
-    # valid here because window keys nest within partitions
-    groups, single_windows = plan_window_groups(
-        items, require_partitioned=True
-    )
+    # --- the grouped window passes: the planner's own planning and
+    # evaluators, with the partition column prefixed to every window's
+    # partitioning and grouping keys
+    groups, set_windows = plan_window_groups(items)
+    prefix = [partition_column]
 
-    # grouped window counts: per item -> {partition: unexpected_count}
-    window_counts: Dict[int, Dict[Any, int]] = {}
+    # grouped window counts: per partition -> {window_metric: count}
+    window_counts: Dict[Any, Dict[str, int]] = {}
     # grouped job results: per item -> {partition: vout} in O(1) jobs
     job_grouped: Dict[int, Dict[Any, Dict[str, Any]]] = {}
 
@@ -425,16 +418,14 @@ def validate_by_partition(
             partition_column,
         )
         group_futs = [
-            (members, pool.submit(
-                _grouped_window_counts_shared, df, members, partition_column
-            ))
+            (members, pool.submit(window_group_counts, df, members, prefix))
             for members in groups.values()
         ]
-        single_futs = [
+        set_futs = [
             (item, pool.submit(
-                _grouped_window_counts, df, item, partition_column
+                item.compiled.execute, df, item.domain, prefix
             ))
-            for item in single_windows
+            for item in set_windows
         ]
         job_futs = [
             (item, pool.submit(
@@ -476,13 +467,17 @@ def validate_by_partition(
                 )
         for members, fut in group_futs:
             try:
-                window_counts.update(fut.result())
+                for (part,), counts in fut.result().items():
+                    window_counts.setdefault(part, {}).update(counts)
             except Exception as exc:  # noqa: BLE001
                 for m in members:
                     m.error = exc
-        for item, fut in single_futs:
+        for item, fut in set_futs:
             try:
-                window_counts[id(item)] = fut.result()
+                for (part,), count in fut.result().items():
+                    window_counts.setdefault(part, {})[
+                        window_metric(item)
+                    ] = count
             except Exception as exc:  # noqa: BLE001
                 item.error = exc
         for item, fut in job_futs:
@@ -504,9 +499,7 @@ def validate_by_partition(
     # to confine — so with job expectations present the universe must
     # come from the data, not from the mappings, or those partitions
     # silently vanish from the output.
-    part_keys = set(grouped.keys())
-    for m in window_counts.values():
-        part_keys.update(m.keys())
+    part_keys = set(grouped.keys()) | set(window_counts.keys())
     for m in job_grouped.values():
         part_keys.update(m.keys())
     # the bundled pass groups the UNFILTERED df, so a non-empty `grouped`
@@ -526,7 +519,7 @@ def validate_by_partition(
 
     out: Dict[str, ExpectationSuiteValidationResult] = {}
     for part in partitions:
-        metrics = grouped.get(part, {})
+        metrics = {**grouped.get(part, {}), **window_counts.get(part, {})}
         results: List[ExpectationValidationResult] = []
         for item in items:
             config_dict = item.config.to_json_dict()
@@ -544,26 +537,9 @@ def validate_by_partition(
                         )
                     )
                 elif isinstance(c, CompiledWindow):
-                    ucount = window_counts.get(id(item), {}).get(part, 0)
-                    element = int(metrics.get(item.element_alias) or 0)
-                    considered = int(
-                        metrics.get(item.considered_alias)
-                        if item.considered_alias
-                        else element
-                    )
-                    success = map_expectation_success(
-                        element, considered, ucount, item.config.mostly
-                    )
-                    payload = format_map_output(
-                        rf, success, element, considered, ucount, []
-                    )
                     results.append(
-                        ExpectationValidationResult(
-                            success=bool(payload["success"]),
-                            expectation_config=config_dict,
-                            result=convert_to_json_serializable(
-                                payload.get("result", {})
-                            ),
+                        validator._assemble_window(
+                            item, metrics, rf, config_dict
                         )
                     )
                 elif isinstance(c, CompiledAggregate):
@@ -653,150 +629,3 @@ def validate_by_partition(
         )
     return out
 
-
-def _grouped_window_counts_shared(
-    df: DataFrame, members: List[_PlannedItem], partition_column: str
-) -> Dict[int, Dict[Any, int]]:
-    """Per-partition unexpected counts for a GROUP of window expectations
-    sharing a (partition_by, order_by) spec and domain: one projection
-    computes every member's flag column, one ``groupBy(partition)`` sums
-    them — a single shuffle for the whole group.  The members' own window
-    specs are reused unchanged: window keys nest within partitions, so
-    ``partitionBy(conv_id)`` frames equal ``partitionBy(day, conv_id)``
-    frames and the flags are the per-partition flags already.  Null
-    handling stays correct when sharing because the flag builders are
-    null-transparent (``_prev_nonnull``) rather than relying on
-    pre-filtered frames."""
-    scoped = df
-    if members[0].domain is not None:
-        scoped = scoped.filter(domain_gate(members[0].domain))
-    flagged = scoped.select(
-        F.col(partition_column).alias("__gx_part"),
-        *[
-            domain_gate(m.compiled.flag_builder()).alias(f"f{i}")
-            for i, m in enumerate(members)
-        ],
-    )
-    rows = (
-        flagged.groupBy("__gx_part")
-        .agg(
-            *[
-                F.coalesce(
-                    F.sum(F.when(F.col(f"f{i}"), 1).otherwise(0)), F.lit(0)
-                ).alias(f"w{i}")
-                for i in range(len(members))
-            ]
-        )
-        .collect()
-    )
-    return {
-        id(m): {r["__gx_part"]: int(r[f"w{i}"] or 0) for r in rows}
-        for i, m in enumerate(members)
-    }
-
-
-def _grouped_window_counts(
-    df: DataFrame, item: _PlannedItem, partition_column: str
-) -> Dict[Any, int]:
-    """Per-partition unexpected counts for a window expectation, computed
-    in one grouped pass (keys are assumed to nest within partitions, true
-    for conv_id within days(ts))."""
-    from great_expectations_spark.core.domain import domain_gate
-
-    c = item.compiled
-    config = item.config
-    kwargs = config.kwargs
-    etype = config.expectation_type
-    scoped = df
-    if item.domain is not None:
-        scoped = scoped.filter(domain_gate(item.domain))
-
-    if etype in (
-        "expect_column_values_to_be_unique",
-        "expect_compound_columns_to_be_unique",
-        "expect_multicolumn_values_to_be_unique",
-    ):
-        keys = (
-            [kwargs["column"]]
-            if "column" in kwargs
-            else list(kwargs["column_list"])
-        )
-        base = scoped
-        for k in keys:
-            base = base.filter(F.col(k).isNotNull())
-        rows = (
-            base.groupBy(partition_column, *keys)
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") > 1)
-            .groupBy(partition_column)
-            .agg(F.sum("c").alias("u"))
-            .collect()
-        )
-        return {r[partition_column]: int(r["u"]) for r in rows}
-
-    if etype in (
-        "expect_column_values_to_be_increasing",
-        "expect_column_values_to_be_decreasing",
-    ):
-        from pyspark.sql import Window
-
-        column = kwargs["column"]
-        strictly = bool(kwargs.get("strictly", False))
-        increasing = etype.endswith("increasing")
-        partition_by = kwargs.get("partition_by") or []
-        if isinstance(partition_by, str):
-            partition_by = [partition_by]
-        order_by = kwargs.get("order_by") or []
-        if isinstance(order_by, str):
-            order_by = [order_by]
-        w = Window.partitionBy(partition_column, *partition_by).orderBy(
-            *[F.col(o) for o in order_by]
-            if order_by
-            else [F.monotonically_increasing_id()]
-        )
-        col = F.col(column)
-        prev = F.lag(col).over(w)
-        if increasing:
-            bad = (col <= prev) if strictly else (col < prev)
-        else:
-            bad = (col >= prev) if strictly else (col > prev)
-        flag = prev.isNotNull() & F.coalesce(bad, F.lit(False))
-        rows = (
-            scoped.filter(col.isNotNull())
-            .select(partition_column, flag.alias("f"))
-            .groupBy(partition_column)
-            .agg(F.sum(F.when(F.col("f"), 1).otherwise(0)).alias("u"))
-            .collect()
-        )
-        return {r[partition_column]: int(r["u"] or 0) for r in rows}
-
-    if etype == "expect_sequence_to_be_contiguous":
-        from pyspark.sql import Window
-
-        group_column = kwargs.get("group_column", "conv_id")
-        index_column = kwargs.get("index_column", "turn_idx")
-        first_index = int(kwargs.get("first_index", 0))
-        w = (
-            Window.partitionBy(partition_column, group_column)
-            .orderBy(index_column)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        idx = F.col(index_column)
-        prev = F.last(idx, ignorenulls=True).over(w)
-        flag = (
-            idx.isNotNull()
-            & (idx > F.lit(first_index))
-            & (prev.isNull() | (prev < idx - F.lit(1)))
-        )
-        rows = (
-            scoped.filter(idx.isNotNull())
-            .select(partition_column, flag.alias("f"))
-            .groupBy(partition_column)
-            .agg(F.sum(F.when(F.col("f"), 1).otherwise(0)).alias("u"))
-            .collect()
-        )
-        return {r[partition_column]: int(r["u"] or 0) for r in rows}
-
-    raise NotImplementedError(
-        f"no grouped window implementation for {etype!r}"
-    )

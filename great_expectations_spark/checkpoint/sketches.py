@@ -1089,9 +1089,14 @@ class PartitionSketchStore:
     def merged_quantiles(
         self, columns: Sequence[str], qs: Sequence[float]
     ) -> Dict[str, List[Optional[float]]]:
-        """Quantile estimates by linear interpolation inside the merged
-        histogram's bins — error bounded by one bin width.  Mass below
-        the first edge / above the last clamps to that edge (the
+        """Quantile estimates from the merged histogram, by numpy's
+        default (linear) definition: quantile ``q`` interpolates between
+        order statistics ``floor(h)`` and ``floor(h) + 1``, where
+        ``h = q * (n - 1)``.  Each order statistic is placed inside its
+        bin at the midpoint of its rank slot (the minimum at its bin's
+        lower edge), so for data inside the edge range the error is
+        bounded by the width of the bin holding the true quantile.  Mass
+        below the first edge / above the last clamps to that edge (the
         histogram cannot see past its range; pick edges from a min/max
         or moments pass if that matters)."""
         hists = self.merged_histogram(columns)
@@ -1102,7 +1107,20 @@ class PartitionSketchStore:
                 out[c] = [None for _ in qs]
                 continue
             edges, counts = h["edges"], h["counts"]
-            total = h["below"] + sum(counts) + h["above"]
+            below = h["below"]
+            total = below + sum(counts) + h["above"]
+
+            def order_stat(k: int) -> float:
+                if k < below:
+                    return edges[0]
+                cum = below
+                for i, n in enumerate(counts):
+                    if k < cum + n:
+                        slot = 0.0 if k == 0 else (k - cum + 0.5) / n
+                        return edges[i] + slot * (edges[i + 1] - edges[i])
+                    cum += n
+                return edges[-1]
+
             vals: List[Optional[float]] = []
             for q in qs:
                 if not 0.0 <= q <= 1.0:
@@ -1110,19 +1128,14 @@ class PartitionSketchStore:
                 if total == 0:
                     vals.append(None)
                     continue
-                target = q * total
-                if target <= h["below"]:
-                    vals.append(edges[0])
+                pos = q * (total - 1)
+                j = int(pos)
+                lo = order_stat(j)
+                frac = pos - j
+                if frac == 0.0:
+                    vals.append(lo)
                     continue
-                cum = float(h["below"])
-                found = None
-                for i, n in enumerate(counts):
-                    if n and target <= cum + n:
-                        frac = (target - cum) / n
-                        found = edges[i] + frac * (edges[i + 1] - edges[i])
-                        break
-                    cum += n
-                vals.append(edges[-1] if found is None else found)
+                vals.append(lo + frac * (order_stat(j + 1) - lo))
             out[c] = vals
         return out
 

@@ -23,7 +23,7 @@ Scalability re-design vs the reference (SURVEY.md §2.E):
 from __future__ import annotations
 
 import logging
-from typing import Any, Callable, Dict, List, Optional
+from typing import Any, Callable, Dict, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -44,8 +44,17 @@ def register_window(name: str):
     return deco
 
 
+def _prefixed(group_by: Sequence[str], cols: Sequence[str]) -> List[str]:
+    """``[*group_by, *cols]`` without repeats (a key column may also be
+    the group prefix, e.g. a day-partitioned compound key)."""
+    return list(dict.fromkeys([*group_by, *cols]))
+
+
 def uniqueness_flag_over_window(
-    key_cols: List[str], partition_by: List[str], order_by: List[str]
+    key_cols: List[str],
+    partition_by: List[str],
+    order_by: List[str],
+    group_by: Sequence[str] = (),
 ) -> Column:
     """Row-level duplicate flag for key_cols == partition_by + order_by:
     a row is a duplicate iff a window-adjacent row carries the same order
@@ -53,7 +62,7 @@ def uniqueness_flag_over_window(
     neighbor, so all k rows flag — identical counts to the two-phase
     groupBy).  Lets a compound-uniqueness expectation ride an existing
     window pass instead of shuffling all rows by key."""
-    w = _window_spec(partition_by, order_by)
+    w = _window_spec(partition_by, order_by, group_by)
     order_struct = F.struct(*[F.col(c) for c in order_by])
     prev = F.lag(order_struct).over(w)
     nxt = F.lead(order_struct).over(w)
@@ -78,26 +87,26 @@ def _uniqueness_window(
             out = out.filter(F.col(c).isNotNull())
         return out
 
-    # memoized per-df so the sample pass reuses the SAME DataFrame (and
-    # thus the already-materialized shuffle stage) from the count pass
-    _cache: Dict[int, DataFrame] = {}
+    def dup_groups(
+        df: DataFrame, domain: Optional[Column], group_by: Sequence[str] = ()
+    ) -> DataFrame:
+        return (
+            base(df, domain)
+            .groupBy(*_prefixed(group_by, key_cols))
+            .agg(F.count(F.lit(1)).alias("__gx_cnt"))
+            .filter(F.col("__gx_cnt") > 1)
+        )
 
-    def dup_groups(df: DataFrame, domain: Optional[Column]) -> DataFrame:
-        key = id(df)
-        if key not in _cache:
-            _cache[key] = (
-                base(df, domain)
-                .groupBy(*key_cols)
-                .agg(F.count(F.lit(1)).alias("__gx_cnt"))
-                .filter(F.col("__gx_cnt") > 1)
-            )
-        return _cache[key]
-
-    def execute(df: DataFrame, domain: Optional[Column]) -> Dict[str, int]:
-        row = dup_groups(df, domain).agg(
-            F.coalesce(F.sum("__gx_cnt"), F.lit(0)).alias("unexpected_count")
-        ).first()
-        return {"unexpected_count": int(row["unexpected_count"])}
+    def execute(
+        df: DataFrame, domain: Optional[Column], group_by: Sequence[str] = ()
+    ) -> Dict[tuple, int]:
+        rows = (
+            dup_groups(df, domain, group_by)
+            .groupBy(*group_by)
+            .agg(F.coalesce(F.sum("__gx_cnt"), F.lit(0)).alias("__gx_u"))
+            .collect()
+        )
+        return {tuple(r[g] for g in group_by): int(r["__gx_u"]) for r in rows}
 
     def sample(
         df: DataFrame,
@@ -187,8 +196,8 @@ def _uniqueness_window(
     cw.considered = considered  # counted in the bundled phase by the planner
     # marker for the planner's shared-window adoption: ONLY uniqueness
     # semantics may be rewritten as a lag/lead duplicate flag over an
-    # existing window spec (other flag_builder-less windows, e.g. the
-    # join-strategy contiguity, must keep their own execute path)
+    # existing window spec (the other set window, join-strategy
+    # contiguity, must keep its own execute path)
     cw.uniqueness_keys = list(key_cols)
     return cw
 
@@ -214,25 +223,26 @@ def _multicolumn_unique(kwargs: Dict[str, Any]) -> CompiledWindow:
     )
 
 
-def _window_spec(partition_by, order_by):
-    if partition_by:
-        w = Window.partitionBy(*partition_by)
-    else:
-        w = Window.partitionBy()
-    return w.orderBy(
+def _window_spec(partition_by, order_by, group_by: Sequence[str] = ()):
+    return Window.partitionBy(
+        *_prefixed(group_by, partition_by or ())
+    ).orderBy(
         *[F.col(c) for c in order_by]
         if order_by
         else [F.monotonically_increasing_id()]
     )
 
 
-def _prev_nonnull(column: str, partition_by, order_by) -> Column:
-    """Previous NON-NULL value of ``column`` in window order.  Unlike
-    ``lag`` over a pre-filtered frame, this is null-transparent, so several
-    window expectations with different null columns can share ONE pass
-    over the unfiltered rows (null rows simply don't count and don't
-    perturb each other's predecessors)."""
-    w = _window_spec(partition_by, order_by).rowsBetween(
+def _prev_nonnull(
+    column: str, partition_by, order_by, group_by: Sequence[str] = ()
+) -> Column:
+    """Previous NON-NULL value of ``column`` in window order, within each
+    ``[*group_by, *partition_by]`` frame.  Unlike ``lag`` over a
+    pre-filtered frame, this is null-transparent, so several window
+    expectations with different null columns can share ONE pass over the
+    unfiltered rows (null rows simply don't count and don't perturb each
+    other's predecessors)."""
+    w = _window_spec(partition_by, order_by, group_by).rowsBetween(
         Window.unboundedPreceding, -1
     )
     return F.last(F.col(column), ignorenulls=True).over(w)
@@ -258,9 +268,9 @@ def _monotonic_window(
             "increasing" if increasing else "decreasing",
         )
 
-    def unexpected_flag() -> Column:
+    def unexpected_flag(group_by: Sequence[str] = ()) -> Column:
         col = F.col(column)
-        prev = _prev_nonnull(column, partition_by, order_by)
+        prev = _prev_nonnull(column, partition_by, order_by, group_by)
         if increasing:
             bad = (col <= prev) if strictly else (col < prev)
         else:
@@ -270,49 +280,6 @@ def _monotonic_window(
             & prev.isNotNull()
             & F.coalesce(bad, F.lit(False))
         )
-
-    _cache: Dict[int, DataFrame] = {}
-
-    def annotated(df: DataFrame, domain: Optional[Column]) -> DataFrame:
-        key = id(df)
-        if key not in _cache:
-            out = df
-            if domain is not None:
-                out = out.filter(domain_gate(domain))
-            _cache[key] = out.withColumn(
-                "__gx_unexpected", unexpected_flag()
-            ).filter(F.col(column).isNotNull())
-        return _cache[key]
-
-    def execute(df: DataFrame, domain: Optional[Column]) -> Dict[str, int]:
-        row = annotated(df, domain).agg(
-            F.coalesce(
-                F.sum(F.when(F.col("__gx_unexpected"), 1).otherwise(0)),
-                F.lit(0),
-            ).alias("unexpected_count")
-        ).first()
-        return {"unexpected_count": int(row["unexpected_count"])}
-
-    def sample(
-        df: DataFrame,
-        domain: Optional[Column],
-        n: int,
-        index_cols: Optional[List[str]] = None,
-    ) -> Dict[str, List[Any]]:
-        extra = [c for c in (index_cols or []) if c != column]
-        rows = (
-            annotated(df, domain)
-            .filter(F.col("__gx_unexpected"))
-            .select(column, *extra)
-            .limit(n)
-            .collect()
-        )
-        out = {"unexpected_list": [r[column] for r in rows]}
-        if index_cols:
-            out["unexpected_index_list"] = [
-                {c: r[c] for c in index_cols} for r in rows
-            ]
-        return out
 
     def sample_columns(index_cols):
         return [column] + [
@@ -331,8 +298,6 @@ def _monotonic_window(
         kind="column_map",
         domain_columns=[column],
         denominator="nonnull",
-        execute=execute,
-        sample=sample,
         flag_builder=unexpected_flag,
         window_signature=(
             tuple(partition_by or ()),
@@ -384,58 +349,14 @@ def _sequence_contiguous_window(kwargs: Dict[str, Any]) -> CompiledWindow:
     partition_by = [group_column]
     order_by = [index_column]
 
-    def unexpected_flag() -> Column:
+    def unexpected_flag(group_by: Sequence[str] = ()) -> Column:
         idx = F.col(index_column)
-        prev = _prev_nonnull(index_column, partition_by, order_by)
+        prev = _prev_nonnull(index_column, partition_by, order_by, group_by)
         return (
             idx.isNotNull()
             & (idx > F.lit(first_index))
             & (prev.isNull() | (prev < idx - F.lit(1)))
         )
-
-    _cache: Dict[int, DataFrame] = {}
-
-    def annotated(df: DataFrame, domain: Optional[Column]) -> DataFrame:
-        key = id(df)
-        if key not in _cache:
-            out = df
-            if domain is not None:
-                out = out.filter(domain_gate(domain))
-            _cache[key] = out.withColumn(
-                "__gx_unexpected", unexpected_flag()
-            ).filter(F.col(index_column).isNotNull())
-        return _cache[key]
-
-    def execute(df: DataFrame, domain: Optional[Column]) -> Dict[str, int]:
-        row = annotated(df, domain).agg(
-            F.coalesce(
-                F.sum(F.when(F.col("__gx_unexpected"), 1).otherwise(0)),
-                F.lit(0),
-            ).alias("unexpected_count")
-        ).first()
-        return {"unexpected_count": int(row["unexpected_count"])}
-
-    def sample(
-        df: DataFrame,
-        domain: Optional[Column],
-        n: int,
-        index_cols: Optional[List[str]] = None,
-    ) -> Dict[str, List[Any]]:
-        rows = (
-            annotated(df, domain)
-            .filter(F.col("__gx_unexpected"))
-            .select(group_column, index_column)
-            .limit(n)
-            .collect()
-        )
-        values = [
-            {group_column: r[group_column], index_column: r[index_column]}
-            for r in rows
-        ]
-        return {
-            "unexpected_list": values,
-            "unexpected_index_list": values,
-        }
 
     def sample_columns(index_cols):
         return [group_column, index_column]
@@ -454,8 +375,6 @@ def _sequence_contiguous_window(kwargs: Dict[str, Any]) -> CompiledWindow:
         kind="multicolumn_map",
         domain_columns=[group_column, index_column],
         denominator="nonnull",
-        execute=execute,
-        sample=sample,
         value_is_dict=True,
         flag_builder=unexpected_flag,
         window_signature=(tuple(partition_by), tuple(order_by)),
@@ -484,60 +403,62 @@ def _sequence_contiguous_join(
     combine, so task balance is independent of group size; no sort, no
     join anywhere."""
 
-    _cache: Dict[int, DataFrame] = {}
-
-    def missing_pred(df: DataFrame, domain: Optional[Column]) -> DataFrame:
-        key = id(df)
-        if key not in _cache:
-            out = df
-            if domain is not None:
-                out = out.filter(domain_gate(domain))
-            markers = (
-                out.filter(F.col(index_column).isNotNull())
-                .select(
-                    F.col(group_column).alias("__gx_g"),
-                    F.explode(
-                        F.array(
-                            F.struct(
-                                F.col(index_column)
-                                .cast("long")
-                                .alias("i"),
-                                F.lit(1).alias("s"),
-                                F.lit(0).alias("p"),
-                            ),
-                            F.struct(
-                                (F.col(index_column).cast("long") + 1)
-                                .alias("i"),
-                                F.lit(0).alias("s"),
-                                F.lit(1).alias("p"),
-                            ),
-                        )
-                    ).alias("__gx_m"),
-                )
-                .select(
-                    "__gx_g",
-                    F.col("__gx_m.i").alias("__gx_i"),
-                    F.col("__gx_m.s").alias("__gx_s"),
-                    F.col("__gx_m.p").alias("__gx_p"),
-                )
+    def missing_pred(
+        df: DataFrame, domain: Optional[Column], group_by: Sequence[str] = ()
+    ) -> DataFrame:
+        out = df
+        if domain is not None:
+            out = out.filter(domain_gate(domain))
+        markers = (
+            out.filter(F.col(index_column).isNotNull())
+            .select(
+                *[F.col(g) for g in group_by],
+                F.col(group_column).alias("__gx_g"),
+                F.explode(
+                    F.array(
+                        F.struct(
+                            F.col(index_column).cast("long").alias("i"),
+                            F.lit(1).alias("s"),
+                            F.lit(0).alias("p"),
+                        ),
+                        F.struct(
+                            (F.col(index_column).cast("long") + 1).alias("i"),
+                            F.lit(0).alias("s"),
+                            F.lit(1).alias("p"),
+                        ),
+                    )
+                ).alias("__gx_m"),
             )
-            _cache[key] = (
-                markers.groupBy("__gx_g", "__gx_i")
-                .agg(
-                    F.max("__gx_s").alias("__gx_self"),
-                    F.max("__gx_p").alias("__gx_pred"),
-                )
-                .filter(
-                    (F.col("__gx_self") == 1)
-                    & (F.col("__gx_i") > F.lit(first_index))
-                    & (F.col("__gx_pred") == 0)
-                )
-                .select("__gx_g", "__gx_i")
+            .select(
+                *group_by,
+                "__gx_g",
+                F.col("__gx_m.i").alias("__gx_i"),
+                F.col("__gx_m.s").alias("__gx_s"),
+                F.col("__gx_m.p").alias("__gx_p"),
             )
-        return _cache[key]
+        )
+        return (
+            markers.groupBy(*group_by, "__gx_g", "__gx_i")
+            .agg(
+                F.max("__gx_s").alias("__gx_self"),
+                F.max("__gx_p").alias("__gx_pred"),
+            )
+            .filter(
+                (F.col("__gx_self") == 1)
+                & (F.col("__gx_i") > F.lit(first_index))
+                & (F.col("__gx_pred") == 0)
+            )
+            .select(*group_by, "__gx_g", "__gx_i")
+        )
 
-    def execute(df: DataFrame, domain: Optional[Column]) -> Dict[str, int]:
-        return {"unexpected_count": missing_pred(df, domain).count()}
+    def execute(
+        df: DataFrame, domain: Optional[Column], group_by: Sequence[str] = ()
+    ) -> Dict[tuple, int]:
+        rows = missing_pred(df, domain, group_by).groupBy(*group_by).count()
+        return {
+            tuple(r[g] for g in group_by): int(r["count"])
+            for r in rows.collect()
+        }
 
     def sample(
         df: DataFrame,
@@ -583,13 +504,3 @@ def _increasing(kwargs: Dict[str, Any]) -> CompiledWindow:
 @register_window("expect_column_values_to_be_decreasing")
 def _decreasing(kwargs: Dict[str, Any]) -> CompiledWindow:
     return _monotonic_window(kwargs, increasing=False)
-
-
-def compile_window_expectation(
-    expectation_type: str, kwargs: Dict[str, Any]
-) -> CompiledWindow:
-    try:
-        compiler = WINDOW_COMPILERS[expectation_type]
-    except KeyError:
-        raise KeyError(f"no window compiler for {expectation_type!r}")
-    return compiler(kwargs)

@@ -12,29 +12,38 @@ Physical plan of ``validate(df, suite)``:
     per-domain bundling (``sparkdf_execution_engine.py:715-793``) to the
     whole suite.  Only partial (map-side combined) aggregation shuffles a
     single tiny row per partition — no row shuffle at all.
-  Phase B: window/uniqueness expectations (each needs a shuffle by key;
-    two-phase hash aggregation, see operators/window_ops.py).
+  Phase B: window expectations, each needing a shuffle by key
+    (operators/window_ops.py).  Flag windows (monotonicity,
+    window-strategy contiguity, and uniqueness adopted onto a shared
+    window spec) are grouped by (partition_by, order_by, row_condition):
+    ONE job per group computes every member's flag.  Set windows
+    (uniqueness, join-strategy contiguity) run one two-phase hash
+    aggregation each.  ``checkpoint.runner.validate_by_partition`` uses
+    the same evaluators with the partition column as a group prefix.
   Phase C: job expectations (user SQL, referential joins, drift).
   Phase D: violation samples, only when result_format > BOOLEAN_ONLY.
     FAILING map expectations: the condition-annotated projection is
-    computed once, persisted, and each failing expectation takes a
-    ``limit(k)`` slice (limits push into the scan).  Shared-window
-    groups sample inside their phase-B job (``_fused_window_group``):
-    a JVM top-k per member keeps the k smallest violating rows by the
-    group's sample columns (deterministic), planned as
-    ``WindowGroupLimit`` Partial before the member exchange and Final
-    after it.  COMPLETE's cap (``max_complete_collect``) is above
+    computed once, persisted when more than one expectation fails, and
+    each failing expectation takes a ``limit(k)`` slice (limits push
+    into the scan).  Flag-window groups sample inside their phase-B job
+    (``_fused_window_group``): a JVM top-k per member keeps the k
+    smallest violating rows by the group's orderable sample columns
+    (deterministic), planned as ``WindowGroupLimit`` Partial before the
+    member exchange and Final after it.  COMPLETE's cap
+    (``max_complete_collect``) is above
     ``spark.sql.optimizer.windowGroupLimitThreshold``, so Spark plans
     only the Final limit: every flagged row crosses the member
-    exchange, still in that one job.
+    exchange, still in that one job.  Failing set windows take one
+    ``limit(k)`` sample job each.
 
 Driver-side job orchestration: the phases above are *independent Spark
 jobs* with a small dependency DAG (samples and aggregate followups need
 phase-A counters; window samples need phase-B counters; CompiledJob
 expectations need nothing).  Submitting them one at a time serializes
 the driver — an Amdahl term measured at ~12 s/pass on the 25.4M-turn
-scaling dataset (SCALING.md).  With ``job_concurrency > 1`` (default),
-``validate`` overlaps them from a driver thread pool: phase A ∥ phase B
+scaling dataset (SCALING.md).  ``validate`` submits them from a driver
+thread pool of ``job_concurrency`` workers (default 8; ``1`` runs the
+jobs one at a time through a one-worker pool): phase A ∥ phase B
 ∥ every CompiledJob expectation, then (once phase-A metrics land)
 aggregate followups ∥ window samples ∥ per-expectation map-sample
 collects.  Spark's scheduler accepts concurrent job submission from
@@ -52,16 +61,17 @@ metric-graph dedup: ``validation_graph.py:96-100``).
 from __future__ import annotations
 
 import datetime
+import functools
 import inspect
-import logging
 import traceback
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Any, Dict, List, Optional, Tuple, Union
+from typing import Any, Dict, List, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from great_expectations_spark.core.domain import (
@@ -100,8 +110,6 @@ from great_expectations_spark.plans.specs import (
     CompiledSchemaCheck,
     CompiledWindow,
 )
-
-logger = logging.getLogger(__name__)
 
 Compiled = Union[
     CompiledMap, CompiledWindow, CompiledAggregate, CompiledSchemaCheck, CompiledJob
@@ -160,22 +168,21 @@ class _PlannedItem:
 
 
 def plan_window_groups(
-    items: List["_PlannedItem"], require_partitioned: bool = False
+    items: List["_PlannedItem"],
 ) -> Tuple[Dict[Any, List["_PlannedItem"]], List["_PlannedItem"]]:
     """Shared window-pass planning (used by both ``SuiteValidator`` and
-    ``checkpoint.runner.validate_by_partition``): group CompiledWindow
-    items by (window_signature, row_condition) so each group computes all
-    its flags in ONE projection + ONE shuffle, and adopt uniqueness
+    ``checkpoint.runner.validate_by_partition``): group flag-window items
+    by (window_signature, row_condition) so each group computes all its
+    flags in ONE projection + ONE shuffle, and adopt uniqueness
     expectations whose key columns equal a group's (partition_by +
-    order_by) spec as a duplicate flag over that same window.
+    order_by) spec as a duplicate flag over that same window.  A group
+    prefix (the runner's partition column) is applied later, by passing
+    it to every member's ``flag_builder``, so planning is the same for
+    both callers.
 
-    ``require_partitioned=True`` keeps global windows (empty
-    partition_by) out of the groups — the grouped per-partition runner
-    gives those a dedicated path, because prepending the partition column
-    there IS the semantics, not a nesting no-op.
-
-    Returns ``(groups, singles)``; adoption mutates the adopted items'
-    ``flag_builder`` in place (same contract as before extraction).
+    Returns ``(groups, set_windows)``; adoption sets the adopted items'
+    ``flag_builder`` in place.  ``set_windows`` are the items left to
+    their own ``execute``.
     """
     groups: Dict[Any, List["_PlannedItem"]] = {}
     singles: List["_PlannedItem"] = []
@@ -183,11 +190,7 @@ def plan_window_groups(
         c = item.compiled
         if not isinstance(c, CompiledWindow) or item.error:
             continue
-        if (
-            c.flag_builder is not None
-            and c.window_signature is not None
-            and (not require_partitioned or c.window_signature[0])
-        ):
+        if c.flag_builder is not None and c.window_signature is not None:
             key = (
                 c.window_signature,
                 str(item.config.kwargs.get("row_condition") or ""),
@@ -204,9 +207,8 @@ def plan_window_groups(
         c = item.compiled
         adopted = False
         # only true uniqueness expectations (marked by the compiler) may
-        # be rewritten as a duplicate flag over a shared window; other
-        # flag_builder-less windows (e.g. join-strategy contiguity) keep
-        # their own execute path
+        # be rewritten as a duplicate flag over a shared window; the other
+        # set window (join-strategy contiguity) keeps its own execute path
         unique_keys = getattr(c, "uniqueness_keys", None)
         if unique_keys is None:
             still_single.append(item)
@@ -219,15 +221,11 @@ def plan_window_groups(
                 and domain_key
                 == str(item.config.kwargs.get("row_condition") or "")
             ):
-                from great_expectations_spark.operators.window_ops import (
-                    uniqueness_flag_over_window,
-                )
-
-                key_cols = list(unique_keys)
-                c.flag_builder = (
-                    lambda kc=key_cols, p=list(partition_by), o=list(
-                        order_by
-                    ): uniqueness_flag_over_window(kc, p, o)
+                c.flag_builder = functools.partial(
+                    window_ops.uniqueness_flag_over_window,
+                    list(unique_keys),
+                    list(partition_by),
+                    list(order_by),
                 )
                 members.append(item)
                 adopted = True
@@ -237,31 +235,92 @@ def plan_window_groups(
     return groups, still_single
 
 
+def window_metric(item: "_PlannedItem") -> str:
+    """Metrics key of a window expectation's unexpected count."""
+    return f"window_unexpected::{id(item)}"
+
+
+def window_group_counts(
+    df: DataFrame,
+    members: List["_PlannedItem"],
+    group_by: Sequence[str] = (),
+) -> Dict[tuple, Dict[str, int]]:
+    """ONE count job for a flag-window group: project every member's flag
+    (windows partitioned by ``[*group_by, *partition_by]``) and sum them
+    per ``group_by`` key.  Returns ``{group key tuple: {window_metric:
+    unexpected_count}}`` — a single ``()`` key for a whole-table
+    ``validate``, one ``(partition,)`` key per partition for
+    ``validate_by_partition``.  Null handling stays correct when members
+    share the pass because the flag builders are null-transparent
+    (``window_ops._prev_nonnull``) rather than relying on pre-filtered
+    frames."""
+    scoped = df
+    if members[0].domain is not None:
+        scoped = scoped.filter(domain_gate(members[0].domain))
+    # window expressions can't sit inside agg — project the flags first,
+    # then sum
+    flagged = scoped.select(
+        *group_by,
+        *[
+            domain_gate(m.compiled.flag_builder(group_by)).alias(f"__gx_f{i}")
+            for i, m in enumerate(members)
+        ],
+    )
+    rows = (
+        flagged.groupBy(*group_by)
+        .agg(
+            *[
+                F.coalesce(
+                    F.sum(F.when(F.col(f"__gx_f{i}"), 1).otherwise(0)),
+                    F.lit(0),
+                ).alias(f"__gx_w{i}")
+                for i in range(len(members))
+            ]
+        )
+        .collect()
+    )
+    return {
+        tuple(r[g] for g in group_by): {
+            window_metric(m): int(r[f"__gx_w{i}"])
+            for i, m in enumerate(members)
+        }
+        for r in rows
+    }
+
+
+def _orderable(dt: Optional[T.DataType]) -> bool:
+    """Whether Spark can sort by a column of this type: no map or variant
+    anywhere inside it."""
+    # by type name: VariantType exists only from PySpark 4.0
+    if dt is not None and dt.typeName() in ("map", "variant"):
+        return False
+    if isinstance(dt, T.ArrayType):
+        return _orderable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    return True
+
+
 class SuiteValidator:
     """Validate an ExpectationSuite against a DataFrame in O(1) scans.
 
     Parameters
     ----------
-    persist_for_samples: persist the condition-annotated projection before
-        collecting violation samples (MEMORY_AND_DISK), mirroring the
-        reference's ``persist=True`` batch flag
-        (``sparkdf_execution_engine.py:210-218``).
     max_complete_collect: hard cap on COMPLETE-format collected violation
         values — the driver-collect guard at scale.
     job_concurrency: max driver threads submitting the suite's independent
-        Spark jobs concurrently (see module docstring).  ``1`` restores
-        strictly sequential submission.
+        Spark jobs concurrently (see module docstring).  ``1`` runs
+        them one at a time: every Spark job of the pass goes through the
+        same pool, so one worker serializes them.
     """
 
     def __init__(
         self,
         spark: Optional[SparkSession] = None,
-        persist_for_samples: bool = True,
         max_complete_collect: int = 10_000,
         job_concurrency: int = 8,
     ) -> None:
         self._spark = spark
-        self.persist_for_samples = persist_for_samples
         self.max_complete_collect = max_complete_collect
         self.job_concurrency = max(1, int(job_concurrency))
 
@@ -336,18 +395,9 @@ class SuiteValidator:
         self._check_columns_exist(df, items)
 
         prefetched: Dict[int, Tuple[str, Any]] = {}
-        if self.job_concurrency > 1 and items:
-            metrics, samples = self._run_phases_concurrent(
-                df, spark, items, rf, catch_exceptions, prefetched
-            )
-        else:
-            metrics = self._run_bundled_phase_isolating(
-                df, items, catch_exceptions=catch_exceptions
-            )
-            self._run_window_phase(
-                df, items, metrics, catch_exceptions, rf, prefetched
-            )
-            samples = self._collect_samples(df, items, metrics, rf)
+        metrics, samples = self._run_phases_concurrent(
+            df, spark, items, rf, catch_exceptions, prefetched
+        )
 
         results: List[ExpectationValidationResult] = []
         for item in items:
@@ -355,7 +405,6 @@ class SuiteValidator:
                 self._assemble(
                     item,
                     df,
-                    spark,
                     metrics,
                     samples,
                     rf,
@@ -452,8 +501,8 @@ class SuiteValidator:
             }
 
             # phase A/B gates: bundled-agg and window failures propagate
-            # exactly as in the sequential path (phase B already honors
-            # catch_exceptions internally via per-item error marking)
+            # here (phase B already honors catch_exceptions internally via
+            # per-item error marking)
             metrics = fut_bundle.result()
             fut_window.result()
             metrics.update(window_metrics)
@@ -483,19 +532,16 @@ class SuiteValidator:
                     else rf["partial_unexpected_count"]
                 )
                 index_cols = rf.get("unexpected_index_column_names")
-                # shared-window members were served counts AND samples by
+                # flag-window members were served counts AND samples by
                 # the fused wave-1 window job (already in ``prefetched``);
-                # everything still unserved keeps a dedicated sample job
+                # each failing set window takes a dedicated sample job
                 for item in items:
                     c = item.compiled
                     if (
                         item.error is None
                         and isinstance(c, CompiledWindow)
-                        and id(item) not in prefetched
-                        and int(
-                            metrics.get(f"window_unexpected::{id(item)}") or 0
-                        )
-                        > 0
+                        and c.flag_builder is None
+                        and int(metrics.get(window_metric(item)) or 0) > 0
                     ):
                         wsample_futs[id(item)] = pool.submit(
                             guarded, c.sample, df, item.domain, limit, index_cols
@@ -759,66 +805,40 @@ class SuiteValidator:
         items: List[_PlannedItem],
         metrics: Dict[str, Any],
         catch_exceptions: bool,
-        rf: Optional[dict] = None,
-        prefetched: Optional[Dict[int, Tuple[str, str, Any]]] = None,
+        rf: dict,
+        prefetched: Dict[int, Tuple[str, str, Any]],
     ) -> None:
         """Window expectations sharing a (partition_by, order_by) spec and
-        domain evaluate together: ONE select computes every flag column,
-        ONE agg sums them — one shuffle for the whole group (e.g. the
-        transcript suite's ts-monotonicity + turn-contiguity share the
-        (conv_id, turn_idx) window).
+        domain evaluate together: one job per group computes every flag
+        column — one shuffle for the whole group (e.g. the transcript
+        suite's ts-monotonicity + turn-contiguity share the (conv_id,
+        turn_idx) window).
 
-        When ``rf``/``prefetched`` are passed (any non-BOOLEAN_ONLY
-        format), the group's violation SAMPLES ride the same job as the
-        counts (``_fused_window_group``): the count sums become
-        observation metrics on the flag projection, so the window
-        shuffle is paid exactly once per group instead of once for the
-        counts plus once for the pooled sample job."""
-        groups, singles = plan_window_groups(items)
+        BOOLEAN_ONLY takes the counts alone (``window_group_counts``);
+        every other format also takes the group's violation SAMPLES in
+        that same job (``_fused_window_group``).  A failing group job
+        marks every member's ``error`` (or raises without
+        ``catch_exceptions``).  Set windows run their own ``execute``."""
+        groups, set_windows = plan_window_groups(items)
 
         for members in groups.values():
-            if (
-                rf is not None
-                and prefetched is not None
-                and rf["result_format"] != "BOOLEAN_ONLY"
-                and self._fused_window_group(
-                    df, members, metrics, rf, prefetched
-                )
-            ):
-                continue
             try:
-                scoped = df
-                if members[0].domain is not None:
-                    scoped = scoped.filter(domain_gate(members[0].domain))
-                # window expressions can't sit inside agg — project the
-                # flags first, then sum
-                flagged = scoped.select(
-                    *[
-                        domain_gate(m.compiled.flag_builder()).alias(f"f{i}")
-                        for i, m in enumerate(members)
-                    ]
-                )
-                row = flagged.agg(
-                    *[
-                        F.coalesce(
-                            F.sum(F.when(F.col(f"f{i}"), 1).otherwise(0)),
-                            F.lit(0),
-                        ).alias(f"w{i}")
-                        for i in range(len(members))
-                    ]
-                ).first()
-                for i, m in enumerate(members):
-                    metrics[f"window_unexpected::{id(m)}"] = int(row[f"w{i}"])
+                if rf["result_format"] == "BOOLEAN_ONLY":
+                    metrics.update(window_group_counts(df, members)[()])
+                else:
+                    self._fused_window_group(
+                        df, members, metrics, rf, prefetched
+                    )
             except Exception as exc:
                 if not catch_exceptions:
                     raise
                 for m in members:
                     m.error = exc
 
-        for item in singles:
+        for item in set_windows:
             try:
-                out = item.compiled.execute(df, item.domain)
-                metrics[f"window_unexpected::{id(item)}"] = out["unexpected_count"]
+                counts = item.compiled.execute(df, item.domain)
+                metrics[window_metric(item)] = counts[()]
             except Exception as exc:
                 if not catch_exceptions:
                     raise
@@ -831,9 +851,9 @@ class SuiteValidator:
         metrics: Dict[str, Any],
         rf: dict,
         prefetched: Dict[int, Tuple[str, str, Any]],
-    ) -> bool:
-        """ONE job per shared-window group serves the violation COUNTS and
-        every poolable member's violation sample.
+    ) -> None:
+        """ONE job per flag-window group serves the violation COUNTS and
+        every member's violation sample.
 
         The count sums ride the flag projection as ``Observation``
         metrics (a JVM ``CollectMetrics`` node sees every projected row
@@ -845,125 +865,99 @@ class SuiteValidator:
         ~12 s at 4x1 on the 24.69M-turn corpus).
 
         Sample bounding is a JVM top-k per member, in the same job: each
-        flagged row explodes into the indices of the poolable members
-        whose flag it carries, and ``row_number() over (partition by
-        member order by <sample columns>) <= limit`` keeps each member's
-        ``limit`` smallest rows by the group's sample columns.  Spark
-        plans that filter as ``WindowGroupLimit`` — a ``Partial`` node
-        before the exchange and a ``Final`` one after it — so the
-        shuffle carries at most ``limit`` rows per member per task and
-        the driver collects at most ``limit * len(members)``.  No Python
-        worker starts, a member can never be starved by a denser one,
-        and the sample is deterministic: the same rows at any shuffle
-        partition count or job concurrency.
+        flagged row explodes into the indices of the members whose flag
+        it carries, and ``row_number() over (partition by member order
+        by <sample columns>) <= limit`` keeps each member's ``limit``
+        smallest rows by the group's sample columns.  Spark plans that
+        filter as ``WindowGroupLimit`` — a ``Partial`` node before the
+        exchange and a ``Final`` one after it — so the shuffle carries at
+        most ``limit`` rows per member per task and the driver collects
+        at most ``limit * len(members)``.  No Python worker starts, a
+        member can never be starved by a denser one, and the sample is
+        deterministic: the same rows at any shuffle partition count or
+        job concurrency.  Sample columns Spark cannot sort by (a
+        map-typed ``unexpected_index_column_names`` entry) ride along in
+        the output but stay out of the order.
 
         Spark infers the partial limit only up to
         ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000).
         Above it — COMPLETE's ``max_complete_collect`` — only the Final
         limit remains: every flagged row crosses the member exchange,
-        which is still less than the full-table window shuffle one
-        dedicated sample job per failing member would pay.
-
-        Returns False — caller falls back to the count-only agg and
-        dedicated sample jobs — if the fused machinery fails for any
-        reason; counts must never depend on the sample path.
+        which is still less than a full-table window shuffle per member.
         """
-        try:
-            limit = (
-                self.max_complete_collect
-                if rf["result_format"] == "COMPLETE"
-                else max(int(rf["partial_unexpected_count"] or 0), 1)
+        limit = (
+            self.max_complete_collect
+            if rf["result_format"] == "COMPLETE"
+            else max(int(rf["partial_unexpected_count"] or 0), 1)
+        )
+        index_cols = rf.get("unexpected_index_column_names")
+        scoped = df
+        if members[0].domain is not None:
+            scoped = scoped.filter(domain_gate(members[0].domain))
+        flag_names = [f"__gx_pf{i}" for i in range(len(members))]
+        cols: List[str] = []
+        for m in members:
+            for c in m.compiled.sample_columns(index_cols):
+                if c not in cols:
+                    cols.append(c)
+        types = table_ops.flattened_column_types(df.schema)
+        order = [c for c in cols if _orderable(types.get(c))]
+        obs = Observation()
+        proj = scoped.select(
+            *[F.col(c) for c in cols],
+            *[
+                domain_gate(m.compiled.flag_builder()).alias(fn)
+                for fn, m in zip(flag_names, members)
+            ],
+        ).observe(
+            obs,
+            *[
+                F.coalesce(
+                    F.sum(F.when(F.col(fn), 1).otherwise(0)), F.lit(0)
+                ).alias(fn)
+                for fn in flag_names
+            ],
+        )
+        any_flag = F.col(flag_names[0])
+        for fn in flag_names[1:]:
+            any_flag = any_flag | F.col(fn)
+        # one output row per (flagged row, member whose flag it carries);
+        # the member index partitions the top-k window
+        member = F.explode(
+            F.filter(
+                F.array(
+                    *[
+                        F.when(F.col(fn), F.lit(i))
+                        for i, fn in enumerate(flag_names)
+                    ]
+                ),
+                lambda x: x.isNotNull(),
             )
-            index_cols = rf.get("unexpected_index_column_names")
-            scoped = df
-            if members[0].domain is not None:
-                scoped = scoped.filter(domain_gate(members[0].domain))
-            flag_names = [f"__gx_pf{i}" for i in range(len(members))]
-            poolable = [
-                (i, fn, m)
-                for i, (fn, m) in enumerate(zip(flag_names, members))
-                if m.compiled.pool_sample is not None
-                and m.compiled.sample_columns is not None
-            ]
-            if not poolable:
-                # nothing to sample: a plain count agg is the same single
-                # job with less machinery
-                return False
-            cols: List[str] = []
-            for _, _, m in poolable:
-                for c in m.compiled.sample_columns(index_cols):
-                    if c not in cols:
-                        cols.append(c)
-            obs = Observation()
-            proj = scoped.select(
-                *[F.col(c) for c in cols],
-                *[
-                    domain_gate(m.compiled.flag_builder()).alias(fn)
-                    for fn, m in zip(flag_names, members)
-                ],
-            ).observe(
-                obs,
-                *[
-                    F.coalesce(
-                        F.sum(F.when(F.col(fn), 1).otherwise(0)), F.lit(0)
-                    ).alias(fn)
-                    for fn in flag_names
-                ],
-            )
-            any_flag = F.col(poolable[0][1])
-            for _, fn, _ in poolable[1:]:
-                any_flag = any_flag | F.col(fn)
-            # one output row per (flagged row, member whose flag it
-            # carries); the member index partitions the top-k window
-            member = F.explode(
-                F.filter(
-                    F.array(
-                        *[F.when(F.col(fn), F.lit(i)) for i, fn, _ in poolable]
-                    ),
-                    lambda x: x.isNotNull(),
+        ).alias("__gx_m")
+        rank = F.row_number().over(
+            Window.partitionBy("__gx_m").orderBy(*order)
+        )
+        top = (
+            proj.filter(any_flag)
+            .select(*cols, member)
+            .select("*", rank.alias("__gx_rn"))
+            .filter(F.col("__gx_rn") <= limit)
+        )
+        rows = sorted(
+            (r.asDict() for r in top.collect()),
+            key=lambda r: (r["__gx_m"], r["__gx_rn"]),
+        )
+        vals = obs.get  # complete: the map-side sort consumed every row
+        for i, (fn, m) in enumerate(zip(flag_names, members)):
+            count = int(vals[fn] or 0)
+            metrics[window_metric(m)] = count
+            if count:  # passing members need no sample
+                mine = [r for r in rows if r["__gx_m"] == i]
+                prefetched[id(m)] = (
+                    "wsample",
+                    "ok",
+                    m.compiled.pool_sample(mine, index_cols),
                 )
-            ).alias("__gx_m")
-            rank = F.row_number().over(
-                Window.partitionBy("__gx_m").orderBy(*cols)
-            )
-            top = (
-                proj.filter(any_flag)
-                .select(*cols, member)
-                .select("*", rank.alias("__gx_rn"))
-                .filter(F.col("__gx_rn") <= limit)
-            )
-            rows = sorted(
-                (r.asDict() for r in top.collect()),
-                key=lambda r: (r["__gx_m"], r["__gx_rn"]),
-            )
-            vals = obs.get  # complete: the map-side sort consumed every row
-            for fn, m in zip(flag_names, members):
-                metrics[f"window_unexpected::{id(m)}"] = int(vals[fn] or 0)
-            for i, _, m in poolable:
-                if not metrics[f"window_unexpected::{id(m)}"]:
-                    continue  # passing members need no sample
-                try:
-                    mine = [r for r in rows if r["__gx_m"] == i]
-                    prefetched[id(m)] = (
-                        "wsample",
-                        "ok",
-                        m.compiled.pool_sample(mine, index_cols),
-                    )
-                except Exception:  # noqa: BLE001 — dedicated job at assembly
-                    logger.warning(
-                        "fused pool_sample failed for %s; dedicated sample "
-                        "job at assembly",
-                        m.config.expectation_type,
-                        exc_info=True,
-                    )
-            return True
-        except Exception as exc:  # noqa: BLE001 — fold is an optimization
-            logger.warning(
-                "fused window counts+samples failed (%s); falling back to "
-                "the count-only agg + dedicated per-expectation sample jobs",
-                exc,
-            )
-            return False
 
     # ------------------------------------------------------------------
 
@@ -973,7 +967,7 @@ class SuiteValidator:
         items: List[_PlannedItem],
         metrics: Dict[str, Any],
         rf: dict,
-        pool: Optional[ThreadPoolExecutor] = None,
+        pool: ThreadPoolExecutor,
     ) -> Dict[int, Dict[str, Any]]:
         """Phase D: violation samples for failing map expectations."""
         if rf["result_format"] == "BOOLEAN_ONLY":
@@ -1015,10 +1009,13 @@ class SuiteValidator:
             projected = df.select(
                 *[F.col(c) for c in index_cols], *value_cols, *flag_cols
             )
-        persisted = False
-        if self.persist_for_samples and len(needing) > 1:
+        # several failing expectations slice the same projection: persist
+        # it (MEMORY_AND_DISK), the reference's ``persist=True`` batch flag
+        # (``sparkdf_execution_engine.py:210-218``)
+        persisted = len(needing) > 1
+        if persisted:
             projected = projected.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted = True
+
         def collect_one(item: _PlannedItem, idx: str) -> Dict[str, Any]:
             c = item.compiled
             assert isinstance(c, CompiledMap)
@@ -1056,21 +1053,18 @@ class SuiteValidator:
 
         samples: Dict[int, Dict[str, Any]] = {}
         try:
-            if pool is not None and len(needing) > 1:
-                # concurrent limit-collects on the persisted projection may
-                # race to compute the same partition (bounded duplicate
-                # work, cache stays coherent); NOT pre-materialized — that
-                # would force a full scan where limits prune to a few
-                # partitions
-                futs = [
-                    (item, pool.submit(collect_one, item, idx))
-                    for item, idx in needing
-                ]
-                for item, fut in futs:
-                    samples[id(item)] = fut.result()
-            else:
-                for item, idx in needing:
-                    samples[id(item)] = collect_one(item, idx)
+            # every collect goes through the pool, so a one-worker pool
+            # runs it alone.  Concurrent limit-collects on the persisted
+            # projection may race to compute the same partition (bounded
+            # duplicate work, cache stays coherent); NOT pre-materialized
+            # — that would force a full scan where limits prune to a few
+            # partitions
+            futs = [
+                (item, pool.submit(collect_one, item, idx))
+                for item, idx in needing
+            ]
+            for item, fut in futs:
+                samples[id(item)] = fut.result()
         finally:
             if persisted:
                 projected.unpersist()
@@ -1082,12 +1076,11 @@ class SuiteValidator:
         self,
         item: _PlannedItem,
         df: DataFrame,
-        spark: SparkSession,
         metrics: Dict[str, Any],
         samples: Dict[int, Dict[str, Any]],
         rf: dict,
         catch_exceptions: bool,
-        prefetched: Optional[Dict[int, Tuple[str, Any]]] = None,
+        prefetched: Dict[int, Tuple[str, Any]],
     ) -> ExpectationValidationResult:
         config_dict = item.config.to_json_dict()
         if item.error is not None:
@@ -1098,7 +1091,7 @@ class SuiteValidator:
                 raise item.error
             return self._exception_result(config_dict, item.error)
         c = item.compiled
-        pre = (prefetched or {}).get(id(item))
+        pre = prefetched.get(id(item))
         try:
             if pre is not None and pre[1] == "err":
                 raise pre[2]
@@ -1107,8 +1100,6 @@ class SuiteValidator:
             if isinstance(c, CompiledWindow):
                 return self._assemble_window(
                     item,
-                    c,
-                    df,
                     metrics,
                     rf,
                     config_dict,
@@ -1131,10 +1122,7 @@ class SuiteValidator:
                     result=convert_to_json_serializable(out.get("result", {})),
                 )
             if isinstance(c, CompiledJob):
-                if pre is not None and pre[0] == "job":
-                    out = pre[2]
-                else:
-                    out = self._run_job_item(c, df, spark, item.domain, rf)
+                out = pre[2]
                 result = out.get("result", {})
                 if "result" not in out and "success" in out:
                     result = {
@@ -1230,54 +1218,41 @@ class SuiteValidator:
     def _assemble_window(
         self,
         item: _PlannedItem,
-        c: CompiledWindow,
-        df: DataFrame,
         metrics: Dict[str, Any],
         rf: dict,
         config_dict: Dict[str, Any],
-        prefetched_sample: Optional[Any] = None,
+        sample: Optional[Dict[str, Any]] = None,
     ) -> ExpectationValidationResult:
+        """Window result from the phase-A element/considered counters, the
+        phase-B ``window_metric`` count and, when served, the violation
+        sample; shared with ``checkpoint.runner.validate_by_partition``."""
         element_count = int(metrics.get(item.element_alias) or 0)
         considered_count = int(
             (metrics.get(item.considered_alias) or 0)
             if item.considered_alias
             else element_count
         )
-        unexpected_count = int(metrics.get(f"window_unexpected::{id(item)}") or 0)
-        mostly = item.config.mostly
+        unexpected_count = int(metrics.get(window_metric(item)) or 0)
         success = map_expectation_success(
-            element_count, considered_count, unexpected_count, mostly
+            element_count,
+            considered_count,
+            unexpected_count,
+            item.config.mostly,
         )
-        unexpected_list: Optional[List[Any]] = None
-        unexpected_index_list: Optional[List[Any]] = None
+        sample = sample or {}
         index_cols = rf.get("unexpected_index_column_names")
-        if rf["result_format"] != "BOOLEAN_ONLY":
-            if unexpected_count:
-                limit = (
-                    self.max_complete_collect
-                    if rf["result_format"] == "COMPLETE"
-                    else rf["partial_unexpected_count"]
-                )
-                sample = (
-                    prefetched_sample
-                    if prefetched_sample is not None
-                    else c.sample(df, item.domain, limit, index_cols)
-                )
-                if isinstance(sample, dict):
-                    unexpected_list = sample.get("unexpected_list", [])
-                    unexpected_index_list = sample.get("unexpected_index_list")
-                else:  # legacy list return
-                    unexpected_list = sample
-            else:
-                unexpected_list = []
         out = format_map_output(
             rf,
             success=success,
             element_count=element_count,
             nonnull_count=considered_count,
             unexpected_count=unexpected_count,
-            unexpected_list=unexpected_list,
-            unexpected_index_list=unexpected_index_list,
+            unexpected_list=(
+                None
+                if rf["result_format"] == "BOOLEAN_ONLY"
+                else sample.get("unexpected_list", [])
+            ),
+            unexpected_index_list=sample.get("unexpected_index_list"),
             unexpected_index_column_names=index_cols,
         )
         return ExpectationValidationResult(

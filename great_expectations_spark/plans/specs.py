@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any, Callable, Dict, List, Optional
+from typing import Any, Callable, Dict, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 
@@ -41,34 +41,40 @@ class CompiledMap:
 
 @dataclass
 class CompiledWindow:
-    """A uniqueness/monotonicity expectation needing its own (shuffling)
-    physical plan; executed by the planner in a separate phase.
+    """A uniqueness/monotonicity/contiguity expectation needing a shuffle;
+    executed by the planner in a separate phase.  Each has ONE evaluator,
+    parameterised by an optional group prefix ``group_by`` (empty for a
+    whole-table ``validate``, ``[partition_column]`` for
+    ``validate_by_partition``), so both callers compute the same flags.
 
-    ``execute(df, domain_cond)`` returns a metrics dict:
-      {element_count, considered_count, unexpected_count}
-    ``sample(df, domain_cond, n)`` returns up to n unexpected values
-    (and optionally index rows) for the result payload.
+    Two shapes:
+
+    * Flag windows (monotonicity, window-strategy contiguity, and a
+      uniqueness adopted onto a shared window): ``flag_builder(group_by)``
+      returns the row-level unexpected Column over a window partitioned by
+      ``[*group_by, *partition_by]``; ``window_signature`` groups members
+      that share a (partition_by, order_by) spec into one pass.  Their
+      samples come from the group's fused job: ``sample_columns
+      (index_cols)`` lists the row columns a member needs, and
+      ``pool_sample(row_dicts, index_cols)`` formats its flagged rows.
+    * Set windows (uniqueness, join-strategy contiguity):
+      ``execute(df, domain_cond, group_by)`` returns ``{group key tuple:
+      unexpected_count}`` from a ``groupBy(*group_by, *keys)``
+      aggregation, and ``sample(df, domain_cond, n, index_cols)`` a dict
+      with ``unexpected_list`` (and ``unexpected_index_list``).
     """
 
     kind: str
     domain_columns: List[str]
     denominator: str
-    execute: Callable[[DataFrame, Optional[Column]], Dict[str, int]]
-    sample: Callable[[DataFrame, Optional[Column], int], List[Any]]
+    execute: Optional[
+        Callable[[DataFrame, Optional[Column], Sequence[str]], Dict[tuple, int]]
+    ] = None
+    sample: Optional[Callable[..., Dict[str, List[Any]]]] = None
     value_is_dict: bool = False
     considered: Optional[Column] = None  # counted in the bundled agg phase
-    # lag/window-flag expectations sharing a window spec can be evaluated
-    # together in ONE pass: flag_builder returns the row-level unexpected
-    # Column; window_signature groups compatible specs
-    flag_builder: Optional[Callable[[], Column]] = None
+    flag_builder: Optional[Callable[[Sequence[str]], Column]] = None
     window_signature: Optional[tuple] = None
-    # pooled group sampling: expectations riding a SHARED window pass can
-    # also share ONE violation-sample job (instead of one full
-    # re-scan+re-shuffle per expectation — the measured non-scaling term
-    # of the suite).  ``sample_columns(index_cols)`` lists the row columns
-    # the pooled collector must carry for this member;
-    # ``pool_sample(row_dicts, index_cols)`` formats the member's flagged
-    # rows (already limited) into the exact dict ``sample()`` returns.
     sample_columns: Optional[
         Callable[[Optional[List[str]]], List[str]]
     ] = None

@@ -787,6 +787,11 @@ def streaming_asof_enrich(
     Scale: state shuffles by ``key`` once per micro-batch; per-key state
     is O(right rows inside the watermark window + left rows awaiting
     the watermark), both watermark-bounded and explicitly capped.
+
+    The timers are processing-time timeouts, and Spark runs another
+    (no-data) micro-batch after every batch of such an operator, so a
+    ``trigger(availableNow=True)`` query over this frame never
+    terminates by itself: stop it once its output is in.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import TimestampNTZType, TimestampType

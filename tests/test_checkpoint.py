@@ -813,3 +813,69 @@ def test_no_extra_distinct_scan_when_bundle_covers_universe(
         assert calls["n"] == 1  # no full-universe mapping -> one scan
     finally:
         dim.unpersist()
+
+
+def test_grouped_windows_are_partition_local(spark):
+    """A conversation that crosses a partition boundary: conv x has turns
+    0-1 on day a and turns 2-3 on day b, conv y sits on day b only.  For
+    every partition and every window expectation, validate_by_partition
+    must count exactly what a per-partition validate counts — on day b,
+    x's turn 2 has no predecessor inside the partition."""
+    from pyspark.sql import functions as F
+
+    from great_expectations_spark.plans.planner import SuiteValidator
+
+    rows = [
+        ("x", 0, 100, "a"),
+        ("x", 1, 110, "a"),
+        ("x", 2, 120, "b"),
+        ("x", 3, 130, "b"),
+        ("y", 0, 50, "b"),
+        ("y", 1, 60, "b"),
+        ("y", 1, 60, "b"),  # duplicate turn, same ts
+        ("y", 2, 55, "b"),  # ts regression within y
+    ]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, ts long, day string"
+    ).coalesce(1)
+    suite = (
+        ExpectationSuite("crossday")
+        .add(
+            "expect_sequence_to_be_contiguous",
+            group_column="conv_id",
+            index_column="turn_idx",
+        )
+        .add(
+            "expect_sequence_to_be_contiguous",
+            group_column="conv_id",
+            index_column="turn_idx",
+            strategy="join",
+        )
+        .add(
+            "expect_column_values_to_be_increasing",
+            column="ts",
+            partition_by="conv_id",
+            order_by="turn_idx",
+        )
+        .add("expect_column_values_to_be_increasing", column="ts")
+        .add(
+            "expect_compound_columns_to_be_unique",
+            column_list=["conv_id", "turn_idx"],
+        )
+    )
+    grouped = validate_by_partition(df, suite, "day")
+    assert sorted(grouped) == ["a", "b"]
+    v = SuiteValidator()
+    counts = {}
+    for day in ("a", "b"):
+        full = v.validate(df.filter(F.col("day") == day), suite, "BASIC")
+        pairs = zip(grouped[day].results, full.results)
+        for i, (gr, fr) in enumerate(pairs):
+            assert (
+                gr.result["unexpected_count"],
+                gr.success,
+            ) == (fr.result["unexpected_count"], fr.success), (day, i)
+        counts[day] = [r.result["unexpected_count"] for r in full.results]
+    # window-contiguity, join-contiguity, per-conversation increasing,
+    # table-order increasing (y's 50 and 55 after larger ts), uniqueness
+    assert counts == {"a": [0, 0, 0, 0, 0], "b": [1, 1, 1, 2, 2]}

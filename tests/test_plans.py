@@ -87,13 +87,43 @@ def test_sample_phase_pushes_limit(lineitem):
         "expect_column_values_to_be_between",
         column="l_quantity", min_value=0, max_value=10,
     )
-    v = SuiteValidator(persist_for_samples=False)
+    v = SuiteValidator()
     res = v.validate(lineitem, suite, result_format="SUMMARY")
     r = res.results[0]
     assert not r.success
     # SUMMARY partial list capped at 20 despite thousands of violations
     assert len(r.result["partial_unexpected_list"]) == 20
     assert r.result["unexpected_count"] > 1000
+
+
+def test_job_concurrency_one_runs_jobs_on_one_thread(lineitem, monkeypatch):
+    # job_concurrency=1 serializes the pass: every collect (map sample,
+    # window count and sample, aggregate followup) runs on one thread
+    import threading
+
+    cls = type(lineitem)
+    collect = cls.collect
+    threads = []
+
+    def spy(self):
+        threads.append(threading.current_thread().name)
+        return collect(self)
+
+    monkeypatch.setattr(cls, "collect", spy)
+    suite = (
+        ExpectationSuite("p")
+        .add("expect_column_values_to_be_between",
+             column="l_quantity", min_value=0, max_value=5)
+        .add("expect_column_values_to_be_unique", column="l_partkey")
+        .add("expect_column_distinct_values_to_be_in_set",
+             column="l_returnflag", value_set=["A", "N", "R"])
+    )
+    res = SuiteValidator(job_concurrency=1).validate(lineitem, suite, "SUMMARY")
+    between, unique, _ = res.results
+    assert between.result["partial_unexpected_list"]
+    assert unique.result["partial_unexpected_list"]
+    assert len(threads) >= 4
+    assert len(set(threads)) == 1, threads
 
 
 def test_row_condition_pushes_to_scan(spark, lineitem):

@@ -1,10 +1,9 @@
 """Fused window counts+samples: the three window-family expectations
 sharing one (conv_id, turn_idx) spec must get their violation COUNTS
 (observation metrics) and their violation SAMPLES from ONE job — not a
-count agg plus a pooled re-scan — with per-member content identical in
-kind to the dedicated path, exact per-member caps (no starvation), and
-a fallback that never loses counts or rows when the fused machinery is
-disabled."""
+count agg plus a pooled re-scan — with exact per-member caps (no
+starvation), deterministic content, and index columns of any type
+carried through (a map-typed one stays out of the top-k order)."""
 
 from __future__ import annotations
 
@@ -71,15 +70,13 @@ def _spy_fused(monkeypatch, calls):
 
     def spy(self, df, members, metrics, rf, prefetched):
         before = set(prefetched)
-        ok = orig(self, df, members, metrics, rf, prefetched)
+        orig(self, df, members, metrics, rf, prefetched)
         calls.append(
             {
                 "members": len(members),
-                "fused": ok,
                 "served": len(set(prefetched) - before),
             }
         )
-        return ok
 
     monkeypatch.setattr(SuiteValidator, "_fused_window_group", spy)
 
@@ -113,6 +110,19 @@ def _assert_window_contents(res, list_key="partial_unexpected_list"):
 def test_fused_job_serves_counts_and_all_samples(
     spark, convs, window_suite, monkeypatch, jc
 ):
+    from great_expectations_spark.operators import window_ops
+
+    # the adopted uniqueness keeps its set-window sampler; it must not run
+    dedicated = []
+    orig = window_ops._uniqueness_window
+
+    def spy_uniqueness(*args):
+        cw = orig(*args)
+        sample = cw.sample
+        cw.sample = lambda *a: dedicated.append(a) or sample(*a)
+        return cw
+
+    monkeypatch.setattr(window_ops, "_uniqueness_window", spy_uniqueness)
     calls = []
     _spy_fused(monkeypatch, calls)
     res = SuiteValidator(job_concurrency=jc).validate(
@@ -120,7 +130,8 @@ def test_fused_job_serves_counts_and_all_samples(
     )
     # one group (conv_id, turn_idx); one fused call serving all three
     # violated members' samples alongside their counts
-    assert calls == [{"members": 3, "fused": True, "served": 3}]
+    assert calls == [{"members": 3, "served": 3}]
+    assert dedicated == []
     _assert_window_contents(res)
 
 
@@ -139,22 +150,36 @@ def test_fused_carries_index_lineage(spark, convs, window_suite):
     ]
 
 
-@pytest.mark.parametrize("jc", [1, 8])
-def test_fused_failure_falls_back_to_count_agg_and_dedicated_jobs(
-    spark, convs, window_suite, monkeypatch, jc
+def test_map_typed_index_column_rides_the_fused_job(
+    spark, convs, window_suite, monkeypatch
 ):
-    # counts must never depend on the fused path: disable it entirely and
-    # the suite must produce identical counts and sample content through
-    # the count-only agg + dedicated per-expectation sample jobs
-    monkeypatch.setattr(
-        SuiteValidator,
-        "_fused_window_group",
-        lambda self, df, members, metrics, rf, prefetched: False,
+    # Spark cannot ORDER BY a map: the top-k orders by the orderable
+    # sample columns only, and still returns the map column as lineage
+    from pyspark.sql import functions as F
+
+    df = convs.withColumn(
+        "meta", F.create_map(F.lit("turn"), F.col("turn_idx"))
     )
-    res = SuiteValidator(job_concurrency=jc).validate(
-        convs, window_suite, result_format="SUMMARY"
+    assert dict(df.dtypes)["meta"] == "map<string,int>"
+    calls = []
+    _spy_fused(monkeypatch, calls)
+    rf = {
+        "result_format": "SUMMARY",
+        "unexpected_index_column_names": ["conv_id", "meta"],
+    }
+    res = SuiteValidator(job_concurrency=1).validate(
+        df, window_suite, result_format=rf
     )
+    assert calls == [{"members": 3, "served": 3}]
+    assert not any(r.exception_info["raised_exception"] for r in res.results)
     _assert_window_contents(res)
+    for r in res.results:
+        index_list = r.result["partial_unexpected_index_list"]
+        assert index_list, r.expectation_config["expectation_type"]
+    inc = _by_type(res)["expect_column_values_to_be_increasing"]
+    assert inc.result["partial_unexpected_index_list"] == [
+        {"conv_id": "ts", "meta": {"turn": 2}}
+    ]
 
 
 def test_partial_cap_respected_per_member(spark, convs, window_suite):
@@ -190,7 +215,7 @@ def test_complete_format_uses_fused_pool(
     res = SuiteValidator(job_concurrency=1).validate(
         convs, window_suite, result_format="COMPLETE"
     )
-    assert calls == [{"members": 3, "fused": True, "served": 3}]
+    assert calls == [{"members": 3, "served": 3}]
     _assert_window_contents(res, list_key="unexpected_list")
 
 

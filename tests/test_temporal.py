@@ -21,6 +21,30 @@ def _mk(spark, rows, schema):
     return spark.createDataFrame(rows, schema)
 
 
+def _await_emitted(q, seen, ids, timeout=180):
+    """Wait until every id in ``ids`` was emitted, then stop ``q``.
+
+    ``streaming_asof_enrich`` arms processing-time timers, and Spark
+    runs another (no-data) micro-batch after every batch of such an
+    operator, so an ``availableNow`` query over it never terminates by
+    itself. Stopping it here keeps it from running on in the shared
+    session after the test."""
+    import time
+
+    deadline = time.monotonic() + timeout
+    try:
+        while time.monotonic() < deadline:
+            if not q.isActive:
+                q.awaitTermination()  # re-raises the query's failure
+                break
+            got = {r["id"] for batch in list(seen) for r in batch}
+            if ids <= got:
+                break
+            time.sleep(0.2)
+    finally:
+        q.stop()
+
+
 @pytest.fixture()
 def trades_quotes(spark):
     rng = random.Random(7)
@@ -287,7 +311,7 @@ def test_streaming_asof_enrich_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    _await_emitted(q, seen, {1, 2, 3, 4, 5})
     rows = {r["id"]: r for r in (x for batch in seen for x in batch)}
 
     # on-time rows match the BATCH asof_join over the same on-time data
@@ -439,7 +463,7 @@ def test_streaming_asof_quiet_key_flushes_on_timer(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    _await_emitted(q, seen, {1, 9})
     rows = {r["id"]: r for r in (x for batch in seen for x in batch)}
     # the quiet key's row flushed via the timer, correctly enriched
     assert 1 in rows, f"quiet-key left row never emitted: {rows}"
