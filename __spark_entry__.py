@@ -1335,8 +1335,9 @@ def _grouped_jobs_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _grouped_shared_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared grouped window pass (`planner.window_group_counts` with the
-    partition column as group prefix):
+    """Shared grouped window pass (`validate_by_partition` runs
+    `planner.window_group_counts` with the partition column as group
+    prefix):
     a monotonicity expectation and a compound-uniqueness expectation on
     the same (day, user_id) / event_id window spec compute BOTH per-day
     counts in one projection + one groupBy(day) — a single shuffle, with

@@ -11,20 +11,14 @@ Two execution strategies over a partitioned table:
   ``tests/performance/results/minimal_multithreading_run_*.json``); Spark's
   scheduler interleaves the jobs.
 
-* ``validate_by_partition`` — the scale path: ONE
-  ``groupBy(partition_col)`` pass computes every partition's bundled
-  counters simultaneously, plus one grouped pass per window *group* —
-  the planner's own window evaluators with the partition column as a
-  group prefix (``planner.window_group_counts`` for flag windows sharing
-  a (partition_by, order_by) spec and domain, each set window's
-  ``execute``), so every window is partition-local and its counts equal
-  a per-partition ``SuiteValidator.validate`` — producing an
-  ExpectationSuiteValidationResult per partition with counts (BASIC, no
-  samples).  10^5 partitions = still ~3 Spark jobs.  The independent
-  grouped passes (bundled agg, each window group, each grouped job
-  expectation) are submitted concurrently from driver threads
-  (``validator.job_concurrency``), the same serial-driver-term fix as
-  ``SuiteValidator.validate``.
+* ``validate_by_partition`` — the scale path: ``SuiteValidator``'s own
+  phases with the partition column as group prefix, so every
+  partition's counters come from the same Spark jobs —
+  ``groupBy(partition_col)`` bundled counters, one grouped job per
+  window group, grouped job expectations, domain-scoped aggregates and
+  aggregate followups — and every result is built by the same
+  ``SuiteValidator._assemble`` as a per-partition ``validate``
+  (counts; BASIC, no samples).  10^5 partitions = still ~3 Spark jobs.
 """
 
 from __future__ import annotations
@@ -45,24 +39,10 @@ from great_expectations_spark.checkpoint.manifest import (
 from great_expectations_spark.core.result_format import parse_result_format
 from great_expectations_spark.core.results import (
     ExpectationSuiteValidationResult,
-    ExpectationValidationResult,
     build_suite_statistics,
-    convert_to_json_serializable,
 )
 from great_expectations_spark.core.suite import ExpectationSuite
-from great_expectations_spark.plans.planner import (
-    SuiteValidator,
-    plan_window_groups,
-    window_group_counts,
-    window_metric,
-)
-from great_expectations_spark.plans.specs import (
-    CompiledAggregate,
-    CompiledJob,
-    CompiledMap,
-    CompiledSchemaCheck,
-    CompiledWindow,
-)
+from great_expectations_spark.plans.planner import SuiteValidator
 
 logger = logging.getLogger(__name__)
 
@@ -368,246 +348,67 @@ def validate_by_partition(
 ) -> Dict[str, ExpectationSuiteValidationResult]:
     """Single-pass per-partition validation (counts; BASIC, no samples).
 
-    Bundled counters: one groupBy(partition).agg(...) job.  Each window
-    group (expectations sharing a window spec) and each set window adds
-    one grouped job; windows are partition-local, so their counts equal
-    a per-partition ``validate``.  Schema checks evaluate
-    once and fan out.  Job expectations with a ``grouped`` hook
-    (referential exist-in-other-table, two-sample KS/PSI/chi² drift, and
-    the one-sample distribution family — KL divergence, chi-square GoF,
-    bootstrapped KS) run
-    in O(1) grouped jobs covering every partition at once; job
-    expectations without one (user SQL templates) fall back to one
-    partition-filtered job per partition — at high partition counts
-    prefer the grouped-capable expectations or ``run_checkpoint``.
-
-    Scale note: aggregate expectations with a ``followup`` hook (the
-    distinct-VALUE-set family) run one partition-filtered followup job
-    per partition here — bounded per job by the cardinality cap, but at
-    10^5 partitions prefer count-based distinct expectations
-    (``unique_value_count`` / ``proportion_of_unique_values``), which
-    ride the single grouped pass.
+    Runs ``SuiteValidator``'s phases once with ``partition_column`` as the
+    group prefix and assembles each partition's results with
+    ``SuiteValidator._assemble``, so every count and observed value
+    equals a per-partition ``validate``.  Bundled counters: one
+    groupBy(partition).agg(...) job.  Each window group (expectations
+    sharing a window spec) and each set window adds one grouped job;
+    windows are partition-local.  Each aggregate over a
+    ``row_condition`` domain adds one filtered grouped job.  Schema
+    checks evaluate per partition without a scan.  Job expectations with
+    a ``grouped`` hook (referential exist-in-other-table, two-sample
+    KS/PSI/chi² drift, user SQL, and the one-sample distribution family
+    — KL divergence, chi-square GoF, bootstrapped KS) run in O(1)
+    grouped jobs covering every partition at once; a job expectation
+    without one, or a partition its grouped mapping lacks, runs one
+    partition-filtered job at assembly.  Aggregate followups (the
+    distinct-value-set family) resolve every partition through their
+    ``grouped_followup`` hook in one job.
     """
     validator = validator or SuiteValidator()
-    spark = df.sparkSession
     rf = parse_result_format("BASIC")
     items = validator._compile(
         suite, suite.evaluation_parameters, True, parameter_store
     )
     validator._check_columns_exist(df, items)
+    metrics, prefetched = validator._run_phases_concurrent(
+        df, items, rf, True, [partition_column]
+    )
 
-    # --- the grouped window passes: the planner's own planning and
-    # evaluators, with the partition column prefixed to every window's
-    # partitioning and grouping keys
-    groups, set_windows = plan_window_groups(items)
-    prefix = [partition_column]
-
-    # grouped window counts: per partition -> {window_metric: count}
-    window_counts: Dict[Any, Dict[str, int]] = {}
-    # grouped job results: per item -> {partition: vout} in O(1) jobs
-    job_grouped: Dict[int, Dict[Any, Dict[str, Any]]] = {}
-
-    # the grouped passes are independent Spark jobs — submit them from
-    # driver threads so planning of one overlaps execution of the others
-    conc = max(1, getattr(validator, "job_concurrency", 1))
-    with ThreadPoolExecutor(max_workers=conc) as pool:
-        fut_bundle = pool.submit(
-            validator._run_bundled_phase_isolating,
-            df,
-            items,
-            partition_column,
+    # partition universe: every key a grouped phase produced.  The
+    # bundled pass groups the UNFILTERED df, so once any item rode it its
+    # keys enumerate every partition with >=1 row; the other grouped
+    # outputs (domain-filtered windows, aggregates and jobs, whose
+    # mappings may be partial) cannot.  Without a bundled item (a suite
+    # of job/schema/domain-aggregate expectations, or one where every
+    # item errored and still owes each partition its exception EVRs) one
+    # distinct scan supplies the universe, or partitions silently vanish
+    # from the output.
+    keys = set(metrics) | set(prefetched)
+    if items and not any(
+        item.error is None and (item.element_alias or item.agg_aliases)
+        for item in items
+    ):
+        keys.update(
+            (p,) for p in _collect_partition_values(df, partition_column)
         )
-        group_futs = [
-            (members, pool.submit(window_group_counts, df, members, prefix))
-            for members in groups.values()
-        ]
-        set_futs = [
-            (item, pool.submit(
-                item.compiled.execute, df, item.domain, prefix
-            ))
-            for item in set_windows
-        ]
-        job_futs = [
-            (item, pool.submit(
-                item.compiled.grouped, df, spark, item.domain,
-                partition_column,
-            ))
-            for item in items
-            if isinstance(item.compiled, CompiledJob)
-            and item.compiled.grouped is not None
-            and item.error is None
-        ]
-        grouped = fut_bundle.result()
-        # aggregate followups with a grouped hook (the distinct-value-set
-        # family): every partition's followup in O(1) jobs instead of one
-        # partition-filtered job per partition — needs phase-A counts, so
-        # submitted after the bundle resolves (still inside the pool)
-        agg_grouped: Dict[int, Dict[Any, Any]] = {}
-        agg_futs = []
-        for item in items:
-            c = item.compiled
-            if (
-                isinstance(c, CompiledAggregate)
-                and c.grouped_followup is not None
-                and item.error is None
-                and item.domain is None
-            ):
-                values_by_part = {
-                    part: {
-                        k: metrics.get(alias)
-                        for k, alias in item.agg_aliases.items()
-                    }
-                    for part, metrics in grouped.items()
-                }
-                agg_futs.append(
-                    (item, pool.submit(
-                        c.grouped_followup, df, partition_column,
-                        values_by_part,
-                    ))
-                )
-        for members, fut in group_futs:
-            try:
-                for (part,), counts in fut.result().items():
-                    window_counts.setdefault(part, {}).update(counts)
-            except Exception as exc:  # noqa: BLE001
-                for m in members:
-                    m.error = exc
-        for item, fut in set_futs:
-            try:
-                for (part,), count in fut.result().items():
-                    window_counts.setdefault(part, {})[
-                        window_metric(item)
-                    ] = count
-            except Exception as exc:  # noqa: BLE001
-                item.error = exc
-        for item, fut in job_futs:
-            try:
-                job_grouped[id(item)] = fut.result()
-            except Exception as exc:  # noqa: BLE001
-                item.error = exc
-        for item, fut in agg_futs:
-            try:
-                agg_grouped[id(item)] = fut.result()
-            except Exception as exc:  # noqa: BLE001
-                item.error = exc
-
-    # partition universe: union of every grouped phase's keys (a suite of
-    # only job/window expectations has no bundled metrics).  A grouped
-    # JOB mapping may legitimately be partial — a partition the
-    # expectation's domain filtered empty, or one whose grouped
-    # evaluation errored and was left out for the per-partition fallback
-    # to confine — so with job expectations present the universe must
-    # come from the data, not from the mappings, or those partitions
-    # silently vanish from the output.
-    part_keys = set(grouped.keys()) | set(window_counts.keys())
-    for m in job_grouped.values():
-        part_keys.update(m.keys())
-    # the bundled pass groups the UNFILTERED df, so a non-empty `grouped`
-    # mapping already enumerates every partition with >=1 row — the extra
-    # distinct scan runs only when no full-universe mapping exists (a
-    # suite of job/schema-only expectations, or one where every item
-    # errored at compile and still owes each partition its exception
-    # EVRs), not on every call that happens to contain a job expectation
-    if (
-        any(isinstance(i.compiled, CompiledJob) for i in items)
-        and not grouped
-    ) or (not part_keys and items):
-        part_keys.update(
-            _collect_partition_values(df, partition_column)
-        )
-    partitions = sorted(part_keys, key=str)
 
     out: Dict[str, ExpectationSuiteValidationResult] = {}
-    for part in partitions:
-        metrics = {**grouped.get(part, {}), **window_counts.get(part, {})}
-        results: List[ExpectationValidationResult] = []
-        for item in items:
-            config_dict = item.config.to_json_dict()
-            if item.error is not None:
-                results.append(
-                    SuiteValidator._exception_result(config_dict, item.error)
-                )
-                continue
-            c = item.compiled
-            try:
-                if isinstance(c, CompiledMap):
-                    results.append(
-                        validator._assemble_map(
-                            item, c, metrics, {}, rf, config_dict
-                        )
-                    )
-                elif isinstance(c, CompiledWindow):
-                    results.append(
-                        validator._assemble_window(
-                            item, metrics, rf, config_dict
-                        )
-                    )
-                elif isinstance(c, CompiledAggregate):
-                    values = {
-                        k: metrics.get(alias)
-                        for k, alias in item.agg_aliases.items()
-                    }
-                    if id(item) in agg_grouped:
-                        extra = agg_grouped[id(item)].get(part)
-                        if isinstance(extra, Exception):
-                            raise extra
-                        values.update(extra or {})
-                    elif c.followup is not None:
-                        values.update(
-                            c.followup(
-                                df.filter(
-                                    F.col(partition_column) == F.lit(part)
-                                ),
-                                values,
-                            )
-                        )
-                    vout = c.validate(values)
-                    results.append(
-                        ExpectationValidationResult(
-                            success=bool(vout["success"]),
-                            expectation_config=config_dict,
-                            result=convert_to_json_serializable(
-                                vout.get("result", {})
-                            ),
-                        )
-                    )
-                elif isinstance(c, CompiledSchemaCheck):
-                    vout = c.validate(df)
-                    results.append(
-                        ExpectationValidationResult(
-                            success=bool(vout["success"]),
-                            expectation_config=config_dict,
-                            result=convert_to_json_serializable(
-                                vout.get("result", {})
-                            ),
-                        )
-                    )
-                elif isinstance(c, CompiledJob):
-                    vout = job_grouped.get(id(item), {}).get(part)
-                    if vout is None:
-                        # no grouped hook, or this partition was filtered
-                        # empty by the expectation's domain — one
-                        # partition-scoped job (partition predicate prunes
-                        # the scan)
-                        part_df = df.filter(
-                            F.col(partition_column) == F.lit(part)
-                        )
-                        vout = validator._run_job_item(
-                            c, part_df, spark, item.domain, rf
-                        )
-                    results.append(
-                        ExpectationValidationResult(
-                            success=bool(vout["success"]),
-                            expectation_config=config_dict,
-                            result=convert_to_json_serializable(
-                                vout.get("result", {})
-                            ),
-                        )
-                    )
-            except Exception as exc:  # noqa: BLE001
-                results.append(
-                    SuiteValidator._exception_result(config_dict, exc)
-                )
+    for key in sorted(keys, key=lambda k: str(k[0])):
+        part = key[0]
+        pre = prefetched.get(key, {})
+        # build the partition's slice only when assembly reads rows: a
+        # DataFrame per partition costs milliseconds of driver time
+        part_df = df
+        if any(validator._reads_rows(item, pre) for item in items):
+            part_df = df.filter(F.col(partition_column).eqNullSafe(part))
+        results = [
+            validator._assemble(
+                item, part_df, metrics.get(key, {}), rf, True, pre
+            )
+            for item in items
+        ]
         out[str(part)] = ExpectationSuiteValidationResult(
             success=all(r.success for r in results),
             results=results,
@@ -628,4 +429,3 @@ def validate_by_partition(
             },
         )
     return out
-

@@ -1553,8 +1553,11 @@ def curate_corpus(
     ``'auto'`` inserts a lazy ``localCheckpoint(eager=False)`` after
     the C4 and redact stages whenever a later stage re-reads the text,
     so the rewrite is computed ONCE and later stages see a plain
-    column; storage is the executors' MEMORY_AND_DISK.  At corpus
-    scales beyond executor storage use the per-partition runner
+    column; storage is the executors' MEMORY_AND_DISK.  A local
+    checkpoint truncates lineage, so an executor lost after it ran
+    fails the job instead of recomputing its blocks.  At corpus
+    scales beyond executor storage, or on clusters that lose executors
+    (preemptible nodes), use the per-partition runner
     (``curate_by_partition``), whose durable per-stage writes are the
     same barrier in persistent form.  ``'none'`` keeps the fully-lazy
     single plan (small corpora / plan-inspection).

@@ -1,9 +1,17 @@
 """SuiteValidator — compiles an ExpectationSuite against a DataFrame into a
 minimal number of Spark jobs and assembles reference-shaped results.
 
+Every phase is parameterised by a group prefix ``group_by``: empty for a
+whole-table ``validate(df, suite)``, ``[partition_column]`` for
+``checkpoint.runner.validate_by_partition``, which runs the same phases
+and builds every result with the same ``_assemble``.  Phase outputs are
+keyed by group key tuple — the single ``()`` key for ``validate``, one
+``(partition,)`` key per partition for the grouped call.
+
 Physical plan of ``validate(df, suite)``:
 
-  Phase A (ONE job): a single ``df.agg(...)`` containing, for every map
+  Phase A (ONE job): a single ``df.groupBy(*group_by).agg(...)``
+    containing, for every map
     expectation, the domain/considered/unexpected conditional-sum counters,
     plus every aggregate metric (mean/stddev/quantile sketch/HLL/...), all
     gated per-expectation by its own ``row_condition`` via
@@ -11,17 +19,27 @@ Physical plan of ``validate(df, suite)``:
     row conditions is one scan.  This generalizes the reference's
     per-domain bundling (``sparkdf_execution_engine.py:715-793``) to the
     whole suite.  Only partial (map-side combined) aggregation shuffles a
-    single tiny row per partition — no row shuffle at all.
+    single tiny row per partition — no row shuffle at all.  With an empty
+    prefix this is exactly ``df.agg(...)``; grouped, it is every
+    partition's whole-suite counters in the same one scan.
   Phase B: window expectations, each needing a shuffle by key
     (operators/window_ops.py).  Flag windows (monotonicity,
     window-strategy contiguity, and uniqueness adopted onto a shared
     window spec) are grouped by (partition_by, order_by, row_condition):
-    ONE job per group computes every member's flag.  Set windows
+    ONE job per group computes every member's flag, over windows
+    partitioned by ``[*group_by, *partition_by]``.  Set windows
     (uniqueness, join-strategy contiguity) run one two-phase hash
-    aggregation each.  ``checkpoint.runner.validate_by_partition`` uses
-    the same evaluators with the partition column as a group prefix.
-  Phase C: job expectations (user SQL, referential joins, drift).
-  Phase D: violation samples, only when result_format > BOOLEAN_ONLY.
+    aggregation each, grouped by ``[*group_by, *keys]``.
+  Phase C: job expectations (user SQL, referential joins, drift).  A
+    grouped call runs each expectation's ``grouped`` hook — one job for
+    every partition; without one, assembly runs the ungrouped ``run`` on
+    the partition's slice.
+  Phase A': aggregates over a ``row_condition`` domain run one filtered
+    ``groupBy(*group_by).agg`` job each; aggregate followups run after
+    phase A (a grouped call uses the ``grouped_followup`` hook, one job
+    for every partition).
+  Phase D: violation samples, only when result_format > BOOLEAN_ONLY
+    and the call is not grouped (a grouped call returns counts only).
     FAILING map expectations: the condition-annotated projection is
     computed once, persisted when more than one expectation fails, and
     each failing expectation takes a ``limit(k)`` slice (limits push
@@ -75,7 +93,6 @@ from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from great_expectations_spark.core.domain import (
-    combine_conditions,
     domain_gate,
     parse_row_condition,
 )
@@ -170,15 +187,13 @@ class _PlannedItem:
 def plan_window_groups(
     items: List["_PlannedItem"],
 ) -> Tuple[Dict[Any, List["_PlannedItem"]], List["_PlannedItem"]]:
-    """Shared window-pass planning (used by both ``SuiteValidator`` and
-    ``checkpoint.runner.validate_by_partition``): group flag-window items
-    by (window_signature, row_condition) so each group computes all its
+    """Window-pass planning: group flag-window items by
+    (window_signature, row_condition) so each group computes all its
     flags in ONE projection + ONE shuffle, and adopt uniqueness
     expectations whose key columns equal a group's (partition_by +
     order_by) spec as a duplicate flag over that same window.  A group
-    prefix (the runner's partition column) is applied later, by passing
-    it to every member's ``flag_builder``, so planning is the same for
-    both callers.
+    prefix is applied later, by passing it to every member's
+    ``flag_builder``, so planning is the same with or without one.
 
     Returns ``(groups, set_windows)``; adoption sets the adopted items'
     ``flag_builder`` in place.  ``set_windows`` are the items left to
@@ -240,6 +255,19 @@ def window_metric(item: "_PlannedItem") -> str:
     return f"window_unexpected::{id(item)}"
 
 
+def considered_flag(item: "_PlannedItem") -> Column:
+    """Rows an expectation counts: inside its ``row_condition`` domain and
+    kept by its compiled ``considered`` condition."""
+    return domain_gate(item.domain) & domain_gate(item.compiled.considered)
+
+
+def unexpected_flag(item: "_PlannedItem") -> Column:
+    """A map expectation's row-level violation flag, shared by the bundled
+    counters, the violation samples, the COMPLETE index query and the
+    streaming quarantine flag."""
+    return considered_flag(item) & domain_gate(item.compiled.unexpected)
+
+
 def window_group_counts(
     df: DataFrame,
     members: List["_PlannedItem"],
@@ -291,8 +319,7 @@ def window_group_counts(
 def _orderable(dt: Optional[T.DataType]) -> bool:
     """Whether Spark can sort by a column of this type: no map or variant
     anywhere inside it."""
-    # by type name: VariantType exists only from PySpark 4.0
-    if dt is not None and dt.typeName() in ("map", "variant"):
+    if isinstance(dt, (T.MapType, T.VariantType)):
         return False
     if isinstance(dt, T.ArrayType):
         return _orderable(dt.elementType)
@@ -382,7 +409,6 @@ class SuiteValidator:
         parameter_store: Optional[Any] = None,
     ) -> ExpectationSuiteValidationResult:
         started = datetime.datetime.now(datetime.timezone.utc)
-        spark = self._spark or df.sparkSession
         rf = parse_result_format(result_format)
         eval_params = {
             **suite.evaluation_parameters,
@@ -394,24 +420,15 @@ class SuiteValidator:
         )
         self._check_columns_exist(df, items)
 
-        prefetched: Dict[int, Tuple[str, Any]] = {}
-        metrics, samples = self._run_phases_concurrent(
-            df, spark, items, rf, catch_exceptions, prefetched
+        metrics, prefetched = self._run_phases_concurrent(
+            df, items, rf, catch_exceptions
         )
-
-        results: List[ExpectationValidationResult] = []
-        for item in items:
-            results.append(
-                self._assemble(
-                    item,
-                    df,
-                    metrics,
-                    samples,
-                    rf,
-                    catch_exceptions,
-                    prefetched,
-                )
+        results = [
+            self._assemble(
+                item, df, metrics[()], rf, catch_exceptions, prefetched[()]
             )
+            for item in items
+        ]
 
         statistics = build_suite_statistics(results)
         finished = datetime.datetime.now(datetime.timezone.utc)
@@ -443,37 +460,51 @@ class SuiteValidator:
     def _run_phases_concurrent(
         self,
         df: DataFrame,
-        spark: SparkSession,
         items: List[_PlannedItem],
         rf: dict,
         catch_exceptions: bool,
-        prefetched: Dict[int, Tuple[str, Any]],
-    ) -> Tuple[Dict[str, Any], Dict[int, Dict[str, Any]]]:
+        group_by: Sequence[str] = (),
+    ) -> Tuple[Dict[tuple, Dict[str, Any]], Dict[tuple, Dict[int, Any]]]:
         """Overlap the suite's independent Spark jobs from driver threads.
 
         Wave 1 (no dependencies): bundled agg ∥ window phase ∥ every
         CompiledJob expectation.  Wave 2 (needs phase-A/B counters):
-        aggregate followups / domain-scoped aggregates ∥ window violation
-        samples ∥ map violation samples.  Futures capture ('ok', value) or
-        ('err', exc) into ``prefetched`` keyed by ``id(item)``; assembly
-        replays them in suite order with unchanged exception semantics.
+        aggregate values (a job only for a followup or a domain-scoped
+        aggregate) ∥ window violation samples ∥ map violation samples.
+
+        Returns ``(metrics, prefetched)``, both keyed by group key tuple
+        (always holding ``()`` for an ungrouped call): ``metrics`` maps
+        phase-A/B counter aliases to values, ``prefetched`` maps
+        ``id(item)`` to what a wave computed for the item — a job's
+        output, an aggregate's values (or the Exception its grouped
+        followup raised for that group), a violation sample.  A call that
+        fails as a whole marks ``item.error``, which assembly replays in
+        suite order with unchanged exception semantics.  A grouped call
+        (non-empty ``group_by``) takes no samples, and leaves to assembly
+        every job expectation or aggregate followup without a grouped
+        hook, and every group a grouped mapping lacks: each job or
+        aggregate without a ``prefetched`` value there.
         """
 
-        def guarded(fn, *a, **kw):
+        def guarded(fn, *a):
             try:
-                return ("ok", fn(*a, **kw))
+                return fn(*a)
             except Exception as exc:  # noqa: BLE001 — replayed at assembly
-                return ("err", exc)
+                return exc
 
+        def whole(fn, *a):
+            return {(): fn(*a)}
+
+        prefetched: Dict[tuple, Dict[int, Any]] = {(): {}} if not group_by else {}
         with ThreadPoolExecutor(max_workers=self.job_concurrency) as pool:
             fut_bundle = pool.submit(
                 self._run_bundled_phase_isolating,
                 df,
                 items,
-                None,
+                group_by,
                 catch_exceptions,
             )
-            window_metrics: Dict[str, Any] = {}
+            window_metrics: Dict[tuple, Dict[str, Any]] = {}
             # the window phase writes fused counts+samples into
             # ``prefetched`` from its worker thread; the main thread only
             # touches ``prefetched`` after fut_window is joined below
@@ -485,47 +516,48 @@ class SuiteValidator:
                 catch_exceptions,
                 rf,
                 prefetched,
+                group_by,
             )
-            job_futs = {
-                id(item): pool.submit(
-                    guarded,
-                    self._run_job_item,
-                    item.compiled,
-                    df,
-                    spark,
-                    item.domain,
-                    rf,
-                )
+            futs = [
+                (item, pool.submit(
+                    guarded, self._run_job_item, item.compiled, df,
+                    item.domain, rf, group_by,
+                ))
                 for item in items
-                if item.error is None and isinstance(item.compiled, CompiledJob)
-            }
+                if item.error is None
+                and isinstance(item.compiled, CompiledJob)
+                and (not group_by or item.compiled.grouped is not None)
+            ]
 
             # phase A/B gates: bundled-agg and window failures propagate
             # here (phase B already honors catch_exceptions internally via
             # per-item error marking)
             metrics = fut_bundle.result()
+            if not group_by:
+                metrics.setdefault((), {})
             fut_window.result()
-            metrics.update(window_metrics)
+            for key, counts in window_metrics.items():
+                metrics.setdefault(key, {}).update(counts)
 
-            agg_futs = {
-                id(item): pool.submit(
-                    guarded,
-                    self._aggregate_values,
-                    item,
-                    item.compiled,
-                    df,
-                    metrics,
-                )
-                for item in items
-                if item.error is None
-                and isinstance(item.compiled, CompiledAggregate)
-                and (
-                    item.compiled.followup is not None
-                    or (item.domain is not None and not item.agg_aliases)
-                )
-            }
-            wsample_futs = {}
-            if rf["result_format"] != "BOOLEAN_ONLY":
+            for item in items:
+                c = item.compiled
+                if (
+                    item.error is None
+                    and isinstance(c, CompiledAggregate)
+                    # grouped, a followup without a grouped hook runs on
+                    # each partition's slice at assembly
+                    and (
+                        not group_by
+                        or c.followup is None
+                        or c.grouped_followup is not None
+                    )
+                ):
+                    futs.append((item, pool.submit(
+                        guarded, self._aggregate_values, item, c, df,
+                        metrics, group_by,
+                    )))
+            # a grouped call returns counts only
+            if rf["result_format"] != "BOOLEAN_ONLY" and not group_by:
                 limit = (
                     self.max_complete_collect
                     if rf["result_format"] == "COMPLETE"
@@ -541,57 +573,94 @@ class SuiteValidator:
                         item.error is None
                         and isinstance(c, CompiledWindow)
                         and c.flag_builder is None
-                        and int(metrics.get(window_metric(item)) or 0) > 0
+                        and int(metrics[()].get(window_metric(item)) or 0)
                     ):
-                        wsample_futs[id(item)] = pool.submit(
-                            guarded, c.sample, df, item.domain, limit, index_cols
-                        )
+                        futs.append((item, pool.submit(
+                            guarded, whole, c.sample,
+                            df, item.domain, limit, index_cols,
+                        )))
+                prefetched[()].update(
+                    self._collect_samples(df, items, metrics[()], rf, pool)
+                )
 
-            samples = self._collect_samples(df, items, metrics, rf, pool=pool)
-
-            for key, fut in job_futs.items():
-                prefetched[key] = ("job",) + fut.result()
-            for key, fut in agg_futs.items():
-                prefetched[key] = ("agg",) + fut.result()
-            for key, fut in wsample_futs.items():
-                prefetched[key] = ("wsample",) + fut.result()
-        return metrics, samples
+            for item, fut in futs:
+                out = fut.result()
+                if isinstance(out, Exception):
+                    item.error = out
+                    continue
+                for key, value in out.items():
+                    prefetched.setdefault(key, {})[id(item)] = value
+        return metrics, prefetched
 
     def _run_job_item(
         self,
         c: CompiledJob,
         df: DataFrame,
-        spark: SparkSession,
         domain: Optional[Column],
         rf: dict,
-    ) -> Dict[str, Any]:
-        sig = inspect.signature(c.run)
-        if "result_format" in sig.parameters:
-            return c.run(df, spark, domain, result_format=rf)
-        return c.run(df, spark, domain)
+        group_by: Sequence[str] = (),
+    ) -> Dict[tuple, Dict[str, Any]]:
+        """A job expectation's output per group key: ``run`` for the whole
+        ``df``, or the ``grouped`` hook for every partition of the one
+        ``group_by`` column at once."""
+        spark = self._spark or df.sparkSession
+        if group_by:
+            (column,) = group_by
+            return {
+                (part,): out
+                for part, out in c.grouped(df, spark, domain, column).items()
+            }
+        if "result_format" in inspect.signature(c.run).parameters:
+            return {(): c.run(df, spark, domain, result_format=rf)}
+        return {(): c.run(df, spark, domain)}
 
     def _aggregate_values(
         self,
         item: _PlannedItem,
         c: CompiledAggregate,
         df: DataFrame,
-        metrics: Dict[str, Any],
-    ) -> Dict[str, Any]:
-        if item.domain is not None and not item.agg_aliases:
-            # domain-scoped aggregate: dedicated filtered bundle
+        metrics: Dict[tuple, Dict[str, Any]],
+        group_by: Sequence[str] = (),
+    ) -> Dict[tuple, Any]:
+        """An aggregate's metric values per group key, from the phase-A
+        ``metrics`` or — for a ``row_condition`` domain — from one
+        dedicated filtered ``groupBy(*group_by).agg`` job, then extended by
+        its followup.  A grouped followup may map a group to an Exception
+        (e.g. over the collect cap) instead of values."""
+        if item.domain is not None:
             scoped = df.filter(domain_gate(item.domain))
             aliases = {k: f"a{i}" for i, k in enumerate(c.agg_exprs)}
-            row = scoped.agg(
-                *[col.alias(aliases[k]) for k, col in c.agg_exprs.items()]
-            ).first()
-            values = {k: row[a] for k, a in aliases.items()}
+            rows = (
+                scoped.groupBy(*group_by)
+                .agg(*[col.alias(aliases[k]) for k, col in c.agg_exprs.items()])
+                .collect()
+            )
+            values = {
+                tuple(r[g] for g in group_by): {
+                    k: r[a] for k, a in aliases.items()
+                }
+                for r in rows
+            }
         else:
             scoped = df
             values = {
-                k: metrics.get(alias) for k, alias in item.agg_aliases.items()
+                key: {k: m.get(alias) for k, alias in item.agg_aliases.items()}
+                for key, m in metrics.items()
             }
-        if c.followup is not None:
-            values.update(c.followup(scoped, values))
+        if not group_by:
+            if c.followup is not None:
+                values[()].update(c.followup(scoped, values[()]))
+        elif c.grouped_followup is not None:
+            (column,) = group_by
+            extra = c.grouped_followup(
+                scoped, column, {key[0]: v for key, v in values.items()}
+            )
+            for key in values:
+                more = extra.get(key[0])
+                if isinstance(more, Exception):
+                    values[key] = more
+                else:
+                    values[key].update(more or {})
         return values
 
     def _compile(
@@ -679,9 +748,9 @@ class SuiteValidator:
         self,
         df: DataFrame,
         items: List[_PlannedItem],
-        group_by: Optional[str] = None,
+        group_by: Sequence[str] = (),
         catch_exceptions: bool = True,
-    ) -> Dict[str, Any]:
+    ) -> Dict[tuple, Dict[str, Any]]:
         """The fused bundled agg, with the reference's ``catch_exceptions``
         contract restored for the fused design: ONE poisoned expression
         (a bad regex compiled inside codegen, an ANSI cast overflow, a
@@ -697,7 +766,7 @@ class SuiteValidator:
         except Exception:  # noqa: BLE001 — isolate, re-raise if asked to
             if not catch_exceptions:
                 raise
-        merged: Dict[str, Any] = {}
+        merged: Dict[tuple, Dict[str, Any]] = {}
         for idx, item in enumerate(items):
             if item.compiled is None or item.error is not None:
                 continue
@@ -708,29 +777,24 @@ class SuiteValidator:
             except Exception as exc:  # noqa: BLE001 — per-item EVR
                 item.error = exc
                 continue
-            if group_by is None:
-                merged.update(solo)
-            else:
-                for part, vals in solo.items():
-                    merged.setdefault(part, {}).update(vals)
+            for key, vals in solo.items():
+                merged.setdefault(key, {}).update(vals)
         return merged
 
     def _run_bundled_phase(
         self,
         df: DataFrame,
         items: List[_PlannedItem],
-        group_by: Optional[str] = None,
+        group_by: Sequence[str] = (),
         alias_prefix: str = "",
-    ) -> Dict[str, Any]:
-        """Build and run the single bundled agg; returns alias -> value.
-
-        With ``group_by`` set, runs ONE ``groupBy(partition_col).agg(...)``
-        and returns {partition_value: {alias: value}} — every partition's
-        whole-suite counters in a single scan + tiny shuffle (the per-
-        partition scale path the reference does with a driver loop).
-        ``alias_prefix`` namespaces the metric aliases so the isolation
-        fallback's per-item runs can merge into one dict without
-        colliding on ``m0``."""
+    ) -> Dict[tuple, Dict[str, Any]]:
+        """Build and run the single bundled ``groupBy(*group_by).agg(...)``;
+        returns ``{group key tuple: {alias: value}}`` — the one ``()`` row
+        of a whole-table agg, or every partition's whole-suite counters in
+        a single scan + tiny shuffle (the per-partition scale path the
+        reference does with a driver loop).  ``alias_prefix`` namespaces
+        the metric aliases so the isolation fallback's per-item runs can
+        merge into one dict without colliding on ``m0``."""
         exprs: List[Column] = []
         alias_by_key: Dict[str, str] = {}
         counter = 0
@@ -749,51 +813,34 @@ class SuiteValidator:
             c = item.compiled
             if c is None or item.error is not None:
                 continue
-            gate = domain_gate(item.domain) if item.domain is not None else F.lit(True)
             domain_key = str(item.config.kwargs.get("row_condition") or "ALL")
 
-            if isinstance(c, CompiledMap):
+            if isinstance(c, (CompiledMap, CompiledWindow)):
                 item.element_alias = add(
                     f"element::{domain_key}",
-                    F.sum(F.when(gate, 1).otherwise(0)),
-                )
-                considered = gate & domain_gate(c.considered)
-                item.considered_alias = add(
-                    f"considered::{domain_key}::{c.considered}",
-                    F.sum(F.when(considered, 1).otherwise(0)),
-                )
-                unexpected = considered & domain_gate(c.unexpected)
-                item.unexpected_alias = add(
-                    f"unexpected::{domain_key}::{c.considered}::{c.unexpected}",
-                    F.sum(F.when(unexpected, 1).otherwise(0)),
-                )
-            elif isinstance(c, CompiledWindow):
-                item.element_alias = add(
-                    f"element::{domain_key}",
-                    F.sum(F.when(gate, 1).otherwise(0)),
+                    F.sum(F.when(domain_gate(item.domain), 1).otherwise(0)),
                 )
                 if c.considered is not None:
-                    considered = gate & domain_gate(c.considered)
                     item.considered_alias = add(
                         f"considered::{domain_key}::{c.considered}",
-                        F.sum(F.when(considered, 1).otherwise(0)),
+                        F.sum(F.when(considered_flag(item), 1).otherwise(0)),
                     )
-            elif isinstance(c, CompiledAggregate):
-                if item.domain is not None:
-                    # rare path: aggregate over a row_condition domain —
-                    # falls back to a dedicated filtered agg in _assemble
-                    continue
+                if isinstance(c, CompiledMap):
+                    item.unexpected_alias = add(
+                        f"unexpected::{domain_key}::{c.considered}::{c.unexpected}",
+                        F.sum(F.when(unexpected_flag(item), 1).otherwise(0)),
+                    )
+            elif isinstance(c, CompiledAggregate) and item.domain is None:
+                # an aggregate over a row_condition domain runs its own
+                # filtered agg (_aggregate_values)
                 for key, col in c.agg_exprs.items():
                     item.agg_aliases[key] = add(f"agg::{key}", col)
 
         if not exprs:
             return {}
-        if group_by is None:
-            row = df.agg(*exprs).first()
-            return {alias: row[alias] for alias in alias_by_key.values()}
-        rows = df.groupBy(group_by).agg(*exprs).collect()
+        rows = df.groupBy(*group_by).agg(*exprs).collect()
         return {
-            row[group_by]: {
+            tuple(row[g] for g in group_by): {
                 alias: row[alias] for alias in alias_by_key.values()
             }
             for row in rows
@@ -803,31 +850,39 @@ class SuiteValidator:
         self,
         df: DataFrame,
         items: List[_PlannedItem],
-        metrics: Dict[str, Any],
+        metrics: Dict[tuple, Dict[str, Any]],
         catch_exceptions: bool,
         rf: dict,
-        prefetched: Dict[int, Tuple[str, str, Any]],
+        prefetched: Dict[tuple, Dict[int, Any]],
+        group_by: Sequence[str] = (),
     ) -> None:
         """Window expectations sharing a (partition_by, order_by) spec and
         domain evaluate together: one job per group computes every flag
         column — one shuffle for the whole group (e.g. the transcript
         suite's ts-monotonicity + turn-contiguity share the (conv_id,
-        turn_idx) window).
+        turn_idx) window).  Counts land in ``metrics`` per group key.
 
-        BOOLEAN_ONLY takes the counts alone (``window_group_counts``);
-        every other format also takes the group's violation SAMPLES in
-        that same job (``_fused_window_group``).  A failing group job
-        marks every member's ``error`` (or raises without
-        ``catch_exceptions``).  Set windows run their own ``execute``."""
+        BOOLEAN_ONLY and grouped calls take the counts alone
+        (``window_group_counts``); every other format also takes the
+        group's violation SAMPLES in that same job
+        (``_fused_window_group``).  A failing group job marks every
+        member's ``error`` (or raises without ``catch_exceptions``).  Set
+        windows run their own ``execute``."""
         groups, set_windows = plan_window_groups(items)
 
         for members in groups.values():
             try:
-                if rf["result_format"] == "BOOLEAN_ONLY":
-                    metrics.update(window_group_counts(df, members)[()])
+                if group_by or rf["result_format"] == "BOOLEAN_ONLY":
+                    counts = window_group_counts(df, members, group_by)
+                    for key, vals in counts.items():
+                        metrics.setdefault(key, {}).update(vals)
                 else:
                     self._fused_window_group(
-                        df, members, metrics, rf, prefetched
+                        df,
+                        members,
+                        metrics.setdefault((), {}),
+                        rf,
+                        prefetched[()],
                     )
             except Exception as exc:
                 if not catch_exceptions:
@@ -837,8 +892,9 @@ class SuiteValidator:
 
         for item in set_windows:
             try:
-                counts = item.compiled.execute(df, item.domain)
-                metrics[window_metric(item)] = counts[()]
+                counts = item.compiled.execute(df, item.domain, group_by)
+                for key, count in counts.items():
+                    metrics.setdefault(key, {})[window_metric(item)] = count
             except Exception as exc:
                 if not catch_exceptions:
                     raise
@@ -850,7 +906,7 @@ class SuiteValidator:
         members: List[_PlannedItem],
         metrics: Dict[str, Any],
         rf: dict,
-        prefetched: Dict[int, Tuple[str, str, Any]],
+        prefetched: Dict[int, Any],
     ) -> None:
         """ONE job per flag-window group serves the violation COUNTS and
         every member's violation sample.
@@ -953,11 +1009,7 @@ class SuiteValidator:
             metrics[window_metric(m)] = count
             if count:  # passing members need no sample
                 mine = [r for r in rows if r["__gx_m"] == i]
-                prefetched[id(m)] = (
-                    "wsample",
-                    "ok",
-                    m.compiled.pool_sample(mine, index_cols),
-                )
+                prefetched[id(m)] = m.compiled.pool_sample(mine, index_cols)
 
     # ------------------------------------------------------------------
 
@@ -969,7 +1021,8 @@ class SuiteValidator:
         rf: dict,
         pool: ThreadPoolExecutor,
     ) -> Dict[int, Dict[str, Any]]:
-        """Phase D: violation samples for failing map expectations."""
+        """Phase D: violation samples for failing map expectations, by
+        ``id(item)``."""
         if rf["result_format"] == "BOOLEAN_ONLY":
             return {}
 
@@ -984,11 +1037,9 @@ class SuiteValidator:
             ucount = metrics.get(item.unexpected_alias or "", 0) or 0
             if not ucount:
                 continue
-            gate = domain_gate(item.domain) if item.domain is not None else F.lit(True)
-            flag = gate & domain_gate(c.considered) & domain_gate(c.unexpected)
             flag_name = f"__gx_flag_{i}"
             value_name = f"__gx_val_{i}"
-            flag_cols.append(flag.alias(flag_name))
+            flag_cols.append(unexpected_flag(item).alias(flag_name))
             value_cols.append(
                 (c.value_expr if c.value_expr is not None else F.lit(None)).alias(
                     value_name
@@ -1077,11 +1128,16 @@ class SuiteValidator:
         item: _PlannedItem,
         df: DataFrame,
         metrics: Dict[str, Any],
-        samples: Dict[int, Dict[str, Any]],
         rf: dict,
         catch_exceptions: bool,
-        prefetched: Dict[int, Tuple[str, Any]],
+        prefetched: Dict[int, Any],
     ) -> ExpectationValidationResult:
+        """One expectation's result from one group's phase counters and
+        prefetched values.  A job expectation or aggregate with nothing
+        prefetched runs its ungrouped call on ``df`` here
+        (``_reads_rows``), so ``df`` must then be the group's rows (a
+        partition's slice for ``validate_by_partition``); otherwise only
+        its schema is read."""
         config_dict = item.config.to_json_dict()
         if item.error is not None:
             # reference contract: with catch_exceptions off, a marked
@@ -1093,26 +1149,15 @@ class SuiteValidator:
         c = item.compiled
         pre = prefetched.get(id(item))
         try:
-            if pre is not None and pre[1] == "err":
-                raise pre[2]
+            if isinstance(pre, Exception):
+                raise pre
             if isinstance(c, CompiledMap):
-                return self._assemble_map(item, c, metrics, samples, rf, config_dict)
+                return self._assemble_map(item, c, metrics, pre, rf, config_dict)
             if isinstance(c, CompiledWindow):
-                return self._assemble_window(
-                    item,
-                    metrics,
-                    rf,
-                    config_dict,
-                    pre[2] if pre is not None and pre[0] == "wsample" else None,
-                )
+                return self._assemble_window(item, metrics, rf, config_dict, pre)
             if isinstance(c, CompiledAggregate):
                 return self._assemble_aggregate(
-                    item,
-                    c,
-                    df,
-                    metrics,
-                    config_dict,
-                    pre[2] if pre is not None and pre[0] == "agg" else None,
+                    item, c, df, metrics, config_dict, pre
                 )
             if isinstance(c, CompiledSchemaCheck):
                 out = c.validate(df)
@@ -1122,7 +1167,9 @@ class SuiteValidator:
                     result=convert_to_json_serializable(out.get("result", {})),
                 )
             if isinstance(c, CompiledJob):
-                out = pre[2]
+                out = pre
+                if out is None:
+                    out = self._run_job_item(c, df, item.domain, rf)[()]
                 result = out.get("result", {})
                 if "result" not in out and "success" in out:
                     result = {
@@ -1139,12 +1186,22 @@ class SuiteValidator:
                 raise
             return self._exception_result(config_dict, exc)
 
+    @staticmethod
+    def _reads_rows(item: _PlannedItem, prefetched: Dict[int, Any]) -> bool:
+        """Whether ``_assemble`` runs a Spark call on its ``df`` for this
+        item: a job expectation or aggregate with nothing prefetched."""
+        return (
+            item.error is None
+            and id(item) not in prefetched
+            and isinstance(item.compiled, (CompiledAggregate, CompiledJob))
+        )
+
     def _assemble_map(
         self,
         item: _PlannedItem,
         c: CompiledMap,
         metrics: Dict[str, Any],
-        samples: Dict[int, Dict[str, Any]],
+        sample: Optional[Dict[str, Any]],
         rf: dict,
         config_dict: Dict[str, Any],
     ) -> ExpectationValidationResult:
@@ -1166,20 +1223,14 @@ class SuiteValidator:
             )
             nonnull_for_format = considered_count
 
-        sample = samples.get(id(item), {})
+        sample = sample or {}
         unexpected_index_query: Optional[str] = None
         if rf["result_format"] == "COMPLETE" and rf.get(
             "return_unexpected_index_query", True
         ) is not False:
             # reference map_condition_auxilliary_methods.py:785-824: render
             # the violation condition as a df.filter(F.expr(...)) string
-            gate = (
-                domain_gate(item.domain)
-                if item.domain is not None
-                else F.lit(True)
-            )
-            flag = gate & domain_gate(c.considered) & domain_gate(c.unexpected)
-            cond = str(flag)
+            cond = str(unexpected_flag(item))
             if cond.startswith("Column<'") and cond.endswith("'>"):
                 cond = cond[len("Column<'") : -len("'>")]
             # str(Column) is Spark's debug render, not guaranteed SQL —
@@ -1225,7 +1276,7 @@ class SuiteValidator:
     ) -> ExpectationValidationResult:
         """Window result from the phase-A element/considered counters, the
         phase-B ``window_metric`` count and, when served, the violation
-        sample; shared with ``checkpoint.runner.validate_by_partition``."""
+        sample."""
         element_count = int(metrics.get(item.element_alias) or 0)
         considered_count = int(
             (metrics.get(item.considered_alias) or 0)
@@ -1273,7 +1324,7 @@ class SuiteValidator:
         values = (
             prefetched_values
             if prefetched_values is not None
-            else self._aggregate_values(item, c, df, metrics)
+            else self._aggregate_values(item, c, df, {(): metrics})[()]
         )
         out = c.validate(values)
         return ExpectationValidationResult(

@@ -25,33 +25,25 @@ from typing import Callable, Dict, List, Optional
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from great_expectations_spark.core.domain import domain_gate, parse_row_condition
 from great_expectations_spark.core.suite import ExpectationSuite
-from great_expectations_spark.plans.planner import SuiteValidator, compile_expectation
+from great_expectations_spark.plans.planner import SuiteValidator, unexpected_flag
 from great_expectations_spark.plans.specs import CompiledMap
 
 
 def _combined_unexpected_flag(suite: ExpectationSuite) -> Column:
     flags: List[Column] = []
-    for config in suite.expectations:
-        compiled = compile_expectation(config)
-        if not isinstance(compiled, CompiledMap):
+    # compiled as the batch planner compiles it: evaluation parameters
+    # resolved, each flag gated by its expectation's row_condition domain
+    items = SuiteValidator()._compile(
+        suite, suite.evaluation_parameters, catch_exceptions=False
+    )
+    for item in items:
+        if not isinstance(item.compiled, CompiledMap):
             raise TypeError(
-                f"{config.expectation_type} is not a stateless map "
+                f"{item.config.expectation_type} is not a stateless map "
                 "expectation; use validate_each_microbatch for aggregates"
             )
-        # each expectation's row_condition domain gates its flag, mirroring
-        # the batch planner (_run_bundled_phase): rows outside the domain
-        # are never "unexpected" for that expectation
-        domain = parse_row_condition(
-            config.kwargs.get("row_condition"),
-            config.kwargs.get("condition_parser"),
-        )
-        flags.append(
-            domain_gate(domain)
-            & domain_gate(compiled.considered)
-            & domain_gate(compiled.unexpected)
-        )
+        flags.append(unexpected_flag(item))
     if not flags:
         raise ValueError(
             "suite has no map expectations to evaluate on the stream — "

@@ -427,12 +427,18 @@ def test_grouped_job_expectations_job_count_constant(spark, transcripts):
         few = transcripts.filter(
             F.col("day").isin(["2024-01-01", "2024-01-02"])
         )
+        # a row_condition-scoped aggregate rides one grouped filtered agg
+        suite = _job_suite(dim).add(
+            "expect_column_mean_to_be_between",
+            column="turn_idx", min_value=0,
+            row_condition="role = 'user'", condition_parser="spark",
+        )
         sc.setJobGroup("gx_grouped_few", "few partitions")
-        validate_by_partition(few, _job_suite(dim), "day")
+        validate_by_partition(few, suite, "day")
         jobs_few = len(sc.statusTracker().getJobIdsForGroup("gx_grouped_few"))
 
         sc.setJobGroup("gx_grouped_many", "many partitions")
-        validate_by_partition(transcripts, _job_suite(dim), "day")
+        validate_by_partition(transcripts, suite, "day")
         jobs_many = len(
             sc.statusTracker().getJobIdsForGroup("gx_grouped_many")
         )
@@ -862,20 +868,77 @@ def test_grouped_windows_are_partition_local(spark):
             "expect_compound_columns_to_be_unique",
             column_list=["conv_id", "turn_idx"],
         )
+        # row_condition-scoped aggregates and map: conversation y only
+        .add(
+            "expect_column_mean_to_be_between",
+            column="turn_idx", min_value=0, max_value=1,
+            row_condition="conv_id = 'y'", condition_parser="spark",
+        )
+        .add(
+            "expect_column_max_to_be_between",
+            column="turn_idx", min_value=0, max_value=1,
+            row_condition="conv_id = 'y'", condition_parser="spark",
+        )
+        .add(
+            "expect_column_values_to_be_between",
+            column="ts", min_value=0, max_value=58,
+            row_condition="conv_id = 'y'", condition_parser="spark",
+        )
     )
     grouped = validate_by_partition(df, suite, "day")
     assert sorted(grouped) == ["a", "b"]
     v = SuiteValidator()
     counts = {}
+    observed = {}
     for day in ("a", "b"):
         full = v.validate(df.filter(F.col("day") == day), suite, "BASIC")
         pairs = zip(grouped[day].results, full.results)
         for i, (gr, fr) in enumerate(pairs):
             assert (
-                gr.result["unexpected_count"],
+                gr.result.get("unexpected_count"),
+                gr.result.get("observed_value"),
                 gr.success,
-            ) == (fr.result["unexpected_count"], fr.success), (day, i)
-        counts[day] = [r.result["unexpected_count"] for r in full.results]
+                gr.exception_info["raised_exception"],
+            ) == (
+                fr.result.get("unexpected_count"),
+                fr.result.get("observed_value"),
+                fr.success,
+                fr.exception_info["raised_exception"],
+            ), (day, i)
+        counts[day] = [r.result["unexpected_count"] for r in full.results[:5]]
+        counts[day].append(full.results[7].result["unexpected_count"])
+        observed[day] = [
+            (r.result["observed_value"], r.success) for r in full.results[5:7]
+        ]
     # window-contiguity, join-contiguity, per-conversation increasing,
-    # table-order increasing (y's 50 and 55 after larger ts), uniqueness
-    assert counts == {"a": [0, 0, 0, 0, 0], "b": [1, 1, 1, 2, 2]}
+    # table-order increasing (y's 50 and 55 after larger ts), uniqueness,
+    # y's ts above 58 (60 twice)
+    assert counts == {"a": [0, 0, 0, 0, 0, 0], "b": [1, 1, 1, 2, 2, 2]}
+    # y's turn_idx 0, 1, 1, 2 on day b: mean 1.0 passes, max 2 fails; day a
+    # has no y rows, so both observe None and fail
+    assert observed == {
+        "a": [(None, False), (None, False)],
+        "b": [(1.0, True), (2, False)],
+    }
+
+
+def test_grouped_slice_fallback_null_partition(spark):
+    """An expectation without a grouped hook runs on each partition's
+    slice; the NULL partition's slice must hold its rows, so its result
+    equals a validate of those rows."""
+    from great_expectations_spark.plans.planner import SuiteValidator
+
+    df = spark.createDataFrame(
+        [("d1", "a"), ("d1", "a"), (None, "z"), (None, "z")],
+        "day string, kind string",
+    )
+    suite = ExpectationSuite("s").add(
+        "expect_column_most_common_value_to_be_in_set",
+        column="kind", value_set=["a"],
+    )
+    grouped = validate_by_partition(df, suite, "day")
+    full = SuiteValidator().validate(df.filter("day IS NULL"), suite)
+    got, want = grouped["None"].results[0], full.results[0]
+    assert (got.success, got.result["observed_value"]) == (False, ["z"])
+    assert (want.success, want.result["observed_value"]) == (False, ["z"])
+    assert grouped["d1"].results[0].success

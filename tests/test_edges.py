@@ -10,6 +10,7 @@ from great_expectations_spark.core.domain import parse_row_condition
 from great_expectations_spark.core.suite import ExpectationSuite
 from great_expectations_spark.plans.planner import SuiteValidator
 from great_expectations_spark.streaming.validate_stream import (
+    streaming_quarantine,
     windowed_violation_counts,
 )
 
@@ -119,6 +120,29 @@ def test_streaming_quarantine_respects_row_condition(spark):
         ).filter("__u").collect()
     }
     assert flagged == {1}
+
+
+def test_streaming_quarantine_resolves_evaluation_parameters(spark):
+    # a $PARAMETER kwarg must resolve against the suite's evaluation
+    # parameters on the stream exactly as it does in a batch validate
+    df = spark.createDataFrame(
+        [(i, q) for i, q in enumerate([5, 20, 60, 70, 40])],
+        "id int, qty int",
+    )
+    suite = ExpectationSuite("s").add(
+        "expect_column_values_to_be_between",
+        column="qty", min_value=10, max_value={"$PARAMETER": "hi"},
+    )
+    suite.evaluation_parameters = {"hi": 50}
+    flagged = {
+        r["id"]
+        for r in streaming_quarantine(df, suite)
+        .filter("__gx_unexpected")
+        .collect()
+    }
+    batch = SuiteValidator().validate(df, suite, "BASIC").results[0]
+    assert batch.result["unexpected_count"] == len(flagged) == 3
+    assert flagged == {0, 2, 3}
 
 
 def test_streaming_windowed_violation_counts(spark, tmp_path):
