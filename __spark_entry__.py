@@ -1336,11 +1336,12 @@ def _grouped_jobs_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _grouped_shared_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared grouped window pass (`validate_by_partition` runs
-    `planner.window_group_counts` with the partition column as group
-    prefix):
+    `SuiteValidator._fused_window_group` with the partition column as
+    group prefix):
     a monotonicity expectation and a compound-uniqueness expectation on
     the same (day, user_id) / event_id window spec compute BOTH per-day
-    counts in one projection + one groupBy(day) — a single shuffle, with
+    counts (and samples) in one job — one window shuffle, then a
+    per-(day, member) top-k that counts the flagged rows — with
     uniqueness riding as an adjacent-duplicate flag instead of its own
     groupBy.  Oracled by a DuckDB window replica (lag IGNORE NULLS
     mirrors the engine's null-transparent previous-value semantics)."""

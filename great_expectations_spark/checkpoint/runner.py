@@ -1,33 +1,36 @@
-"""Checkpointed validation runners.
+"""Checkpointed validation over a partitioned table.
 
-Two execution strategies over a partitioned table:
+Both entry points validate partitions through ``SuiteValidator``'s own
+phases with the partition column as group prefix, so every partition's
+counters and violation samples come from the same Spark jobs —
+``groupBy(partition_col)`` bundled counters, one grouped job per window
+group (counts and samples), grouped job expectations, domain-scoped
+aggregates, aggregate followups and one prefixed top-k for map samples —
+and every result is built by the same ``SuiteValidator._assemble`` as a
+per-partition ``validate``:
 
-* ``run_checkpoint`` — full-fidelity loop: one ``SuiteValidator.validate``
-  per partition (violation samples, job expectations, everything), with
-  manifest-based resume.  Partition predicates push down to the scan
-  (Catalyst partition pruning), so each iteration reads only its
-  partition.  Optional driver-side thread pool overlaps partitions (the
-  reference's ConcurrencyConfig showed ~15x on many small tables:
-  ``tests/performance/results/minimal_multithreading_run_*.json``); Spark's
-  scheduler interleaves the jobs.
+* ``run_checkpoint`` — manifest-based resume (and, with
+  ``detect_changes``, re-validation of changed partitions).  The suite
+  compiles once per run; the partitions to validate go through the
+  grouped phases ``DEFAULT_BACKFILL_CHUNK_SIZE`` at a time, over the
+  chunk's partition filter (Catalyst partition pruning keeps the scan
+  to those partitions).  A chunk's results and manifest records land
+  when the chunk finishes, so a killed run resumes from the first
+  unwritten chunk.  Spark jobs per chunk do not grow with its
+  partition count.
 
-* ``validate_by_partition`` — the scale path: ``SuiteValidator``'s own
-  phases with the partition column as group prefix, so every
-  partition's counters come from the same Spark jobs —
-  ``groupBy(partition_col)`` bundled counters, one grouped job per
-  window group, grouped job expectations, domain-scoped aggregates and
-  aggregate followups — and every result is built by the same
-  ``SuiteValidator._assemble`` as a per-partition ``validate``
-  (counts; BASIC, no samples).  10^5 partitions = still ~3 Spark jobs.
+* ``validate_by_partition`` — the same grouped pass over the whole
+  table in one chunk, returning every partition's result without a
+  manifest.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import datetime
 import logging
 import uuid
-from concurrent.futures import ThreadPoolExecutor
-from typing import Any, Dict, List, Optional, Sequence, Union
+from typing import Any, Dict, Iterator, List, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,37 +39,38 @@ from great_expectations_spark.checkpoint.manifest import (
     CheckpointManifest,
     ManifestEntry,
 )
+from great_expectations_spark.checkpoint.sketches import (
+    DEFAULT_BACKFILL_CHUNK_SIZE,
+    _null_safe_isin,
+)
 from great_expectations_spark.core.result_format import parse_result_format
 from great_expectations_spark.core.results import (
     ExpectationSuiteValidationResult,
+    ExpectationValidationResult,
     build_suite_statistics,
 )
 from great_expectations_spark.core.suite import ExpectationSuite
-from great_expectations_spark.plans.planner import SuiteValidator
+from great_expectations_spark.plans.planner import SuiteValidator, _PlannedItem
 
 logger = logging.getLogger(__name__)
 
-# The per-partition loop collects the distinct partition VALUES to the
-# driver — bounded by partition count, not row count (10^5 day-partitions
-# at the 10^12-turn design point is a few MB).  The cap makes that
-# contract explicit: a mistaken high-cardinality partition_column (e.g.
-# conv_id) fails fast with a clear error instead of OOMing the driver.
+# The runner collects the distinct partition VALUES to the driver —
+# bounded by partition count, not row count (10^5 day-partitions at the
+# 10^12-turn design point is a few MB).  The cap makes that contract
+# explicit: a mistaken high-cardinality partition_column (e.g. conv_id)
+# fails fast with a clear error instead of OOMing the driver.
 PARTITION_LIST_CAP = 1_000_000
 
 
-def _collect_partition_values(
-    df: DataFrame, partition_column: str, cap: Optional[int] = None
-) -> List[Any]:
-    """Distinct partition values, driver-bounded by ``limit(cap + 1)`` in
-    the same job (the overflow row turns into an error, mirroring
+def _capped_collect(
+    per_partition: DataFrame, partition_column: str, cap: Optional[int] = None
+) -> list:
+    """The rows of a one-row-per-partition frame, sorted by partition
+    value, driver-bounded by ``limit(cap + 1)`` in the same job (the
+    overflow row turns into an error, mirroring
     ``distribution.CATEGORICAL_COLLECT_CAP``)."""
     cap = PARTITION_LIST_CAP if cap is None else cap
-    rows = (
-        df.select(partition_column)
-        .distinct()
-        .limit(cap + 1)
-        .collect()
-    )
+    rows = per_partition.limit(cap + 1).collect()
     if len(rows) > cap:
         raise ValueError(
             f"partition_column {partition_column!r} has more than {cap} "
@@ -75,14 +79,42 @@ def _collect_partition_values(
             "runner.PARTITION_LIST_CAP"
         )
     return sorted(
-        (r[partition_column] for r in rows),
-        key=lambda v: (v is None, v),
+        rows,
+        key=lambda r: (r[partition_column] is None, r[partition_column]),
     )
+
+
+def _collect_partition_values(
+    df: DataFrame, partition_column: str, cap: Optional[int] = None
+) -> List[Any]:
+    """Distinct partition values, sorted, capped (``_capped_collect``)."""
+    return [
+        r[partition_column]
+        for r in _capped_collect(
+            df.select(partition_column).distinct(), partition_column, cap
+        )
+    ]
+
+
+class PartitionFingerprints(Dict[str, str]):
+    """``{str(partition): fingerprint}``, keyed like the manifest;
+    ``partitions`` holds the partition values themselves, sorted, for a
+    filter that needs their type (the NULL partition stays ``None``)."""
+
+    def __init__(self, rows: list, partition_column: str) -> None:
+        super().__init__(
+            (
+                str(r[partition_column]),
+                f"{int(r['__n'])}:{int(r['__x'])}:{int(r['__m'])}",
+            )
+            for r in rows
+        )
+        self.partitions = [r[partition_column] for r in rows]
 
 
 def partition_fingerprints(
     df: DataFrame, partition_column: str
-) -> Dict[str, str]:
+) -> PartitionFingerprints:
     """Content fingerprint per partition in ONE grouped job:
     ``"rowcount:bit_xor(h):sum(h mod p)"`` over ``h = xxhash64(all
     columns)``.  Order- and partitioning-independent (both combines
@@ -94,23 +126,152 @@ def partition_fingerprints(
     sum leaves whole-stage codegen) — so the duplicate-sensitive term
     sums ``h mod 1000003``, bounded by partition_rows*1e6 (safe under
     ANSI to ~9*10^12 rows per partition).  JVM-only.  This is change
-    DETECTION for resume (late-arriving data), not an integrity MAC."""
+    DETECTION for resume (late-arriving data), not an integrity MAC.
+
+    The same job lists the partitions (``PartitionFingerprints
+    .partitions``) under ``PARTITION_LIST_CAP``, so a change-detecting
+    checkpoint needs no separate distinct scan."""
     cols = [F.col(c) for c in df.columns]
     h = F.xxhash64(*cols)
-    rows = (
-        df.groupBy(partition_column)
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.bit_xor(h).alias("__x"),
-            F.sum(F.pmod(h, F.lit(1000003))).alias("__m"),
-        )
-        .collect()
+    per_partition = df.groupBy(partition_column).agg(
+        F.count(F.lit(1)).alias("__n"),
+        F.bit_xor(h).alias("__x"),
+        F.sum(F.pmod(h, F.lit(1000003))).alias("__m"),
     )
-    return {
-        str(r[partition_column]):
-        f"{int(r['__n'])}:{int(r['__x'])}:{int(r['__m'])}"
-        for r in rows
-    }
+    return PartitionFingerprints(
+        _capped_collect(per_partition, partition_column), partition_column
+    )
+
+
+def _validate_chunks(
+    validator: SuiteValidator,
+    df: DataFrame,
+    items: List[_PlannedItem],
+    rf: dict,
+    partition_column: str,
+    partitions: Optional[List[Any]] = None,
+) -> Iterator[
+    Tuple[
+        Union[Dict[Any, List[ExpectationValidationResult]], Exception],
+        datetime.datetime,
+        datetime.datetime,
+        Optional[List[Any]],
+    ]
+]:
+    """The one per-partition execution path: yields ``(results, started,
+    finished, chunk)`` for each chunk of ``DEFAULT_BACKFILL_CHUNK_SIZE``
+    ``partitions``.  Each chunk is ONE run of the validator's phases with
+    ``partition_column`` as group prefix over ``df.filter(partition_column
+    IN chunk)`` (null-safe), then one ``_assemble`` per (partition,
+    item).  ``results`` maps each partition of the chunk to its
+    expectation results, or is the Exception that failed the chunk as a
+    whole.  ``partitions=None`` is one chunk: the whole ``df``, its
+    partitions taken from the phases' outputs."""
+    chunks = (
+        [None]
+        if partitions is None
+        else [
+            partitions[i : i + DEFAULT_BACKFILL_CHUNK_SIZE]
+            for i in range(0, len(partitions), DEFAULT_BACKFILL_CHUNK_SIZE)
+        ]
+    )
+    for chunk in chunks:
+        started = datetime.datetime.now(datetime.timezone.utc)
+        out: Any = {}
+        try:
+            part_df = df
+            if chunk is not None:
+                part_df = df.filter(
+                    _null_safe_isin(F.col(partition_column), chunk)
+                )
+            # the phases mark run-time failures on their items: each chunk
+            # gets fresh copies
+            run = [dataclasses.replace(item, agg_aliases={}) for item in items]
+            metrics, prefetched = validator._run_phases_concurrent(
+                part_df, run, rf, True, [partition_column]
+            )
+            if chunk is not None:
+                keys = [(p,) for p in chunk]
+            else:
+                # partition universe: every key a grouped phase produced.
+                # The bundled pass groups the UNFILTERED df, so once any
+                # item rode it its keys enumerate every partition with >=1
+                # row; the other grouped outputs (domain-filtered windows,
+                # aggregates and jobs, whose mappings may be partial)
+                # cannot.  Without a bundled item (a suite of
+                # job/schema/domain-aggregate expectations, or one where
+                # every item errored and still owes each partition its
+                # exception EVRs) one distinct scan supplies the universe,
+                # or partitions silently vanish from the output.
+                found = set(metrics) | set(prefetched)
+                if run and not any(
+                    item.error is None
+                    and (item.element_alias or item.agg_aliases)
+                    for item in run
+                ):
+                    found.update(
+                        (p,)
+                        for p in _collect_partition_values(
+                            df, partition_column
+                        )
+                    )
+                keys = sorted(found, key=lambda k: str(k[0]))
+            for key in keys:
+                pre = prefetched.get(key, {})
+                # build the partition's slice only when assembly reads
+                # rows: a DataFrame per partition costs milliseconds of
+                # driver time
+                slice_df = part_df
+                if any(validator._reads_rows(item, pre) for item in run):
+                    slice_df = part_df.filter(
+                        F.col(partition_column).eqNullSafe(key[0])
+                    )
+                out[key[0]] = [
+                    validator._assemble(
+                        item, slice_df, metrics.get(key, {}), rf, True, pre
+                    )
+                    for item in run
+                ]
+        except Exception as exc:  # noqa: BLE001 — the whole chunk fails
+            out = exc
+        yield out, started, datetime.datetime.now(datetime.timezone.utc), chunk
+
+
+def _partition_result(
+    suite: ExpectationSuite,
+    results: List[ExpectationValidationResult],
+    partition_column: str,
+    partition: Any,
+    run_id: str,
+    started: datetime.datetime,
+    finished: datetime.datetime,
+) -> ExpectationSuiteValidationResult:
+    """A partition's suite result, with ``SuiteValidator.validate``'s
+    meta shape; the times are its chunk's."""
+    return ExpectationSuiteValidationResult(
+        success=all(r.success for r in results),
+        results=results,
+        statistics=build_suite_statistics(results),
+        meta={
+            "great_expectations_version": "gx-spark-0.1",
+            "expectation_suite_name": suite.expectation_suite_name,
+            "run_id": run_id,
+            "validation_time": started.isoformat(),
+            "validation_duration_sec": (finished - started).total_seconds(),
+            "batch_spec": {
+                "type": "partition",
+                "partition_column": partition_column,
+                "partition_id": str(partition),
+            },
+            "batch_markers": {
+                "ge_load_time": started.strftime("%Y%m%dT%H%M%S.%fZ")
+            },
+            "partition_column": partition_column,
+            "partition_id": str(partition),
+            "strategy": "single_pass_grouped",
+        },
+        evaluation_parameters=dict(suite.evaluation_parameters),
+    )
 
 
 def run_checkpoint(
@@ -136,6 +297,21 @@ def run_checkpoint(
     """Validate every partition, resuming past ``done`` ones. Returns a
     summary dict with per-partition manifest entries.
 
+    The suite compiles once; the partitions to validate run through
+    ``SuiteValidator``'s grouped phases ``DEFAULT_BACKFILL_CHUNK_SIZE`` at
+    a time (module docstring), so the Spark jobs of a run grow with its
+    chunk count, not its partition count.  Each partition's stored
+    result equals a ``validate`` of its slice, violation samples
+    included.  When a chunk finishes, each of its partitions gets its
+    result file and manifest record, and then its actions fire; the
+    records' ``started_at``/``finished_at``/``duration_sec`` are the
+    chunk's.  A chunk that fails as a whole records every one of its
+    partitions ``failed`` (never a count), and a re-run validates them
+    again.  ``max_concurrency`` is accepted for compatibility and has no
+    effect: Spark parallelism inside the grouped jobs replaces the
+    per-partition pool, and the validator's ``job_concurrency`` still
+    overlaps a chunk's independent jobs.
+
     ``actions`` (checkpoint.actions.CheckpointAction) fire after each
     partition's validation — store results/metrics, notify on failure —
     mirroring the reference's post-validation action list
@@ -153,12 +329,12 @@ def run_checkpoint(
     needs ``sketch_histogram_edges``).
 
     ``detect_changes=True`` drops the partitions-are-immutable
-    assumption: one extra grouped job fingerprints every partition's
-    content (:func:`partition_fingerprints`), a ``done`` partition whose
-    fingerprint no longer matches its manifest record is RE-validated
-    (late-arriving data), and the sketch store re-sketches it too — the
-    merged table stats follow the data instead of freezing at first
-    sight of each partition.
+    assumption: one grouped job fingerprints every partition's content
+    and lists the partitions (:func:`partition_fingerprints`), a
+    ``done`` partition whose fingerprint no longer matches its manifest
+    record is RE-validated (late-arriving data), and the sketch store
+    re-sketches it too — the merged table stats follow the data instead
+    of freezing at first sight of each partition.
     """
     from great_expectations_spark.checkpoint.actions import (
         ActionContext,
@@ -169,14 +345,15 @@ def run_checkpoint(
     manifest = CheckpointManifest(checkpoint_dir)
     suite_hash = suite.suite_hash()
     run_id = run_id or str(uuid.uuid4())
+    rf = parse_result_format(result_format)
 
-    partitions = _collect_partition_values(df, partition_column)
+    fingerprints: Dict[str, str] = {}
+    if detect_changes:
+        fingerprints = partition_fingerprints(df, partition_column)
+        partitions = fingerprints.partitions
+    else:
+        partitions = _collect_partition_values(df, partition_column)
     done = manifest.completed_partitions(suite_hash)
-    fingerprints: Dict[str, str] = (
-        partition_fingerprints(df, partition_column)
-        if detect_changes
-        else {}
-    )
     todo = [
         p
         for p in partitions
@@ -191,91 +368,79 @@ def run_checkpoint(
         len(partitions), len(done), len(todo),
     )
 
-    def one(partition_value: Any) -> ManifestEntry:
-        started = datetime.datetime.now(datetime.timezone.utc)
-        part_df = df.filter(F.col(partition_column) == F.lit(partition_value))
-        try:
-            result = validator.validate(
-                part_df,
-                suite,
-                result_format=result_format,
-                run_id=run_id,
-                batch_meta={
-                    "partition_column": partition_column,
-                    "partition_id": str(partition_value),
-                },
-                parameter_store=parameter_store,
-            )
-            finished = datetime.datetime.now(datetime.timezone.utc)
-            rows = 0
-            for r in result.results:
-                rows = max(rows, int(r.result.get("element_count") or 0))
-            duration = (finished - started).total_seconds()
-            entry = ManifestEntry(
-                partition_id=str(partition_value),
-                suite_hash=suite_hash,
-                status="done",
-                run_id=run_id,
-                started_at=started.isoformat(),
-                finished_at=finished.isoformat(),
-                rows=rows,
-                duration_sec=round(duration, 3),
-                rows_per_sec=round(rows / duration, 1) if duration else 0.0,
-                success=bool(result.success),
-                fingerprint=fingerprints.get(str(partition_value)),
-            )
-            recorded = manifest.record(entry, result.to_json())
-            run_actions(
-                actions,
-                ActionContext(
-                    run_id=run_id,
-                    suite_name=suite.expectation_suite_name,
-                    partition_column=partition_column,
-                    partition_id=str(partition_value),
-                    result=result,
-                    entry_status="done",
-                ),
-            )
-            return recorded
-        except Exception as exc:  # noqa: BLE001 — survive partition failure
-            finished = datetime.datetime.now(datetime.timezone.utc)
-            entry = ManifestEntry(
-                partition_id=str(partition_value),
-                suite_hash=suite_hash,
-                status="failed",
-                run_id=run_id,
-                started_at=started.isoformat(),
-                finished_at=finished.isoformat(),
-                rows=0,
-                duration_sec=0.0,
-                rows_per_sec=0.0,
-                success=None,
-                error=str(exc),
-            )
-            recorded = manifest.record(entry)
-            run_actions(
-                actions,
-                ActionContext(
-                    run_id=run_id,
-                    suite_name=suite.expectation_suite_name,
-                    partition_column=partition_column,
-                    partition_id=str(partition_value),
-                    result=ExpectationSuiteValidationResult(
-                        success=False,
-                        results=[],
-                        statistics={},
-                        meta={"error": str(exc)},
-                    ),
-                    entry_status="failed",
-                ),
-            )
-            return recorded
+    items = validator._compile(
+        suite, suite.evaluation_parameters, True, parameter_store
+    )
+    validator._check_columns_exist(df, items)
 
-    if max_concurrency > 1 and len(todo) > 1:
-        with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
-            entries = list(pool.map(one, todo))
-    else:
-        entries = [one(p) for p in todo]
+    def record(
+        partition: Any,
+        started: datetime.datetime,
+        finished: datetime.datetime,
+        result: Optional[ExpectationSuiteValidationResult],
+        error: Optional[Exception] = None,
+    ) -> ManifestEntry:
+        """Write a partition's result and manifest record, then fire its
+        actions: ``done`` with ``result``, or ``failed`` with ``error``."""
+        if error is None:
+            status = "done"
+            duration = (finished - started).total_seconds()
+            rows = max(
+                (
+                    int(r.result.get("element_count") or 0)
+                    for r in result.results
+                ),
+                default=0,
+            )
+        else:
+            status, duration, rows = "failed", 0.0, 0
+            result = ExpectationSuiteValidationResult(
+                success=False, results=[], statistics={},
+                meta={"error": str(error)},
+            )
+        entry = ManifestEntry(
+            partition_id=str(partition),
+            suite_hash=suite_hash,
+            status=status,
+            run_id=run_id,
+            started_at=started.isoformat(),
+            finished_at=finished.isoformat(),
+            rows=rows,
+            duration_sec=round(duration, 3),
+            rows_per_sec=round(rows / duration, 1) if duration else 0.0,
+            success=None if error else bool(result.success),
+            error=None if error is None else str(error),
+            fingerprint=None if error else fingerprints.get(str(partition)),
+        )
+        recorded = manifest.record(
+            entry, None if error else result.to_json()
+        )
+        run_actions(
+            actions,
+            ActionContext(
+                run_id=run_id,
+                suite_name=suite.expectation_suite_name,
+                partition_column=partition_column,
+                partition_id=str(partition),
+                result=result,
+                entry_status=status,
+            ),
+        )
+        return recorded
+
+    entries: List[ManifestEntry] = []
+    for out, started, finished, chunk in _validate_chunks(
+        validator, df, items, rf, partition_column, todo
+    ):
+        for p in chunk:
+            if isinstance(out, Exception):
+                entries.append(record(p, started, finished, None, out))
+            else:
+                result = _partition_result(
+                    suite, out[p], partition_column, p, run_id, started,
+                    finished,
+                )
+                entries.append(record(p, started, finished, result))
 
     all_done = manifest.completed_partitions(suite_hash)
     summary = {
@@ -346,25 +511,31 @@ def validate_by_partition(
     validator: Optional[SuiteValidator] = None,
     parameter_store: Optional[Any] = None,
 ) -> Dict[str, ExpectationSuiteValidationResult]:
-    """Single-pass per-partition validation (counts; BASIC, no samples).
+    """Single-pass per-partition validation at BASIC format, violation
+    samples included.
 
     Runs ``SuiteValidator``'s phases once with ``partition_column`` as the
-    group prefix and assembles each partition's results with
-    ``SuiteValidator._assemble``, so every count and observed value
-    equals a per-partition ``validate``.  Bundled counters: one
+    group prefix — ``run_checkpoint``'s chunked path, as one chunk over
+    the whole ``df`` — and assembles each partition's results with
+    ``SuiteValidator._assemble``, so every count, observed value and
+    sample equals a per-partition ``validate``.  Bundled counters: one
     groupBy(partition).agg(...) job.  Each window group (expectations
-    sharing a window spec) and each set window adds one grouped job;
-    windows are partition-local.  Each aggregate over a
-    ``row_condition`` domain adds one filtered grouped job.  Schema
-    checks evaluate per partition without a scan.  Job expectations with
-    a ``grouped`` hook (referential exist-in-other-table, two-sample
-    KS/PSI/chi² drift, user SQL, and the one-sample distribution family
-    — KL divergence, chi-square GoF, bootstrapped KS) run in O(1)
-    grouped jobs covering every partition at once; a job expectation
-    without one, or a partition its grouped mapping lacks, runs one
-    partition-filtered job at assembly.  Aggregate followups (the
-    distinct-value-set family) resolve every partition through their
-    ``grouped_followup`` hook in one job.
+    sharing a window spec) adds one grouped job serving counts and
+    samples, and each set window one count job plus, when it has
+    violations, one sample job; windows are partition-local.  Map
+    expectations with violations add one top-k sample job.  Each
+    aggregate over a ``row_condition`` domain adds one filtered grouped
+    job.  Schema checks evaluate per partition without a scan.  Job
+    expectations with a ``grouped`` hook (referential exist-in-other-
+    table, two-sample KS/PSI/chi² drift, user SQL, and the one-sample
+    distribution family — KL divergence, chi-square GoF, bootstrapped
+    KS) run in O(1) grouped jobs covering every partition at once; a job
+    expectation without one, or a partition its grouped mapping lacks,
+    runs one partition-filtered job at assembly.  Aggregate followups
+    (the distinct-value-set family) resolve every partition through
+    their ``grouped_followup`` hook in one job.  So the job count does
+    not grow with the partition count, except for those assembly-time
+    fallbacks.
     """
     validator = validator or SuiteValidator()
     rf = parse_result_format("BASIC")
@@ -372,60 +543,16 @@ def validate_by_partition(
         suite, suite.evaluation_parameters, True, parameter_store
     )
     validator._check_columns_exist(df, items)
-    metrics, prefetched = validator._run_phases_concurrent(
-        df, items, rf, True, [partition_column]
-    )
-
-    # partition universe: every key a grouped phase produced.  The
-    # bundled pass groups the UNFILTERED df, so once any item rode it its
-    # keys enumerate every partition with >=1 row; the other grouped
-    # outputs (domain-filtered windows, aggregates and jobs, whose
-    # mappings may be partial) cannot.  Without a bundled item (a suite
-    # of job/schema/domain-aggregate expectations, or one where every
-    # item errored and still owes each partition its exception EVRs) one
-    # distinct scan supplies the universe, or partitions silently vanish
-    # from the output.
-    keys = set(metrics) | set(prefetched)
-    if items and not any(
-        item.error is None and (item.element_alias or item.agg_aliases)
-        for item in items
-    ):
-        keys.update(
-            (p,) for p in _collect_partition_values(df, partition_column)
-        )
-
+    run_id = str(uuid.uuid4())
     out: Dict[str, ExpectationSuiteValidationResult] = {}
-    for key in sorted(keys, key=lambda k: str(k[0])):
-        part = key[0]
-        pre = prefetched.get(key, {})
-        # build the partition's slice only when assembly reads rows: a
-        # DataFrame per partition costs milliseconds of driver time
-        part_df = df
-        if any(validator._reads_rows(item, pre) for item in items):
-            part_df = df.filter(F.col(partition_column).eqNullSafe(part))
-        results = [
-            validator._assemble(
-                item, part_df, metrics.get(key, {}), rf, True, pre
+    for results, started, finished, _ in _validate_chunks(
+        validator, df, items, rf, partition_column
+    ):
+        if isinstance(results, Exception):
+            raise results
+        for part, part_results in results.items():
+            out[str(part)] = _partition_result(
+                suite, part_results, partition_column, part, run_id,
+                started, finished,
             )
-            for item in items
-        ]
-        out[str(part)] = ExpectationSuiteValidationResult(
-            success=all(r.success for r in results),
-            results=results,
-            statistics=build_suite_statistics(results),
-            meta={
-                "expectation_suite_name": suite.expectation_suite_name,
-                "partition_column": partition_column,
-                "partition_id": str(part),
-                "strategy": "single_pass_grouped",
-                # same meta shape as SuiteValidator.validate: lineage keys
-                # always present
-                "batch_spec": {
-                    "type": "partition",
-                    "partition_column": partition_column,
-                    "partition_id": str(part),
-                },
-                "batch_markers": {},
-            },
-        )
     return out

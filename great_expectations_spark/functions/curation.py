@@ -789,9 +789,11 @@ def redact_pii(
         gate = _PII_GATES.get(kind)
         # literal prefilter: rows that cannot contain the kind skip the
         # regex scan entirely (a required literal like '@' is a cheap
-        # JVM contains; the regex pass over a 20k-char run is not)
+        # JVM contains; the regex pass over a 20k-char run is not).  It
+        # tests the text as rewritten so far: an earlier kind's token may
+        # have brought the literal in
         out = (
-            F.when(gate(col), replaced).otherwise(out)
+            F.when(gate(out), replaced).otherwise(out)
             if gate is not None
             else replaced
         )

@@ -315,9 +315,10 @@ def _query_row_count_between(kwargs: Dict[str, Any]) -> CompiledJob:
     query = kwargs["query"]
 
     def run(df: DataFrame, spark, domain) -> Dict[str, Any]:
-        # per-invocation view name: run_checkpoint(max_concurrency>1) runs
-        # validations concurrently on one SparkSession, and a shared name
-        # would let one partition's query silently read another's batch
+        # per-invocation view name: validations may run concurrently on
+        # one SparkSession (callers' threads, the planner's job pool, the
+        # per-partition fallback of a grouped pass), and a shared name
+        # would let one batch's query silently read another's
         view = _unique_view_name()
         _apply_domain(df, domain).createOrReplaceTempView(view)
         try:

@@ -27,6 +27,7 @@ from typing import Any, Callable, Dict, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from great_expectations_spark.core.domain import domain_gate
 from great_expectations_spark.plans.specs import CompiledWindow
@@ -34,6 +35,65 @@ from great_expectations_spark.plans.specs import CompiledWindow
 logger = logging.getLogger(__name__)
 
 WINDOW_COMPILERS: Dict[str, Callable[[Dict[str, Any]], CompiledWindow]] = {}
+
+
+def _orderable(dt: Optional[T.DataType]) -> bool:
+    """Whether Spark can sort by a column of this type: no map or variant
+    anywhere inside it."""
+    if isinstance(dt, (T.MapType, T.VariantType)):
+        return False
+    if isinstance(dt, T.ArrayType):
+        return _orderable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    return True
+
+
+def top_k(
+    frame: DataFrame,
+    by: Sequence[str],
+    limit: int,
+    count: bool = False,
+) -> Dict[tuple, List[Dict[str, Any]]]:
+    """The ``limit`` smallest rows of ``frame`` per ``by`` key, in ONE job:
+    ``{by key tuple: [row dicts in rank order]}``.
+
+    Rows are ordered by every orderable column of ``frame`` outside
+    ``by``, in column order, so the result is deterministic: the same
+    rows at any shuffle partition count or job concurrency.  Columns
+    Spark cannot sort by (a map) ride along but stay out of the order.
+    With a non-empty ``by`` the rank is ``row_number() <= limit``, which
+    Spark plans as a JVM top-k (``WindowGroupLimit`` Partial before the
+    exchange and Final after it, up to
+    ``spark.sql.optimizer.windowGroupLimitThreshold``); with an empty
+    ``by`` it is ``orderBy().limit()``.
+
+    ``count`` adds each key's total row count as ``__gx_n``, a
+    whole-partition count over the same window.  That frame is not an
+    expanding one, so Spark then plans no partial limit: every row
+    crosses the exchange, and the count sees them all."""
+    types = {f.name: f.dataType for f in frame.schema.fields}
+    order = [c for c in frame.columns if c not in by and _orderable(types[c])]
+    if not by:
+        top = frame.orderBy(*order).limit(limit).collect()
+        return {(): [r.asDict() for r in top]} if top else {}
+    w = Window.partitionBy(*by).orderBy(*order)
+    extra = []
+    if count:
+        whole = w.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
+        extra.append(F.count(F.lit(1)).over(whole).alias("__gx_n"))
+    ranked = frame.select(
+        "*", F.row_number().over(w).alias("__gx_rn"), *extra
+    ).filter(F.col("__gx_rn") <= limit)
+    out: Dict[tuple, List[Dict[str, Any]]] = {}
+    for r in ranked.collect():
+        row = r.asDict()
+        out.setdefault(tuple(row[c] for c in by), []).append(row)
+    for rows in out.values():
+        rows.sort(key=lambda row: row["__gx_rn"])
+    return out
 
 
 def register_window(name: str):
@@ -108,51 +168,59 @@ def _uniqueness_window(
         )
         return {tuple(r[g] for g in group_by): int(r["__gx_u"]) for r in rows}
 
+    def value_of(r: Dict[str, Any]) -> Any:
+        if value_is_dict:
+            return {c: r[c] for c in key_cols}
+        if len(key_cols) == 1:
+            return r[key_cols[0]]
+        return tuple(r[c] for c in key_cols)
+
     def sample(
         df: DataFrame,
         domain: Optional[Column],
         n: int,
         index_cols: Optional[List[str]] = None,
-    ) -> Dict[str, List[Any]]:
+        group_by: Sequence[str] = (),
+    ) -> Dict[tuple, Dict[str, List[Any]]]:
+        """``{group key: sample}``: the ``n`` smallest duplicated keys of
+        each group (``top_k``), or with ``index_cols`` the ``n`` smallest
+        violating rows."""
         if index_cols:
             # row-level sample: semi-join rows back to duplicated keys so
-            # each violating ROW carries its index lineage
-            dup_keys = dup_groups(df, domain).select(*key_cols)
-            rows = (
-                base(df, domain)
-                .join(F.broadcast(dup_keys), key_cols, "left_semi")
-                .select(*key_cols, *[c for c in index_cols if c not in key_cols])
-                .limit(n)
-                .collect()
+            # each violating ROW carries its index lineage; the group
+            # prefix joins null-safe (the NULL partition keeps its rows)
+            keys = _prefixed(group_by, key_cols)
+            dup_keys = dup_groups(df, domain, group_by).select(
+                *[F.col(c).alias(f"__gx_k{i}") for i, c in enumerate(keys)]
             )
-            values: List[Any] = []
-            for r in rows:
-                if value_is_dict:
-                    values.append({c: r[c] for c in key_cols})
-                elif len(key_cols) == 1:
-                    values.append(r[key_cols[0]])
-                else:
-                    values.append(tuple(r[c] for c in key_cols))
+            on = [
+                F.col(c).eqNullSafe(F.col(f"__gx_k{i}"))
+                for i, c in enumerate(keys)
+            ]
+            rows = base(df, domain).join(
+                F.broadcast(dup_keys), on, "left_semi"
+            ).select(*_prefixed(keys, index_cols))
             return {
-                "unexpected_list": values,
-                "unexpected_index_list": [
-                    {c: r[c] for c in index_cols} for r in rows
-                ],
+                key: {
+                    "unexpected_list": [value_of(r) for r in top],
+                    "unexpected_index_list": [
+                        {c: r[c] for c in index_cols} for r in top
+                    ],
+                }
+                for key, top in top_k(rows, group_by, n).items()
             }
-        rows = dup_groups(df, domain).limit(n).collect()
-        out: List[Any] = []
-        for r in rows:
-            if value_is_dict:
-                value: Any = {c: r[c] for c in key_cols}
-            elif len(key_cols) == 1:
-                value = r[key_cols[0]]
-            else:
-                value = tuple(r[c] for c in key_cols)
-            # each duplicated key contributes cnt unexpected rows
-            out.extend([value] * min(int(r["__gx_cnt"]), n - len(out)))
-            if len(out) >= n:
-                break
-        return {"unexpected_list": out[:n]}
+        out: Dict[tuple, Dict[str, List[Any]]] = {}
+        dups = dup_groups(df, domain, group_by)
+        for key, top in top_k(dups, group_by, n).items():
+            values: List[Any] = []
+            for r in top:
+                # each duplicated key contributes cnt unexpected rows
+                repeat = min(int(r["__gx_cnt"]), n - len(values))
+                values.extend([value_of(r)] * repeat)
+                if len(values) >= n:
+                    break
+            out[key] = {"unexpected_list": values}
+        return out
 
     considered = None
     for c in key_cols:
@@ -168,15 +236,7 @@ def _uniqueness_window(
         # only reachable when the planner ADOPTED this expectation into a
         # shared window pass (adjacent-duplicate flag) — each flagged row
         # is one duplicated record, matching the adopted count semantics
-        values: List[Any] = []
-        for r in rows:
-            if value_is_dict:
-                values.append({c: r[c] for c in key_cols})
-            elif len(key_cols) == 1:
-                values.append(r[key_cols[0]])
-            else:
-                values.append(tuple(r[c] for c in key_cols))
-        out: Dict[str, Any] = {"unexpected_list": values}
+        out: Dict[str, Any] = {"unexpected_list": [value_of(r) for r in rows]}
         if index_cols:
             out["unexpected_index_list"] = [
                 {c: r[c] for c in index_cols} for r in rows
@@ -465,21 +525,22 @@ def _sequence_contiguous_join(
         domain: Optional[Column],
         n: int,
         index_cols: Optional[List[str]] = None,
-    ) -> Dict[str, List[Any]]:
-        rows = (
-            missing_pred(df, domain)
-            .select("__gx_g", "__gx_i")
-            .limit(n)
-            .collect()
-        )
-        values = [
-            {group_column: r["__gx_g"], index_column: r["__gx_i"]}
-            for r in rows
-        ]
-        return {
-            "unexpected_list": values,
-            "unexpected_index_list": values,
-        }
+        group_by: Sequence[str] = (),
+    ) -> Dict[tuple, Dict[str, List[Any]]]:
+        """``{group key: sample}``: each group's ``n`` smallest (group,
+        index) pairs whose predecessor is missing (``top_k``)."""
+        out: Dict[tuple, Dict[str, List[Any]]] = {}
+        missing = missing_pred(df, domain, group_by)
+        for key, top in top_k(missing, group_by, n).items():
+            values = [
+                {group_column: r["__gx_g"], index_column: r["__gx_i"]}
+                for r in top
+            ]
+            out[key] = {
+                "unexpected_list": values,
+                "unexpected_index_list": values,
+            }
+        return out
 
     cw = CompiledWindow(
         kind="multicolumn_map",

@@ -3,10 +3,10 @@ minimal number of Spark jobs and assembles reference-shaped results.
 
 Every phase is parameterised by a group prefix ``group_by``: empty for a
 whole-table ``validate(df, suite)``, ``[partition_column]`` for
-``checkpoint.runner.validate_by_partition``, which runs the same phases
-and builds every result with the same ``_assemble``.  Phase outputs are
-keyed by group key tuple — the single ``()`` key for ``validate``, one
-``(partition,)`` key per partition for the grouped call.
+``checkpoint.runner.validate_by_partition`` and ``run_checkpoint``, which
+run the same phases and build every result with the same ``_assemble``.
+Phase outputs are keyed by group key tuple — the single ``()`` key for
+``validate``, one ``(partition,)`` key per partition for the grouped call.
 
 Physical plan of ``validate(df, suite)``:
 
@@ -38,21 +38,21 @@ Physical plan of ``validate(df, suite)``:
     ``groupBy(*group_by).agg`` job each; aggregate followups run after
     phase A (a grouped call uses the ``grouped_followup`` hook, one job
     for every partition).
-  Phase D: violation samples, only when result_format > BOOLEAN_ONLY
-    and the call is not grouped (a grouped call returns counts only).
-    FAILING map expectations: the condition-annotated projection is
-    computed once, persisted when more than one expectation fails, and
-    each failing expectation takes a ``limit(k)`` slice (limits push
-    into the scan).  Flag-window groups sample inside their phase-B job
-    (``_fused_window_group``): a JVM top-k per member keeps the k
-    smallest violating rows by the group's orderable sample columns
-    (deterministic), planned as ``WindowGroupLimit`` Partial before the
-    member exchange and Final after it.  COMPLETE's cap
+  Phase D: violation samples, whenever result_format > BOOLEAN_ONLY,
+    grouped or not.  Every sample is a JVM top-k
+    (``window_ops.top_k``): ``row_number() over (partition by
+    [*group_by, member] order by <sample columns>) <= k``, so samples
+    are deterministic and a group's sample is the one a ``validate`` of
+    its slice takes.  Map expectations with violations share ONE job:
+    each flagged row explodes into the members it violates, and Spark
+    plans the top-k as ``WindowGroupLimit`` Partial before the member
+    exchange and Final after it.  Flag-window groups sample inside their
+    phase-B job (``_fused_window_group``), whose per-(group, member)
+    count rides the same window.  A set window with violations takes
+    one top-k sample job for every group.  COMPLETE's cap
     (``max_complete_collect``) is above
     ``spark.sql.optimizer.windowGroupLimitThreshold``, so Spark plans
-    only the Final limit: every flagged row crosses the member
-    exchange, still in that one job.  Failing set windows take one
-    ``limit(k)`` sample job each.
+    only the Final limit there.
 
 Driver-side job orchestration: the phases above are *independent Spark
 jobs* with a small dependency DAG (samples and aggregate followups need
@@ -63,13 +63,14 @@ scaling dataset (SCALING.md).  ``validate`` submits them from a driver
 thread pool of ``job_concurrency`` workers (default 8; ``1`` runs the
 jobs one at a time through a one-worker pool): phase A ∥ phase B
 ∥ every CompiledJob expectation, then (once phase-A metrics land)
-aggregate followups ∥ window samples ∥ per-expectation map-sample
-collects.  Spark's scheduler accepts concurrent job submission from
-driver threads natively (the reference does the same driver-side with
-``core/async_executor.py`` across *checkpoints*; here it is applied
-*inside* one suite pass).  Results are assembled in suite order after
-all futures resolve, so output is deterministic and exception semantics
-(``catch_exceptions``) are unchanged.
+aggregate followups ∥ set-window samples ∥ the map-sample job.  Pool
+tasks inherit the caller's Spark local properties, so a job group the
+caller sets covers every job.  Spark's scheduler accepts concurrent job
+submission from driver threads natively (the reference does the same
+driver-side with ``core/async_executor.py`` across *checkpoints*; here
+it is applied *inside* one suite pass).  Results are assembled in suite
+order after all futures resolve, so output is deterministic and
+exception semantics (``catch_exceptions``) are unchanged.
 
 Aggregate metrics are deduplicated by content-addressed key, so shared
 dependencies (row_count, nonnull counts) are computed once (reference
@@ -87,10 +88,9 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any, Dict, List, Optional, Sequence, Tuple, Union
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.storagelevel import StorageLevel
+from pyspark.util import inheritable_thread_target
 
 from great_expectations_spark.core.domain import (
     domain_gate,
@@ -273,12 +273,12 @@ def window_group_counts(
     members: List["_PlannedItem"],
     group_by: Sequence[str] = (),
 ) -> Dict[tuple, Dict[str, int]]:
-    """ONE count job for a flag-window group: project every member's flag
-    (windows partitioned by ``[*group_by, *partition_by]``) and sum them
-    per ``group_by`` key.  Returns ``{group key tuple: {window_metric:
-    unexpected_count}}`` — a single ``()`` key for a whole-table
-    ``validate``, one ``(partition,)`` key per partition for
-    ``validate_by_partition``.  Null handling stays correct when members
+    """ONE count job for a flag-window group at BOOLEAN_ONLY, which takes
+    no samples: project every member's flag (windows partitioned by
+    ``[*group_by, *partition_by]``) and sum them per ``group_by`` key.
+    Returns ``{group key tuple: {window_metric: unexpected_count}}`` — a
+    single ``()`` key for a whole-table ``validate``, one
+    ``(partition,)`` key per partition for a grouped call.  Null handling stays correct when members
     share the pass because the flag builders are null-transparent
     (``window_ops._prev_nonnull``) rather than relying on pre-filtered
     frames."""
@@ -316,16 +316,23 @@ def window_group_counts(
     }
 
 
-def _orderable(dt: Optional[T.DataType]) -> bool:
-    """Whether Spark can sort by a column of this type: no map or variant
-    anywhere inside it."""
-    if isinstance(dt, (T.MapType, T.VariantType)):
-        return False
-    if isinstance(dt, T.ArrayType):
-        return _orderable(dt.elementType)
-    if isinstance(dt, T.StructType):
-        return all(_orderable(f.dataType) for f in dt.fields)
-    return True
+def _flagged_members(
+    frame: DataFrame, cols: Sequence[str], flags: Sequence[str]
+) -> DataFrame:
+    """One row per (flagged row of ``frame``, flag it carries): ``cols``
+    plus ``__gx_m``, the index of the flag in ``flags``."""
+    any_flag = functools.reduce(
+        lambda a, b: a | b, [F.col(f) for f in flags]
+    )
+    member = F.explode(
+        F.filter(
+            F.array(
+                *[F.when(F.col(f), F.lit(i)) for i, f in enumerate(flags)]
+            ),
+            lambda x: x.isNotNull(),
+        )
+    ).alias("__gx_m")
+    return frame.filter(any_flag).select(*cols, member)
 
 
 class SuiteValidator:
@@ -479,11 +486,16 @@ class SuiteValidator:
         output, an aggregate's values (or the Exception its grouped
         followup raised for that group), a violation sample.  A call that
         fails as a whole marks ``item.error``, which assembly replays in
-        suite order with unchanged exception semantics.  A grouped call
-        (non-empty ``group_by``) takes no samples, and leaves to assembly
-        every job expectation or aggregate followup without a grouped
-        hook, and every group a grouped mapping lacks: each job or
-        aggregate without a ``prefetched`` value there.
+        suite order with unchanged exception semantics.  Every format
+        but BOOLEAN_ONLY takes violation samples, grouped or not, with
+        the same top-k jobs, so a group's samples are the rows a
+        ``validate`` of that group's slice returns.  A grouped call
+        (non-empty ``group_by``) leaves to assembly every job expectation
+        or aggregate followup without a grouped hook, and every group a
+        grouped mapping lacks: each job or aggregate without a
+        ``prefetched`` value there.  Pool tasks inherit the caller's
+        Spark local properties, so a job group set by the caller covers
+        every job of the call.
         """
 
         def guarded(fn, *a):
@@ -492,12 +504,17 @@ class SuiteValidator:
             except Exception as exc:  # noqa: BLE001 — replayed at assembly
                 return exc
 
-        def whole(fn, *a):
-            return {(): fn(*a)}
+        session = df.sparkSession
+
+        def submit(fn, *a):
+            # a pool thread runs its Spark jobs under the caller's local
+            # properties (job group, scheduler pool); wrapping per task
+            # gives each task its own copy
+            return pool.submit(inheritable_thread_target(session)(fn), *a)
 
         prefetched: Dict[tuple, Dict[int, Any]] = {(): {}} if not group_by else {}
         with ThreadPoolExecutor(max_workers=self.job_concurrency) as pool:
-            fut_bundle = pool.submit(
+            fut_bundle = submit(
                 self._run_bundled_phase_isolating,
                 df,
                 items,
@@ -508,7 +525,7 @@ class SuiteValidator:
             # the window phase writes fused counts+samples into
             # ``prefetched`` from its worker thread; the main thread only
             # touches ``prefetched`` after fut_window is joined below
-            fut_window = pool.submit(
+            fut_window = submit(
                 self._run_window_phase,
                 df,
                 items,
@@ -519,7 +536,7 @@ class SuiteValidator:
                 group_by,
             )
             futs = [
-                (item, pool.submit(
+                (item, submit(
                     guarded, self._run_job_item, item.compiled, df,
                     item.domain, rf, group_by,
                 ))
@@ -552,12 +569,12 @@ class SuiteValidator:
                         or c.grouped_followup is not None
                     )
                 ):
-                    futs.append((item, pool.submit(
+                    futs.append((item, submit(
                         guarded, self._aggregate_values, item, c, df,
                         metrics, group_by,
                     )))
-            # a grouped call returns counts only
-            if rf["result_format"] != "BOOLEAN_ONLY" and not group_by:
+            fut_samples = None
+            if rf["result_format"] != "BOOLEAN_ONLY":
                 limit = (
                     self.max_complete_collect
                     if rf["result_format"] == "COMPLETE"
@@ -566,21 +583,25 @@ class SuiteValidator:
                 index_cols = rf.get("unexpected_index_column_names")
                 # flag-window members were served counts AND samples by
                 # the fused wave-1 window job (already in ``prefetched``);
-                # each failing set window takes a dedicated sample job
+                # each set window failing in some group takes one sample
+                # job for every group
                 for item in items:
                     c = item.compiled
                     if (
                         item.error is None
                         and isinstance(c, CompiledWindow)
                         and c.flag_builder is None
-                        and int(metrics[()].get(window_metric(item)) or 0)
+                        and any(
+                            int(m.get(window_metric(item)) or 0)
+                            for m in metrics.values()
+                        )
                     ):
-                        futs.append((item, pool.submit(
-                            guarded, whole, c.sample,
-                            df, item.domain, limit, index_cols,
+                        futs.append((item, submit(
+                            guarded, c.sample, df, item.domain, limit,
+                            index_cols, group_by,
                         )))
-                prefetched[()].update(
-                    self._collect_samples(df, items, metrics[()], rf, pool)
+                fut_samples = submit(
+                    self._collect_samples, df, items, metrics, rf, group_by
                 )
 
             for item, fut in futs:
@@ -590,6 +611,9 @@ class SuiteValidator:
                     continue
                 for key, value in out.items():
                     prefetched.setdefault(key, {})[id(item)] = value
+            if fut_samples is not None:
+                for key, samples in fut_samples.result().items():
+                    prefetched.setdefault(key, {}).update(samples)
         return metrics, prefetched
 
     def _run_job_item(
@@ -862,27 +886,22 @@ class SuiteValidator:
         suite's ts-monotonicity + turn-contiguity share the (conv_id,
         turn_idx) window).  Counts land in ``metrics`` per group key.
 
-        BOOLEAN_ONLY and grouped calls take the counts alone
-        (``window_group_counts``); every other format also takes the
-        group's violation SAMPLES in that same job
-        (``_fused_window_group``).  A failing group job marks every
-        member's ``error`` (or raises without ``catch_exceptions``).  Set
-        windows run their own ``execute``."""
+        BOOLEAN_ONLY takes the counts alone (``window_group_counts``);
+        every other format also takes the group's violation SAMPLES in
+        that same job (``_fused_window_group``).  A failing group job
+        marks every member's ``error`` (or raises without
+        ``catch_exceptions``).  Set windows run their own ``execute``."""
         groups, set_windows = plan_window_groups(items)
 
         for members in groups.values():
             try:
-                if group_by or rf["result_format"] == "BOOLEAN_ONLY":
+                if rf["result_format"] == "BOOLEAN_ONLY":
                     counts = window_group_counts(df, members, group_by)
                     for key, vals in counts.items():
                         metrics.setdefault(key, {}).update(vals)
                 else:
                     self._fused_window_group(
-                        df,
-                        members,
-                        metrics.setdefault((), {}),
-                        rf,
-                        prefetched[()],
+                        df, members, metrics, rf, prefetched, group_by
                     )
             except Exception as exc:
                 if not catch_exceptions:
@@ -904,43 +923,34 @@ class SuiteValidator:
         self,
         df: DataFrame,
         members: List[_PlannedItem],
-        metrics: Dict[str, Any],
+        metrics: Dict[tuple, Dict[str, Any]],
         rf: dict,
-        prefetched: Dict[int, Any],
+        prefetched: Dict[tuple, Dict[int, Any]],
+        group_by: Sequence[str] = (),
     ) -> None:
-        """ONE job per flag-window group serves the violation COUNTS and
-        every member's violation sample.
+        """ONE job per flag-window group serves every member's violation
+        COUNT and violation SAMPLE, for every ``group_by`` key.
 
-        The count sums ride the flag projection as ``Observation``
-        metrics (a JVM ``CollectMetrics`` node sees every projected row
-        before the violation filter), so the sample job IS the count
-        job: the group's window shuffle is computed exactly once.
-        Before this fold, counts paid one projection+agg job and the
-        pooled samples re-ran the identical window shuffle a second
-        time (round-3 phase_profile: the recompute was ~45 s at 1x1 /
-        ~12 s at 4x1 on the 24.69M-turn corpus).
+        The job projects every member's flag (windows partitioned by
+        ``[*group_by, *partition_by]``), explodes each flagged row into
+        the indices of the members whose flag it carries, and keeps
+        ``row_number() over (partition by [*group_by, member] order by
+        <sample columns>) <= limit`` (``window_ops.top_k``), with each
+        (group, member)'s total as a whole-partition count over the same
+        window.  So the group's window shuffle runs exactly once, a
+        member can never be starved by a denser one, and the driver
+        collects at most ``limit`` rows per (group, member).  The sample
+        is deterministic — the ``limit`` smallest violating rows by the
+        group's sample columns, at any shuffle partition count or job
+        concurrency — and a group's sample equals the one a ``validate``
+        of its slice takes.  Sample columns Spark cannot sort by (a
+        map-typed ``unexpected_index_column_names`` entry) ride along
+        but stay out of the order.
 
-        Sample bounding is a JVM top-k per member, in the same job: each
-        flagged row explodes into the indices of the members whose flag
-        it carries, and ``row_number() over (partition by member order
-        by <sample columns>) <= limit`` keeps each member's ``limit``
-        smallest rows by the group's sample columns.  Spark plans that
-        filter as ``WindowGroupLimit`` — a ``Partial`` node before the
-        exchange and a ``Final`` one after it — so the shuffle carries at
-        most ``limit`` rows per member per task and the driver collects
-        at most ``limit * len(members)``.  No Python worker starts, a
-        member can never be starved by a denser one, and the sample is
-        deterministic: the same rows at any shuffle partition count or
-        job concurrency.  Sample columns Spark cannot sort by (a
-        map-typed ``unexpected_index_column_names`` entry) ride along in
-        the output but stay out of the order.
-
-        Spark infers the partial limit only up to
-        ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000).
-        Above it — COMPLETE's ``max_complete_collect`` — only the Final
-        limit remains: every flagged row crosses the member exchange,
-        which is still less than a full-table window shuffle per member.
-        """
+        The count keeps Spark from planning a partial top-k before the
+        member exchange: every flagged (row, member) pair crosses it.
+        That is at most the flagged share of the window shuffle's rows,
+        narrowed to the sample columns."""
         limit = (
             self.max_complete_collect
             if rf["result_format"] == "COMPLETE"
@@ -951,65 +961,32 @@ class SuiteValidator:
         if members[0].domain is not None:
             scoped = scoped.filter(domain_gate(members[0].domain))
         flag_names = [f"__gx_pf{i}" for i in range(len(members))]
-        cols: List[str] = []
+        cols = list(group_by)
         for m in members:
             for c in m.compiled.sample_columns(index_cols):
                 if c not in cols:
                     cols.append(c)
-        types = table_ops.flattened_column_types(df.schema)
-        order = [c for c in cols if _orderable(types.get(c))]
-        obs = Observation()
         proj = scoped.select(
-            *[F.col(c) for c in cols],
+            *cols,
             *[
-                domain_gate(m.compiled.flag_builder()).alias(fn)
+                domain_gate(m.compiled.flag_builder(group_by)).alias(fn)
                 for fn, m in zip(flag_names, members)
             ],
-        ).observe(
-            obs,
-            *[
-                F.coalesce(
-                    F.sum(F.when(F.col(fn), 1).otherwise(0)), F.lit(0)
-                ).alias(fn)
-                for fn in flag_names
-            ],
         )
-        any_flag = F.col(flag_names[0])
-        for fn in flag_names[1:]:
-            any_flag = any_flag | F.col(fn)
-        # one output row per (flagged row, member whose flag it carries);
-        # the member index partitions the top-k window
-        member = F.explode(
-            F.filter(
-                F.array(
-                    *[
-                        F.when(F.col(fn), F.lit(i))
-                        for i, fn in enumerate(flag_names)
-                    ]
-                ),
-                lambda x: x.isNotNull(),
+        top = window_ops.top_k(
+            _flagged_members(proj, cols, flag_names),
+            [*group_by, "__gx_m"],
+            limit,
+            count=True,
+        )
+        for key, rows in top.items():
+            group, m = key[:-1], members[key[-1]]
+            metrics.setdefault(group, {})[window_metric(m)] = int(
+                rows[0]["__gx_n"]
             )
-        ).alias("__gx_m")
-        rank = F.row_number().over(
-            Window.partitionBy("__gx_m").orderBy(*order)
-        )
-        top = (
-            proj.filter(any_flag)
-            .select(*cols, member)
-            .select("*", rank.alias("__gx_rn"))
-            .filter(F.col("__gx_rn") <= limit)
-        )
-        rows = sorted(
-            (r.asDict() for r in top.collect()),
-            key=lambda r: (r["__gx_m"], r["__gx_rn"]),
-        )
-        vals = obs.get  # complete: the map-side sort consumed every row
-        for i, (fn, m) in enumerate(zip(flag_names, members)):
-            count = int(vals[fn] or 0)
-            metrics[window_metric(m)] = count
-            if count:  # passing members need no sample
-                mine = [r for r in rows if r["__gx_m"] == i]
-                prefetched[id(m)] = m.compiled.pool_sample(mine, index_cols)
+            prefetched.setdefault(group, {})[id(m)] = m.compiled.pool_sample(
+                rows, index_cols
+            )
 
     # ------------------------------------------------------------------
 
@@ -1017,81 +994,89 @@ class SuiteValidator:
         self,
         df: DataFrame,
         items: List[_PlannedItem],
-        metrics: Dict[str, Any],
+        metrics: Dict[tuple, Dict[str, Any]],
         rf: dict,
-        pool: ThreadPoolExecutor,
-    ) -> Dict[int, Dict[str, Any]]:
-        """Phase D: violation samples for failing map expectations, by
-        ``id(item)``."""
+        group_by: Sequence[str] = (),
+    ) -> Dict[tuple, Dict[int, Dict[str, Any]]]:
+        """Phase D: violation samples of every map expectation that has
+        violations in some group, in ONE job, as ``{group key: {id(item):
+        sample}}``.
+
+        Each flagged row explodes into the indices of the members it
+        violates, and ``row_number() over (partition by [*group_by,
+        member] order by <member value, index or row columns>) <= k``
+        keeps each (group, member)'s ``k`` smallest violations
+        (``window_ops.top_k``, a JVM top-k).  Samples are deterministic,
+        ordered by the sample columns, and a group's sample equals the
+        one a ``validate`` of its slice takes."""
         if rf["result_format"] == "BOOLEAN_ONLY":
             return {}
-
-        index_cols = rf.get("unexpected_index_column_names") or []
-        needing: List[Tuple[_PlannedItem, str]] = []
-        flag_cols: List[Column] = []
-        value_cols: List[Column] = []
-        for i, item in enumerate(items):
-            c = item.compiled
-            if not isinstance(c, CompiledMap) or item.error:
-                continue
-            ucount = metrics.get(item.unexpected_alias or "", 0) or 0
-            if not ucount:
-                continue
-            flag_name = f"__gx_flag_{i}"
-            value_name = f"__gx_val_{i}"
-            flag_cols.append(unexpected_flag(item).alias(flag_name))
-            value_cols.append(
-                (c.value_expr if c.value_expr is not None else F.lit(None)).alias(
-                    value_name
-                )
+        needing = [
+            item
+            for item in items
+            if isinstance(item.compiled, CompiledMap)
+            and item.error is None
+            and any(
+                m.get(item.unexpected_alias or "") for m in metrics.values()
             )
-            needing.append((item, str(i)))
-
+        ]
         if not needing:
             return {}
 
+        limit = (
+            self.max_complete_collect
+            if rf["result_format"] == "COMPLETE"
+            else rf["partial_unexpected_count"]
+        )
+        index_cols = rf.get("unexpected_index_column_names") or []
         include_rows = bool(rf.get("include_unexpected_rows"))
-        if include_rows:
-            # full original rows must survive the projection so violating
-            # records can be returned verbatim (reference
-            # map_condition_auxilliary_methods.py:664-694)
-            projected = df.select(F.col("*"), *value_cols, *flag_cols)
-        else:
-            projected = df.select(
-                *[F.col(c) for c in index_cols], *value_cols, *flag_cols
-            )
-        # several failing expectations slice the same projection: persist
-        # it (MEMORY_AND_DISK), the reference's ``persist=True`` batch flag
-        # (``sparkdf_execution_engine.py:210-218``)
-        persisted = len(needing) > 1
-        if persisted:
-            projected = projected.persist(StorageLevel.MEMORY_AND_DISK)
-
-        def collect_one(item: _PlannedItem, idx: str) -> Dict[str, Any]:
-            c = item.compiled
-            assert isinstance(c, CompiledMap)
-            if rf["result_format"] == "COMPLETE":
-                limit = self.max_complete_collect
-            else:
-                limit = rf["partial_unexpected_count"]
-            row_cols = list(df.columns) if include_rows else []
-            # row_cols already cover the index columns when present
-            keep = row_cols if include_rows else list(index_cols)
-            rows = (
-                projected.filter(F.col(f"__gx_flag_{idx}"))
-                .select(f"__gx_val_{idx}", *keep)
-                .limit(limit)  # reference :774 builds but DISCARDS this
-                .collect()     # limit — applied for real here
-            )
-            values: List[Any] = []
+        # full original rows ride along so violating records can be
+        # returned verbatim (reference
+        # map_condition_auxilliary_methods.py:664-694)
+        row_cols = list(df.columns) if include_rows else []
+        keep = list(dict.fromkeys([*group_by, *(row_cols or index_cols)]))
+        values = [f"__gx_val_{i}" for i in range(len(needing))]
+        flags = [f"__gx_flag_{i}" for i in range(len(needing))]
+        projected = df.select(
+            *keep,
+            *[
+                (
+                    item.compiled.value_expr
+                    if item.compiled.value_expr is not None
+                    else F.lit(None)
+                ).alias(v)
+                for item, v in zip(needing, values)
+            ],
+            *[
+                unexpected_flag(item).alias(f)
+                for item, f in zip(needing, flags)
+            ],
+        )
+        # a row keeps only its member's value, so each member is ordered
+        # by its own value first
+        exploded = _flagged_members(projected, [*keep, *values], flags).select(
+            *[
+                F.when(F.col("__gx_m") == i, F.col(v)).alias(v)
+                for i, v in enumerate(values)
+            ],
+            *keep,
+            "__gx_m",
+        )
+        samples: Dict[tuple, Dict[int, Dict[str, Any]]] = {}
+        for key, rows in window_ops.top_k(
+            exploded, [*group_by, "__gx_m"], limit
+        ).items():
+            i = key[-1]
+            item = needing[i]
+            unexpected: List[Any] = []
             for r in rows:
-                v = r[f"__gx_val_{idx}"]
-                if c.value_is_dict and v is not None:
+                v = r[values[i]]
+                if item.compiled.value_is_dict and v is not None:
                     v = v.asDict()
                 elif hasattr(v, "asDict"):
                     v = tuple(v.asDict().values())
-                values.append(v)
-            entry: Dict[str, Any] = {"unexpected_list": values}
+                unexpected.append(v)
+            entry: Dict[str, Any] = {"unexpected_list": unexpected}
             if index_cols:
                 entry["unexpected_index_list"] = [
                     {ic: r[ic] for ic in index_cols} for r in rows
@@ -1100,25 +1085,7 @@ class SuiteValidator:
                 entry["unexpected_rows"] = [
                     {rc: r[rc] for rc in row_cols} for r in rows
                 ]
-            return entry
-
-        samples: Dict[int, Dict[str, Any]] = {}
-        try:
-            # every collect goes through the pool, so a one-worker pool
-            # runs it alone.  Concurrent limit-collects on the persisted
-            # projection may race to compute the same partition (bounded
-            # duplicate work, cache stays coherent); NOT pre-materialized
-            # — that would force a full scan where limits prune to a few
-            # partitions
-            futs = [
-                (item, pool.submit(collect_one, item, idx))
-                for item, idx in needing
-            ]
-            for item, fut in futs:
-                samples[id(item)] = fut.result()
-        finally:
-            if persisted:
-                projected.unpersist()
+            samples.setdefault(key[:-1], {})[id(item)] = entry
         return samples
 
     # ------------------------------------------------------------------

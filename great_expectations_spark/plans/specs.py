@@ -60,8 +60,10 @@ class CompiledWindow:
     * Set windows (uniqueness, join-strategy contiguity):
       ``execute(df, domain_cond, group_by)`` returns ``{group key tuple:
       unexpected_count}`` from a ``groupBy(*group_by, *keys)``
-      aggregation, and ``sample(df, domain_cond, n, index_cols)`` a dict
-      with ``unexpected_list`` (and ``unexpected_index_list``).
+      aggregation, and ``sample(df, domain_cond, n, index_cols,
+      group_by)`` ``{group key tuple: {"unexpected_list": ...,
+      "unexpected_index_list": ...}}`` holding each group's ``n``
+      smallest violations (``window_ops.top_k``).
     """
 
     kind: str
@@ -70,7 +72,7 @@ class CompiledWindow:
     execute: Optional[
         Callable[[DataFrame, Optional[Column], Sequence[str]], Dict[tuple, int]]
     ] = None
-    sample: Optional[Callable[..., Dict[str, List[Any]]]] = None
+    sample: Optional[Callable[..., Dict[tuple, Dict[str, List[Any]]]]] = None
     value_is_dict: bool = False
     considered: Optional[Column] = None  # counted in the bundled agg phase
     flag_builder: Optional[Callable[[Sequence[str]], Column]] = None

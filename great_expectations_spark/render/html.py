@@ -410,10 +410,11 @@ class HtmlDocsAction:
     Page layout and incremental/concurrent semantics live in
     :class:`great_expectations_spark.render.site.SiteBuilder`.
 
-    Thread-safe: ``run_checkpoint(max_concurrency>1)`` fires actions from
-    a thread pool; SiteBuilder serializes state updates and index
-    rewrites under a lock and lands every page via temp-file +
-    ``os.replace`` so a concurrent reader never sees a torn page."""
+    Thread-safe: ``run_checkpoint`` fires actions from its calling
+    thread, but several runs may share one action; SiteBuilder
+    serializes state updates and index rewrites under a lock and lands
+    every page via temp-file + ``os.replace`` so a concurrent reader
+    never sees a torn page."""
 
     notify_on = "all"
 

@@ -9,9 +9,8 @@ job_concurrency=8 is the same as with 1).  This job attributes it: run
 with job_concurrency=1 so the suite's phases serialize, time every
 phase-method call, and print the breakdown for the WARMEST pass at each
 level.  Whatever phase's time fails to shrink ~4x from 1x1 to 4x1 is the
-non-scaling term.  With one worker, ``_collect_samples`` also waits
-for the pool tasks queued ahead of its collects, so its time overlaps
-``_run_job_item`` and ``_aggregate_values``.
+non-scaling term.  ``_collect_samples`` runs as one pool task (one
+top-k job), so with one worker its time is its own.
 
 Usage: python jobs/phase_profile.py --level 1x1
 """

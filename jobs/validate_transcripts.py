@@ -8,7 +8,7 @@ Usage (cluster):
       --partition-column day \
       --checkpoint-dir /ckpt/transcripts \
       --suite suites/transcripts.json \
-      --strategy checkpoint --concurrency 8
+      --strategy checkpoint
 
 Local smoke (synthesized deterministic transcripts):
   python jobs/validate_transcripts.py --synthesize 5000 \
@@ -19,11 +19,12 @@ Local smoke (synthesized deterministic transcripts):
   a smoke run correctly reports success=false on some partitions — the
   engine finding the planted dirt is the expected outcome.
 
-Strategies:
-  checkpoint — full-fidelity per-partition loop with manifest resume
-               (violation samples, job expectations); rerun to resume.
-  grouped    — single-pass groupBy(partition) validation of every
-               partition at once (counts only) — the 10^12-row path.
+Strategies (both run the same grouped pass over the partitions):
+  checkpoint — run_checkpoint: chunked, with manifest resume and stored
+               per-partition results; rerun to resume.  ``--concurrency``
+               is passed as ``max_concurrency``, which has no effect.
+  grouped    — validate_by_partition: every partition in one pass, no
+               manifest.
 
 Emits one JSON line per run with per-partition lineage + throughput.
 """

@@ -415,6 +415,10 @@ def test_grouped_job_expectations_match_per_partition(spark, transcripts):
         dim.unpersist()
 
 
+def _first_days(df, n=2):
+    return sorted(r[0] for r in df.select("day").distinct().collect())[:n]
+
+
 def test_grouped_job_expectations_job_count_constant(spark, transcripts):
     """Spark job count for validate_by_partition must NOT grow with the
     number of partitions (the grouped hooks are O(1) jobs per item)."""
@@ -424,9 +428,7 @@ def test_grouped_job_expectations_job_count_constant(spark, transcripts):
     dim.count()
     sc = spark.sparkContext
     try:
-        few = transcripts.filter(
-            F.col("day").isin(["2024-01-01", "2024-01-02"])
-        )
+        few = transcripts.filter(F.col("day").isin(_first_days(transcripts)))
         # a row_condition-scoped aggregate rides one grouped filtered agg
         suite = _job_suite(dim).add(
             "expect_column_mean_to_be_between",
@@ -434,7 +436,7 @@ def test_grouped_job_expectations_job_count_constant(spark, transcripts):
             row_condition="role = 'user'", condition_parser="spark",
         )
         sc.setJobGroup("gx_grouped_few", "few partitions")
-        validate_by_partition(few, suite, "day")
+        assert len(validate_by_partition(few, suite, "day")) == 2
         jobs_few = len(sc.statusTracker().getJobIdsForGroup("gx_grouped_few"))
 
         sc.setJobGroup("gx_grouped_many", "many partitions")
@@ -607,13 +609,15 @@ def test_partition_list_cap(spark, transcripts, tmp_path, monkeypatch):
     from great_expectations_spark.checkpoint import runner
 
     monkeypatch.setattr(runner, "PARTITION_LIST_CAP", 10)
-    with pytest.raises(ValueError, match="more than 10 distinct"):
-        run_checkpoint(
-            transcripts,
-            _suite(),
-            partition_column="conv_id",
-            checkpoint_dir=str(tmp_path / "cap"),
-        )
+    for detect_changes in (False, True):
+        with pytest.raises(ValueError, match="more than 10 distinct"):
+            run_checkpoint(
+                transcripts,
+                _suite(),
+                partition_column="conv_id",
+                checkpoint_dir=str(tmp_path / "cap"),
+                detect_changes=detect_changes,
+            )
     # a sane partition column still works with an adequate cap
     vals = runner._collect_partition_values(transcripts, "day", cap=100_000)
     assert 10 < len(vals) <= 100_000
@@ -730,9 +734,9 @@ def test_grouped_distinct_set_followup_single_job(spark):
 
 
 def test_checkpoint_html_docs_action_concurrent(spark, transcripts, tmp_path):
-    """max_concurrency>1 fires HtmlDocsAction from pool threads: the
-    index must come out complete (one row per partition, never a torn
-    file) — the entry list + index rewrite are lock-serialized."""
+    """max_concurrency>1 is still accepted (it has no effect): the index
+    must come out complete (one row per partition, never a torn file) —
+    the entry list + index rewrite are lock-serialized."""
     import glob
     import os
 
@@ -942,3 +946,217 @@ def test_grouped_slice_fallback_null_partition(spark):
     assert (got.success, got.result["observed_value"]) == (False, ["z"])
     assert (want.success, want.result["observed_value"]) == (False, ["z"])
     assert grouped["d1"].results[0].success
+
+
+def test_checkpoint_null_partition_validated_on_its_rows(spark, tmp_path):
+    """The NULL partition of the partition column is validated on its own
+    rows, not on an empty slice."""
+    df = spark.createDataFrame(
+        [("d1", 1), ("d1", 2), (None, 100), (None, 200)],
+        "day string, x int",
+    )
+    suite = ExpectationSuite("null_part").add(
+        "expect_column_values_to_be_between",
+        column="x", min_value=0, max_value=10,
+    )
+    summary = run_checkpoint(df, suite, "day", str(tmp_path / "ckpt"))
+    entries = {e["partition_id"]: e for e in summary["entries"]}
+    got = {
+        p: (e["status"], e["rows"], e["success"]) for p, e in entries.items()
+    }
+    assert got == {"d1": ("done", 2, True), "None": ("done", 2, False)}
+    assert summary["success"] is False
+    with open(entries["None"]["result_path"]) as f:
+        result = json.load(f)["results"][0]["result"]
+    assert result["unexpected_count"] == 2
+    assert result["partial_unexpected_list"] == [100, 200]
+
+
+def test_detect_changes_lists_partitions_from_fingerprints(
+    spark, tmp_path, monkeypatch
+):
+    """With detect_changes the fingerprint job lists the partitions, the
+    NULL one included: no separate distinct scan runs."""
+    from great_expectations_spark.checkpoint import runner as runner_mod
+
+    def no_scan(*args, **kwargs):
+        raise AssertionError("distinct partition scan")
+
+    monkeypatch.setattr(runner_mod, "_collect_partition_values", no_scan)
+    df = spark.createDataFrame(
+        [("d1", 1), (None, 100)], "day string, x int"
+    )
+    suite = ExpectationSuite("fp").add(
+        "expect_column_values_to_be_between",
+        column="x", min_value=0, max_value=10,
+    )
+    summary = run_checkpoint(
+        df, suite, "day", str(tmp_path / "ckpt"), detect_changes=True
+    )
+    got = {
+        e["partition_id"]: (e["rows"], e["success"], bool(e["fingerprint"]))
+        for e in summary["entries"]
+    }
+    assert got == {"d1": (1, True, True), "None": (1, False, True)}
+
+
+def _crossing_table(spark):
+    """Three days and a NULL partition.  Conversation x crosses midnight
+    (turns 0-1 on day a, 2-3 on day b); y on day b has a duplicate turn
+    and a ts regression; z sits in the NULL partition with a turn gap;
+    w on day c is clean.  ``x`` breaks 0..10 on several rows."""
+    rows = [
+        ("x", 0, 100, "a", 1, 5),
+        ("x", 1, 110, "a", 50, 6),
+        ("x", 2, 120, "b", 2, 6),
+        ("x", 3, 130, "b", 3, 7),
+        ("y", 0, 50, "b", 70, 8),
+        ("y", 1, 60, "b", 4, 8),
+        ("y", 1, 60, "b", 60, 9),
+        ("y", 2, 55, "b", 5, 9),
+        ("z", 0, 10, None, 90, 1),
+        ("z", 2, 20, None, 80, 1),
+        ("w", 0, 1, "c", 1, 2),
+        ("w", 1, 2, "c", 2, 3),
+    ]
+    return spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, ts long, day string, x int, k int",
+    ).coalesce(1)
+
+
+def _crossing_suite():
+    return (
+        ExpectationSuite("crossing")
+        .add(
+            "expect_column_values_to_be_between",
+            column="x", min_value=0, max_value=10,
+        )
+        .add(
+            "expect_column_values_to_be_increasing",
+            column="ts", partition_by="conv_id", order_by="turn_idx",
+        )
+        .add(
+            "expect_sequence_to_be_contiguous",
+            group_column="conv_id", index_column="turn_idx",
+        )
+        .add(
+            "expect_compound_columns_to_be_unique",
+            column_list=["conv_id", "turn_idx"],
+        )
+        # set windows no shared window spec adopts
+        .add("expect_column_values_to_be_unique", column="k")
+        .add(
+            "expect_sequence_to_be_contiguous",
+            group_column="conv_id", index_column="turn_idx",
+            strategy="join",
+        )
+        .add("expect_column_mean_to_be_between", column="x", max_value=10)
+    )
+
+
+def test_checkpoint_results_match_per_partition_validate(spark, tmp_path):
+    """run_checkpoint's stored SUMMARY results equal a validate of each
+    partition's slice: counts, success, observed values and the violation
+    samples themselves."""
+    from pyspark.sql import functions as F
+
+    from great_expectations_spark.plans.planner import SuiteValidator
+
+    df = _crossing_table(spark)
+    suite = _crossing_suite()
+    summary = run_checkpoint(df, suite, "day", str(tmp_path / "ckpt"))
+    entries = {e["partition_id"]: e for e in summary["entries"]}
+    assert sorted(entries) == ["None", "a", "b", "c"]
+    keys = (
+        "unexpected_count", "observed_value", "partial_unexpected_list",
+    )
+    v = SuiteValidator()
+    failing = set()
+    for day in (None, "a", "b", "c"):
+        with open(entries[str(day)]["result_path"]) as f:
+            stored = json.load(f)
+        want = json.loads(
+            v.validate(
+                df.filter(F.col("day").eqNullSafe(day)), suite, "SUMMARY"
+            ).to_json()
+        )
+        assert stored["success"] == want["success"], day
+        assert entries[str(day)]["success"] == want["success"], day
+        pairs = zip(stored["results"], want["results"])
+        for i, (got, exp) in enumerate(pairs):
+            assert not got["exception_info"]["raised_exception"], (day, i)
+            assert got["success"] == exp["success"], (day, i)
+            for k in keys:
+                assert got["result"].get(k) == exp["result"].get(k), (
+                    day, i, k,
+                )
+            if not got["success"]:
+                failing.add((day, i))
+        assert stored["meta"]["partition_id"] == str(day)
+        assert stored["meta"]["run_id"] == summary["run_id"]
+    # every family fails somewhere, so the samples compared are not empty
+    assert {i for _, i in failing} == set(range(7))
+    # day b: x's turn 2 has no predecessor inside the partition
+    with open(entries["b"]["result_path"]) as f:
+        b = json.load(f)["results"]
+    assert b[2]["result"]["partial_unexpected_list"] == [
+        {"conv_id": "x", "turn_idx": 2}
+    ]
+
+
+def test_checkpoint_job_count_constant(spark, transcripts, tmp_path):
+    """Under a job group, every Spark job of a run_checkpoint is counted
+    (the validator's pool jobs too), and the count does not grow with the
+    number of partitions to validate."""
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    few = transcripts.filter(F.col("day").isin(_first_days(transcripts)))
+    try:
+        sc.setJobGroup("gx_ckpt_few", "few partitions")
+        s_few = run_checkpoint(few, _suite(), "day", str(tmp_path / "few"))
+        jobs_few = len(sc.statusTracker().getJobIdsForGroup("gx_ckpt_few"))
+        sc.setJobGroup("gx_ckpt_many", "many partitions")
+        s_many = run_checkpoint(
+            transcripts, _suite(), "day", str(tmp_path / "many")
+        )
+        jobs_many = len(sc.statusTracker().getJobIdsForGroup("gx_ckpt_many"))
+    finally:
+        sc.setJobGroup(None, None)
+    assert s_few["partitions_validated_now"] == 2
+    assert s_many["partitions_validated_now"] == 30
+    # the partition list, the bundled agg and the window jobs at least
+    assert jobs_few >= 3, jobs_few
+    # a per-partition loop ran about 4 jobs per partition (120 here);
+    # AQE runs each shuffle stage as its own job and skips empty ones
+    assert jobs_many <= jobs_few + 6, (jobs_few, jobs_many)
+    assert jobs_many < 25, jobs_many
+
+
+def test_checkpoint_failed_chunk_records_failed_and_reruns(
+    spark, transcripts, tmp_path, monkeypatch
+):
+    """A chunk whose grouped pass raises records every one of its
+    partitions failed, with no count, and a re-run validates them."""
+    from great_expectations_spark.plans.planner import SuiteValidator
+
+    def boom(self, *args, **kwargs):
+        raise RuntimeError("executor lost")
+
+    ckpt = str(tmp_path / "ckpt")
+    with monkeypatch.context() as m:
+        m.setattr(SuiteValidator, "_run_phases_concurrent", boom)
+        summary = run_checkpoint(transcripts, _suite(), "day", ckpt)
+    assert summary["success"] is False
+    assert len(summary["failures"]) == 30
+    for e in summary["entries"]:
+        assert (e["status"], e["success"], e["rows"]) == ("failed", None, 0)
+        assert e["error"] == "executor lost"
+        assert e["result_path"] is None
+    assert summary["partitions_done"] == 0
+
+    rerun = run_checkpoint(transcripts, _suite(), "day", ckpt)
+    assert rerun["partitions_validated_now"] == 30
+    assert not rerun["failures"]
+    assert rerun["partitions_done"] == 30

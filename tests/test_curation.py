@@ -237,6 +237,24 @@ def test_redact_pii_all_kinds(spark):
     assert "555-1234" not in out and "[PII:phone]" in out
 
 
+def test_redact_pii_gates_on_rewritten_text(spark):
+    # a token holding '@' turns the card into an email-shaped string; the
+    # email pass must see it whether or not the original text held '@'
+    token = "[PII-{kind}@redacted.example]"
+    df = spark.createDataFrame(
+        [("card 4111 1111 1111 1111",), ("a@b.io card 4111 1111 1111 1111",)],
+        "text string",
+    )
+    got = [
+        r["r"]
+        for r in df.select(
+            cur.redact_pii(F.col("text"), token=token).alias("r")
+        ).collect()
+    ]
+    card = "[[PII-email@redacted.example]]"
+    assert got == [f"card {card}", f"[PII-email@redacted.example] card {card}"]
+
+
 def test_redact_pii_kind_subset_and_unknown_kind(spark):
     df = spark.createDataFrame([("a@b.io 1.2.3.4",)], "text string")
     out = df.select(

@@ -1,9 +1,9 @@
 """Fused window counts+samples: the three window-family expectations
 sharing one (conv_id, turn_idx) spec must get their violation COUNTS
-(observation metrics) and their violation SAMPLES from ONE job — not a
-count agg plus a pooled re-scan — with exact per-member caps (no
-starvation), deterministic content, and index columns of any type
-carried through (a map-typed one stays out of the top-k order)."""
+(a count over the top-k window) and their violation SAMPLES from ONE
+job — not a count agg plus a pooled re-scan — with exact per-member
+caps (no starvation), deterministic content, and index columns of any
+type carried through (a map-typed one stays out of the top-k order)."""
 
 from __future__ import annotations
 
@@ -68,13 +68,16 @@ def _by_type(res):
 def _spy_fused(monkeypatch, calls):
     orig = SuiteValidator._fused_window_group
 
-    def spy(self, df, members, metrics, rf, prefetched):
-        before = set(prefetched)
-        orig(self, df, members, metrics, rf, prefetched)
+    def served(prefetched):
+        return {(key, i) for key, by_id in prefetched.items() for i in by_id}
+
+    def spy(self, df, members, metrics, rf, prefetched, *rest):
+        before = served(prefetched)
+        orig(self, df, members, metrics, rf, prefetched, *rest)
         calls.append(
             {
                 "members": len(members),
-                "served": len(set(prefetched) - before),
+                "served": len(served(prefetched) - before),
             }
         )
 
