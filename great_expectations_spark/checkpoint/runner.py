@@ -321,7 +321,11 @@ def run_checkpoint(
     mergeable sketch per (new partition, column, kind) is persisted
     under the checkpoint dir (``checkpoint/sketches.py``) in ONE extra
     grouped job, and the summary carries the merged answers over ALL
-    stored partitions — old ones never re-scanned.  It is a column list
+    stored partitions — old ones never re-scanned.  Those answers take at
+    most two more small jobs, one for all HLL columns and one for all
+    top-k columns, each over the stored states sent to Spark as one Arrow
+    table; moments and histograms merge on the driver.  No Python worker
+    starts for any of it.  ``sketch_columns`` is a column list
     (every column gets ``sketch_kinds``) or a ``{column: kinds}``
     mapping for a heterogeneous plan.  Kinds from ``('hll', 'moments',
     'topk', 'histogram')`` → summary keys ``distinct_estimates`` /

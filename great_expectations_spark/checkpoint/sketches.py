@@ -8,7 +8,7 @@ per (partition, column) for partitions it has not seen — in one grouped
 Spark job — persists them next to the checkpoint manifest (same
 atomic-rename one-file-per-partition layout, object-store safe), and
 answers table-level questions by MERGING stored sketches, never
-re-scanning validated data.  Three mergeable kinds:
+re-scanning validated data.  Four mergeable kinds:
 
 * ``hll`` — DataSketches HLL (Spark 4 ``hll_sketch_agg`` /
   ``hll_union_agg``): distinct count.  Exact while a partition stays in
@@ -19,6 +19,18 @@ re-scanning validated data.  Three mergeable kinds:
 * ``topk`` — ``approx_top_k_accumulate`` frequent-items state; merged
   with ``approx_top_k_combine``.  Exact while true cardinality fits
   ``topk_max_items``.
+* ``histogram`` — counts below, inside and above fixed
+  ``histogram_edges`` per column; merged by integer vector addition.
+  Exact; feeds :meth:`PartitionSketchStore.merged_quantiles` and the
+  drift comparisons.
+
+Moments and histograms merge as driver arithmetic.  HLL and top-k
+states merge in ONE Spark job per call: the stored blobs reach Spark as
+one Arrow table that the JVM scans (``core/frames.py``), so no Python
+worker starts and the cost is the bytes of the states.  The records
+are still read on the driver (:meth:`PartitionSketchStore._scan_records`):
+that read decides which records are live (folded files, corrupt or
+partial records) and lets a merge refuse mixed ``lg_k`` before any job.
 
 This is the north star's "single-pass combine of per-partition sketches
 (count/sum/M2, distinct, heavy hitters)" made RESUMABLE: the sketch is
@@ -38,8 +50,16 @@ from typing import Any, Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BinaryType,
+    DataType,
+    StructField,
+    StructType,
+    _parse_datatype_string,
+)
 
 from great_expectations_spark.checkpoint.manifest import _safe
+from great_expectations_spark.core.frames import arrow_frame
 
 KINDS = ("hll", "moments", "topk", "histogram")
 
@@ -89,7 +109,7 @@ def _sketch_input(df: DataFrame, column: str):
     dtype = dict(df.dtypes).get(column)
     if dtype is None:
         raise ValueError(f"column {column!r} not in DataFrame")
-    col = F.col(column)
+    col = F.col(_quote(column))
     return col if dtype in _NATIVE_TYPES else col.cast("string")
 
 
@@ -285,6 +305,91 @@ def _hist_add(
     acc["below"] += int(h["below"])
     acc["above"] += int(h["above"])
     return acc
+
+
+def _hll_states(
+    records: Sequence[Dict[str, Any]], columns: Sequence[str]
+) -> Dict[str, List[Optional[bytes]]]:
+    """One decoded HLL blob per record (``None`` where the record lacks
+    the column) for each column some record holds."""
+    return {
+        c: [
+            base64.b64decode(r["hll"][c]) if c in r.get("hll", {}) else None
+            for r in records
+        ]
+        for c in columns
+        if any(c in r.get("hll", {}) for r in records)
+    }
+
+
+def _topk_states(
+    records: Sequence[Dict[str, Any]], columns: Sequence[str]
+) -> Dict[str, Tuple[int, str, List[Optional[Dict[str, Any]]]]]:
+    """``(max_items, state DDL, one state per record or None)`` for each
+    column some record holds a top-k state for.  Records that disagree
+    on ``max_items`` or on the item type (a column whose type changed
+    between runs) raise: their states cannot be combined."""
+    out: Dict[str, Tuple[int, str, List[Optional[Dict[str, Any]]]]] = {}
+    for c in columns:
+        meta: Optional[Tuple[int, str]] = None
+        states: List[Optional[Dict[str, Any]]] = []
+        for r in records:
+            st = r.get("topk", {}).get(c)
+            if not st:
+                states.append(None)
+                continue
+            if meta is None:
+                meta = (int(st["max_items"]), st["state_ddl"])
+            if meta != (int(st["max_items"]), st["state_ddl"]):
+                raise ValueError(
+                    f"stored topk states for {c!r} disagree on max_items "
+                    "or on the item type — the column's type changed "
+                    "between runs; rebuild the sketch store"
+                )
+            states.append(
+                {
+                    "sketch": base64.b64decode(st["sketch"]),
+                    "maxItemsTracked": int(st["max_items"]),
+                    # itemDataType: always null, the type lives in the DDL
+                    "itemDataType": None,
+                    "itemDataTypeDDL": st["item_ddl"],
+                }
+            )
+        if meta is not None:
+            out[c] = (meta[0], meta[1], states)
+    return out
+
+
+def _merge_job(
+    spark: SparkSession,
+    frame: Dict[str, Tuple[DataType, List[Any]]],
+    aggs: Dict[str, str],
+) -> Tuple[Any, StructType]:
+    """ONE Spark job over stored sketch states -> (row, schema).
+    ``frame`` maps a column to its type and one value per record;
+    ``aggs`` maps an output column to its SQL aggregate.  The states
+    reach Spark as one Arrow table, scanned in the JVM, so the merge
+    starts no Python worker.  ``coalesce(1)``: a zero-row task would
+    hand ``approx_top_k_combine`` an empty partial buffer whose item
+    type is still null, which its serializer cannot represent
+    (MatchError in Spark 4.1) — one partition of a handful of states
+    sidesteps it for free."""
+    df = arrow_frame(
+        spark,
+        {n: values for n, (_, values) in frame.items()},
+        StructType([StructField(n, t) for n, (t, _) in frame.items()]),
+    ).coalesce(1)
+    out = df.agg(*[F.expr(sql).alias(a) for a, sql in aggs.items()])
+    return out.first(), out.schema
+
+
+def _combine_sql(column: str, max_items: int) -> str:
+    # approx_top_k_combine fails on a null state; records lacking the
+    # column are null in its frame column
+    return (
+        f"approx_top_k_combine({column}, {int(max_items)}) "
+        f"FILTER (WHERE {column} IS NOT NULL)"
+    )
 
 
 def _normalize_plan(
@@ -510,7 +615,7 @@ class PartitionSketchStore:
         ]
         for c in cols_of("moments"):
             _check_numeric(df, c)
-            x = F.col(c).cast("double")
+            x = F.col(_quote(c)).cast("double")
             aggs += [
                 F.count(x).alias(f"__n_{c}"),
                 F.avg(x).alias(f"__mean_{c}"),
@@ -703,11 +808,12 @@ class PartitionSketchStore:
         if not todo:
             return []
 
+        part = F.col(_quote(partition_column))
         for start in range(0, len(todo), chunk_size):
             chunk = todo[start : start + chunk_size]
             agg_df = (
-                df.filter(_null_safe_isin(F.col(partition_column), chunk))
-                .groupBy(partition_column)
+                df.filter(_null_safe_isin(part, chunk))
+                .groupBy(part)
                 .agg(*self._build_aggs(df, plan))
             )
             topk_ddl = self._topk_ddls(agg_df, plan)
@@ -767,6 +873,7 @@ class PartitionSketchStore:
         same store: batch records re-sketch whole partitions, which
         would double-count the stream's contribution."""
         plan = _normalize_plan(columns, kinds)
+        part = F.col(_quote(partition_column))
         chunks: List[Optional[List[Any]]]
         if chunk_size is None:
             chunks = [None]  # one grouped job over the whole batch
@@ -777,7 +884,7 @@ class PartitionSketchStore:
                 )
             pids = [
                 r[0]
-                for r in batch_df.select(partition_column)
+                for r in batch_df.select(part)
                 .distinct()
                 .collect()
             ]
@@ -790,11 +897,9 @@ class PartitionSketchStore:
             src = (
                 batch_df
                 if chunk is None
-                else batch_df.filter(
-                    _null_safe_isin(F.col(partition_column), chunk)
-                )
+                else batch_df.filter(_null_safe_isin(part, chunk))
             )
-            agg_df = src.groupBy(partition_column).agg(
+            agg_df = src.groupBy(part).agg(
                 *self._build_aggs(batch_df, plan)
             )
             topk_ddl = self._topk_ddls(agg_df, plan)
@@ -892,87 +997,61 @@ class PartitionSketchStore:
         garbage collection.  Intended for streaming-accumulation stores;
         fingerprints do not survive (a ``detect_changes`` batch store
         re-sketches folded partitions on its next update, double-counting
-        the compacted data — keep the two modes in separate stores)."""
+        the compacted data — keep the two modes in separate stores).
+        Moments and histograms fold on the driver; every HLL and top-k
+        column folds in one Spark job."""
         live = self._scan_records()
         if len(live) <= 1:
             return 0
-        hll_cols: Dict[str, List[bytes]] = {}
-        topk_states: Dict[str, List[tuple]] = {}
-        topk_meta: Dict[str, Dict[str, Any]] = {}
+        records = list(live.values())
         moments: Dict[str, Optional[Dict[str, float]]] = {}
         hists: Dict[str, Dict[str, Any]] = {}
-        for rec in live.values():
-            for c, b in rec.get("hll", {}).items():
-                hll_cols.setdefault(c, []).append(base64.b64decode(b))
+        for rec in records:
             for c, m in rec.get("moments", {}).items():
                 if m.get("count"):
                     moments[c] = _merge_moments(moments.get(c), m)
             for c, h in rec.get("histogram", {}).items():
                 hists[c] = _hist_add(hists.get(c), h, c)
-            for c, st in rec.get("topk", {}).items():
-                meta = topk_meta.setdefault(
-                    c,
-                    {
-                        "max_items": int(st["max_items"]),
-                        "state_ddl": st["state_ddl"],
-                        "item_ddl": st["item_ddl"],
-                    },
-                )
-                if (
-                    meta["max_items"] != int(st["max_items"])
-                    or meta["state_ddl"] != st["state_ddl"]
-                ):
-                    raise ValueError(
-                        f"topk states for {c!r} disagree on max_items or "
-                        "item type — cannot compact"
-                    )
-                topk_states.setdefault(c, []).append(
-                    (
-                        base64.b64decode(st["sketch"]),
-                        int(st["max_items"]),
-                        None,
-                        st["item_ddl"],
-                    )
-                )
+        hll = _hll_states(
+            records, sorted({c for r in records for c in r.get("hll", {})})
+        )
+        topk = _topk_states(
+            records, sorted({c for r in records for c in r.get("topk", {})})
+        )
         payload: Dict[str, Any] = {}
-        if hll_cols:
-            merged: Dict[str, str] = {}
-            for c, blobs in hll_cols.items():
-                blob_df = spark.createDataFrame(
-                    [(b,) for b in blobs], "sk binary"
-                ).coalesce(1)
-                out = blob_df.agg(
-                    F.expr("hll_union_agg(sk)").alias("m")
-                ).first()
-                merged[c] = base64.b64encode(bytes(out["m"])).decode()
-            payload["hll"] = merged
+        if hll or topk:
+            # every HLL and top-k column merges in the same one job
+            hn = {c: f"h{i}" for i, c in enumerate(hll)}
+            tn = {c: f"t{i}" for i, c in enumerate(topk)}
+            frame: Dict[str, Tuple[DataType, List[Any]]] = {
+                hn[c]: (BinaryType(), blobs) for c, blobs in hll.items()
+            }
+            aggs = {hn[c]: f"hll_union_agg({hn[c]})" for c in hll}
+            for c, (max_items, ddl, states) in topk.items():
+                frame[tn[c]] = (_parse_datatype_string(ddl), states)
+                aggs[tn[c]] = _combine_sql(tn[c], max_items)
+            row, schema = _merge_job(spark, frame, aggs)
+            if hll:
+                payload["hll"] = {
+                    c: base64.b64encode(bytes(row[hn[c]])).decode()
+                    for c in hll
+                }
+            if topk:
+                payload["topk"] = {
+                    c: {
+                        "sketch": base64.b64encode(
+                            bytes(row[tn[c]]["sketch"])
+                        ).decode(),
+                        "max_items": int(row[tn[c]]["maxItemsTracked"]),
+                        "item_ddl": row[tn[c]]["itemDataTypeDDL"],
+                        "state_ddl": schema[tn[c]].dataType.simpleString(),
+                    }
+                    for c in topk
+                }
         if moments:
             payload["moments"] = {c: m for c, m in moments.items() if m}
         if hists:
             payload["histogram"] = hists
-        if topk_states:
-            tk: Dict[str, Any] = {}
-            for c, states in topk_states.items():
-                meta = topk_meta[c]
-                df = spark.createDataFrame(
-                    [(s,) for s in states], f"st {meta['state_ddl']}"
-                ).coalesce(1)
-                comb = df.agg(
-                    F.expr(
-                        f"approx_top_k_combine(st, {meta['max_items']})"
-                    ).alias("cst")
-                )
-                new_ddl = comb.schema["cst"].dataType.simpleString()
-                row = comb.first()
-                tk[c] = {
-                    "sketch": base64.b64encode(
-                        bytes(row["cst"]["sketch"])
-                    ).decode(),
-                    "max_items": int(row["cst"]["maxItemsTracked"]),
-                    "item_ddl": row["cst"]["itemDataTypeDDL"],
-                    "state_ddl": new_ddl,
-                }
-            payload["topk"] = tk
         # TRANSITIVE folded set: the new record must keep tombstoning
         # every file the folded records tombstoned — if compact#1 crashed
         # between unlinks, a surviving ghost would otherwise resurrect
@@ -995,14 +1074,15 @@ class PartitionSketchStore:
         self, spark: SparkSession, columns: Sequence[str]
     ) -> Dict[str, int]:
         """Union every stored partition's HLL sketches -> table-level
-        distinct estimate per column.  One tiny Spark job over
-        ``num_partitions`` driver-loaded blobs; the data itself is never
-        re-scanned.  Records are read through the same single directory
+        distinct estimate per column.  One tiny Spark job over one blob
+        per stored partition and column, for every column at once; the
+        data itself is never re-scanned.  A column no record holds reads
+        0.  Records are read through the same single directory
         scan the other merges use (one open+parse per file — per-pid
         ``load()`` calls would double that, which matters when the
         checkpoint dir is an object store)."""
-        blobs: List[tuple] = []
-        for record in self._raw_records().values():
+        records = list(self._raw_records().values())
+        for record in records:
             if int(record.get("lg_k", self.lg_k)) != self.lg_k:
                 raise ValueError(
                     f"stored sketch for {record.get('partition_id')!r} "
@@ -1010,24 +1090,21 @@ class PartitionSketchStore:
                     f"{self.lg_k} — sketches with different lg_k must "
                     "not be silently merged"
                 )
-            hll = record.get("hll", {})
-            blobs.append(
-                tuple(
-                    base64.b64decode(hll[c]) if c in hll else None
-                    for c in columns
-                )
-            )
-        if not blobs:
+        hll = _hll_states(records, columns)
+        if not hll:
             return {c: 0 for c in columns}
-        schema = ", ".join(f"{_quote(c)} binary" for c in columns)
-        df = spark.createDataFrame(blobs, schema)
-        row = df.agg(
-            *[
-                F.hll_sketch_estimate(F.hll_union_agg(F.col(c))).alias(c)
-                for c in columns
-            ]
-        ).first()
-        return {c: int(row[c] or 0) for c in columns}
+        names = {c: f"h{i}" for i, c in enumerate(hll)}
+        row, _ = _merge_job(
+            spark,
+            {names[c]: (BinaryType(), blobs) for c, blobs in hll.items()},
+            {
+                names[c]: f"hll_sketch_estimate(hll_union_agg({names[c]}))"
+                for c in hll
+            },
+        )
+        return {
+            c: int(row[names[c]] or 0) if c in names else 0 for c in columns
+        }
 
     def merged_moments(
         self, columns: Sequence[str]
@@ -1152,7 +1229,7 @@ class PartitionSketchStore:
         definition of the bin conditions: the histogram kind and the
         drift binning both call this, so the convention cannot drift
         between stored counts and comparisons."""
-        x = F.col(column).cast("double")
+        x = F.col(_quote(column)).cast("double")
         aggs = [F.sum(F.when(x < edges[0], 1).otherwise(0)).alias(b_alias)]
         for i in range(len(edges) - 1):
             hi_ok = (
@@ -1223,7 +1300,7 @@ class PartitionSketchStore:
         hist, edges = self._history_hist_and_edges(column)
         hist_vec = [hist["below"]] + hist["counts"] + [hist["above"]]
         rows = (
-            df_new.groupBy(partition_column)
+            df_new.groupBy(F.col(_quote(partition_column)))
             .agg(*self._bin_aggs(column, edges))
             .collect()
         )
@@ -1277,52 +1354,34 @@ class PartitionSketchStore:
         self, spark: SparkSession, columns: Sequence[str], k: int = 10
     ) -> Dict[str, List[Tuple[Any, int]]]:
         """Combine stored frequent-items states -> top-k (value, count)
-        per column.  One tiny Spark job; exact while true cardinality
-        fits ``topk_max_items``."""
-        per_col: Dict[str, List[tuple]] = {c: [] for c in columns}
-        ddls: Dict[str, str] = {}
-        for record in self._raw_records().values():
-            for c in columns:
-                st = record.get("topk", {}).get(c)
-                if st:
-                    if int(st["max_items"]) != self.topk_max_items:
-                        raise ValueError(
-                            f"stored topk for {c!r} used max_items="
-                            f"{st['max_items']}, store expects "
-                            f"{self.topk_max_items}"
-                        )
-                    if ddls.setdefault(c, st["state_ddl"]) != st["state_ddl"]:
-                        raise ValueError(
-                            f"stored topk states for {c!r} disagree on the "
-                            "item type — the column's type changed between "
-                            "runs; rebuild the sketch store"
-                        )
-                    per_col[c].append(
-                        (
-                            base64.b64decode(st["sketch"]),
-                            int(st["max_items"]),
-                            None,  # itemDataType: type lives in the schema
-                            st["item_ddl"],
-                        )
-                    )
-        out: Dict[str, List[Tuple[Any, int]]] = {}
-        for c in columns:
-            states = per_col[c]
-            if not states:
-                out[c] = []
-                continue
-            # coalesce(1): a zero-row task would hand approx_top_k_combine
-            # an empty partial buffer whose item type is still null, which
-            # its serializer cannot represent (MatchError in Spark 4.1) —
-            # one partition of a handful of states sidesteps it for free
-            df = spark.createDataFrame(
-                [(s,) for s in states], f"st {ddls[c]}"
-            ).coalesce(1)
-            row = df.agg(
-                F.expr(
-                    "approx_top_k_estimate(approx_top_k_combine(st, "
-                    f"{self.topk_max_items}), {int(k)})"
-                ).alias("tk")
-            ).first()
-            out[c] = [(e["item"], int(e["count"])) for e in row["tk"] or []]
-        return out
+        per column.  One tiny Spark job for every column at once; exact
+        while true cardinality fits ``topk_max_items``.  A column no
+        record holds reads ``[]``."""
+        topk = _topk_states(list(self._raw_records().values()), columns)
+        for c, (max_items, _, _) in topk.items():
+            if max_items != self.topk_max_items:
+                raise ValueError(
+                    f"stored topk for {c!r} used max_items={max_items}, "
+                    f"store expects {self.topk_max_items}"
+                )
+        if not topk:
+            return {c: [] for c in columns}
+        names = {c: f"t{i}" for i, c in enumerate(topk)}
+        row, _ = _merge_job(
+            spark,
+            {
+                names[c]: (_parse_datatype_string(ddl), states)
+                for c, (_, ddl, states) in topk.items()
+            },
+            {
+                names[c]: "approx_top_k_estimate("
+                f"{_combine_sql(names[c], self.topk_max_items)}, {int(k)})"
+                for c in topk
+            },
+        )
+        return {
+            c: [(e["item"], int(e["count"])) for e in row[names[c]] or []]
+            if c in names
+            else []
+            for c in columns
+        }

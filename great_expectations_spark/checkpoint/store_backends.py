@@ -222,7 +222,9 @@ class SparkTableResultBackend(ResultStoreBackend):
         self.options = dict(options or {})
 
     def _write(self, rows: List[tuple]) -> None:
-        df = self.spark.createDataFrame(rows, _RESULT_LOG_SCHEMA)
+        from great_expectations_spark.core.frames import arrow_rows_frame
+
+        df = arrow_rows_frame(self.spark, rows, _RESULT_LOG_SCHEMA)
         if self.fmt == "table":
             df.write.mode("append").saveAsTable(self.location)
         elif self.fmt == "jdbc":

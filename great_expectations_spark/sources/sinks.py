@@ -13,6 +13,7 @@ from typing import Dict, Iterable, List, Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
 
+from great_expectations_spark.core.frames import arrow_rows_frame
 from great_expectations_spark.core.results import (
     ExpectationSuiteValidationResult,
 )
@@ -79,7 +80,7 @@ def results_to_dataframe(
         Dict[str, ExpectationSuiteValidationResult],
     ],
 ) -> DataFrame:
-    return spark.createDataFrame(results_to_rows(results), RESULT_ROW_SCHEMA)
+    return arrow_rows_frame(spark, results_to_rows(results), RESULT_ROW_SCHEMA)
 
 
 def write_results(

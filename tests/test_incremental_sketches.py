@@ -940,3 +940,122 @@ def test_accumulate_batch_chunked_matches_single_job(spark, tmp_path):
     assert (
         a.merged_distinct(spark, ["x"]) == b.merged_distinct(spark, ["x"])
     )
+
+
+# -- column names with a dot, records missing columns, compaction --------
+
+
+def test_dotted_column_sketches_match_exact(spark, tmp_path):
+    """A sketch column whose name contains a dot is one column, not a
+    struct field: every kind sketches and merges it, and the merged
+    answers equal exact aggregates over the table."""
+    from great_expectations_spark.checkpoint.runner import run_checkpoint
+    from great_expectations_spark.core.suite import ExpectationSuite
+
+    # value v appears 2*(v+1) times and NULL 3 times, so the top-k
+    # order has no ties; 9.0 lies above the last edge, NULL in no bin
+    rows = [
+        (f"d{i % 3}", float(v), i)
+        for v in range(6)
+        for i in range(2 * (v + 1))
+    ]
+    rows += [("d0", 9.0, 0)] + [(f"d{i}", None, i) for i in range(3)]
+    df = spark.createDataFrame(rows, "day string, `a.b` double, n int")
+    edges = [0.0, 2.0, 4.0, 6.0]
+    suite = ExpectationSuite("s").add(
+        "expect_column_values_to_not_be_null", column="n"
+    )
+    out = run_checkpoint(
+        df, suite, "day", str(tmp_path / "ck"),
+        sketch_columns={"a.b": ["hll", "moments", "topk", "histogram"]},
+        sketch_topk_max_items=100,
+        sketch_histogram_edges={"a.b": edges},
+    )
+    col = F.col("`a.b`")
+    exact = df.agg(
+        F.countDistinct(col).alias("d"), F.count(col).alias("c"),
+        F.sum(col).alias("s"), F.avg(col).alias("m"),
+        F.var_pop(col).alias("v"), F.min(col).alias("lo"),
+        F.max(col).alias("hi"),
+    ).first()
+    assert out["distinct_estimates"] == {"a.b": exact["d"]}
+    m = out["stats_estimates"]["a.b"]
+    assert (m["count"], m["sum"], m["min"], m["max"]) == (
+        exact["c"], exact["s"], exact["lo"], exact["hi"]
+    )
+    assert m["mean"] == pytest.approx(exact["m"])
+    assert m["variance"] == pytest.approx(exact["v"])
+    # the top-k state counts NULL as an item
+    counts = {r[0]: r[1] for r in df.groupBy(col).count().collect()}
+    assert out["top_values"]["a.b"] == sorted(
+        counts.items(), key=lambda kv: -kv[1]
+    )
+    values = [r[1] for r in rows if r[1] is not None]
+    assert out["histograms"]["a.b"] == {
+        "edges": edges,
+        "below": 0,
+        "counts": [
+            sum(lo <= v < hi or (hi == edges[-1] and v == hi)
+                for v in values)
+            for lo, hi in zip(edges, edges[1:])
+        ],
+        "above": sum(v > edges[-1] for v in values),
+    }
+
+
+def test_merges_over_records_missing_a_column(spark, tmp_path):
+    """Records that lack a column add nothing to its merge, and a column
+    no record holds reads 0 distinct and no top values."""
+    store = PartitionSketchStore(str(tmp_path), topk_max_items=100)
+    store.update(
+        spark.createDataFrame(
+            [("p1", "a"), ("p1", "b"), ("p1", "a")], "part string, v string"
+        ),
+        "part", ["v"], kinds=("hll", "topk"),
+    )
+    store.update(
+        spark.createDataFrame(
+            [("p2", 1), ("p2", 2), ("p2", 2), ("p3", 3)],
+            "part string, w int",
+        ),
+        "part", ["w"], kinds=("hll", "topk"),
+    )
+    cols = ["v", "w", "absent"]
+    assert store.merged_distinct(spark, cols) == {
+        "v": 2, "w": 3, "absent": 0
+    }
+    assert store.merged_topk(spark, cols, k=1) == {
+        "v": [("a", 2)], "w": [(2, 2)], "absent": []
+    }
+
+
+def test_compact_two_hll_and_two_topk_columns(spark, tmp_path):
+    """Compaction folds several HLL and top-k columns (of different item
+    types) in one job; every merged answer is the same before and
+    after."""
+    store = PartitionSketchStore(str(tmp_path), topk_max_items=100)
+    plan = {"s": ["hll", "topk"], "n": ["hll", "topk"]}
+    for b in range(3):
+        # per batch: s{j} j+1 times, n = 10*j j+2 times (j < 3+b)
+        rows = [
+            ("p", f"s{j}", None)
+            for j in range(3 + b)
+            for _ in range(j + 1)
+        ] + [("p", None, 10 * j) for j in range(3 + b) for _ in range(j + 2)]
+        store.accumulate_batch(
+            spark.createDataFrame(rows, "part string, s string, n int"),
+            "part", plan, batch_id=b,
+        )
+
+    def answers():
+        top = store.merged_topk(spark, ["s", "n"], k=20)
+        return (
+            store.merged_distinct(spark, ["s", "n"]),
+            {c: dict(v) for c, v in top.items()},
+        )
+
+    before = answers()
+    assert before[0] == {"s": 5, "n": 5}
+    assert before[1]["s"]["s4"] == 5 and before[1]["n"][40] == 6
+    assert store.compact(spark) == 3
+    assert answers() == before

@@ -294,3 +294,66 @@ def test_window_samples_plan_is_jvm_top_k(transcripts, monkeypatch):
     assert len(uniq.result["partial_unexpected_list"]) == min(
         20, uniq.result["unexpected_count"]
     )
+
+
+# --- sketch merges and the result log ---------------------------------------
+
+
+def test_sketch_merges_and_result_log_scan_no_python_rdd(
+    spark, tmp_path, monkeypatch
+):
+    """Every frame the sketch store and the result log build from driver
+    values is an Arrow ``LocalTableScan``: no executed plan holds a
+    pickled Python RDD (``Scan ExistingRDD``), whose first action forks
+    the PySpark daemon.  Each merge call builds one frame for all of
+    its columns."""
+    from pyspark.sql import SparkSession
+
+    from great_expectations_spark.checkpoint.actions import FunctionAction
+    from great_expectations_spark.checkpoint.runner import run_checkpoint
+    from great_expectations_spark.checkpoint.sketches import (
+        PartitionSketchStore,
+    )
+    from great_expectations_spark.checkpoint.store_backends import (
+        BackendValidationResultStore,
+        SparkTableResultBackend,
+    )
+    from great_expectations_spark.core.suite import ExpectationSuite
+
+    df = spark.range(60).selectExpr(
+        "concat('d', id % 3) AS day", "id % 7 AS n",
+        "cast(id % 5 AS string) AS s",
+    )
+    suite = ExpectationSuite("log").add(
+        "expect_column_values_to_not_be_null", column="n"
+    )
+    results = BackendValidationResultStore(
+        SparkTableResultBackend(spark, str(tmp_path / "log"))
+    )
+    built = []
+    create = SparkSession.createDataFrame
+
+    def spy(self, *args, **kwargs):
+        frame = create(self, *args, **kwargs)
+        built.append(frame)
+        return frame
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", spy)
+    ck = str(tmp_path / "ck")
+    out = run_checkpoint(
+        df, suite, "day", ck,
+        sketch_columns={"n": ["hll", "moments", "topk"], "s": ["hll", "topk"]},
+        actions=[FunctionAction(lambda ctx: results.save(ctx.result))],
+    )
+    assert out["distinct_estimates"] == {"n": 7, "s": 5}
+    store = PartitionSketchStore(ck)
+    assert store.compact(spark) == 3
+    assert store.merged_distinct(spark, ["n", "s"]) == {"n": 7, "s": 5}
+    assert store.merged_topk(spark, ["n", "s"], k=1)["s"][0][1] == 12
+    for frame in built:
+        plan = _plan(frame)
+        assert "ExistingRDD" not in plan, plan
+        assert "LocalTableScan" in plan, plan
+    # run_checkpoint: HLL merge, top-k merge, three result-log appends;
+    # then compact, HLL merge and top-k merge
+    assert len(built) == 8

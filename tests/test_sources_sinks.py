@@ -222,3 +222,56 @@ def test_hash_sampler_rejects_unknown_function(spark):
     df = spark.range(3).selectExpr("cast(id as string) AS k")
     with _pytest.raises(ValueError, match="hash_function_name"):
         sp.sample_using_hash(df, "k", hash_function_name="sha1").collect()
+
+
+def test_result_frames_keep_rows_and_schema(spark, tmp_path):
+    """The results table and the result log build their frames from
+    Arrow tables typed by their DDL: every value comes back as it went
+    in (None, booleans and doubles included) under the declared schema,
+    and neither frame scans a pickled Python RDD."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from great_expectations_spark.checkpoint.store_backends import (
+        _RESULT_LOG_SCHEMA,
+        SparkTableResultBackend,
+    )
+    from great_expectations_spark.sources.sinks import (
+        RESULT_ROW_SCHEMA,
+        results_to_rows,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "a"), (2, None), (3, None)], "id int, name string"
+    )
+    suite = (
+        ExpectationSuite("sink")
+        .add("expect_column_values_to_not_be_null", column="name")
+        .add("expect_column_values_to_not_be_null", column="id")
+        .add("expect_column_mean_to_be_between", column="id", min_value=0)
+        .add("expect_column_values_to_not_be_null", column="no_such")
+    )
+    result = SuiteValidator().validate(df, suite, result_format="BASIC")
+    rows = results_to_rows(result)
+    # the fixture covers what the transport must keep: both booleans,
+    # a fractional double, and None in a bigint, a double and strings
+    values = [v for r in rows for v in r]
+    assert True in values and False in values
+    assert any(isinstance(v, float) and v % 1 for v in values)
+    assert any(r[7] is None for r in rows)  # unexpected_count
+    assert any(r[8] is None for r in rows)  # unexpected_percent
+    assert any(r[10] is None for r in rows)  # exception_message
+    flat = results_to_dataframe(spark, result)
+    assert flat.schema == _parse_datatype_string(RESULT_ROW_SCHEMA)
+    assert [tuple(r) for r in flat.collect()] == rows
+    assert "ExistingRDD" not in (
+        flat._jdf.queryExecution().executedPlan().toString()
+    )
+
+    log_rows = [("s", "r1", 5, None), ("s", None, 6, "p")]
+    backend = SparkTableResultBackend(spark, str(tmp_path / "log"))
+    backend._write(log_rows)
+    back = backend._read()
+    assert back.schema == _parse_datatype_string(_RESULT_LOG_SCHEMA)
+    assert sorted(
+        (tuple(r) for r in back.collect()), key=lambda r: r[2]
+    ) == log_rows

@@ -277,10 +277,12 @@ def test_sketch_store_per_store_conf(spark, tmp_path):
         == "sas-token-7"
     )
     df = spark.createDataFrame(
-        [("p", 1.0), ("p", 2.0)], "part string, x double"
+        [("p", 1.0), ("p", 2.0), ("q", 2.0)], "part string, x double"
     )
-    store.update(df, "part", ["x"], kinds=("moments",))
-    assert store.merged_moments(["x"])["x"]["count"] == 2
+    store.update(df, "part", ["x"], kinds=("moments", "hll"))
+    assert store.merged_moments(["x"])["x"]["count"] == 3
+    # the HLL merge reads its records through the same per-store FS
+    assert store.merged_distinct(spark, ["x"]) == {"x": 2}
     with _pytest.raises(ValueError, match="hadoop_conf"):
         PartitionSketchStore(
             str(tmp_path / "plain"),
