@@ -321,11 +321,11 @@ def _frame_sample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _grouped_kl_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped O(1)-job distribution hook, oracle-checked: every
+    """Grouped O(1)-job distribution evaluation, oracle-checked: every
     day-partition's KL divergence of events.value against a FIXED
-    continuous partition evaluates in ONE grouped histogram agg
-    (operators/distribution.py round-4 grouped hooks), replicated by a
-    DuckDB per-day histogram + sum(p*ln(p/q)).  Bin endpoints are wide
+    continuous partition evaluates in ONE grouped histogram agg (the KL
+    evaluator with the day as group prefix, operators/distribution.py),
+    replicated by a DuckDB per-day histogram + sum(p*ln(p/q)).  Bin endpoints are wide
     enough that no mass falls outside (tails are exactly zero on both
     engines)."""
     from great_expectations_spark.checkpoint.runner import (
@@ -628,7 +628,7 @@ def _most_common(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _load(spark, sf_dir, "lineitem")
-    hist = dist_ops.histogram_counts(df, "l_extendedprice", HIST_BINS)
+    hist = dist_ops.histogram_counts(df, "l_extendedprice", HIST_BINS)[()]
     rows = (
         [(-1, hist["below"])]
         + [(i, c) for i, c in enumerate(hist["counts"])]
@@ -643,9 +643,9 @@ def _drift_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from great_expectations_spark.core.domain import parse_row_condition
 
     baseline = parse_row_condition(DRIFT_SPLIT, "spark")
-    base, cur, n_base, n_cur = dist_ops._split_histograms(
+    base, cur, n_base, n_cur = dist_ops.split_histograms(
         df, "value", baseline, VALUE_BINS, None
-    )
+    )[()]
     rows = [
         (i, b, c)
         for i, (b, c) in enumerate(zip(base, cur))
@@ -1288,11 +1288,11 @@ def _grouped_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _grouped_jobs_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-partition JOB expectations in O(1) Spark jobs
-    (CompiledJob.grouped hooks): referential anti-join + two-sample PSI
-    drift evaluated for every l_returnflag partition in one grouped
-    anti-join + one grouped conditional-agg pass — not one job per
-    partition (reference runs a full validation per batch; this is the
-    10^5-partition scale path)."""
+    (``CompiledJob.evaluate`` with the partition column as group prefix):
+    referential anti-join + two-sample PSI drift evaluated for every
+    l_returnflag partition in one grouped anti-join + one grouped
+    conditional-agg pass — not one job per partition (reference runs a
+    full validation per batch; this is the 10^5-partition scale path)."""
     from great_expectations_spark.checkpoint.runner import validate_by_partition
 
     lineitem = _load(spark, sf_dir, "lineitem")

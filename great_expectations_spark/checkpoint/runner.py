@@ -4,8 +4,9 @@ Both entry points validate partitions through ``SuiteValidator``'s own
 phases with the partition column as group prefix, so every partition's
 counters and violation samples come from the same Spark jobs —
 ``groupBy(partition_col)`` bundled counters, one grouped job per window
-group (counts and samples), grouped job expectations, domain-scoped
-aggregates, aggregate followups and one prefixed top-k for map samples —
+group (counts and samples), each job expectation's one evaluator,
+domain-scoped aggregates, aggregate followups and one prefixed top-k for
+map samples —
 and every result is built by the same ``SuiteValidator._assemble`` as a
 per-partition ``validate``:
 
@@ -41,7 +42,6 @@ from great_expectations_spark.checkpoint.manifest import (
 )
 from great_expectations_spark.checkpoint.sketches import (
     DEFAULT_BACKFILL_CHUNK_SIZE,
-    _null_safe_isin,
 )
 from great_expectations_spark.core.result_format import parse_result_format
 from great_expectations_spark.core.results import (
@@ -51,6 +51,7 @@ from great_expectations_spark.core.results import (
 )
 from great_expectations_spark.core.suite import ExpectationSuite
 from great_expectations_spark.plans.planner import SuiteValidator, _PlannedItem
+from great_expectations_spark.plans.specs import null_safe_isin
 
 logger = logging.getLogger(__name__)
 
@@ -182,7 +183,7 @@ def _validate_chunks(
             part_df = df
             if chunk is not None:
                 part_df = df.filter(
-                    _null_safe_isin(F.col(partition_column), chunk)
+                    null_safe_isin(F.col(partition_column), chunk)
                 )
             # the phases mark run-time failures on their items: each chunk
             # gets fresh copies
@@ -530,16 +531,16 @@ def validate_by_partition(
     expectations with violations add one top-k sample job.  Each
     aggregate over a ``row_condition`` domain adds one filtered grouped
     job.  Schema checks evaluate per partition without a scan.  Job
-    expectations with a ``grouped`` hook (referential exist-in-other-
-    table, two-sample KS/PSI/chi² drift, user SQL, and the one-sample
-    distribution family — KL divergence, chi-square GoF, bootstrapped
-    KS) run in O(1) grouped jobs covering every partition at once; a job
-    expectation without one, or a partition its grouped mapping lacks,
-    runs one partition-filtered job at assembly.  Aggregate followups
-    (the distinct-value-set family) resolve every partition through
-    their ``grouped_followup`` hook in one job.  So the job count does
-    not grow with the partition count, except for those assembly-time
-    fallbacks.
+    expectations (referential exist-in-other-table, the distribution and
+    drift family, user SQL, z-scores, most-common, row-count-equal-other-
+    table) run their one evaluator with the partition column as group
+    prefix, in O(1) grouped jobs covering every partition at once; only
+    a partition that the evaluator's own filters leave without rows runs
+    one partition-filtered job at assembly.  Aggregate followups (the
+    distinct-value-set family) resolve every partition in one job.  So
+    the job count does not grow with the partition count, except for
+    those assembly-time evaluations and the corpus-level substring
+    duplication check, which measures each partition as its own corpus.
     """
     validator = validator or SuiteValidator()
     rf = parse_result_format("BASIC")

@@ -60,6 +60,7 @@ from pyspark.sql.types import (
 
 from great_expectations_spark.checkpoint.manifest import _safe
 from great_expectations_spark.core.frames import arrow_frame
+from great_expectations_spark.plans.specs import group_key, null_safe_isin
 
 KINDS = ("hll", "moments", "topk", "histogram")
 
@@ -121,20 +122,6 @@ def _check_numeric(df: DataFrame, column: str) -> None:
         raise ValueError(
             f"moments sketch needs a numeric column, {column!r} is {dtype}"
         )
-
-
-def _null_safe_isin(column, values: Sequence[Any]):
-    """Partition membership that keeps a NULL partition addressable
-    (plain ``isin`` drops NULL) without building a per-value
-    ``eqNullSafe`` OR-chain — at the 10^5-partition design point a
-    chained boolean tree that deep stalls or overflows Catalyst's
-    recursive transforms, while ``isin`` stays one In-node (and
-    pushdown-friendly) regardless of list size."""
-    non_null = [v for v in values if v is not None]
-    cond = column.isin(non_null) if non_null else F.lit(False)
-    if any(v is None for v in values):
-        cond = cond | column.isNull()
-    return cond
 
 
 def _merge_moments(
@@ -812,7 +799,7 @@ class PartitionSketchStore:
         for start in range(0, len(todo), chunk_size):
             chunk = todo[start : start + chunk_size]
             agg_df = (
-                df.filter(_null_safe_isin(part, chunk))
+                df.filter(null_safe_isin(part, chunk))
                 .groupBy(part)
                 .agg(*self._build_aggs(df, plan))
             )
@@ -897,7 +884,7 @@ class PartitionSketchStore:
             src = (
                 batch_df
                 if chunk is None
-                else batch_df.filter(_null_safe_isin(part, chunk))
+                else batch_df.filter(null_safe_isin(part, chunk))
             )
             agg_df = src.groupBy(part).agg(
                 *self._build_aggs(batch_df, plan)
@@ -1265,57 +1252,54 @@ class PartitionSketchStore:
         return hist, self.histogram_edges.get(column) or hist["edges"]
 
     def drift_vs_history(
-        self, df_new: DataFrame, column: str
-    ) -> Dict[str, Any]:
+        self,
+        df_new: DataFrame,
+        column: str,
+        group_by: Optional[Sequence[str]] = None,
+    ) -> Any:
         """Distribution drift of NEW data against everything the store
-        has seen: ONE global aggregation over ``df_new`` bins it on the
-        store's edges (plus below/above overflow mass), the historical
-        side comes from :meth:`merged_histogram` with zero re-scan, and
-        the comparison (PSI, chi-square + p, KL) is driver math over the
-        two count vectors.  The operational loop at 10^12 rows: sketch
-        each partition as it validates, then answer "is today's data
-        shaped like history?" for the cost of scanning today only."""
-        hist, edges = self._history_hist_and_edges(column)
-        r = df_new.agg(*self._bin_aggs(column, edges)).first()
-        new_vec = self._row_vec(r, len(edges) - 1)
-        if sum(new_vec) == 0:
-            # an empty/all-null batch has NO distribution: chi² would
-            # degenerate to p=1.0 (always passes) and PSI would compare
-            # history to a fabricated epsilon-uniform — either verdict
-            # masks a pipeline outage.  Fail loudly instead.
-            raise EmptyBatchError(
-                f"new batch has no non-null {column!r} rows — a drift "
-                "verdict on an empty distribution would be meaningless"
-            )
-        hist_vec = [hist["below"]] + hist["counts"] + [hist["above"]]
-        return drift_from_vectors(hist_vec, new_vec, edges)
+        has seen: ONE ``groupBy(*group_by)`` aggregation over ``df_new``
+        bins it on the store's edges (plus below/above overflow mass),
+        the historical side comes from :meth:`merged_histogram` with zero
+        re-scan, and the comparison (PSI, chi-square + p, KL) is driver
+        math over the two count vectors.  The operational loop at 10^12
+        rows: sketch each partition as it validates, then answer "is
+        today's data shaped like history?" for the cost of scanning
+        today only.
 
-    def drift_vs_history_by_group(
-        self, df_new: DataFrame, partition_column: str, column: str
-    ) -> Dict[Any, Dict[str, Any]]:
-        """Per-partition drift vs the merged history in ONE grouped job
-        (bin every partition simultaneously; PSI/chi²/KL is driver math
-        per partition) — job count independent of partition count, the
-        ``validate_by_partition`` shape."""
+        Without ``group_by`` returns the drift dict of the whole batch.
+        Given a group prefix (``()`` included), returns ``{group key
+        tuple: drift dict}`` for every group from the same one job; a
+        group with no non-null value maps to an :class:`EmptyBatchError`
+        instead of a dict.
+
+        An empty/all-null batch has NO distribution: chi² would
+        degenerate to p=1.0 (always passes) and PSI would compare
+        history to a fabricated epsilon-uniform — either verdict masks a
+        pipeline outage, so it raises (or maps to) EmptyBatchError."""
         hist, edges = self._history_hist_and_edges(column)
         hist_vec = [hist["below"]] + hist["counts"] + [hist["above"]]
         rows = (
-            df_new.groupBy(F.col(_quote(partition_column)))
+            df_new.groupBy(*[F.col(_quote(g)) for g in group_by or ()])
             .agg(*self._bin_aggs(column, edges))
             .collect()
         )
-        out: Dict[Any, Dict[str, Any]] = {}
+        out: Dict[tuple, Any] = {}
         for r in rows:
             vec = self._row_vec(r, len(edges) - 1)
-            if sum(vec) == 0:
-                # all-null partition: no distribution to judge — leave it
-                # out so the caller's per-partition fallback raises for
-                # just that partition (same contract as drift_vs_history)
-                continue
-            out[r[partition_column]] = drift_from_vectors(
-                hist_vec, vec, edges
+            out[group_key(r, group_by or ())] = (
+                drift_from_vectors(hist_vec, vec, edges)
+                if sum(vec)
+                else EmptyBatchError(
+                    f"new batch has no non-null {column!r} rows — a drift "
+                    "verdict on an empty distribution would be meaningless"
+                )
             )
-        return out
+        if group_by is not None:
+            return out
+        if isinstance(out[()], Exception):
+            raise out[()]
+        return out[()]
 
     def suggest_histogram_edges(
         self, column: str, bins: int = 20

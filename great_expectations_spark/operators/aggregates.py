@@ -20,7 +20,7 @@ a configurable cap.
 from __future__ import annotations
 
 import json
-from typing import Any, Callable, Dict, List, Optional
+from typing import Any, Callable, Dict, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -28,7 +28,11 @@ from pyspark.sql import functions as F
 from great_expectations_spark.core.result_format import (
     validate_metric_value_between,
 )
-from great_expectations_spark.plans.specs import CompiledAggregate
+from great_expectations_spark.plans.specs import (
+    CompiledAggregate,
+    group_filter,
+    group_key,
+)
 
 AGG_COMPILERS: Dict[str, Callable[[Dict[str, Any]], CompiledAggregate]] = {}
 
@@ -245,58 +249,42 @@ def _distinct_set_validator(
     skey = _distinct_set_key(column)
     ckey = metric_key("column.distinct_values.count", column)
 
-    def followup(df: DataFrame, values: Dict[str, Any]) -> Dict[str, Any]:
-        count = values.get(ckey) or 0
-        if count > DISTINCT_COLLECT_CAP:
-            raise ValueError(
-                f"distinct cardinality {count} of {column!r} exceeds the "
-                f"collect cap {DISTINCT_COLLECT_CAP}; use an approximate "
-                "expectation instead"
-            )
-        # tiny second job: single-column scan, map-side-combined set merge
-        row = df.agg(F.collect_set(F.col(column)).alias("s")).first()
-        return {skey: row["s"]}
-
-    def grouped_followup(
+    def followup(
         df: DataFrame,
-        partition_column: str,
-        values_by_partition: Dict[Any, Dict[str, Any]],
-    ) -> Dict[Any, Any]:
-        """All partitions' value sets in ONE groupBy job.  Partitions whose
+        group_by: Sequence[str],
+        values_by_group: Dict[tuple, Dict[str, Any]],
+    ) -> Dict[tuple, Any]:
+        """Every group's value set in ONE tiny ``groupBy(*group_by)`` job
+        (single-column scan, map-side-combined set merge).  Groups whose
         phase-A distinct count exceeds the cap are excluded from the scan
-        entirely (their sets are never aggregated) and marked with the cap
-        error, so one hot partition can't blow executor memory or fail the
+        entirely (their sets are never aggregated) and map to the cap
+        error, so one hot group can't blow executor memory or fail the
         rest."""
-        out: Dict[Any, Any] = {}
-        ok_parts = []
-        for part, vals in values_by_partition.items():
+        out: Dict[tuple, Any] = {}
+        ok = []
+        for key, vals in values_by_group.items():
             count = vals.get(ckey) or 0
             if count > DISTINCT_COLLECT_CAP:
-                out[part] = ValueError(
-                    f"distinct cardinality {count} of {column!r} in "
-                    f"partition {part!r} exceeds the collect cap "
-                    f"{DISTINCT_COLLECT_CAP}; use an approximate "
+                out[key] = ValueError(
+                    f"distinct cardinality {count} of {column!r} exceeds the "
+                    f"collect cap {DISTINCT_COLLECT_CAP}; use an approximate "
                     "expectation instead"
                 )
             else:
-                ok_parts.append(part)
-                out[part] = {skey: []}  # default for empty partitions
-        if ok_parts:
-            # isin() never matches NULL, so a null partition value needs
-            # an explicit isNull() disjunct or its rows are silently
-            # dropped from the scan (and its set would read empty)
-            non_null = [p for p in ok_parts if p is not None]
-            gate = F.col(partition_column).isin(non_null)
-            if len(non_null) < len(ok_parts):
-                gate = gate | F.col(partition_column).isNull()
-            rows = (
-                df.filter(gate)
-                .groupBy(partition_column)
+                ok.append(key)
+                out[key] = {skey: []}  # a group without non-null values
+        if ok:
+            scoped = (
+                df
+                if len(ok) == len(values_by_group)
+                else df.filter(group_filter(group_by, ok))
+            )
+            for r in (
+                scoped.groupBy(*group_by)
                 .agg(F.collect_set(F.col(column)).alias("s"))
                 .collect()
-            )
-            for r in rows:
-                out[r[partition_column]] = {skey: r["s"]}
+            ):
+                out[group_key(r, group_by)] = {skey: r["s"]}
         return out
 
     def validate(metrics: Dict[str, Any]) -> Dict[str, Any]:
@@ -318,7 +306,6 @@ def _distinct_set_validator(
         agg_exprs=_distinct_set_exprs(column),
         validate=validate,
         followup=followup,
-        grouped_followup=grouped_followup,
     )
 
 

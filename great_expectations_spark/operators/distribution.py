@@ -26,14 +26,20 @@ boolean split column — turn-length and role-mix drift at transcript scale.
 from __future__ import annotations
 
 import math
-from typing import Any, Callable, Dict, List, Optional, Tuple
+from typing import Any, Callable, Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from great_expectations_spark.core.domain import domain_gate, parse_row_condition
 from great_expectations_spark.functions import stats as gxstats
-from great_expectations_spark.plans.specs import CompiledJob
+from great_expectations_spark.plans.specs import (
+    CompiledJob,
+    each_group,
+    group_filter,
+    group_key,
+    rows_by_group,
+)
 
 DIST_COMPILERS: Dict[str, Callable[[Dict[str, Any]], CompiledJob]] = {}
 
@@ -78,9 +84,13 @@ def histogram_counts(
     bins: List[float],
     domain: Optional[Column] = None,
     include_min_max: bool = False,
-) -> Dict[str, Any]:
-    """One-pass histogram: per-bucket conditional sums + tail counts +
-    nonnull count (+ optional min/max) in a single agg."""
+    group_by: Sequence[str] = (),
+) -> Dict[tuple, Dict[str, Any]]:
+    """One-pass histogram per ``group_by`` key: per-bucket conditional
+    sums + tail counts + nonnull count (+ optional min/max) in a single
+    ``groupBy(*group_by).agg``.  Without a prefix that is one global agg
+    and the one ``()`` key; with one, one fixed-width row per group on
+    the driver."""
     col = F.col(column)
     scoped = _apply_domain(df, domain).filter(col.isNotNull())
     aggs = [
@@ -99,16 +109,18 @@ def histogram_counts(
         else:
             cond = (col >= F.lit(lo)) & (col < F.lit(hi))
         aggs.append(F.sum(F.when(cond, 1).otherwise(0)).alias(f"b{i}"))
-    row = scoped.agg(*aggs).first()
-    out = {
-        "nonnull_count": int(row["nonnull_count"] or 0),
-        "below": int(row["below"] or 0),
-        "above": int(row["above"] or 0),
-        "counts": [int(row[f"b{i}"] or 0) for i in range(n)],
-    }
-    if include_min_max:
-        out["min"] = None if row["min"] is None else float(row["min"])
-        out["max"] = None if row["max"] is None else float(row["max"])
+    out: Dict[tuple, Dict[str, Any]] = {}
+    for row in scoped.groupBy(*group_by).agg(*aggs).collect():
+        stats = {
+            "nonnull_count": int(row["nonnull_count"] or 0),
+            "below": int(row["below"] or 0),
+            "above": int(row["above"] or 0),
+            "counts": [int(row[f"b{i}"] or 0) for i in range(n)],
+        }
+        if include_min_max:
+            stats["min"] = None if row["min"] is None else float(row["min"])
+            stats["max"] = None if row["max"] is None else float(row["max"])
+        out[group_key(row, group_by)] = stats
     return out
 
 
@@ -141,7 +153,7 @@ def build_continuous_partition_object(
             edges = [edges[0], edges[0] + 1.0]
     else:
         raise ValueError(f"unknown partition method {method!r}")
-    hist = histogram_counts(df, column, edges, domain)
+    hist = histogram_counts(df, column, edges, domain)[()]
     total = hist["nonnull_count"] or 1
     return {
         "bins": edges,
@@ -153,95 +165,44 @@ def build_continuous_partition_object(
 def build_categorical_partition_object(
     df: DataFrame, column: str, domain: Optional[Column] = None
 ) -> Dict[str, Any]:
-    rows = _collect_categories_capped(
-        _apply_domain(df, domain)
-        .filter(F.col(column).isNotNull())
-        .groupBy(column)
-        .agg(F.count(F.lit(1)).alias("count"))
-        .orderBy(column),
-        column,
-    )
-    total = sum(r["count"] for r in rows) or 1
-    return {
-        "values": [r[column] for r in rows],
-        "weights": [r["count"] / total for r in rows],
-    }
+    observed = categorical_partitions(df, column, domain)[()]
+    if isinstance(observed, Exception):
+        raise observed
+    return {"values": observed["values"], "weights": observed["weights"]}
 
 
-def histogram_counts_grouped(
+def categorical_partitions(
     df: DataFrame,
     column: str,
-    bins: List[float],
-    domain: Optional[Column],
-    partition_column: str,
-    include_min_max: bool = False,
-) -> Dict[Any, Dict[str, Any]]:
-    """Per-partition one-sample histograms in ONE grouped agg job (same
-    aggregates as :func:`histogram_counts`, keyed by partition).  Driver
-    transfer: one fixed-width row per partition."""
-    col = F.col(column)
-    scoped = _apply_domain(df, domain).filter(col.isNotNull())
-    aggs = [
-        F.count(F.lit(1)).alias("nonnull_count"),
-        F.sum(F.when(col < F.lit(bins[0]), 1).otherwise(0)).alias("below"),
-        F.sum(F.when(col > F.lit(bins[-1]), 1).otherwise(0)).alias("above"),
-    ]
-    if include_min_max:
-        aggs.append(F.min(col).alias("min"))
-        aggs.append(F.max(col).alias("max"))
-    n = len(bins) - 1
-    for i in range(n):
-        lo, hi = bins[i], bins[i + 1]
-        if i == n - 1:
-            cond = (col >= F.lit(lo)) & (col <= F.lit(hi))
-        else:
-            cond = (col >= F.lit(lo)) & (col < F.lit(hi))
-        aggs.append(F.sum(F.when(cond, 1).otherwise(0)).alias(f"b{i}"))
-    out: Dict[Any, Dict[str, Any]] = {}
-    for row in scoped.groupBy(partition_column).agg(*aggs).collect():
-        stats = {
-            "nonnull_count": int(row["nonnull_count"] or 0),
-            "below": int(row["below"] or 0),
-            "above": int(row["above"] or 0),
-            "counts": [int(row[f"b{i}"] or 0) for i in range(n)],
+    domain: Optional[Column] = None,
+    group_by: Sequence[str] = (),
+) -> Dict[tuple, Any]:
+    """Categorical partition objects per ``group_by`` key (``values`` in
+    Spark's order, ``weights`` and the non-null count ``n``) from ONE
+    ``groupBy(*group_by, column).count()`` job; a group over the
+    categorical cap maps to the cap's ValueError
+    (:func:`_categories_by_group`)."""
+
+    def partition(rows: List[Any]) -> Dict[str, Any]:
+        n = sum(r["count"] for r in rows)
+        return {
+            "values": [r[column] for r in rows],
+            "weights": [r["count"] / (n or 1) for r in rows],
+            "n": n,
         }
-        if include_min_max:
-            stats["min"] = None if row["min"] is None else float(row["min"])
-            stats["max"] = None if row["max"] is None else float(row["max"])
-        out[row[partition_column]] = stats
-    return out
 
-
-def categorical_partitions_grouped(
-    df: DataFrame,
-    column: str,
-    domain: Optional[Column],
-    partition_column: str,
-) -> Dict[Any, Dict[str, Any]]:
-    """Per-partition categorical partition objects from ONE
-    groupBy(partition, value).count() job (cardinality-capped like the
-    whole-table builder; the cap applies to the total number of
-    (partition, value) pairs collected)."""
-    rows = _collect_categories_capped(
-        _apply_domain(df, domain)
-        .filter(F.col(column).isNotNull())
-        .groupBy(partition_column, column)
-        .agg(F.count(F.lit(1)).alias("count"))
-        .orderBy(partition_column, column),
-        column,
+    return each_group(
+        _categories_by_group(
+            _apply_domain(df, domain)
+            .filter(F.col(column).isNotNull())
+            .groupBy(*group_by, column)
+            .agg(F.count(F.lit(1)).alias("count"))
+            .orderBy(*group_by, column),
+            column,
+            group_by,
+        ),
+        partition,
     )
-    by_part: Dict[Any, List[Any]] = {}
-    for r in rows:
-        by_part.setdefault(r[partition_column], []).append(r)
-    out: Dict[Any, Dict[str, Any]] = {}
-    for part, part_rows in by_part.items():
-        total = sum(r["count"] for r in part_rows) or 1
-        out[part] = {
-            "values": [r[column] for r in part_rows],
-            "weights": [r["count"] / total for r in part_rows],
-            "n": sum(r["count"] for r in part_rows),
-        }
-    return out
 
 
 # --- KL divergence (ref: expect_column_kl_divergence_to_be_less_than.py:
@@ -310,7 +271,9 @@ def _kl_divergence(kwargs: Dict[str, Any]) -> CompiledJob:
             },
         }
 
-    def finish_categorical(observed: Dict[str, Any]) -> Dict[str, Any]:
+    def finish_categorical(
+        observed: Dict[str, Any], partition: Dict[str, Any]
+    ) -> Dict[str, Any]:
         expected_map = dict(zip(partition["values"], partition["weights"]))
         values = list(observed["values"])
         pk = list(observed["weights"])
@@ -341,7 +304,9 @@ def _kl_divergence(kwargs: Dict[str, Any]) -> CompiledJob:
             },
         )
 
-    def finish_continuous(hist: Dict[str, Any]) -> Dict[str, Any]:
+    def finish_continuous(
+        hist: Dict[str, Any], partition: Dict[str, Any]
+    ) -> Dict[str, Any]:
         # mirrors the reference's holdout/tail algebra exactly
         # (expect_column_kl_divergence_to_be_less_than.py:525-700)
         bins = [float(b) for b in partition["bins"]]
@@ -405,54 +370,29 @@ def _kl_divergence(kwargs: Dict[str, Any]) -> CompiledJob:
             },
         )
 
-    def _resolve_partition(df: DataFrame, domain) -> None:
-        nonlocal partition
-        if partition is None:
-            # auto-profile: build the expected partition from the data
-            # itself (reference 'auto' partition support); in grouped mode
-            # this resolves ONCE over the whole table so every partition
-            # is scored against the same bin edges
-            partition = build_continuous_partition_object(
+    def evaluate(df: DataFrame, spark, domain, group_by, result_format):
+        # no partition_object: auto-profile the expected partition from
+        # the data itself (reference 'auto' partition support), once over
+        # ``df``, so every group is scored against the same bin edges
+        expected = partition
+        if expected is None:
+            expected = build_continuous_partition_object(
                 df, column, bins=10, method="quantile", domain=domain
             )
+        if is_valid_categorical_partition_object(expected):
+            observed = categorical_partitions(df, column, domain, group_by)
+            finish = finish_categorical
+        elif is_valid_continuous_partition_object(expected):
+            bins = [float(b) for b in expected["bins"]]
+            observed = histogram_counts(
+                df, column, bins, domain, group_by=group_by
+            )
+            finish = finish_continuous
+        else:
+            raise ValueError("invalid partition_object")
+        return each_group(observed, lambda obs: finish(obs, expected))
 
-    def run(df: DataFrame, spark, domain) -> Dict[str, Any]:
-        _resolve_partition(df, domain)
-        if is_valid_categorical_partition_object(partition):
-            return finish_categorical(
-                build_categorical_partition_object(df, column, domain)
-            )
-        if is_valid_continuous_partition_object(partition):
-            bins = [float(b) for b in partition["bins"]]
-            return finish_continuous(
-                histogram_counts(df, column, bins, domain)
-            )
-        raise ValueError("invalid partition_object")
-
-    def grouped(
-        df: DataFrame, spark, domain, partition_column: str
-    ) -> Dict[Any, Dict[str, Any]]:
-        # the 10^12-row strategy: every partition's KL in ONE grouped job
-        _resolve_partition(df, domain)
-        if is_valid_categorical_partition_object(partition):
-            groups = categorical_partitions_grouped(
-                df, column, domain, partition_column
-            )
-            return {
-                part: finish_categorical(obs)
-                for part, obs in groups.items()
-            }
-        if is_valid_continuous_partition_object(partition):
-            bins = [float(b) for b in partition["bins"]]
-            hists = histogram_counts_grouped(
-                df, column, bins, domain, partition_column
-            )
-            return {
-                part: finish_continuous(h) for part, h in hists.items()
-            }
-        raise ValueError("invalid partition_object")
-
-    return CompiledJob(run=run, grouped=grouped)
+    return CompiledJob(evaluate=evaluate)
 
 
 # --- chi-square goodness-of-fit (pandas-only in the reference,
@@ -501,31 +441,15 @@ def _chisquare(kwargs: Dict[str, Any]) -> CompiledJob:
             },
         }
 
-    def run(df: DataFrame, spark, domain) -> Dict[str, Any]:
+    def evaluate(df: DataFrame, spark, domain, group_by, result_format):
         if not is_valid_categorical_partition_object(partition):
             raise ValueError("chisquare test needs a categorical partition_object")
-        observed = build_categorical_partition_object(df, column, domain)
-        n = (
-            _apply_domain(df, domain)
-            .filter(F.col(column).isNotNull())
-            .count()
+        return each_group(
+            categorical_partitions(df, column, domain, group_by),
+            lambda obs: finish(obs, obs["n"]),
         )
-        return finish(observed, n)
 
-    def grouped(
-        df: DataFrame, spark, domain, partition_column: str
-    ) -> Dict[Any, Dict[str, Any]]:
-        # every partition's GoF chi-square from ONE grouped count job
-        if not is_valid_categorical_partition_object(partition):
-            raise ValueError("chisquare test needs a categorical partition_object")
-        groups = categorical_partitions_grouped(
-            df, column, domain, partition_column
-        )
-        return {
-            part: finish(obs, obs["n"]) for part, obs in groups.items()
-        }
-
-    return CompiledJob(run=run, grouped=grouped)
+    return CompiledJob(evaluate=evaluate)
 
 
 # --- bootstrapped KS vs an expected continuous partition (reference
@@ -659,24 +583,14 @@ def _ks_test(kwargs: Dict[str, Any]) -> CompiledJob:
             },
         }
 
-    def run(df: DataFrame, spark, domain) -> Dict[str, Any]:
+    def evaluate(df: DataFrame, spark, domain, group_by, result_format):
         bins = _validate_partition()
-        hist = histogram_counts(
-            df, column, bins, domain, include_min_max=True
+        hists = histogram_counts(
+            df, column, bins, domain, include_min_max=True, group_by=group_by
         )
-        return finish(hist, bins)
+        return each_group(hists, lambda h: finish(h, bins))
 
-    def grouped(
-        df: DataFrame, spark, domain, partition_column: str
-    ) -> Dict[Any, Dict[str, Any]]:
-        # every partition's bootstrapped KS from ONE grouped histogram job
-        bins = _validate_partition()
-        hists = histogram_counts_grouped(
-            df, column, bins, domain, partition_column, include_min_max=True
-        )
-        return {part: finish(h, bins) for part, h in hists.items()}
-
-    return CompiledJob(run=run, grouped=grouped)
+    return CompiledJob(evaluate=evaluate)
 
 
 # --- two-sample drift (ours; north-star KS/PSI on turn length & role mix).
@@ -684,13 +598,19 @@ def _ks_test(kwargs: Dict[str, Any]) -> CompiledJob:
 # baseline split predicate — no second scan. ------------------------------
 
 
-def _split_histograms(
+def split_histograms(
     df: DataFrame,
     column: str,
     baseline: Column,
     bins: List[float],
     domain: Optional[Column],
-) -> Tuple[List[int], List[int], int, int]:
+    group_by: Sequence[str] = (),
+) -> Dict[tuple, Tuple[List[int], List[int], int, int]]:
+    """Two-sample histograms ``(base, cur, n_base, n_cur)`` per
+    ``group_by`` key in ONE ``groupBy(*group_by)`` conditional-agg job
+    over the baseline split.  Driver transfer is one fixed-width row per
+    group — 2 + 2·n_bins longs — so 10^5 partitions x 20 bins is a few
+    MB."""
     col = F.col(column)
     scoped = _apply_domain(df, domain).filter(col.isNotNull())
     side = domain_gate(baseline)
@@ -706,49 +626,15 @@ def _split_histograms(
         )
         aggs.append(F.sum(F.when(side & in_bin, 1).otherwise(0)).alias(f"p{i}"))
         aggs.append(F.sum(F.when(~side & in_bin, 1).otherwise(0)).alias(f"q{i}"))
-    row = scoped.agg(*aggs).first()
-    base = [int(row[f"p{i}"] or 0) for i in range(n)]
-    cur = [int(row[f"q{i}"] or 0) for i in range(n)]
-    return base, cur, int(row["n_base"] or 0), int(row["n_cur"] or 0)
-
-
-def _split_histograms_grouped(
-    df: DataFrame,
-    column: str,
-    baseline: Column,
-    bins: List[float],
-    domain: Optional[Column],
-    partition_column: str,
-) -> Dict[Any, Tuple[List[int], List[int], int, int]]:
-    """Per-partition two-sample histograms in ONE grouped conditional-agg
-    job (same aggregates as :func:`_split_histograms`, keyed by
-    ``partition_column``).  Driver transfer is one fixed-width row per
-    partition — 2 + 2·n_bins longs — so 10^5 partitions x 20 bins is a
-    few MB."""
-    col = F.col(column)
-    scoped = _apply_domain(df, domain).filter(col.isNotNull())
-    side = domain_gate(baseline)
-    aggs = [
-        F.sum(F.when(side, 1).otherwise(0)).alias("n_base"),
-        F.sum(F.when(~side, 1).otherwise(0)).alias("n_cur"),
-    ]
-    n = len(bins) - 1
-    for i in range(n):
-        lo, hi = bins[i], bins[i + 1]
-        in_bin = (
-            (col >= F.lit(lo)) & ((col <= F.lit(hi)) if i == n - 1 else (col < F.lit(hi)))
-        )
-        aggs.append(F.sum(F.when(side & in_bin, 1).otherwise(0)).alias(f"p{i}"))
-        aggs.append(F.sum(F.when(~side & in_bin, 1).otherwise(0)).alias(f"q{i}"))
-    out: Dict[Any, Tuple[List[int], List[int], int, int]] = {}
-    for row in scoped.groupBy(partition_column).agg(*aggs).collect():
-        out[row[partition_column]] = (
+    return {
+        group_key(row, group_by): (
             [int(row[f"p{i}"] or 0) for i in range(n)],
             [int(row[f"q{i}"] or 0) for i in range(n)],
             int(row["n_base"] or 0),
             int(row["n_cur"] or 0),
         )
-    return out
+        for row in scoped.groupBy(*group_by).agg(*aggs).collect()
+    }
 
 
 def _resolve_split(kwargs: Dict[str, Any]) -> Column:
@@ -771,9 +657,27 @@ def _drift_bins(
     return partition["bins"]
 
 
+def _two_sample_job(
+    kwargs: Dict[str, Any], vout: Callable[..., Dict[str, Any]]
+) -> CompiledJob:
+    """A binned two-sample drift check: bins resolved ONCE over the
+    evaluator's ``df`` (shared edges make per-group statistics
+    comparable), every group's two histograms in one job, ``vout(base,
+    cur, n_base, n_cur, bins)`` per group."""
+    column = kwargs["column"]
+
+    def evaluate(df: DataFrame, spark, domain, group_by, result_format):
+        bins = _drift_bins(df, column, kwargs, domain)
+        hists = split_histograms(
+            df, column, _resolve_split(kwargs), bins, domain, group_by
+        )
+        return each_group(hists, lambda h: vout(*h, bins))
+
+    return CompiledJob(evaluate=evaluate)
+
+
 @register_dist("expect_column_two_sample_ks_to_be_less_than")
 def _two_sample_ks(kwargs: Dict[str, Any]) -> CompiledJob:
-    column = kwargs["column"]
     threshold = float(kwargs["threshold"])
 
     def _vout(
@@ -801,36 +705,11 @@ def _two_sample_ks(kwargs: Dict[str, Any]) -> CompiledJob:
             },
         }
 
-    def run(df: DataFrame, spark, domain) -> Dict[str, Any]:
-        baseline = _resolve_split(kwargs)
-        bins = _drift_bins(df, column, kwargs, domain)
-        base, cur, n_base, n_cur = _split_histograms(
-            df, column, baseline, bins, domain
-        )
-        return _vout(base, cur, n_base, n_cur, bins)
-
-    def grouped(
-        df: DataFrame, spark, domain, partition_column: str
-    ) -> Dict[Any, Dict[str, Any]]:
-        # bins resolved ONCE over the whole table (shared bin edges make
-        # per-partition statistics comparable); histograms for every
-        # partition in one grouped conditional-agg job
-        baseline = _resolve_split(kwargs)
-        bins = _drift_bins(df, column, kwargs, domain)
-        hists = _split_histograms_grouped(
-            df, column, baseline, bins, domain, partition_column
-        )
-        return {
-            part: _vout(base, cur, n_base, n_cur, bins)
-            for part, (base, cur, n_base, n_cur) in hists.items()
-        }
-
-    return CompiledJob(run=run, grouped=grouped)
+    return _two_sample_job(kwargs, _vout)
 
 
 @register_dist("expect_column_two_sample_psi_to_be_less_than")
 def _two_sample_psi(kwargs: Dict[str, Any]) -> CompiledJob:
-    column = kwargs["column"]
     threshold = float(kwargs["threshold"])
 
     def _vout(
@@ -850,58 +729,60 @@ def _two_sample_psi(kwargs: Dict[str, Any]) -> CompiledJob:
             },
         }
 
-    def run(df: DataFrame, spark, domain) -> Dict[str, Any]:
-        baseline = _resolve_split(kwargs)
-        bins = _drift_bins(df, column, kwargs, domain)
-        base, cur, n_base, n_cur = _split_histograms(
-            df, column, baseline, bins, domain
-        )
-        return _vout(base, cur, n_base, n_cur, bins)
-
-    def grouped(
-        df: DataFrame, spark, domain, partition_column: str
-    ) -> Dict[Any, Dict[str, Any]]:
-        baseline = _resolve_split(kwargs)
-        bins = _drift_bins(df, column, kwargs, domain)
-        hists = _split_histograms_grouped(
-            df, column, baseline, bins, domain, partition_column
-        )
-        return {
-            part: _vout(base, cur, n_base, n_cur, bins)
-            for part, (base, cur, n_base, n_cur) in hists.items()
-        }
-
-    return CompiledJob(run=run, grouped=grouped)
+    return _two_sample_job(kwargs, _vout)
 
 
 CATEGORICAL_COLLECT_CAP = 10_000
-# grouped mode collects (partition, category) rows — bounded by
-# partitions x categories, so the cap is proportionally higher; at the
+# a grouped call collects (group, category) rows — bounded by groups x
+# categories, so its total cap is proportionally higher; at the
 # 10^5-partition design point with <=5 categories this is 5x10^5 rows of
 # four scalars (~tens of MB on the driver)
 GROUPED_CATEGORICAL_COLLECT_CAP = 1_000_000
 
 
-def _collect_categories_capped(
-    grouped: DataFrame, what: str, cap: Optional[int] = None
-) -> List[Any]:
-    """Collect a per-category aggregate with a hard cardinality cap.
+def _categories_by_group(
+    frame: DataFrame, what: str, group_by: Sequence[str]
+) -> Dict[tuple, Any]:
+    """Collect a per-(group, category) aggregate with a hard cardinality
+    cap: ``{group key tuple: rows}``, a group over
+    ``CATEGORICAL_COLLECT_CAP`` categories mapping to the cap's
+    ValueError.
 
-    ``limit(cap + 1)`` bounds the driver transfer in the SAME job (no extra
-    scan — the limit rides after the aggregation), and one overflow row is
-    enough to prove the column isn't categorical-scale and fail clearly
-    instead of OOMing the driver.  Mirrors ``EXACT_KS_COLLECT_CAP``.
+    ``limit(total + 1)`` bounds the driver transfer in the SAME job (no
+    extra scan — the limit rides after the aggregation), and one overflow
+    row is enough to prove the column isn't categorical-scale and fail
+    clearly instead of OOMing the driver.  The total is the per-group cap
+    without a prefix, ``GROUPED_CATEGORICAL_COLLECT_CAP`` with one.
+    Mirrors ``EXACT_KS_COLLECT_CAP``.
     """
-    # late-bound module attr so tests (and users) can lower the cap
-    cap = CATEGORICAL_COLLECT_CAP if cap is None else cap
-    rows = grouped.limit(cap + 1).collect()
-    if len(rows) > cap:
-        raise ValueError(
+
+    def capped(cap: int) -> ValueError:
+        return ValueError(
             f"cardinality of {what} exceeds the categorical cap "
             f"{cap}; these tests are for categorical "
             "columns — bucketize continuous data first"
         )
-    return rows
+
+    # late-bound module attrs so tests (and users) can lower the caps
+    cap = CATEGORICAL_COLLECT_CAP
+    total = GROUPED_CATEGORICAL_COLLECT_CAP if group_by else cap
+    rows = frame.limit(total + 1).collect()
+    if len(rows) > total:
+        raise capped(total)
+    return {
+        key: part if len(part) <= cap else capped(cap)
+        for key, part in rows_by_group(rows, group_by).items()
+    }
+
+
+def _category_order(rows: List[Any], column: str) -> List[Any]:
+    """Rows sorted by category value (by its text when values of mixed
+    types do not compare), so the details list categories the same way
+    on every path."""
+    try:
+        return sorted(rows, key=lambda r: r[column])
+    except TypeError:
+        return sorted(rows, key=lambda r: str(r[column]))
 
 
 @register_dist("expect_column_two_sample_chisquare_p_to_be_greater_than")
@@ -929,50 +810,26 @@ def _two_sample_chi2(kwargs: Dict[str, Any]) -> CompiledJob:
             },
         }
 
-    def run(df: DataFrame, spark, domain) -> Dict[str, Any]:
-        baseline = _resolve_split(kwargs)
-        side = domain_gate(baseline)
-        rows = _collect_categories_capped(
+    def evaluate(df: DataFrame, spark, domain, group_by, result_format):
+        # one (group, category) counting job; the capped collect bounds
+        # groups x categories rows on the driver
+        side = domain_gate(_resolve_split(kwargs))
+        groups = _categories_by_group(
             _apply_domain(df, domain)
             .filter(F.col(column).isNotNull())
-            .groupBy(column)
+            .groupBy(*group_by, column)
             .agg(
                 F.sum(F.when(side, 1).otherwise(0)).alias("n_base"),
                 F.sum(F.when(~side, 1).otherwise(0)).alias("n_cur"),
             ),
             column,
+            group_by,
         )
-        return _vout(rows)
-
-    def grouped(
-        df: DataFrame, spark, domain, partition_column: str
-    ) -> Dict[Any, Dict[str, Any]]:
-        # one grouped (partition, category) counting job; the capped
-        # collect bounds partitions x categories rows on the driver
-        baseline = _resolve_split(kwargs)
-        side = domain_gate(baseline)
-        rows = _collect_categories_capped(
-            _apply_domain(df, domain)
-            .filter(F.col(column).isNotNull())
-            .groupBy(partition_column, column)
-            .agg(
-                F.sum(F.when(side, 1).otherwise(0)).alias("n_base"),
-                F.sum(F.when(~side, 1).otherwise(0)).alias("n_cur"),
-            ),
-            f"({partition_column}, {column})",
-            cap=GROUPED_CATEGORICAL_COLLECT_CAP,
+        return each_group(
+            groups, lambda rows: _vout(_category_order(rows, column))
         )
-        by_part: Dict[Any, List[Any]] = {}
-        for r in rows:
-            by_part.setdefault(r[partition_column], []).append(r)
-        # stable category order within each partition (groupBy order is
-        # nondeterministic; chi2 is order-invariant but details aren't)
-        return {
-            part: _vout(sorted(prows, key=lambda r: str(r[column])))
-            for part, prows in by_part.items()
-        }
 
-    return CompiledJob(run=run, grouped=grouped)
+    return CompiledJob(evaluate=evaluate)
 
 
 def _reference_category_codes(
@@ -1150,37 +1007,23 @@ def _cramers_phi(kwargs: Dict[str, Any]) -> CompiledJob:
             },
         }
 
-    def run(df: DataFrame, spark, domain) -> Dict[str, Any]:
-        # nulls stay in the groupBy: they form the "(missing)" category
-        rows = _collect_categories_capped(
-            _apply_domain(df, domain)
-            .groupBy(column_a, column_b)
-            .agg(F.count(F.lit(1)).alias("n")),
-            f"({column_a}, {column_b})",
-        )
-        return finish(rows, _is_numeric(df, column_a), _is_numeric(df, column_b))
-
-    def grouped(
-        df: DataFrame, spark, domain, partition_column: str
-    ) -> Dict[Any, Dict[str, Any]]:
-        # every partition's contingency table from ONE grouped count job
+    def evaluate(df: DataFrame, spark, domain, group_by, result_format):
+        # every group's contingency table from ONE count job; nulls stay
+        # in the groupBy: they form the "(missing)" category
         numeric_a = _is_numeric(df, column_a)
         numeric_b = _is_numeric(df, column_b)
-        rows = _collect_categories_capped(
+        groups = _categories_by_group(
             _apply_domain(df, domain)
-            .groupBy(partition_column, column_a, column_b)
+            .groupBy(*group_by, column_a, column_b)
             .agg(F.count(F.lit(1)).alias("n")),
-            f"({partition_column}, {column_a}, {column_b})",
+            f"({column_a}, {column_b})",
+            group_by,
         )
-        by_part: Dict[Any, List[Any]] = {}
-        for r in rows:
-            by_part.setdefault(r[partition_column], []).append(r)
-        return {
-            part: finish(rs, numeric_a, numeric_b)
-            for part, rs in by_part.items()
-        }
+        return each_group(
+            groups, lambda rows: finish(rows, numeric_a, numeric_b)
+        )
 
-    return CompiledJob(run=run, grouped=grouped)
+    return CompiledJob(evaluate=evaluate)
 
 
 def _make_cdf(distribution: str, params: Any):
@@ -1247,167 +1090,125 @@ EXACT_KS_COLLECT_CAP = 1_000_000
 EXACT_KS_BUCKETS = 128
 
 
-def _exact_ks_distributed(scoped: DataFrame, column: str, cdf) -> tuple:
-    """Exact one-sample KS statistic at ANY scale, no driver collect of
-    values.  Three jobs over the one-column projection:
+def _exact_ks(
+    scoped: DataFrame, column: str, group_by: Sequence[str], cdf
+) -> Dict[tuple, Tuple[float, int]]:
+    """Exact one-sample KS statistic per ``group_by`` key at ANY scale,
+    no driver collect of values: ``{group key tuple: (statistic, n)}``.
+    Over the one-column projection (plus the group key):
 
-    1. count + equi-depth cut points (``percentile_approx`` sketch) in
-       one agg — the cuts only BALANCE the buckets, the statistic never
-       depends on their accuracy;
-    2. exact per-bucket counts (bucket = number of cuts < x, a pure
-       deterministic function of the value — no reliance on physical
-       partition ids, which range-repartition re-samples per job and AQE
-       may re-coalesce), prefix-summed into global rank offsets;
-    3. hash-partition by bucket, sort within partitions by (bucket, x),
-       stream Arrow batches through the CDF with a per-bucket running
-       rank: global i = offset[bucket] + rank-in-bucket.
+    1. per-group count in one agg; without a prefix the same agg takes
+       equi-depth cut points (``percentile_approx`` sketch) that spread
+       the one group over ``EXACT_KS_BUCKETS`` buckets — the cuts only
+       BALANCE the buckets, the statistic never depends on their
+       accuracy.  With a prefix every group is one bucket: the groups
+       already spread the rows over tasks;
+    2. with cuts, exact per-bucket counts (bucket = number of cuts < x, a
+       pure deterministic function of the value — no reliance on
+       physical partition ids, which range-repartition re-samples per
+       job and AQE may re-coalesce), prefix-summed into global rank
+       offsets;
+    3. hash-partition by (group, bucket), sort within partitions by
+       (group, bucket, x), stream Arrow batches through the CDF with a
+       running rank per (group, bucket): i = offset[bucket] +
+       rank-in-bucket; reduce to one (group, sup) row per group.
 
-    The per-row formula max(|i/n - F(x_i)|, |(i-1)/n - F(x_i)|) over the
-    globally sorted sequence is exact including ties, and bit-identical
-    to the driver-side sorted-collect path (same float ops, same scalar
-    CDF per element via ``np.frompyfunc``).  Returns (statistic, n)."""
+    Groups reach the Python side as ``to_json(struct(*group_by))`` text,
+    so NULL and typed keys survive the round trip.  The per-row formula
+    max(|i/n - F(x_i)|, |(i-1)/n - F(x_i)|) over each group's sorted
+    sequence is exact including ties, and bit-identical to the
+    driver-side sorted-collect path (same float ops, same scalar CDF per
+    element via ``np.frompyfunc``)."""
     import numpy as np
 
-    vals = scoped.select(F.col(column).cast("double").alias("__x"))
-    probs = [i / EXACT_KS_BUCKETS for i in range(1, EXACT_KS_BUCKETS)]
-    row = vals.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.percentile_approx("__x", F.lit(probs), 10_000).alias("q"),
-    ).first()
-    n = int(row["n"])
-    if n == 0:
-        return 0.0, 0
-    cuts = sorted({float(c) for c in (row["q"] or [])})
+    gk = ["__gk"] if group_by else []
+    vals = scoped.select(
+        *group_by,
+        *([F.to_json(F.struct(*group_by)).alias("__gk")] if group_by else []),
+        F.col(column).cast("double").alias("__x"),
+    )
+    aggs = [F.count(F.lit(1)).alias("n")]
+    if not group_by:
+        probs = [i / EXACT_KS_BUCKETS for i in range(1, EXACT_KS_BUCKETS)]
+        aggs.append(
+            F.percentile_approx("__x", F.lit(probs), 10_000).alias("q")
+        )
+    rows = vals.groupBy(*group_by, *gk).agg(*aggs).collect()
+    keys = {(r["__gk"] if gk else ""): group_key(r, group_by) for r in rows}
+    n_by = {(r["__gk"] if gk else ""): int(r["n"]) for r in rows}
+    if not group_by and not n_by[""]:
+        return {(): (0.0, 0)}
+    cuts = [] if group_by else sorted({float(c) for c in (rows[0]["q"] or [])})
     bucket = (
         F.size(F.filter(F.lit(cuts), lambda c: c < F.col("__x")))
         if cuts
         else F.lit(0)
     )
-    tagged = vals.withColumn("__b", bucket)
-    counts = {
-        int(r["__b"]): int(r["cnt"])
-        for r in tagged.groupBy("__b")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    offsets: Dict[int, int] = {}
-    acc = 0
-    for b in sorted(counts):
-        offsets[b] = acc
-        acc += counts[b]
+    tagged = vals.select(*gk, "__x", bucket.alias("__b"))
+    offsets: Dict[tuple, int] = {}
+    if cuts:
+        counts = {
+            int(r["__b"]): int(r["cnt"])
+            for r in tagged.groupBy("__b")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .collect()
+        }
+        acc = 0
+        for b in sorted(counts):
+            offsets[("", b)] = acc
+            acc += counts[b]
 
     def compute(batches):
         import pandas as pd
 
         cdf_vec = np.frompyfunc(cdf, 1, 1)
-        carry: Dict[int, int] = {}
-        best = 0.0
+        carry: Dict[tuple, int] = {}
+        best: Dict[str, float] = {}
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = pdf["__x"].to_numpy(dtype=float)
-            cum = (
-                pdf.groupby("__b", sort=False).cumcount().to_numpy()
+            frame = pd.DataFrame(
+                {
+                    "g": pdf["__gk"] if gk else "",
+                    "b": pdf["__b"].to_numpy(dtype=np.int64),
+                }
             )
-            vc = pdf["__b"].value_counts()
-            base = {
-                int(bi): offsets[int(bi)] + carry.get(int(bi), 0)
-                for bi in vc.index
-            }
-            offs = pdf["__b"].map(base).to_numpy(dtype=np.int64)
-            i = cum + offs + 1
-            fx = cdf_vec(x).astype(float)
-            d = np.maximum(
-                np.abs(i / n - fx), np.abs((i - 1) / n - fx)
-            ).max()
-            best = max(best, float(d))
-            for bi, cnt in vc.items():
-                carry[int(bi)] = carry.get(int(bi), 0) + int(cnt)
-        yield pd.DataFrame({"d": [best]})
+            cells = frame.groupby(["g", "b"], sort=False)
+            sizes = cells.size()
+            # stable within-batch rank per (group, bucket), offset by the
+            # bucket's global offset and the rows of that (group, bucket)
+            # seen in earlier batches
+            base = np.asarray(
+                [offsets.get(k, 0) + carry.get(k, 0) for k in sizes.index],
+                dtype=np.int64,
+            )
+            i = cells.cumcount().to_numpy() + base[cells.ngroup().to_numpy()] + 1
+            n = frame["g"].map(n_by).to_numpy(dtype=np.int64)
+            fx = cdf_vec(pdf["__x"].to_numpy(dtype=float)).astype(float)
+            d = np.maximum(np.abs(i / n - fx), np.abs((i - 1) / n - fx))
+            for g, dg in pd.Series(d).groupby(frame["g"], sort=False).max().items():
+                best[g] = max(best.get(g, 0.0), float(dg))
+            for k, c in sizes.items():
+                carry[k] = carry.get(k, 0) + int(c)
+        out = {"d": list(best.values())}
+        if gk:
+            out = {"__gk": list(best), **out}
+        yield pd.DataFrame(out)
 
-    out = (
-        tagged.repartition(F.col("__b"))
-        .sortWithinPartitions("__b", "__x")
-        .mapInPandas(compute, "d double")
+    sup = (
+        tagged.repartition(*gk, "__b")
+        .sortWithinPartitions(*gk, "__b", "__x")
+        .mapInPandas(compute, ("__gk string, " if gk else "") + "d double")
+        .groupBy(*gk)
         .agg(F.max("d").alias("d"))
-        .first()
-    )
-    return float(out["d"] or 0.0), n
-
-
-def _exact_ks_grouped(
-    scoped: DataFrame, column: str, partition_column: str, cdf
-) -> Dict[Any, tuple]:
-    """Per-partition exact KS, all partitions in two jobs: hash-partition
-    by the partition column (each group lands whole on one executor),
-    sort within partitions by (group, value), stream Arrow batches with a
-    per-group running rank, reduce to one (group, sup) row per group.
-    Returns {partition_value: (statistic, n)}."""
-    import numpy as np
-
-    vals = scoped.select(
-        F.col(partition_column).alias("__g"),
-        F.col(column).cast("double").alias("__x"),
-    )
-    counts = {
-        r["__g"]: int(r["cnt"])
-        for r in vals.groupBy("__g")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .limit(GROUPED_CATEGORICAL_COLLECT_CAP + 1)
         .collect()
+    )
+    return {
+        keys[r["__gk"] if gk else ""]: (
+            float(r["d"] or 0.0), n_by[r["__gk"] if gk else ""]
+        )
+        for r in sup
     }
-    if len(counts) > GROUPED_CATEGORICAL_COLLECT_CAP:
-        raise ValueError(
-            f"partition cardinality of {partition_column} exceeds "
-            f"{GROUPED_CATEGORICAL_COLLECT_CAP}"
-        )
-
-    def compute(batches):
-        import pandas as pd
-
-        cdf_vec = np.frompyfunc(cdf, 1, 1)
-        carry: Dict[Any, int] = {}
-        best: Dict[Any, float] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = pdf["__x"].to_numpy(dtype=float)
-            groups = pdf["__g"]
-            # stable within-batch rank per group, offset by the carry of
-            # rows already seen for that group in earlier batches
-            cum = groups.groupby(groups, sort=False).cumcount().to_numpy()
-            base = {g: carry.get(g, 0) for g in groups.unique()}
-            offs = groups.map(base).to_numpy(dtype=np.int64)
-            i = cum + offs + 1
-            fx = cdf_vec(x).astype(float)
-            gb = pd.DataFrame({"g": groups.to_numpy(), "i": i, "fx": fx})
-            for g, sub in gb.groupby("g", sort=False):
-                ng = counts[g]
-                d = float(
-                    np.maximum(
-                        np.abs(sub["i"].to_numpy() / ng - sub["fx"].to_numpy()),
-                        np.abs(
-                            (sub["i"].to_numpy() - 1) / ng
-                            - sub["fx"].to_numpy()
-                        ),
-                    ).max()
-                )
-                best[g] = max(best.get(g, 0.0), d)
-                carry[g] = carry.get(g, 0) + len(sub)
-        yield pd.DataFrame(
-            {"g": list(best.keys()), "d": list(best.values())}
-        )
-
-    out_schema = f"g {scoped.schema[partition_column].dataType.simpleString()}, d double"
-    rows = (
-        vals.repartition(F.col("__g"))
-        .sortWithinPartitions("__g", "__x")
-        .mapInPandas(compute, out_schema)
-        .groupBy("g")
-        .agg(F.max("d").alias("d"))
-        .collect()
-    )
-    return {r["g"]: (float(r["d"]), counts[r["g"]]) for r in rows}
 
 
 @register_dist(
@@ -1418,13 +1219,14 @@ def _parameterized_ks(kwargs: Dict[str, Any]) -> CompiledJob:
     (norm/uniform/expon/beta/gamma/chi2) — pandas-only in the reference
     (``self_check/util.py:2071``).  ``method`` kwarg:
 
-    - ``auto`` (default): columns ≤1e6 non-null compute the exact KS
-      statistic from a sorted collect; larger columns use the
-      quantile-grid sup-distance (mergeable percentile sketch, one agg).
+    - ``auto`` (default): every group (the whole column for ``validate``)
+      of ≤1e6 non-null values gets the exact KS statistic; larger ones
+      use the quantile-grid sup-distance (mergeable percentile sketch,
+      one agg).  The choice is made per group from its own count, so
+      ``validate`` of a slice and a grouped call choose alike.
     - ``exact``: distributed exact statistic at ANY scale via
-      range-partitioned global ranks (``_exact_ks_distributed``) — no
-      value ever reaches the driver; costs two shuffles of the
-      one-column projection.
+      bucketed global ranks (``_exact_ks``) — no value ever reaches the
+      driver; costs two shuffles of the one-column projection.
     - ``grid``: force the quantile-grid path (one combined agg)."""
     column = kwargs["column"]
     distribution = kwargs.get("distribution", "norm")
@@ -1441,34 +1243,55 @@ def _parameterized_ks(kwargs: Dict[str, Any]) -> CompiledJob:
         )
     cdf = _make_cdf(distribution, params)
 
-    def run(df: DataFrame, spark, domain) -> Dict[str, Any]:
-        col = F.col(column)
-        scoped = _apply_domain(df, domain).filter(col.isNotNull())
-        if method == "exact":
-            statistic, n = _exact_ks_distributed(scoped, column, cdf)
-            if n == 0:
-                return {"success": True, "result": {"observed_value": 1.0}}
-            return _finish(statistic, n)
-        if method == "grid":
-            grid_n = 200
-            probs = [i / grid_n for i in range(1, grid_n)]
-            row = scoped.agg(
+    def grid(scoped: DataFrame, group_by) -> Dict[tuple, Tuple[float, int]]:
+        """Per-group count + approx quantile grid in ONE agg; the
+        statistic is the grid's sup-distance to the CDF."""
+        grid_n = 200
+        probs = [i / grid_n for i in range(1, grid_n)]
+        rows = (
+            scoped.groupBy(*group_by)
+            .agg(
                 F.count(F.lit(1)).alias("n"),
-                F.percentile_approx(col, F.lit(probs), 10_000).alias("q"),
-            ).first()
-            n = int(row["n"])
-            if n == 0:
-                return {"success": True, "result": {"observed_value": 1.0}}
-            statistic = max(
-                abs(p - cdf(float(x))) for p, x in zip(probs, row["q"])
+                F.percentile_approx(column, F.lit(probs), 10_000).alias("q"),
             )
-            return _finish(statistic, n)
-        n = scoped.count()
-        if n == 0:
-            return {"success": True, "result": {"observed_value": 1.0}}
-        if n <= EXACT_KS_COLLECT_CAP:
+            .collect()
+        )
+        return {
+            group_key(r, group_by): (
+                max(abs(p - cdf(float(x))) for p, x in zip(probs, r["q"]))
+                if r["n"]
+                else 0.0,
+                int(r["n"]),
+            )
+            for r in rows
+        }
+
+    def auto(scoped: DataFrame, group_by) -> Dict[tuple, Tuple[float, int]]:
+        """Exact for every group of at most ``EXACT_KS_COLLECT_CAP``
+        non-null values, grid above, so a group's method depends on its
+        own count alone.  An ungrouped exact group is a sorted collect;
+        grouped, the exact groups take :func:`_exact_ks` (bit-identical
+        statistic, no collect)."""
+        n_by = {
+            group_key(r, group_by): int(r["count"])
+            for r in scoped.groupBy(*group_by).count().collect()
+        }
+        small = [k for k, n in n_by.items() if n <= EXACT_KS_COLLECT_CAP]
+        large = [k for k in n_by if k not in small]
+        out: Dict[tuple, Tuple[float, int]] = {}
+        if large:
+            out.update(grid(_only(scoped, group_by, large, n_by), group_by))
+        if small and group_by:
+            out.update(
+                _exact_ks(
+                    _only(scoped, group_by, small, n_by), column, group_by, cdf
+                )
+            )
+        elif small:
+            n = n_by[()]
             values = sorted(
-                r[0] for r in scoped.select(col.cast("double")).collect()
+                r[0]
+                for r in scoped.select(F.col(column).cast("double")).collect()
             )
             statistic = 0.0
             for i, x in enumerate(values):
@@ -1476,18 +1299,20 @@ def _parameterized_ks(kwargs: Dict[str, Any]) -> CompiledJob:
                 statistic = max(
                     statistic, abs((i + 1) / n - fx), abs(i / n - fx)
                 )
+            out[()] = (statistic, n)
+        return out
+
+    def evaluate(df: DataFrame, spark, domain, group_by, result_format):
+        scoped = _apply_domain(df, domain).filter(F.col(column).isNotNull())
+        if method == "exact":
+            stats = _exact_ks(scoped, column, group_by, cdf)
         else:
-            grid_n = 200
-            probs = [i / grid_n for i in range(1, grid_n)]
-            row = scoped.agg(
-                F.percentile_approx(col, F.lit(probs), 10_000).alias("q")
-            ).first()
-            statistic = max(
-                abs(p - cdf(float(x))) for p, x in zip(probs, row["q"])
-            )
-        return _finish(statistic, n)
+            stats = (grid if method == "grid" else auto)(scoped, group_by)
+        return {key: _finish(*s) for key, s in stats.items()}
 
     def _finish(statistic: float, n: int) -> Dict[str, Any]:
+        if n == 0:
+            return {"success": True, "result": {"observed_value": 1.0}}
         p_value = gxstats.ks_p_value(statistic, n)
         return {
             "success": bool(p_value > p_threshold),
@@ -1500,56 +1325,20 @@ def _parameterized_ks(kwargs: Dict[str, Any]) -> CompiledJob:
             },
         }
 
-    def grouped(
-        df: DataFrame, spark, domain, partition_column: str
-    ) -> Dict[Any, Dict[str, Any]]:
-        """Every partition's KS vs the parametric CDF.  Default (auto /
-        grid): ONE grouped agg (count + per-partition approx quantile
-        grid) — the sketch path bounds driver transfer at any partition
-        count.  ``method='exact'``: per-group distributed exact ranks
-        (``_exact_ks_grouped``), two jobs total, one scalar row per
-        partition on the driver."""
-        if method == "exact":
-            scoped_e = _apply_domain(df, domain).filter(
-                F.col(column).isNotNull()
-            )
-            stats = _exact_ks_grouped(scoped_e, column, partition_column, cdf)
-            return {
-                part: (
-                    _finish(statistic, n)
-                    if n
-                    else {"success": True, "result": {"observed_value": 1.0}}
-                )
-                for part, (statistic, n) in stats.items()
-            }
-        col = F.col(column)
-        scoped = _apply_domain(df, domain).filter(col.isNotNull())
-        grid_n = 200
-        probs = [i / grid_n for i in range(1, grid_n)]
-        rows = (
-            scoped.groupBy(partition_column)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.percentile_approx(col, F.lit(probs), 10_000).alias("q"),
-            )
-            .collect()
-        )
-        out: Dict[Any, Dict[str, Any]] = {}
-        for row in rows:
-            n = int(row["n"])
-            if n == 0:
-                out[row[partition_column]] = {
-                    "success": True,
-                    "result": {"observed_value": 1.0},
-                }
-                continue
-            statistic = max(
-                abs(p - cdf(float(x))) for p, x in zip(probs, row["q"])
-            )
-            out[row[partition_column]] = _finish(statistic, n)
-        return out
+    return CompiledJob(evaluate=evaluate)
 
-    return CompiledJob(run=run, grouped=grouped)
+
+def _only(
+    scoped: DataFrame,
+    group_by: Sequence[str],
+    keys: List[tuple],
+    all_keys: Dict[tuple, Any],
+) -> DataFrame:
+    """``scoped`` narrowed to the groups ``keys`` (unfiltered when they
+    are all of ``all_keys``)."""
+    if len(keys) == len(all_keys):
+        return scoped
+    return scoped.filter(group_filter(group_by, keys))
 
 
 def compile_distribution_expectation(

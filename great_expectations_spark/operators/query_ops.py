@@ -8,19 +8,26 @@ Reference analogues cited per operator.
 
 from __future__ import annotations
 
-from typing import Any, Callable, Dict, List, Optional
+from typing import Any, Callable, Dict, List, Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from great_expectations_spark.core.domain import domain_gate
+from great_expectations_spark.core.frames import arrow_frame
 from great_expectations_spark.core.result_format import (
     format_map_output,
     map_expectation_success,
-    parse_result_format,
     validate_metric_value_between,
 )
-from great_expectations_spark.plans.specs import CompiledJob
+from great_expectations_spark.operators.window_ops import top_k
+from great_expectations_spark.plans.specs import (
+    CompiledJob,
+    each_group,
+    group_filter,
+    group_key,
+)
 
 QUERY_JOB_COMPILERS: Dict[str, Callable[[Dict[str, Any]], CompiledJob]] = {}
 
@@ -116,11 +123,11 @@ def _most_common_in_set(kwargs: Dict[str, Any]) -> CompiledJob:
     """Mode membership.  ``approximate=True`` swaps the exact
     groupBy-then-argmax for ONE ``approx_top_k`` sketch aggregation —
     no shuffle of distinct values, one bounded sketch per task on the
-    wire, and a grouped hook that evaluates every partition's mode in a
-    single job.  Exact while true cardinality <= ``max_items_tracked``
-    (default 100k); above that the mode of a heavy-tailed column is
-    still found with high probability, but counts become estimates, so
-    the exact path stays the default."""
+    wire.  Exact while true cardinality <= ``max_items_tracked`` (default
+    100k); above that the mode of a heavy-tailed column is still found
+    with high probability, but counts become estimates, so the exact
+    path stays the default.  Either way every group's mode comes from a
+    single job."""
     column = kwargs["column"]
     value_set = set(kwargs.get("value_set") or [])
     ties_okay = bool(kwargs.get("ties_okay", False))
@@ -156,77 +163,68 @@ def _most_common_in_set(kwargs: Dict[str, Any]) -> CompiledJob:
         best = max(e["count"] for e in items)
         return [e["item"] for e in items if e["count"] == best]
 
-    def run(df: DataFrame, spark, domain) -> Dict[str, Any]:
+    def evaluate(df: DataFrame, spark, domain, group_by, result_format):
+        scoped = _apply_domain(df, domain).filter(F.col(column).isNotNull())
         if approximate:
-            row = (
-                _apply_domain(df, domain)
-                .filter(F.col(column).isNotNull())
+            # one bounded sketch per (task, group) pair on the wire
+            rows = (
+                scoped.groupBy(*group_by)
                 .agg(
                     _approx_top_k_expr(
                         column, min(mode_cap + 1, max_items_tracked),
                         max_items_tracked,
                     ).alias("__tk")
                 )
-                .first()
-            )
-            return _judge(_modes_from_topk(list(row["__tk"] or [])))
-        counts = value_counts(df, column, domain)
-        # argmax with ties, two tiny jobs over the (already reduced) counts
-        counts = counts.persist()
-        try:
-            top = counts.agg(F.max("count").alias("m")).first()
-            if top is None or top["m"] is None:
-                return {"success": True, "result": {"observed_value": []}}
-            # bounded collect: an all-distinct column makes EVERY value a
-            # mode (count == 1 everywhere) — cap the tie set instead of
-            # shipping the whole column to the driver
-            mode_rows = (
-                counts.filter(F.col("count") == top["m"])
-                .limit(mode_cap + 1)
                 .collect()
             )
-            modes = [r[column] for r in mode_rows]
-        finally:
-            counts.unpersist()
-        return _judge(modes)
-
-    def grouped(
-        df: DataFrame, spark, domain, partition_column: str
-    ) -> Dict[Any, Dict[str, Any]]:
-        """ONE sketch job for every partition's mode (approximate mode
-        only — validate_by_partition falls back to per-partition exact
-        jobs otherwise): groupBy(partition).agg(approx_top_k) ships one
-        bounded sketch per (task, partition) pair."""
-        if not approximate:
-            raise NotImplementedError(
-                "grouped most-common needs approximate=True"
+            modes = {
+                group_key(r, group_by): _modes_from_topk(list(r["__tk"] or []))
+                for r in rows
+            }
+        else:
+            # ONE job: value counts per group, each group's max count
+            # joined back (the counts exchange is reused), and a bounded
+            # top-k of the tied values — an all-distinct column makes
+            # EVERY value a mode, so the tie set is capped instead of
+            # shipping the whole column to the driver
+            counts = scoped.groupBy(*group_by, column).agg(
+                F.count(F.lit(1)).alias("__gx_c")
             )
-        rows = (
-            _apply_domain(df, domain)
-            .filter(F.col(column).isNotNull())
-            .groupBy(partition_column)
-            .agg(
-                _approx_top_k_expr(
-                    column, min(mode_cap + 1, max_items_tracked),
-                    max_items_tracked,
-                ).alias("__tk")
-            )
-            .collect()
-        )
-        out: Dict[Any, Dict[str, Any]] = {}
-        for r in rows:
-            try:
-                out[r[partition_column]] = _judge(
-                    _modes_from_topk(list(r["__tk"] or []))
-                )
-            except ValueError:
-                # a >mode_cap tie in ONE junk partition must not fail
-                # every partition: leave it out of the mapping, so the
-                # runner's per-partition fallback raises for it alone
-                continue
-        return out
+            ties = _join_group_rows(
+                counts,
+                group_by,
+                counts.groupBy(*group_by).agg(F.max("__gx_c").alias("__gx_m")),
+            ).filter(F.col("__gx_c") == F.col("__gx_m"))
+            modes = {
+                key: [r[column] for r in rows]
+                for key, rows in top_k(
+                    ties.select(*group_by, column), group_by, mode_cap + 1
+                ).items()
+            }
+        if not group_by:
+            modes.setdefault((), [])
+        # a >mode_cap tie in ONE junk group fails that group alone
+        return each_group(modes, _judge)
 
-    return CompiledJob(run=run, grouped=grouped if approximate else None)
+    return CompiledJob(evaluate=evaluate)
+
+
+def _join_group_rows(
+    frame: DataFrame, group_by: Sequence[str], per_group: DataFrame
+) -> DataFrame:
+    """``frame`` with the columns of ``per_group`` (one row per
+    ``group_by`` key, holding the key columns) joined on its group key,
+    NULL keys included; without a prefix ``per_group``'s one row joins
+    every row."""
+    keys = [f"__gx_k{i}" for i in range(len(group_by))]
+    per_group = per_group.select(
+        *[F.col(g).alias(k) for g, k in zip(group_by, keys)],
+        *[c for c in per_group.columns if c not in group_by],
+    )
+    cond = F.lit(True)
+    for g, k in zip(group_by, keys):
+        cond = cond & F.col(g).eqNullSafe(F.col(k))
+    return frame.join(F.broadcast(per_group), cond, "inner").drop(*keys)
 
 
 # --- z-score (ref: column_values_z_score.py:86-146 — two-phase: scalar
@@ -240,70 +238,93 @@ def _z_scores_less_than(kwargs: Dict[str, Any]) -> CompiledJob:
     double_sided = bool(kwargs.get("double_sided", True))
     mostly = float(kwargs.get("mostly", 1.0))
 
-    def run(
-        df: DataFrame,
-        spark,
-        domain,
-        result_format: Optional[dict] = None,
-    ) -> Dict[str, Any]:
-        result_format = parse_result_format(result_format or "BASIC")
+    def evaluate(df: DataFrame, spark, domain, group_by, result_format):
+        """Three jobs for every group: mean/std/counts per group, the
+        violation count per group over rows scored against their own
+        group's mean and std (the scalars reach the rows as a broadcast
+        JVM-local table), and, when there are violations and the format
+        takes samples, one top-k job (``window_ops.top_k``) keeping each
+        group's smallest violating values."""
         scoped = _apply_domain(df, domain)
         col = F.col(column)
-        stats = scoped.agg(
-            F.mean(col).alias("mean"),
-            F.stddev_samp(col).alias("std"),
-            F.count(F.lit(1)).alias("element_count"),
-            F.count(col).alias("nonnull_count"),
-        ).first()
-        element_count = int(stats["element_count"])
-        nonnull_count = int(stats["nonnull_count"])
-        mean, std = stats["mean"], stats["std"]
-        if not nonnull_count or mean is None or std in (None, 0):
-            return format_map_output(
+        stats = {
+            group_key(r, group_by): r
+            for r in scoped.groupBy(*group_by)
+            .agg(
+                F.mean(col).alias("mean"),
+                F.stddev_samp(col).alias("std"),
+                F.count(F.lit(1)).alias("element_count"),
+                F.count(col).alias("nonnull_count"),
+            )
+            .collect()
+        }
+        scorable = [
+            key
+            for key, r in stats.items()
+            if r["nonnull_count"] and r["mean"] is not None
+            and r["std"] not in (None, 0)
+        ]
+        counts: Dict[tuple, int] = {}
+        samples: Dict[tuple, List[Dict[str, Any]]] = {}
+        if scorable:
+            types = {f.name: f.dataType for f in scoped.schema.fields}
+            scalars = arrow_frame(
+                scoped.sparkSession,
+                {
+                    **{
+                        g: [key[i] for key in scorable]
+                        for i, g in enumerate(group_by)
+                    },
+                    "__gx_mean": [float(stats[k]["mean"]) for k in scorable],
+                    "__gx_std": [float(stats[k]["std"]) for k in scorable],
+                },
+                T.StructType(
+                    [T.StructField(g, types[g]) for g in group_by]
+                    + [
+                        T.StructField("__gx_mean", T.DoubleType()),
+                        T.StructField("__gx_std", T.DoubleType()),
+                    ]
+                ),
+            )
+            z = (col - F.col("__gx_mean")) / F.col("__gx_std")
+            z = F.abs(z) if double_sided else z
+            flagged = _join_group_rows(scoped, group_by, scalars).filter(
+                col.isNotNull() & ~(z < F.lit(threshold))
+            )
+            counts = {
+                group_key(r, group_by): int(r["count"])
+                for r in flagged.groupBy(*group_by).count().collect()
+            }
+            if any(counts.values()) and (
+                result_format["result_format"] != "BOOLEAN_ONLY"
+            ):
+                limit = (
+                    max(counts.values())
+                    if result_format["result_format"] == "COMPLETE"
+                    else result_format["partial_unexpected_count"]
+                )
+                samples = top_k(
+                    flagged.select(*group_by, column), group_by, limit
+                )
+        out: Dict[tuple, Any] = {}
+        for key, r in stats.items():
+            element_count = int(r["element_count"])
+            nonnull_count = int(r["nonnull_count"])
+            unexpected_count = counts.get(key, 0)
+            out[key] = format_map_output(
                 result_format,
-                success=True,
+                success=key not in scorable
+                or map_expectation_success(
+                    element_count, nonnull_count, unexpected_count, mostly
+                ),
                 element_count=element_count,
                 nonnull_count=nonnull_count,
-                unexpected_count=0,
-                unexpected_list=[],
+                unexpected_count=unexpected_count,
+                unexpected_list=[row[column] for row in samples.get(key, [])],
             )
-        z = (col - F.lit(float(mean))) / F.lit(float(std))
-        z = F.abs(z) if double_sided else z
-        unexpected = col.isNotNull() & ~(z < F.lit(threshold))
-        ucount_row = scoped.agg(
-            F.sum(F.when(unexpected, 1).otherwise(0)).alias("u")
-        ).first()
-        unexpected_count = int(ucount_row["u"] or 0)
-        unexpected_list: List[Any] = []
-        if (
-            unexpected_count
-            and result_format["result_format"] != "BOOLEAN_ONLY"
-        ):
-            limit = (
-                unexpected_count
-                if result_format["result_format"] == "COMPLETE"
-                else result_format["partial_unexpected_count"]
-            )
-            unexpected_list = [
-                r[column]
-                for r in scoped.filter(unexpected)
-                .select(column)
-                .limit(limit)
-                .collect()
-            ]
-        success = map_expectation_success(
-            element_count, nonnull_count, unexpected_count, mostly
-        )
-        return format_map_output(
-            result_format,
-            success=success,
-            element_count=element_count,
-            nonnull_count=nonnull_count,
-            unexpected_count=unexpected_count,
-            unexpected_list=unexpected_list,
-        )
+        return out
 
-    return CompiledJob(run=run)
+    return CompiledJob(evaluate=evaluate)
 
 
 # --- user SQL (ref: query_metrics/query_table.py:68-90 — temp view +
@@ -314,55 +335,28 @@ def _z_scores_less_than(kwargs: Dict[str, Any]) -> CompiledJob:
 def _query_row_count_between(kwargs: Dict[str, Any]) -> CompiledJob:
     query = kwargs["query"]
 
-    def run(df: DataFrame, spark, domain) -> Dict[str, Any]:
-        # per-invocation view name: validations may run concurrently on
-        # one SparkSession (callers' threads, the planner's job pool, the
-        # per-partition fallback of a grouped pass), and a shared name
-        # would let one batch's query silently read another's
-        view = _unique_view_name()
-        _apply_domain(df, domain).createOrReplaceTempView(view)
-        try:
-            rendered = query.format(
-                batch=view, active_batch=view, **_query_template_kwargs(kwargs)
-            )
-            # count() stays distributed — no row ever reaches the driver
-            observed = spark.sql(rendered).count()
-        finally:
-            spark.catalog.dropTempView(view)
+    def judge(rows: List[Any]) -> Dict[str, Any]:
         out = validate_metric_value_between(
-            observed,
+            int(rows[0]["__gx_n"]),
             kwargs.get("min_value"),
             kwargs.get("max_value"),
             bool(kwargs.get("strict_min", False)),
             bool(kwargs.get("strict_max", False)),
         )
-        out["result"]["details"] = {"query": rendered}
+        out["result"]["details"] = {"query": query}
         return out
 
-    def grouped(
-        df: DataFrame, spark, domain, partition_column: str
-    ) -> Dict[Any, Dict[str, Any]]:
-        # every partition's COUNT(*) over its rendered query, chunked
-        # UNION ALL — exact (no per-branch limit), one row per partition
-        by_part = _grouped_query_rows(
-            df, spark, domain, partition_column, query, kwargs,
-            count_only=True,
+    def evaluate(df: DataFrame, spark, domain, group_by, result_format):
+        # COUNT(*) over each group's rendered query stays distributed —
+        # exact, one row per group, no result row reaches the driver
+        return each_group(
+            _query_rows(
+                df, spark, domain, group_by, query, kwargs, count_only=True
+            ),
+            judge,
         )
-        out: Dict[Any, Dict[str, Any]] = {}
-        for part, rows in by_part.items():
-            observed = int(rows[0]["__gx_n"]) if rows else 0
-            vout = validate_metric_value_between(
-                observed,
-                kwargs.get("min_value"),
-                kwargs.get("max_value"),
-                bool(kwargs.get("strict_min", False)),
-                bool(kwargs.get("strict_max", False)),
-            )
-            vout["result"]["details"] = {"query": query}
-            out[part] = vout
-        return out
 
-    return CompiledJob(run=run, grouped=grouped)
+    return CompiledJob(evaluate=evaluate)
 
 
 QUERY_RESULT_COLLECT_CAP = 10_000
@@ -391,44 +385,17 @@ def _query_template_kwargs(kwargs: Dict[str, Any]) -> Dict[str, Any]:
     return out
 
 
-def _run_templated_query(
-    df: DataFrame, spark, domain, query: str, kwargs: Dict[str, Any]
-) -> tuple:
-    """Render + run user SQL against the batch; returns (rows, rendered).
-
-    The collect is bounded (``limit(cap + 1)`` rides inside the job):
-    query expectations are assertions over small result sets, and a
-    user query returning table-sized output must fail clearly rather
-    than OOM the driver."""
-    view = _unique_view_name()
-    _apply_domain(df, domain).createOrReplaceTempView(view)
-    try:
-        rendered = query.format(
-            batch=view, active_batch=view, **_query_template_kwargs(kwargs)
-        )
-        rows = spark.sql(rendered).limit(QUERY_RESULT_COLLECT_CAP + 1).collect()
-    finally:
-        spark.catalog.dropTempView(view)
-    if len(rows) > QUERY_RESULT_COLLECT_CAP:
-        raise ValueError(
-            f"query returned more than {QUERY_RESULT_COLLECT_CAP} rows; "
-            "query expectations assert over small result sets — aggregate "
-            "in the SQL itself"
-        )
-    return rows, rendered
-
-
-# --- grouped user-SQL (validate_by_partition scale hook) -----------------
+# --- user-SQL execution --------------------------------------------------
 # Opaque SQL can't be restructured into one grouped aggregation, but it
-# CAN be batched: render the template once per partition (each against a
-# partition-filtered temp view), tag each rendered query with its
-# partition literal, UNION ALL a chunk of them, and submit ONE Spark job
-# per chunk.  Semantics are bit-identical to the per-partition run —
-# same SQL, same view shape — while the O(partitions) scheduling term
-# drops to O(partitions / chunk).  With a partition-pruned source each
-# branch scans only its own files, so a chunk's total I/O equals the
-# per-partition total; AQE schedules the branches concurrently inside
-# the job.
+# CAN be batched: render the template once per group (each against a
+# group-filtered temp view), tag each rendered query with its group key
+# literals, UNION ALL a chunk of them, and submit ONE Spark job per
+# chunk.  Semantics are those of a per-group run — same SQL, same view
+# shape — while the O(groups) scheduling term drops to O(groups / chunk).
+# With a partition-pruned source each branch scans only its own files,
+# so a chunk's total I/O equals the per-partition total; AQE schedules
+# the branches concurrently inside the job.  Without a group prefix the
+# one branch runs over the whole (domain-scoped) batch.
 
 QUERY_GROUPED_PARTITIONS_PER_JOB = 64
 QUERY_GROUPED_PARTITION_CAP = 1_000_000
@@ -459,71 +426,84 @@ def _sql_literal(value: Any) -> str:
     return f"'{escaped}'"
 
 
-def _grouped_query_rows(
+def _query_rows(
     df: DataFrame,
     spark,
     domain: Optional[Column],
-    partition_column: str,
+    group_by: Sequence[str],
     query: str,
     kwargs: Dict[str, Any],
     count_only: bool = False,
     per_branch_limit: Optional[int] = None,
-) -> Dict[Any, List[Any]]:
-    """Run a user-SQL template against EVERY partition in
-    O(partitions / chunk) jobs; returns {partition_value: result rows}.
+) -> Dict[tuple, Any]:
+    """Run a user-SQL template against every ``group_by`` group in
+    O(groups / chunk) jobs; returns ``{group key tuple: result rows}``,
+    each row led by the ``len(group_by)`` key tags ``__gx_k<i>``.
 
-    ``count_only`` wraps each branch in COUNT(*) (exact, one row per
-    partition, unbounded-scale).  Otherwise each branch is LIMIT-capped
-    at ``per_branch_limit`` (default ``QUERY_RESULT_COLLECT_CAP + 1``) so
-    a chunk's collect is bounded by chunk x cap rows; partitions that
-    hit the cap are dropped from the mapping, which routes them to the
-    per-partition fallback and its exact error message."""
+    Every branch's collect is bounded: ``count_only`` wraps it in
+    COUNT(*) (exact, one row per group, unbounded-scale); otherwise it is
+    LIMIT-capped at ``per_branch_limit`` (default
+    ``QUERY_RESULT_COLLECT_CAP + 1``), so a chunk's collect is bounded by
+    chunk x cap rows.  Query expectations assert over small result sets:
+    a group whose query returns more than ``QUERY_RESULT_COLLECT_CAP``
+    rows maps to a ValueError instead of OOMing the driver."""
     scoped = _apply_domain(df, domain)
-    parts = [
-        r[0]
-        for r in scoped.select(partition_column)
-        .distinct()
-        .limit(QUERY_GROUPED_PARTITION_CAP + 1)
-        .collect()
-    ]
-    if len(parts) > QUERY_GROUPED_PARTITION_CAP:
-        raise ValueError(
-            f"partition cardinality of {partition_column} exceeds "
-            f"{QUERY_GROUPED_PARTITION_CAP}"
-        )
-    parts.sort(key=str)
+    keys: List[tuple] = [()]
+    if group_by:
+        keys = [
+            group_key(r, group_by)
+            for r in scoped.select(*group_by)
+            .distinct()
+            .limit(QUERY_GROUPED_PARTITION_CAP + 1)
+            .collect()
+        ]
+        if len(keys) > QUERY_GROUPED_PARTITION_CAP:
+            raise ValueError(
+                f"partition cardinality of {list(group_by)} exceeds "
+                f"{QUERY_GROUPED_PARTITION_CAP}"
+            )
+        keys.sort(key=str)
     cap = (
         QUERY_RESULT_COLLECT_CAP + 1
         if per_branch_limit is None
         else per_branch_limit
     )
     tmpl = _query_template_kwargs(kwargs)
-    out: Dict[Any, List[Any]] = {}
-    pcol = f"`{partition_column}`"
-    for start in range(0, len(parts), QUERY_GROUPED_PARTITIONS_PER_JOB):
-        chunk = parts[start : start + QUERY_GROUPED_PARTITIONS_PER_JOB]
+    out: Dict[tuple, Any] = {}
+    for start in range(0, len(keys), QUERY_GROUPED_PARTITIONS_PER_JOB):
+        chunk = keys[start : start + QUERY_GROUPED_PARTITIONS_PER_JOB]
         views: List[str] = []
         branches: List[str] = []
         try:
-            for value in chunk:
-                lit = _sql_literal(value)
-                view = _unique_view_name()
-                cond = (
-                    f"{pcol} IS NULL" if value is None else f"{pcol} <=> {lit}"
+            for key in chunk:
+                lits = [_sql_literal(v) for v in key]
+                tags = "".join(
+                    f"{lit} AS __gx_k{i}, " for i, lit in enumerate(lits)
                 )
-                scoped.filter(cond).createOrReplaceTempView(view)
+                cond = " AND ".join(
+                    f"`{g}` IS NULL" if v is None else f"`{g}` <=> {lit}"
+                    for g, v, lit in zip(group_by, key, lits)
+                )
+                # per-invocation view name: validations may run
+                # concurrently on one SparkSession (callers' threads, the
+                # planner's job pool), and a shared name would let one
+                # batch's query silently read another's
+                view = _unique_view_name()
+                (scoped.filter(cond) if cond else scoped).createOrReplaceTempView(
+                    view
+                )
                 views.append(view)
                 rendered = query.format(
                     batch=view, active_batch=view, **tmpl
                 )
                 if count_only:
                     branches.append(
-                        f"SELECT {lit} AS __gx_part, COUNT(*) AS __gx_n "
+                        f"SELECT {tags}COUNT(*) AS __gx_n "
                         f"FROM ({rendered}) AS __gx_q"
                     )
                 else:
                     branches.append(
-                        f"SELECT {lit} AS __gx_part, __gx_q.* FROM ("
+                        f"SELECT {tags}__gx_q.* FROM ("
                         f"SELECT * FROM ({rendered}) AS __gx_i LIMIT {cap}"
                         f") AS __gx_q"
                     )
@@ -534,17 +514,21 @@ def _grouped_query_rows(
         finally:
             for view in views:
                 spark.catalog.dropTempView(view)
-        by_part: Dict[Any, List[Any]] = {value: [] for value in chunk}
+        by_key: Dict[tuple, List[Any]] = {key: [] for key in chunk}
         for r in rows:
-            tag = r["__gx_part"]
-            if tag in by_part:
-                by_part[tag].append(r)
-            # a tag that fails to round-trip to its partition value would
-            # leave that partition absent -> per-partition fallback
-        for value, prows in by_part.items():
-            if not count_only and len(prows) >= cap:
-                continue  # over cap -> per-partition fallback
-            out[value] = prows
+            tag = tuple(r[f"__gx_k{i}"] for i in range(len(group_by)))
+            if tag in by_key:
+                by_key[tag].append(r)
+        for key, krows in by_key.items():
+            out[key] = (
+                ValueError(
+                    f"query returned more than {QUERY_RESULT_COLLECT_CAP} "
+                    "rows; query expectations assert over small result "
+                    "sets — aggregate in the SQL itself"
+                )
+                if len(krows) > QUERY_RESULT_COLLECT_CAP
+                else krows
+            )
     return out
 
 
@@ -556,42 +540,29 @@ def _query_no_rows(kwargs: Dict[str, Any]) -> CompiledJob:
     query = kwargs["query"]
     max_rows = int(kwargs.get("max_unexpected_rows", 0))
 
-    def _vout(rows: List[Any], rendered: str) -> Dict[str, Any]:
-        sample = []
-        for r in rows[:20]:
-            d = r.asDict() if hasattr(r, "asDict") else dict(r)
-            d.pop("__gx_part", None)
-            sample.append(d)
-        return {
-            "success": len(rows) <= max_rows,
-            "result": {
-                "observed_value": len(rows),
-                "unexpected_count": len(rows),
-                "partial_unexpected_list": sample,
-                "details": {"query": rendered},
-            },
-        }
+    def evaluate(df: DataFrame, spark, domain, group_by, result_format):
+        def vout(rows: List[Any]) -> Dict[str, Any]:
+            sample = []
+            for r in rows[:20]:
+                d = r.asDict()
+                for i in range(len(group_by)):
+                    d.pop(f"__gx_k{i}", None)
+                sample.append(d)
+            return {
+                "success": len(rows) <= max_rows,
+                "result": {
+                    "observed_value": len(rows),
+                    "unexpected_count": len(rows),
+                    "partial_unexpected_list": sample,
+                    "details": {"query": query},
+                },
+            }
 
-    def run(df: DataFrame, spark, domain) -> Dict[str, Any]:
-        rows, rendered = _run_templated_query(df, spark, domain, query, kwargs)
-        return _vout(rows, rendered)
-
-    def grouped(
-        df: DataFrame, spark, domain, partition_column: str
-    ) -> Dict[Any, Dict[str, Any]]:
-        # chunked UNION ALL, LIMIT-capped per branch; over-cap partitions
-        # fall back per-partition and raise the exact single-run error
-        by_part = _grouped_query_rows(
-            df, spark, domain, partition_column, query, kwargs
+        return each_group(
+            _query_rows(df, spark, domain, group_by, query, kwargs), vout
         )
-        return {
-            part: _vout(
-                [r for r in rows], query
-            )
-            for part, rows in by_part.items()
-        }
 
-    return CompiledJob(run=run, grouped=grouped)
+    return CompiledJob(evaluate=evaluate)
 
 
 @register_query_job("expect_query_value_to_be_between")
@@ -601,50 +572,35 @@ def _query_value_between(kwargs: Dict[str, Any]) -> CompiledJob:
     query-metric shapes via the shared template renderer."""
     query = kwargs["query"]
 
-    def run(df: DataFrame, spark, domain) -> Dict[str, Any]:
-        rows, rendered = _run_templated_query(df, spark, domain, query, kwargs)
-        if len(rows) != 1 or len(rows[0]) < 1:
-            raise ValueError(
-                f"expected exactly one scalar result row, got {len(rows)} "
-                "rows"
-            )
-        observed = rows[0][0]
-        out = validate_metric_value_between(
-            observed,
-            kwargs.get("min_value"),
-            kwargs.get("max_value"),
-            bool(kwargs.get("strict_min", False)),
-            bool(kwargs.get("strict_max", False)),
-        )
-        out["result"]["details"] = {"query": rendered}
-        return out
+    def evaluate(df: DataFrame, spark, domain, group_by, result_format):
+        offset = len(group_by)  # leading group key tags
 
-    def grouped(
-        df: DataFrame, spark, domain, partition_column: str
-    ) -> Dict[Any, Dict[str, Any]]:
-        # one scalar per partition via chunked UNION ALL; partitions whose
-        # query returns != 1 row are omitted -> per-partition fallback
-        # raises the exact "expected exactly one scalar" error
-        by_part = _grouped_query_rows(
-            df, spark, domain, partition_column, query, kwargs,
-            per_branch_limit=2,
-        )
-        out: Dict[Any, Dict[str, Any]] = {}
-        for part, rows in by_part.items():
-            if len(rows) != 1 or len(rows[0]) < 2:
-                continue
-            vout = validate_metric_value_between(
-                rows[0][1],  # index 0 is the __gx_part tag
+        def judge(rows: List[Any]) -> Dict[str, Any]:
+            if len(rows) != 1 or len(rows[0]) <= offset:
+                raise ValueError(
+                    "expected exactly one scalar result row, got "
+                    + ("more than one" if rows else "no rows")
+                )
+            out = validate_metric_value_between(
+                rows[0][offset],
                 kwargs.get("min_value"),
                 kwargs.get("max_value"),
                 bool(kwargs.get("strict_min", False)),
                 bool(kwargs.get("strict_max", False)),
             )
-            vout["result"]["details"] = {"query": query}
-            out[part] = vout
-        return out
+            out["result"]["details"] = {"query": query}
+            return out
 
-    return CompiledJob(run=run, grouped=grouped)
+        # two rows per branch are enough to tell "not exactly one"
+        return each_group(
+            _query_rows(
+                df, spark, domain, group_by, query, kwargs,
+                per_branch_limit=2,
+            ),
+            judge,
+        )
+
+    return CompiledJob(evaluate=evaluate)
 
 
 @register_query_job("expect_queried_column_value_frequency_to_meet_threshold")
@@ -662,38 +618,28 @@ def _queried_value_frequency(kwargs: Dict[str, Any]) -> CompiledJob:
         "FROM {active_batch} GROUP BY {col}"
     )
 
-    def _vout(rows: List[Any], rendered: str, offset: int = 0) -> Dict[str, Any]:
-        frequency = 0.0
-        for r in rows:
-            if r[offset] == value:
-                frequency = float(r[offset + 1])
-                break
-        return {
-            "success": frequency >= threshold,
-            "result": {
-                "observed_value": frequency,
-                "details": {"value": value, "query": rendered},
-            },
-        }
+    def evaluate(df: DataFrame, spark, domain, group_by, result_format):
+        offset = len(group_by)  # leading group key tags
 
-    def run(df: DataFrame, spark, domain) -> Dict[str, Any]:
-        rows, rendered = _run_templated_query(df, spark, domain, query, kwargs)
-        return _vout(rows, rendered)
+        def vout(rows: List[Any]) -> Dict[str, Any]:
+            frequency = 0.0
+            for r in rows:
+                if r[offset] == value:
+                    frequency = float(r[offset + 1])
+                    break
+            return {
+                "success": frequency >= threshold,
+                "result": {
+                    "observed_value": frequency,
+                    "details": {"value": value, "query": query},
+                },
+            }
 
-    def grouped(
-        df: DataFrame, spark, domain, partition_column: str
-    ) -> Dict[Any, Dict[str, Any]]:
-        # per-partition (value, frequency) rows via chunked UNION ALL;
-        # column 0 is the __gx_part tag, so the lookup shifts by one
-        by_part = _grouped_query_rows(
-            df, spark, domain, partition_column, query, kwargs
+        return each_group(
+            _query_rows(df, spark, domain, group_by, query, kwargs), vout
         )
-        return {
-            part: _vout(rows, query, offset=1)
-            for part, rows in by_part.items()
-        }
 
-    return CompiledJob(run=run, grouped=grouped)
+    return CompiledJob(evaluate=evaluate)
 
 
 # --- referential integrity (north rule; the reference can only express
@@ -780,150 +726,81 @@ def _exists_in_other_table(kwargs: Dict[str, Any]) -> CompiledJob:
                 break
         return vals
 
-    def run(
-        df: DataFrame,
-        spark,
-        domain,
-        result_format: Optional[dict] = None,
-    ) -> Dict[str, Any]:
-        result_format = parse_result_format(result_format or "BASIC")
-        scoped = _apply_domain(df, domain)
-        keys, small = _keys_side(spark)
-        use_agg = strategy == "aggregate" or (
-            strategy == "auto" and not small
-        )
-        base = scoped.filter(F.col(column).isNotNull())
-        counts = scoped.agg(
-            F.count(F.lit(1)).alias("element_count"),
-            F.count(F.col(column)).alias("nonnull_count"),
-        ).first()
-        unexpected_list: List[Any] = []
-        if use_agg:
-            fk = distinct_key_counts(base, column)
-            missing_keys = fk.join(keys, "__gx_key", "left_anti")
-            row = missing_keys.agg(
-                F.coalesce(F.sum("__gx_cnt"), F.lit(0)).alias("u")
-            ).first()
-            unexpected_count = int(row["u"])
-            if (
-                unexpected_count
-                and result_format["result_format"] != "BOOLEAN_ONLY"
-            ):
-                limit = (
-                    unexpected_count
-                    if result_format["result_format"] == "COMPLETE"
-                    else result_format["partial_unexpected_count"]
-                )
-                unexpected_list = _expand_partial(
-                    missing_keys.select("__gx_key", "__gx_cnt")
-                    .limit(limit)
-                    .collect(),
-                    limit,
-                )
-            return format_map_output(
-                result_format,
-                success=map_expectation_success(
-                    int(counts["element_count"]),
-                    int(counts["nonnull_count"]),
-                    unexpected_count,
-                    mostly,
-                ),
-                element_count=int(counts["element_count"]),
-                nonnull_count=int(counts["nonnull_count"]),
-                unexpected_count=unexpected_count,
-                unexpected_list=unexpected_list,
-            )
-        missing = base.join(
-            keys, base[column] == keys["__gx_key"], "left_anti"
-        )
-        unexpected_count = missing.count()
-        if (
-            unexpected_count
-            and result_format["result_format"] != "BOOLEAN_ONLY"
-        ):
-            limit = (
-                unexpected_count
-                if result_format["result_format"] == "COMPLETE"
-                else result_format["partial_unexpected_count"]
-            )
-            unexpected_list = [
-                r[column]
-                for r in missing.select(column).limit(limit).collect()
-            ]
-        element_count = int(counts["element_count"])
-        nonnull_count = int(counts["nonnull_count"])
-        success = map_expectation_success(
-            element_count, nonnull_count, unexpected_count, mostly
-        )
-        return format_map_output(
-            result_format,
-            success=success,
-            element_count=element_count,
-            nonnull_count=nonnull_count,
-            unexpected_count=unexpected_count,
-            unexpected_list=unexpected_list,
-        )
-
-    def grouped(
-        df: DataFrame, spark, domain, partition_column: str
-    ) -> Dict[Any, Dict[str, Any]]:
-        """All partitions in TWO jobs: one grouped count pass, one grouped
-        anti-join — job count is independent of partition count.  Under
-        ``strategy='aggregate'`` (or auto without a broadcast) the
-        anti-join shuffles distinct ``(partition, key, count)`` triples
-        instead of fact rows, same as the ungrouped path."""
-        result_format = parse_result_format("BASIC")
+    def evaluate(df: DataFrame, spark, domain, group_by, result_format):
+        """Every group in at most three jobs: one count pass, one
+        anti-join count and — when there are violations and the format
+        takes samples — one top-k (``window_ops.top_k``) of each group's
+        smallest missing keys.  Under ``strategy='aggregate'`` (or auto
+        without a broadcast) the anti-join shuffles distinct ``(group,
+        key, count)`` triples instead of fact rows."""
         scoped = _apply_domain(df, domain)
         keys, small = _keys_side(spark)
         use_agg = strategy == "aggregate" or (
             strategy == "auto" and not small
         )
         counts = {
-            r[partition_column]: r
-            for r in scoped.groupBy(partition_column).agg(
+            group_key(r, group_by): r
+            for r in scoped.groupBy(*group_by)
+            .agg(
                 F.count(F.lit(1)).alias("element_count"),
                 F.count(F.col(column)).alias("nonnull_count"),
-            ).collect()
+            )
+            .collect()
         }
         base = scoped.filter(F.col(column).isNotNull())
+        # missing (group, key, row count) — one row per distinct key on
+        # the aggregate path, one per fact row on the join path
         if use_agg:
-            fk = distinct_key_counts(base, column, [partition_column])
-            missing = {
-                r[partition_column]: int(r["u"])
-                for r in fk.join(keys, "__gx_key", "left_anti")
-                .groupBy(partition_column)
-                .agg(F.sum("__gx_cnt").alias("u"))
-                .collect()
-            }
+            missing = distinct_key_counts(base, column, list(group_by)).join(
+                keys, "__gx_key", "left_anti"
+            )
         else:
-            missing = {
-                r[partition_column]: int(r["u"])
-                for r in base.join(
-                    keys, base[column] == keys["__gx_key"], "left_anti"
-                )
-                .groupBy(partition_column)
-                .agg(F.count(F.lit(1)).alias("u"))
-                .collect()
-            }
-        out: Dict[Any, Dict[str, Any]] = {}
-        for part, row in counts.items():
+            missing = base.join(
+                keys, base[column] == keys["__gx_key"], "left_anti"
+            ).select(
+                *group_by,
+                F.col(column).alias("__gx_key"),
+                F.lit(1).alias("__gx_cnt"),
+            )
+        unexpected = {
+            group_key(r, group_by): int(r["u"])
+            for r in missing.groupBy(*group_by)
+            .agg(F.coalesce(F.sum("__gx_cnt"), F.lit(0)).alias("u"))
+            .collect()
+        }
+        limit = 0
+        samples: Dict[tuple, List[Dict[str, Any]]] = {}
+        if any(unexpected.values()) and (
+            result_format["result_format"] != "BOOLEAN_ONLY"
+        ):
+            limit = (
+                max(unexpected.values())
+                if result_format["result_format"] == "COMPLETE"
+                else result_format["partial_unexpected_count"]
+            )
+            samples = top_k(
+                missing.select(*group_by, "__gx_key", "__gx_cnt"),
+                group_by,
+                limit,
+            )
+        out: Dict[tuple, Any] = {}
+        for key, row in counts.items():
             element_count = int(row["element_count"])
             nonnull_count = int(row["nonnull_count"])
-            unexpected_count = missing.get(part, 0)
-            success = map_expectation_success(
-                element_count, nonnull_count, unexpected_count, mostly
-            )
-            out[part] = format_map_output(
+            unexpected_count = unexpected.get(key, 0)
+            out[key] = format_map_output(
                 result_format,
-                success=success,
+                success=map_expectation_success(
+                    element_count, nonnull_count, unexpected_count, mostly
+                ),
                 element_count=element_count,
                 nonnull_count=nonnull_count,
                 unexpected_count=unexpected_count,
-                unexpected_list=[],
+                unexpected_list=_expand_partial(samples.get(key, []), limit),
             )
         return out
 
-    return CompiledJob(run=run, grouped=grouped)
+    return CompiledJob(evaluate=evaluate)
 
 
 @register_query_job("expect_column_distribution_to_match_sketched_history")
@@ -984,22 +861,16 @@ def _match_sketched_history(kwargs: Dict[str, Any]) -> CompiledJob:
             },
         }
 
-    def run(df: DataFrame, spark, domain) -> Dict[str, Any]:
-        return _judge(
-            _store().drift_vs_history(_apply_domain(df, domain), column)
+    def evaluate(df: DataFrame, spark, domain, group_by, result_format):
+        # every group binned in ONE job against the shared history
+        return each_group(
+            _store().drift_vs_history(
+                _apply_domain(df, domain), column, group_by
+            ),
+            _judge,
         )
 
-    def grouped(
-        df: DataFrame, spark, domain, partition_column: str
-    ) -> Dict[Any, Dict[str, Any]]:
-        """Every partition's drift vs the shared history in ONE grouped
-        binning job (validate_by_partition's O(1)-jobs contract)."""
-        per_part = _store().drift_vs_history_by_group(
-            _apply_domain(df, domain), partition_column, column
-        )
-        return {part: _judge(out) for part, out in per_part.items()}
-
-    return CompiledJob(run=run, grouped=grouped)
+    return CompiledJob(evaluate=evaluate)
 
 
 @register_query_job("expect_corpus_substring_duplication_to_be_less_than")
@@ -1014,18 +885,22 @@ def _substring_duplication(kwargs: Dict[str, Any]) -> CompiledJob:
     one ``functions.dedup.repeated_spans`` pass (see its docstring for
     the 10^12-token plan shape).  Without ``id_column`` each row is its
     own document via ``monotonically_increasing_id`` — valid because
-    ``keep='none'`` span semantics don't depend on id values."""
+    ``keep='none'`` span semantics don't depend on id values.
+
+    The only job expectation whose jobs grow with the group count: a
+    span's repetition is counted over the whole corpus, so each group
+    (each partition, under ``validate_by_partition``) is measured as its
+    own corpus, two jobs per group."""
     column = kwargs.get("column", "text")
     id_column = kwargs.get("id_column")
     n = int(kwargs.get("n", 50))
     min_count = int(kwargs.get("min_count", 2))
     threshold = float(kwargs["threshold"])
 
-    def run(df: DataFrame, spark, domain) -> Dict[str, Any]:
+    def measure(scoped: DataFrame) -> Dict[str, Any]:
         from great_expectations_spark.functions.dedup import repeated_spans
         from great_expectations_spark.functions.text import normalize_text
 
-        scoped = _apply_domain(df, domain)
         if id_column is not None:
             d, did = scoped.select(id_column, column), id_column
         else:
@@ -1067,7 +942,24 @@ def _substring_duplication(kwargs: Dict[str, Any]) -> CompiledJob:
             },
         }
 
-    return CompiledJob(run=run)
+    def evaluate(df: DataFrame, spark, domain, group_by, result_format):
+        scoped = _apply_domain(df, domain)
+        keys = [()]
+        if group_by:
+            keys = [
+                group_key(r, group_by)
+                for r in scoped.select(*group_by).distinct().collect()
+            ]
+        return each_group(
+            {key: key for key in keys},
+            lambda key: measure(
+                scoped.filter(group_filter(group_by, [key]))
+                if group_by
+                else scoped
+            ),
+        )
+
+    return CompiledJob(evaluate=evaluate)
 
 
 def _estimate_small(df: DataFrame, threshold_rows: int = 5_000_000) -> bool:

@@ -12,7 +12,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as sparktypes
 
-from great_expectations_spark.plans.specs import CompiledJob, CompiledSchemaCheck
+from great_expectations_spark.plans.specs import (
+    CompiledJob,
+    CompiledSchemaCheck,
+    group_key,
+)
 
 SCHEMA_COMPILERS: Dict[str, Callable[[Dict[str, Any]], CompiledSchemaCheck]] = {}
 JOB_COMPILERS: Dict[str, Callable[[Dict[str, Any]], CompiledJob]] = {}
@@ -242,21 +246,24 @@ def _row_count_equal_other(kwargs: Dict[str, Any]) -> CompiledJob:
     if other is None:
         raise ValueError("other_table (DataFrame or table name) is required")
 
-    def run(df: DataFrame, spark, domain) -> Dict[str, Any]:
+    def evaluate(df: DataFrame, spark, domain, group_by, result_format):
+        # every group's row count in one job, the other table's in one
         other_df = other if isinstance(other, DataFrame) else spark.table(other)
-        self_count = df.count()
         other_count = other_df.count()
         return {
-            "success": self_count == other_count,
-            "result": {
-                "observed_value": {
-                    "self": self_count,
-                    "other": other_count,
-                }
-            },
+            group_key(r, group_by): {
+                "success": r["count"] == other_count,
+                "result": {
+                    "observed_value": {
+                        "self": r["count"],
+                        "other": other_count,
+                    }
+                },
+            }
+            for r in df.groupBy(*group_by).count().collect()
         }
 
-    return CompiledJob(run=run)
+    return CompiledJob(evaluate=evaluate)
 
 
 def table_head(

@@ -30,14 +30,16 @@ Physical plan of ``validate(df, suite)``:
     partitioned by ``[*group_by, *partition_by]``.  Set windows
     (uniqueness, join-strategy contiguity) run one two-phase hash
     aggregation each, grouped by ``[*group_by, *keys]``.
-  Phase C: job expectations (user SQL, referential joins, drift).  A
-    grouped call runs each expectation's ``grouped`` hook — one job for
-    every partition; without one, assembly runs the ungrouped ``run`` on
-    the partition's slice.
+  Phase C: job expectations (user SQL, referential joins, drift).  Each
+    has ONE evaluator, ``CompiledJob.evaluate``, called with the same
+    group prefix: its ``groupBy(*group_by, ...)`` jobs serve every group
+    at once.  Only a group the evaluator's own filters leave without rows
+    has no output there; assembly evaluates it on the group's slice with
+    an empty prefix.  Referential and z-score samples are JVM top-k
+    samples (``window_ops.top_k``), like phase D's.
   Phase A': aggregates over a ``row_condition`` domain run one filtered
     ``groupBy(*group_by).agg`` job each; aggregate followups run after
-    phase A (a grouped call uses the ``grouped_followup`` hook, one job
-    for every partition).
+    phase A, one job for every group.
   Phase D: violation samples, whenever result_format > BOOLEAN_ONLY,
     grouped or not.  Every sample is a JVM top-k
     (``window_ops.top_k``): ``row_number() over (partition by
@@ -81,7 +83,6 @@ from __future__ import annotations
 
 import datetime
 import functools
-import inspect
 import traceback
 import uuid
 from concurrent.futures import ThreadPoolExecutor
@@ -483,19 +484,18 @@ class SuiteValidator:
         (always holding ``()`` for an ungrouped call): ``metrics`` maps
         phase-A/B counter aliases to values, ``prefetched`` maps
         ``id(item)`` to what a wave computed for the item — a job's
-        output, an aggregate's values (or the Exception its grouped
-        followup raised for that group), a violation sample.  A call that
-        fails as a whole marks ``item.error``, which assembly replays in
-        suite order with unchanged exception semantics.  Every format
-        but BOOLEAN_ONLY takes violation samples, grouped or not, with
-        the same top-k jobs, so a group's samples are the rows a
-        ``validate`` of that group's slice returns.  A grouped call
-        (non-empty ``group_by``) leaves to assembly every job expectation
-        or aggregate followup without a grouped hook, and every group a
-        grouped mapping lacks: each job or aggregate without a
-        ``prefetched`` value there.  Pool tasks inherit the caller's
-        Spark local properties, so a job group set by the caller covers
-        every job of the call.
+        output, an aggregate's values (or the Exception its followup
+        mapped that group to), a violation sample; a group whose
+        evaluation failed holds the Exception.  A call that fails as a
+        whole marks ``item.error``, which assembly replays in suite order
+        with unchanged exception semantics.  Every format but
+        BOOLEAN_ONLY takes violation samples, grouped or not, with the
+        same top-k jobs, so a group's samples are the rows a ``validate``
+        of that group's slice returns.  A group that a job's or a
+        domain-scoped aggregate's filters leave without rows has no
+        ``prefetched`` value for it; assembly evaluates it on the group's
+        slice.  Pool tasks inherit the caller's Spark local properties,
+        so a job group set by the caller covers every job of the call.
         """
 
         def guarded(fn, *a):
@@ -505,6 +505,7 @@ class SuiteValidator:
                 return exc
 
         session = df.sparkSession
+        spark = self._spark or session
 
         def submit(fn, *a):
             # a pool thread runs its Spark jobs under the caller's local
@@ -537,13 +538,12 @@ class SuiteValidator:
             )
             futs = [
                 (item, submit(
-                    guarded, self._run_job_item, item.compiled, df,
-                    item.domain, rf, group_by,
+                    guarded, item.compiled.evaluate, df, spark,
+                    item.domain, group_by, rf,
                 ))
                 for item in items
                 if item.error is None
                 and isinstance(item.compiled, CompiledJob)
-                and (not group_by or item.compiled.grouped is not None)
             ]
 
             # phase A/B gates: bundled-agg and window failures propagate
@@ -557,21 +557,12 @@ class SuiteValidator:
                 metrics.setdefault(key, {}).update(counts)
 
             for item in items:
-                c = item.compiled
-                if (
-                    item.error is None
-                    and isinstance(c, CompiledAggregate)
-                    # grouped, a followup without a grouped hook runs on
-                    # each partition's slice at assembly
-                    and (
-                        not group_by
-                        or c.followup is None
-                        or c.grouped_followup is not None
-                    )
+                if item.error is None and isinstance(
+                    item.compiled, CompiledAggregate
                 ):
                     futs.append((item, submit(
-                        guarded, self._aggregate_values, item, c, df,
-                        metrics, group_by,
+                        guarded, self._aggregate_values, item, item.compiled,
+                        df, metrics, group_by,
                     )))
             fut_samples = None
             if rf["result_format"] != "BOOLEAN_ONLY":
@@ -616,28 +607,6 @@ class SuiteValidator:
                     prefetched.setdefault(key, {}).update(samples)
         return metrics, prefetched
 
-    def _run_job_item(
-        self,
-        c: CompiledJob,
-        df: DataFrame,
-        domain: Optional[Column],
-        rf: dict,
-        group_by: Sequence[str] = (),
-    ) -> Dict[tuple, Dict[str, Any]]:
-        """A job expectation's output per group key: ``run`` for the whole
-        ``df``, or the ``grouped`` hook for every partition of the one
-        ``group_by`` column at once."""
-        spark = self._spark or df.sparkSession
-        if group_by:
-            (column,) = group_by
-            return {
-                (part,): out
-                for part, out in c.grouped(df, spark, domain, column).items()
-            }
-        if "result_format" in inspect.signature(c.run).parameters:
-            return {(): c.run(df, spark, domain, result_format=rf)}
-        return {(): c.run(df, spark, domain)}
-
     def _aggregate_values(
         self,
         item: _PlannedItem,
@@ -649,8 +618,8 @@ class SuiteValidator:
         """An aggregate's metric values per group key, from the phase-A
         ``metrics`` or — for a ``row_condition`` domain — from one
         dedicated filtered ``groupBy(*group_by).agg`` job, then extended by
-        its followup.  A grouped followup may map a group to an Exception
-        (e.g. over the collect cap) instead of values."""
+        its followup, which may map a group to an Exception (e.g. over
+        the collect cap) instead of values."""
         if item.domain is not None:
             scoped = df.filter(domain_gate(item.domain))
             aliases = {k: f"a{i}" for i, k in enumerate(c.agg_exprs)}
@@ -671,16 +640,10 @@ class SuiteValidator:
                 key: {k: m.get(alias) for k, alias in item.agg_aliases.items()}
                 for key, m in metrics.items()
             }
-        if not group_by:
-            if c.followup is not None:
-                values[()].update(c.followup(scoped, values[()]))
-        elif c.grouped_followup is not None:
-            (column,) = group_by
-            extra = c.grouped_followup(
-                scoped, column, {key[0]: v for key, v in values.items()}
-            )
+        if c.followup is not None:
+            extra = c.followup(scoped, group_by, values)
             for key in values:
-                more = extra.get(key[0])
+                more = extra.get(key)
                 if isinstance(more, Exception):
                     values[key] = more
                 else:
@@ -721,7 +684,7 @@ class SuiteValidator:
         """Fault isolation: a missing column must fail ONE expectation, not
         poison the shared bundled agg (reference parity: per-expectation
         exception_info, validator.py:1227-1261)."""
-        available = set(table_ops.flattened_column_types(df.schema))
+        types = table_ops.flattened_column_types(df.schema)
         for item in items:
             c = item.compiled
             if item.error is not None or c is None:
@@ -732,41 +695,27 @@ class SuiteValidator:
             elif isinstance(c, CompiledAggregate):
                 col = item.config.kwargs.get("column")
                 referenced = [col] if col else []
-            missing = [col for col in referenced if col not in available]
+            missing = [col for col in referenced if col not in types]
             if missing:
                 item.error = KeyError(
                     f"column(s) {missing} not found in batch; available: "
-                    f"{sorted(available)}"
+                    f"{sorted(types)}"
                 )
                 continue
             checker = getattr(c, "type_check", None)
-            if checker is not None and referenced:
-                from great_expectations_spark.operators.table_ops import (
-                    flattened_column_types,
-                )
-
-                types = flattened_column_types(df.schema)
-                try:
-                    for col in referenced:
-                        checker(types[col])
-                except Exception as exc:  # noqa: BLE001
-                    item.error = exc
-                    continue
             required = getattr(c, "required_column_types", None)
-            if required and referenced:
-                from great_expectations_spark.operators.table_ops import (
-                    flattened_column_types,
-                )
-
-                types = flattened_column_types(df.schema)
-                for col in referenced:
+            try:
+                for col in referenced if checker is not None else ():
+                    checker(types[col])
+                for col in referenced if required else ():
                     if not isinstance(types[col], required):
-                        item.error = TypeError(
+                        raise TypeError(
                             f"{item.config.expectation_type} requires column "
-                            f"type {required}, got {type(types[col]).__name__} "
-                            f"for {col!r}"
+                            f"type {required}, got "
+                            f"{type(types[col]).__name__} for {col!r}"
                         )
-                        break
+            except Exception as exc:  # noqa: BLE001 — that item's EVR
+                item.error = exc
 
     def _run_bundled_phase_isolating(
         self,
@@ -1101,10 +1050,10 @@ class SuiteValidator:
     ) -> ExpectationValidationResult:
         """One expectation's result from one group's phase counters and
         prefetched values.  A job expectation or aggregate with nothing
-        prefetched runs its ungrouped call on ``df`` here
-        (``_reads_rows``), so ``df`` must then be the group's rows (a
-        partition's slice for ``validate_by_partition``); otherwise only
-        its schema is read."""
+        prefetched (its filters left the group without rows) is
+        evaluated on ``df`` here with an empty prefix (``_reads_rows``),
+        so ``df`` must then be the group's rows (a partition's slice for
+        ``validate_by_partition``); otherwise only its schema is read."""
         config_dict = item.config.to_json_dict()
         if item.error is not None:
             # reference contract: with catch_exceptions off, a marked
@@ -1136,7 +1085,12 @@ class SuiteValidator:
             if isinstance(c, CompiledJob):
                 out = pre
                 if out is None:
-                    out = self._run_job_item(c, df, item.domain, rf)[()]
+                    out = c.evaluate(
+                        df, self._spark or df.sparkSession, item.domain, (),
+                        rf,
+                    )[()]
+                    if isinstance(out, Exception):
+                        raise out
                 result = out.get("result", {})
                 if "result" not in out and "success" in out:
                     result = {
@@ -1293,6 +1247,8 @@ class SuiteValidator:
             if prefetched_values is not None
             else self._aggregate_values(item, c, df, {(): metrics})[()]
         )
+        if isinstance(values, Exception):
+            raise values
         out = c.validate(values)
         return ExpectationValidationResult(
             success=bool(out["success"]),

@@ -3,9 +3,10 @@
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any, Callable, Dict, List, Optional, Sequence
+from typing import Any, Callable, Dict, Iterable, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
 @dataclass
@@ -92,31 +93,25 @@ class CompiledAggregate:
     ``agg_exprs`` maps metric-key -> aggregate Column (joins the bundled
     agg; the planner dedups identical keys across expectations).
     ``validate(metric_values)`` -> {'success': bool, 'result': {...}}.
-    ``needs_prepass`` metric keys must be resolved before the main bundle
-    (e.g. z-score needs mean/std scalars first).
-    ``followup(df, values)`` — optional second tiny job that runs AFTER the
-    bundled agg, given the (domain-scoped) DataFrame and the phase-A metric
-    values; returns extra metric values merged before ``validate``.  Used
-    to gate unbounded collects (e.g. ``collect_set``) behind a phase-A
-    cardinality check so the guard fires BEFORE any heavy aggregation.
-    ``grouped_followup(df, partition_column, values_by_partition)`` —
-    optional scale hook for ``validate_by_partition``: the followup for
-    ALL partitions in O(1) Spark jobs, given each partition's phase-A
-    values; returns {partition: extra-values-dict-or-Exception} (an
-    Exception marks that partition's expectation failed-with-error, e.g.
-    over the collect cap, without poisoning the others).  Without it the
-    runner falls back to one partition-filtered ``followup`` job per
-    partition.
+    ``followup(df, group_by, values_by_group)`` — optional second tiny
+    job that runs AFTER the bundled agg, given the (domain-scoped)
+    DataFrame, the group prefix (``()`` for ``validate``) and each
+    group's phase-A metric values; returns ``{group key tuple: extra
+    values or Exception}``, merged before ``validate``.  One job covers
+    every group, and an Exception fails that group's expectation alone.
+    Used to gate unbounded collects (e.g. ``collect_set``) behind a
+    phase-A cardinality check so the guard fires BEFORE any heavy
+    aggregation.
     """
 
     agg_exprs: Dict[str, Column]
     validate: Callable[[Dict[str, Any]], Dict[str, Any]]
     finisher_inputs: List[str] = field(default_factory=list)
     followup: Optional[
-        Callable[[DataFrame, Dict[str, Any]], Dict[str, Any]]
-    ] = None
-    grouped_followup: Optional[
-        Callable[[DataFrame, str, Dict[Any, Dict[str, Any]]], Dict[Any, Any]]
+        Callable[
+            [DataFrame, Sequence[str], Dict[tuple, Dict[str, Any]]],
+            Dict[tuple, Any],
+        ]
     ] = None
 
 
@@ -135,16 +130,79 @@ class CompiledJob:
     """An expectation that runs its own Spark job(s) (query expectations,
     referential anti-joins, KS/PSI drift two-sample checks).
 
-    ``run(df, spark, domain_cond)`` -> {'success': bool, 'result': {...}}.
-
-    ``grouped(df, spark, domain_cond, partition_column)`` — optional scale
-    hook for ``validate_by_partition``: evaluates the expectation for ALL
-    partitions in O(1) Spark jobs (one grouped aggregation / one grouped
-    anti-join instead of one job per partition) and returns
-    ``{partition_value: vout}``.  Partitions absent from the mapping fall
-    back to a per-partition ``run`` (only happens when the expectation's
-    domain filters a partition empty).
+    ONE evaluator, parameterised by a group prefix like
+    ``CompiledWindow``'s: ``evaluate(df, spark, domain, group_by,
+    result_format)`` -> ``{group key tuple: vout or Exception}``, where
+    vout is ``{'success': bool, 'result': {...}}`` and ``result_format``
+    the parsed format dict.  ``validate`` passes ``group_by=()`` and gets
+    the ``()`` key back; ``validate_by_partition`` and ``run_checkpoint``
+    pass ``[partition_column]`` and get every partition from the same
+    grouped job(s), so their job count does not grow with the partition
+    count.  A group whose evaluation fails maps to its Exception, which
+    fails that group's expectation alone.  A group whose rows the
+    evaluator's own filters (its domain, non-null values) remove has no
+    key; the planner evaluates it on the group's slice with ``()``.
     """
 
-    run: Callable[..., Dict[str, Any]]
-    grouped: Optional[Callable[..., Dict[Any, Dict[str, Any]]]] = None
+    evaluate: Callable[..., Dict[tuple, Any]]
+
+
+def group_key(row: Any, group_by: Sequence[str]) -> tuple:
+    """A collected row's group key tuple (``()`` without a prefix)."""
+    return tuple(row[g] for g in group_by)
+
+
+def rows_by_group(
+    rows: Iterable[Any], group_by: Sequence[str]
+) -> Dict[tuple, List[Any]]:
+    """Collected rows split by group key.  Without a prefix the ``()``
+    key is always there, so a whole-table evaluator answers even when
+    its filters leave no rows."""
+    out: Dict[tuple, List[Any]] = {} if group_by else {(): []}
+    for r in rows:
+        out.setdefault(group_key(r, group_by), []).append(r)
+    return out
+
+
+def each_group(
+    values: Dict[tuple, Any], fn: Callable[[Any], Any]
+) -> Dict[tuple, Any]:
+    """``fn`` applied to every group's value.  A group whose value is an
+    Exception, or whose ``fn`` raises, maps to that Exception, so one bad
+    group fails alone."""
+    out: Dict[tuple, Any] = {}
+    for key, value in values.items():
+        if isinstance(value, Exception):
+            out[key] = value
+            continue
+        try:
+            out[key] = fn(value)
+        except Exception as exc:  # noqa: BLE001 — that group's error
+            out[key] = exc
+    return out
+
+
+def null_safe_isin(column: Column, values: Sequence[Any]) -> Column:
+    """Membership that keeps a NULL value addressable (plain ``isin``
+    drops NULL) without building a per-value ``eqNullSafe`` OR-chain —
+    at the 10^5-partition design point a chained boolean tree that deep
+    stalls or overflows Catalyst's recursive transforms, while ``isin``
+    stays one In-node (and pushdown-friendly) regardless of list size."""
+    non_null = [v for v in values if v is not None]
+    cond = column.isin(non_null) if non_null else F.lit(False)
+    if any(v is None for v in values):
+        cond = cond | column.isNull()
+    return cond
+
+
+def group_filter(group_by: Sequence[str], keys: Sequence[tuple]) -> Column:
+    """Rows whose ``group_by`` key is one of ``keys``, NULL included."""
+    if len(group_by) == 1:
+        return null_safe_isin(F.col(group_by[0]), [k[0] for k in keys])
+    cond = F.lit(False)
+    for key in keys:
+        match = F.lit(True)
+        for g, v in zip(group_by, key):
+            match = match & F.col(g).eqNullSafe(F.lit(v))
+        cond = cond | match
+    return cond

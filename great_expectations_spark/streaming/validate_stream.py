@@ -247,7 +247,7 @@ def windowed_distribution_drift(
 
     One stateful aggregation per window: the baseline's bin edges are
     plan-time literals, so per-bin counts are conditional sums (same
-    closed-last-bin convention as the batch ``_split_histograms``), with
+    closed-last-bin convention as the batch ``split_histograms``), with
     below/above tail buckets so out-of-support drift — the loudest kind —
     is scored, not dropped.  PSI is then a pure JVM array expression
     (normalize → eps-clip → renormalize → Σ (a−e)·ln(a/e)) replicating

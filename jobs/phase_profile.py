@@ -34,7 +34,6 @@ PHASES = [
     "_compile",
     "_run_bundled_phase",
     "_run_window_phase",
-    "_run_job_item",
     "_aggregate_values",
     "_collect_samples",
     "_fused_window_group",

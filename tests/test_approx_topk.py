@@ -107,9 +107,8 @@ def test_grouped_sketch_matches_per_partition_exact(spark, skewed):
 
 def test_grouped_tie_explosion_confined_to_one_partition(spark):
     """A >1000-way mode tie in ONE junk partition must not fail every
-    partition: it drops out of the grouped mapping, the per-partition
-    fallback re-raises for it alone, and healthy partitions keep their
-    results."""
+    partition: the grouped evaluation maps that partition to the error
+    alone, and healthy partitions keep their results."""
     from great_expectations_spark.checkpoint.runner import (
         validate_by_partition,
     )

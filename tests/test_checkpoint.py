@@ -266,8 +266,8 @@ def test_grouped_one_sample_distribution_matches_per_partition(
     spark, transcripts
 ):
     """The one-sample distribution family (KL continuous + categorical,
-    chi-square GoF, bootstrapped KS) evaluates per-partition via the new
-    O(1) grouped hooks and must match the full validator run partition by
+    chi-square GoF, bootstrapped KS) evaluates per-partition in O(1)
+    grouped jobs and must match the full validator run partition by
     partition — including the seeded bootstrap (same seed per partition
     on both paths)."""
     from pyspark.sql import functions as F
@@ -326,17 +326,13 @@ def test_grouped_one_sample_distribution_matches_per_partition(
             ), (day, et)
 
 
-def test_grouped_cramers_phi_and_parameterized_ks(
-    spark, transcripts, monkeypatch
-):
+def test_grouped_cramers_phi_and_parameterized_ks(spark, transcripts):
     """Cramér's phi and parameterized KS also ride grouped O(1) jobs.
-    Parameterized KS grouped mode is grid-only, so force the whole-table
-    path onto the grid too (cap=0) for exact parity."""
-    from great_expectations_spark.operators import distribution as dist
+    Parameterized KS ``auto`` picks exact or grid per group from the
+    group's own count, so both paths choose alike."""
     from great_expectations_spark.plans.planner import SuiteValidator
     from pyspark.sql import functions as F
 
-    monkeypatch.setattr(dist, "EXACT_KS_COLLECT_CAP", 0)
     suite = (
         ExpectationSuite("assoc")
         .add(
@@ -369,8 +365,8 @@ def test_grouped_cramers_phi_and_parameterized_ks(
 
 
 def test_grouped_job_expectations_match_per_partition(spark, transcripts):
-    """Referential + drift expectations evaluate per-partition via the O(1)
-    grouped hooks and must match the full validator run partition by
+    """Referential + drift expectations evaluate per-partition in O(1)
+    grouped jobs and must match the full validator run partition by
     partition."""
     from pyspark.sql import functions as F
 
@@ -421,12 +417,25 @@ def _first_days(df, n=2):
 
 def test_grouped_job_expectations_job_count_constant(spark, transcripts):
     """Spark job count for validate_by_partition must NOT grow with the
-    number of partitions (the grouped hooks are O(1) jobs per item)."""
+    number of partitions (each job expectation's evaluator runs O(1)
+    grouped jobs per item): the referential/drift suite, and z-scores,
+    row-count-equal-other-table and exact most-common."""
     from pyspark.sql import functions as F
 
     dim = transcripts.select("conv_id").distinct().persist()
     dim.count()
     sc = spark.sparkContext
+
+    def jobs(df, suite, group):
+        sc.setJobGroup(group, group)
+        out = validate_by_partition(df, suite, "day")
+        assert not any(
+            r.exception_info["raised_exception"]
+            for res in out.values()
+            for r in res.results
+        )
+        return len(out), len(sc.statusTracker().getJobIdsForGroup(group))
+
     try:
         few = transcripts.filter(F.col("day").isin(_first_days(transcripts)))
         # a row_condition-scoped aggregate rides one grouped filtered agg
@@ -435,29 +444,44 @@ def test_grouped_job_expectations_job_count_constant(spark, transcripts):
             column="turn_idx", min_value=0,
             row_condition="role = 'user'", condition_parser="spark",
         )
-        sc.setJobGroup("gx_grouped_few", "few partitions")
-        assert len(validate_by_partition(few, suite, "day")) == 2
-        jobs_few = len(sc.statusTracker().getJobIdsForGroup("gx_grouped_few"))
-
-        sc.setJobGroup("gx_grouped_many", "many partitions")
-        validate_by_partition(transcripts, suite, "day")
-        jobs_many = len(
-            sc.statusTracker().getJobIdsForGroup("gx_grouped_many")
+        n_few, jobs_few = jobs(few, suite, "gx_grouped_few")
+        _, jobs_many = jobs(transcripts, suite, "gx_grouped_many")
+        dim.createOrReplaceTempView("gx_job_count_dim")
+        more = (
+            ExpectationSuite("more_jobs")
+            .add(
+                "expect_column_value_z_scores_to_be_less_than",
+                column="turn_idx", threshold=1.5, mostly=0.5,
+            )
+            .add(
+                "expect_table_row_count_to_equal_other_table",
+                other_table="gx_job_count_dim",
+            )
+            .add(
+                "expect_column_most_common_value_to_be_in_set",
+                column="role", value_set=["user", "assistant"],
+            )
         )
+        _, more_few = jobs(few, more, "gx_more_few")
+        _, more_many = jobs(transcripts, more, "gx_more_many")
     finally:
         sc.setJobGroup(None, None)
         dim.unpersist()
+    assert n_few == 2
     assert jobs_few > 0
     # 2 partitions vs 30 partitions: job count must NOT scale with
-    # partitions (per-partition fallback would be ~3 jobs x 30 partitions;
+    # partitions (per-partition evaluation would be ~3 jobs x 30 partitions;
     # AQE may add a couple of shuffle-stage jobs on the larger input)
     assert jobs_many <= jobs_few + 3, (jobs_few, jobs_many)
     assert jobs_many < 15, jobs_many
+    # per-partition evaluation of these three would be ~5 jobs x 30
+    assert more_many <= more_few + 3, (more_few, more_many)
+    assert more_many < 30, more_many
 
 
 def test_grouped_user_sql_matches_per_partition(spark, transcripts):
-    """All four user-SQL query expectations ride the chunked-UNION-ALL
-    grouped hook; every partition's vout must match a dedicated
+    """All four user-SQL query expectations ride the chunked UNION ALL
+    of their one evaluator; every partition's vout must match a dedicated
     whole-validator run on that partition's slice."""
     from pyspark.sql import functions as F
 
@@ -520,8 +544,8 @@ def test_grouped_user_sql_matches_per_partition(spark, transcripts):
 
 def test_grouped_user_sql_chunking_and_fallback(spark, transcripts, monkeypatch):
     """Chunk size 4 over 30 partitions (8 union jobs) must produce the
-    same results; an over-cap partition is omitted from the grouped map
-    and the per-partition fallback raises the documented error."""
+    same results; an over-cap partition maps to the documented error,
+    which fails that partition's expectation alone."""
     from pyspark.sql import functions as F
 
     from great_expectations_spark.operators import query_ops
@@ -542,8 +566,8 @@ def test_grouped_user_sql_chunking_and_fallback(spark, transcripts, monkeypatch)
         for g in grouped.values()
     )
 
-    # per-branch limit 2 means a 2-row result is "maybe over", omitted,
-    # and the fallback run raises the exact single-run error message
+    # per-branch limit 2 is enough to see "more than one row": each
+    # partition fails alone with the same error a single run raises
     suite_bad = ExpectationSuite("usersql_bad").add(
         "expect_query_value_to_be_between",
         query=(
@@ -927,25 +951,35 @@ def test_grouped_windows_are_partition_local(spark):
 
 
 def test_grouped_slice_fallback_null_partition(spark):
-    """An expectation without a grouped hook runs on each partition's
-    slice; the NULL partition's slice must hold its rows, so its result
-    equals a validate of those rows."""
+    """The NULL partition is a group of its own in a job expectation's
+    grouped evaluation, and a partition that the expectation's domain
+    leaves without rows is evaluated on its slice, which for the NULL
+    partition must hold its rows: both equal a validate of those rows."""
     from great_expectations_spark.plans.planner import SuiteValidator
 
     df = spark.createDataFrame(
         [("d1", "a"), ("d1", "a"), (None, "z"), (None, "z")],
         "day string, kind string",
     )
-    suite = ExpectationSuite("s").add(
-        "expect_column_most_common_value_to_be_in_set",
-        column="kind", value_set=["a"],
+    suite = (
+        ExpectationSuite("s")
+        .add(
+            "expect_column_most_common_value_to_be_in_set",
+            column="kind", value_set=["a"],
+        )
+        .add(
+            # the NULL partition has no row where kind = 'a'
+            "expect_column_most_common_value_to_be_in_set",
+            column="kind", value_set=["z"],
+            row_condition="kind = 'a'", condition_parser="spark",
+        )
     )
     grouped = validate_by_partition(df, suite, "day")
     full = SuiteValidator().validate(df.filter("day IS NULL"), suite)
-    got, want = grouped["None"].results[0], full.results[0]
-    assert (got.success, got.result["observed_value"]) == (False, ["z"])
-    assert (want.success, want.result["observed_value"]) == (False, ["z"])
-    assert grouped["d1"].results[0].success
+    got = [(r.success, r.result["observed_value"]) for r in grouped["None"].results]
+    want = [(r.success, r.result["observed_value"]) for r in full.results]
+    assert got == want == [(False, ["z"]), (True, [])]
+    assert [r.success for r in grouped["d1"].results] == [True, False]
 
 
 def test_checkpoint_null_partition_validated_on_its_rows(spark, tmp_path):

@@ -576,13 +576,15 @@ def test_drift_empty_batch_fails_loudly(spark, tmp_path):
     for bad in (empty, nulls):
         with pytest.raises(ValueError, match="no non-null"):
             store.drift_vs_history(bad, "x")
-    # grouped: the all-null partition drops from the mapping (fallback
-    # confines the error), healthy partitions still judged
+    # grouped: the all-null partition maps to the error alone, healthy
+    # partitions are still judged
     mixed = nulls.unionByName(
         spark.createDataFrame([("ok", 0.5)], "part string, x double")
     )
-    per = store.drift_vs_history_by_group(mixed, "part", "x")
-    assert set(per) == {"ok"}
+    per = store.drift_vs_history(mixed, "x", ["part"])
+    assert set(per) == {("n",), ("ok",)}
+    assert isinstance(per[("n",)], ValueError)
+    assert per[("ok",)]["psi"] >= 0
 
 
 def test_suggest_edges_collapsed_range(spark, tmp_path):
