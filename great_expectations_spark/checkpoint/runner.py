@@ -47,7 +47,7 @@ from great_expectations_spark.core.result_format import parse_result_format
 from great_expectations_spark.core.results import (
     ExpectationSuiteValidationResult,
     ExpectationValidationResult,
-    build_suite_statistics,
+    suite_result,
 )
 from great_expectations_spark.core.suite import ExpectationSuite
 from great_expectations_spark.plans.planner import SuiteValidator, _PlannedItem
@@ -247,31 +247,25 @@ def _partition_result(
     started: datetime.datetime,
     finished: datetime.datetime,
 ) -> ExpectationSuiteValidationResult:
-    """A partition's suite result, with ``SuiteValidator.validate``'s
-    meta shape; the times are its chunk's."""
-    return ExpectationSuiteValidationResult(
-        success=all(r.success for r in results),
-        results=results,
-        statistics=build_suite_statistics(results),
-        meta={
-            "great_expectations_version": "gx-spark-0.1",
-            "expectation_suite_name": suite.expectation_suite_name,
-            "run_id": run_id,
-            "validation_time": started.isoformat(),
-            "validation_duration_sec": (finished - started).total_seconds(),
+    """A partition's suite result, its meta naming the partition; the
+    times are its chunk's."""
+    return suite_result(
+        suite.expectation_suite_name,
+        results,
+        dict(suite.evaluation_parameters),
+        run_id,
+        started,
+        finished,
+        {
             "batch_spec": {
                 "type": "partition",
                 "partition_column": partition_column,
                 "partition_id": str(partition),
             },
-            "batch_markers": {
-                "ge_load_time": started.strftime("%Y%m%dT%H%M%S.%fZ")
-            },
             "partition_column": partition_column,
             "partition_id": str(partition),
             "strategy": "single_pass_grouped",
         },
-        evaluation_parameters=dict(suite.evaluation_parameters),
     )
 
 
@@ -526,7 +520,8 @@ def validate_by_partition(
     sample equals a per-partition ``validate``.  Bundled counters: one
     groupBy(partition).agg(...) job.  Each window group (expectations
     sharing a window spec) adds one grouped job serving counts and
-    samples, and each set window one count job plus, when it has
+    samples, and each set window (uniqueness not adopted onto a window
+    group, join-strategy contiguity) one count job plus, when it has
     violations, one sample job; windows are partition-local.  Map
     expectations with violations add one top-k sample job.  Each
     aggregate over a ``row_condition`` domain adds one filtered grouped

@@ -120,16 +120,45 @@ class ExpectationSuiteValidationResult:
         return json.dumps(self.to_json_dict(), sort_keys=True)
 
 
-def build_suite_statistics(
+def suite_result(
+    suite_name: str,
     results: List[ExpectationValidationResult],
-) -> Dict[str, Any]:
-    """evaluated/successful/unsuccessful/success_percent, suite success = all
-    (reference: ``validator/validator.py:1659-1686``)."""
+    evaluation_parameters: Dict[str, Any],
+    run_id: str,
+    started: datetime.datetime,
+    finished: datetime.datetime,
+    batch_meta: Optional[Dict[str, Any]] = None,
+) -> ExpectationSuiteValidationResult:
+    """A suite's result: success = all, evaluated/successful/
+    unsuccessful/success_percent statistics (reference:
+    ``validator/validator.py:1659-1686``) and the reference meta shape
+    (``batch_spec`` and ``batch_markers`` always present).  Callers with
+    real lineage (fluent assets, the checkpoint runner) add or override
+    meta keys through ``batch_meta``."""
     evaluated = len(results)
     successful = sum(1 for r in results if r.success)
-    return {
-        "evaluated_expectations": evaluated,
-        "successful_expectations": successful,
-        "unsuccessful_expectations": evaluated - successful,
-        "success_percent": (successful / evaluated * 100) if evaluated else None,
-    }
+    return ExpectationSuiteValidationResult(
+        success=successful == evaluated,
+        results=results,
+        statistics={
+            "evaluated_expectations": evaluated,
+            "successful_expectations": successful,
+            "unsuccessful_expectations": evaluated - successful,
+            "success_percent": (
+                successful / evaluated * 100 if evaluated else None
+            ),
+        },
+        meta={
+            "great_expectations_version": "gx-spark-0.1",
+            "expectation_suite_name": suite_name,
+            "run_id": run_id,
+            "validation_time": started.isoformat(),
+            "validation_duration_sec": (finished - started).total_seconds(),
+            "batch_spec": {"type": "runtime_dataframe"},
+            "batch_markers": {
+                "ge_load_time": started.strftime("%Y%m%dT%H%M%S.%fZ")
+            },
+            **(batch_meta or {}),
+        },
+        evaluation_parameters=evaluation_parameters,
+    )

@@ -18,12 +18,18 @@ Scalability re-design vs the reference (SURVEY.md §2.E):
   kwargs and runs ``Window.partitionBy(keys).orderBy(order)`` — per-key
   monotonicity, shuffle distributed over keys.  Without ``partition_by`` we
   fall back to the reference's single-partition semantics (warned).
+
+An operator here only says what a violation is (a row flag over a
+window, or a frame of weighted violating keys) and which value a
+violating row reports; the planner turns every one of them into counts
+and violation samples the same way (``plans/planner.py``).
 """
 
 from __future__ import annotations
 
+import functools
 import logging
-from typing import Any, Callable, Dict, List, Optional, Sequence
+from typing import Any, Callable, Dict, List, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -49,6 +55,44 @@ def _orderable(dt: Optional[T.DataType]) -> bool:
     return True
 
 
+def _sort_columns(frame: DataFrame, by: Sequence[str]) -> List[str]:
+    """Every orderable column of ``frame`` outside ``by``, in column
+    order."""
+    types = {f.name: f.dataType for f in frame.schema.fields}
+    return [c for c in frame.columns if c not in by and _orderable(types[c])]
+
+
+def ranked(
+    frame: DataFrame,
+    by: Sequence[str],
+    limit: Union[int, Column],
+    count: bool = False,
+) -> DataFrame:
+    """The rows of ``frame`` ranked ``__gx_rn`` ``<= limit`` within each
+    ``by`` key, ordered by every orderable column of ``frame`` outside
+    ``by``, in column order; ``limit`` may be a column of ``frame``.
+    Columns Spark cannot sort by (a map) ride along but stay out of the
+    order.  A constant ``limit`` up to
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` plans as a JVM
+    top-k (``WindowGroupLimit`` Partial before the exchange and Final
+    after it).
+
+    ``count`` adds each key's total row count as ``__gx_n``, a
+    whole-partition count over the same window.  That frame is not an
+    expanding one, so Spark then plans no partial limit: every row
+    crosses the exchange, and the count sees them all."""
+    w = Window.partitionBy(*by).orderBy(*_sort_columns(frame, by))
+    extra = []
+    if count:
+        whole = w.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
+        extra.append(F.count(F.lit(1)).over(whole).alias("__gx_n"))
+    return frame.select(
+        "*", F.row_number().over(w).alias("__gx_rn"), *extra
+    ).filter(F.col("__gx_rn") <= limit)
+
+
 def top_k(
     frame: DataFrame,
     by: Sequence[str],
@@ -58,37 +102,16 @@ def top_k(
     """The ``limit`` smallest rows of ``frame`` per ``by`` key, in ONE job:
     ``{by key tuple: [row dicts in rank order]}``.
 
-    Rows are ordered by every orderable column of ``frame`` outside
-    ``by``, in column order, so the result is deterministic: the same
-    rows at any shuffle partition count or job concurrency.  Columns
-    Spark cannot sort by (a map) ride along but stay out of the order.
-    With a non-empty ``by`` the rank is ``row_number() <= limit``, which
-    Spark plans as a JVM top-k (``WindowGroupLimit`` Partial before the
-    exchange and Final after it, up to
-    ``spark.sql.optimizer.windowGroupLimitThreshold``); with an empty
-    ``by`` it is ``orderBy().limit()``.
-
-    ``count`` adds each key's total row count as ``__gx_n``, a
-    whole-partition count over the same window.  That frame is not an
-    expanding one, so Spark then plans no partial limit: every row
-    crosses the exchange, and the count sees them all."""
-    types = {f.name: f.dataType for f in frame.schema.fields}
-    order = [c for c in frame.columns if c not in by and _orderable(types[c])]
+    Rows are ordered as ``ranked`` orders them, so the result is
+    deterministic: the same rows at any shuffle partition count or job
+    concurrency.  With a non-empty ``by`` the rank is ``ranked``'s JVM
+    top-k (``count`` as there); with an empty ``by`` it is
+    ``orderBy().limit()``."""
     if not by:
-        top = frame.orderBy(*order).limit(limit).collect()
+        top = frame.orderBy(*_sort_columns(frame, by)).limit(limit).collect()
         return {(): [r.asDict() for r in top]} if top else {}
-    w = Window.partitionBy(*by).orderBy(*order)
-    extra = []
-    if count:
-        whole = w.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        extra.append(F.count(F.lit(1)).over(whole).alias("__gx_n"))
-    ranked = frame.select(
-        "*", F.row_number().over(w).alias("__gx_rn"), *extra
-    ).filter(F.col("__gx_rn") <= limit)
     out: Dict[tuple, List[Dict[str, Any]]] = {}
-    for r in ranked.collect():
+    for r in ranked(frame, by, limit, count).collect():
         row = r.asDict()
         out.setdefault(tuple(row[c] for c in by), []).append(row)
     for rows in out.values():
@@ -126,161 +149,64 @@ def uniqueness_flag_over_window(
     order_struct = F.struct(*[F.col(c) for c in order_by])
     prev = F.lag(order_struct).over(w)
     nxt = F.lead(order_struct).over(w)
-    nonnull = None
-    for c in key_cols:
-        cond = F.col(c).isNotNull()
-        nonnull = cond if nonnull is None else nonnull & cond
     dup = F.coalesce(prev == order_struct, F.lit(False)) | F.coalesce(
         nxt == order_struct, F.lit(False)
     )
-    return nonnull & dup
+    return _all_nonnull(key_cols) & dup
+
+
+def _all_nonnull(cols: Sequence[str]) -> Column:
+    return functools.reduce(
+        lambda a, b: a & b, [F.col(c).isNotNull() for c in cols]
+    )
 
 
 def _uniqueness_window(
-    key_cols: List[str], kind: str, value_is_dict: bool
+    key_cols: List[str], value_is_dict: bool
 ) -> CompiledWindow:
-    def base(df: DataFrame, domain: Optional[Column]) -> DataFrame:
-        out = df
-        if domain is not None:
-            out = out.filter(domain_gate(domain))
-        for c in key_cols:
-            out = out.filter(F.col(c).isNotNull())
-        return out
+    considered = _all_nonnull(key_cols)
 
     def dup_groups(
         df: DataFrame, domain: Optional[Column], group_by: Sequence[str] = ()
     ) -> DataFrame:
+        """The duplicated keys of each group, weighted by their rows."""
+        scoped = df if domain is None else df.filter(domain_gate(domain))
         return (
-            base(df, domain)
+            scoped.filter(considered)
             .groupBy(*_prefixed(group_by, key_cols))
-            .agg(F.count(F.lit(1)).alias("__gx_cnt"))
-            .filter(F.col("__gx_cnt") > 1)
+            .agg(F.count(F.lit(1)).alias("__gx_w"))
+            .filter(F.col("__gx_w") > 1)
         )
 
-    def execute(
-        df: DataFrame, domain: Optional[Column], group_by: Sequence[str] = ()
-    ) -> Dict[tuple, int]:
-        rows = (
-            dup_groups(df, domain, group_by)
-            .groupBy(*group_by)
-            .agg(F.coalesce(F.sum("__gx_cnt"), F.lit(0)).alias("__gx_u"))
-            .collect()
-        )
-        return {tuple(r[g] for g in group_by): int(r["__gx_u"]) for r in rows}
-
-    def value_of(r: Dict[str, Any]) -> Any:
-        if value_is_dict:
-            return {c: r[c] for c in key_cols}
-        if len(key_cols) == 1:
-            return r[key_cols[0]]
-        return tuple(r[c] for c in key_cols)
-
-    def sample(
-        df: DataFrame,
-        domain: Optional[Column],
-        n: int,
-        index_cols: Optional[List[str]] = None,
-        group_by: Sequence[str] = (),
-    ) -> Dict[tuple, Dict[str, List[Any]]]:
-        """``{group key: sample}``: the ``n`` smallest duplicated keys of
-        each group (``top_k``), or with ``index_cols`` the ``n`` smallest
-        violating rows."""
-        if index_cols:
-            # row-level sample: semi-join rows back to duplicated keys so
-            # each violating ROW carries its index lineage; the group
-            # prefix joins null-safe (the NULL partition keeps its rows)
-            keys = _prefixed(group_by, key_cols)
-            dup_keys = dup_groups(df, domain, group_by).select(
-                *[F.col(c).alias(f"__gx_k{i}") for i, c in enumerate(keys)]
-            )
-            on = [
-                F.col(c).eqNullSafe(F.col(f"__gx_k{i}"))
-                for i, c in enumerate(keys)
-            ]
-            rows = base(df, domain).join(
-                F.broadcast(dup_keys), on, "left_semi"
-            ).select(*_prefixed(keys, index_cols))
-            return {
-                key: {
-                    "unexpected_list": [value_of(r) for r in top],
-                    "unexpected_index_list": [
-                        {c: r[c] for c in index_cols} for r in top
-                    ],
-                }
-                for key, top in top_k(rows, group_by, n).items()
-            }
-        out: Dict[tuple, Dict[str, List[Any]]] = {}
-        dups = dup_groups(df, domain, group_by)
-        for key, top in top_k(dups, group_by, n).items():
-            values: List[Any] = []
-            for r in top:
-                # each duplicated key contributes cnt unexpected rows
-                repeat = min(int(r["__gx_cnt"]), n - len(values))
-                values.extend([value_of(r)] * repeat)
-                if len(values) >= n:
-                    break
-            out[key] = {"unexpected_list": values}
-        return out
-
-    considered = None
-    for c in key_cols:
-        cond = F.col(c).isNotNull()
-        considered = cond if considered is None else considered & cond
-
-    def sample_columns(index_cols):
-        return list(key_cols) + [
-            c for c in (index_cols or []) if c not in key_cols
-        ]
-
-    def pool_sample(rows, index_cols):
-        # only reachable when the planner ADOPTED this expectation into a
-        # shared window pass (adjacent-duplicate flag) — each flagged row
-        # is one duplicated record, matching the adopted count semantics
-        out: Dict[str, Any] = {"unexpected_list": [value_of(r) for r in rows]}
-        if index_cols:
-            out["unexpected_index_list"] = [
-                {c: r[c] for c in index_cols} for r in rows
-            ]
-        return out
-
-    cw = CompiledWindow(
-        kind=kind,
+    return CompiledWindow(
         domain_columns=key_cols,
-        denominator="nonnull",
-        execute=execute,
-        sample=sample,
-        value_is_dict=value_is_dict,
-        sample_columns=sample_columns,
-        pool_sample=pool_sample,
+        value_columns=key_cols,
+        value_of=(
+            (lambda r: {c: r[c] for c in key_cols})
+            if value_is_dict
+            else (lambda r: r[key_cols[0]])
+        ),
+        considered=considered,
+        violations=dup_groups,
+        uniqueness=True,
     )
-    cw.considered = considered  # counted in the bundled phase by the planner
-    # marker for the planner's shared-window adoption: ONLY uniqueness
-    # semantics may be rewritten as a lag/lead duplicate flag over an
-    # existing window spec (the other set window, join-strategy
-    # contiguity, must keep its own execute path)
-    cw.uniqueness_keys = list(key_cols)
-    return cw
 
 
 @register_window("expect_column_values_to_be_unique")
 def _unique(kwargs: Dict[str, Any]) -> CompiledWindow:
-    return _uniqueness_window([kwargs["column"]], "column_map", False)
+    return _uniqueness_window([kwargs["column"]], False)
 
 
 @register_window("expect_compound_columns_to_be_unique")
 def _compound_unique(kwargs: Dict[str, Any]) -> CompiledWindow:
-    return _uniqueness_window(
-        list(kwargs["column_list"]), "multicolumn_map", True
-    )
+    return _uniqueness_window(list(kwargs["column_list"]), True)
 
 
 @register_window("expect_multicolumn_values_to_be_unique")
 def _multicolumn_unique(kwargs: Dict[str, Any]) -> CompiledWindow:
     # deprecated alias of compound uniqueness (reference skip list
     # self_check/util.py:2069)
-    return _uniqueness_window(
-        list(kwargs["column_list"]), "multicolumn_map", True
-    )
+    return _uniqueness_window(list(kwargs["column_list"]), True)
 
 
 def _window_spec(partition_by, order_by, group_by: Sequence[str] = ()):
@@ -341,33 +267,17 @@ def _monotonic_window(
             & F.coalesce(bad, F.lit(False))
         )
 
-    def sample_columns(index_cols):
-        return [column] + [
-            c for c in (index_cols or []) if c != column
-        ]
-
-    def pool_sample(rows, index_cols):
-        out = {"unexpected_list": [r[column] for r in rows]}
-        if index_cols:
-            out["unexpected_index_list"] = [
-                {c: r[c] for c in index_cols} for r in rows
-            ]
-        return out
-
-    cw = CompiledWindow(
-        kind="column_map",
+    return CompiledWindow(
         domain_columns=[column],
-        denominator="nonnull",
+        value_columns=[column],
+        value_of=lambda r: r[column],
+        considered=F.col(column).isNotNull(),
         flag_builder=unexpected_flag,
         window_signature=(
             tuple(partition_by or ()),
             tuple(order_by or ()),
         ),
-        sample_columns=sample_columns,
-        pool_sample=pool_sample,
     )
-    cw.considered = F.col(column).isNotNull()
-    return cw
 
 
 @register_window("expect_sequence_to_be_contiguous")
@@ -418,31 +328,22 @@ def _sequence_contiguous_window(kwargs: Dict[str, Any]) -> CompiledWindow:
             & (prev.isNull() | (prev < idx - F.lit(1)))
         )
 
-    def sample_columns(index_cols):
-        return [group_column, index_column]
-
-    def pool_sample(rows, index_cols):
-        values = [
-            {group_column: r[group_column], index_column: r[index_column]}
-            for r in rows
-        ]
-        return {
-            "unexpected_list": values,
-            "unexpected_index_list": values,
-        }
-
-    cw = CompiledWindow(
-        kind="multicolumn_map",
+    return CompiledWindow(
         domain_columns=[group_column, index_column],
-        denominator="nonnull",
-        value_is_dict=True,
+        value_columns=[group_column, index_column],
+        value_of=_pair_value(group_column, index_column),
+        considered=F.col(index_column).isNotNull(),
         flag_builder=unexpected_flag,
         window_signature=(tuple(partition_by), tuple(order_by)),
-        sample_columns=sample_columns,
-        pool_sample=pool_sample,
     )
-    cw.considered = F.col(index_column).isNotNull()
-    return cw
+
+
+def _pair_value(group_column: str, index_column: str):
+    """A contiguity violation's ``unexpected_list`` entry."""
+    return lambda r: {
+        group_column: r[group_column],
+        index_column: r[index_column],
+    }
 
 
 def _sequence_contiguous_join(
@@ -466,14 +367,13 @@ def _sequence_contiguous_join(
     def missing_pred(
         df: DataFrame, domain: Optional[Column], group_by: Sequence[str] = ()
     ) -> DataFrame:
-        out = df
-        if domain is not None:
-            out = out.filter(domain_gate(domain))
+        """The (group, index) pairs whose predecessor is missing, weight 1."""
+        groups = _prefixed(group_by, [group_column])
+        out = df if domain is None else df.filter(domain_gate(domain))
         markers = (
             out.filter(F.col(index_column).isNotNull())
             .select(
-                *[F.col(g) for g in group_by],
-                F.col(group_column).alias("__gx_g"),
+                *groups,
                 F.explode(
                     F.array(
                         F.struct(
@@ -490,15 +390,14 @@ def _sequence_contiguous_join(
                 ).alias("__gx_m"),
             )
             .select(
-                *group_by,
-                "__gx_g",
+                *groups,
                 F.col("__gx_m.i").alias("__gx_i"),
                 F.col("__gx_m.s").alias("__gx_s"),
                 F.col("__gx_m.p").alias("__gx_p"),
             )
         )
         return (
-            markers.groupBy(*group_by, "__gx_g", "__gx_i")
+            markers.groupBy(*groups, "__gx_i")
             .agg(
                 F.max("__gx_s").alias("__gx_self"),
                 F.max("__gx_p").alias("__gx_pred"),
@@ -508,53 +407,20 @@ def _sequence_contiguous_join(
                 & (F.col("__gx_i") > F.lit(first_index))
                 & (F.col("__gx_pred") == 0)
             )
-            .select(*group_by, "__gx_g", "__gx_i")
+            .select(
+                *groups,
+                F.col("__gx_i").alias(index_column),
+                F.lit(1).alias("__gx_w"),
+            )
         )
 
-    def execute(
-        df: DataFrame, domain: Optional[Column], group_by: Sequence[str] = ()
-    ) -> Dict[tuple, int]:
-        rows = missing_pred(df, domain, group_by).groupBy(*group_by).count()
-        return {
-            tuple(r[g] for g in group_by): int(r["count"])
-            for r in rows.collect()
-        }
-
-    def sample(
-        df: DataFrame,
-        domain: Optional[Column],
-        n: int,
-        index_cols: Optional[List[str]] = None,
-        group_by: Sequence[str] = (),
-    ) -> Dict[tuple, Dict[str, List[Any]]]:
-        """``{group key: sample}``: each group's ``n`` smallest (group,
-        index) pairs whose predecessor is missing (``top_k``)."""
-        out: Dict[tuple, Dict[str, List[Any]]] = {}
-        missing = missing_pred(df, domain, group_by)
-        for key, top in top_k(missing, group_by, n).items():
-            values = [
-                {group_column: r["__gx_g"], index_column: r["__gx_i"]}
-                for r in top
-            ]
-            out[key] = {
-                "unexpected_list": values,
-                "unexpected_index_list": values,
-            }
-        return out
-
-    cw = CompiledWindow(
-        kind="multicolumn_map",
+    return CompiledWindow(
         domain_columns=[group_column, index_column],
-        denominator="nonnull",
-        execute=execute,
-        sample=sample,
-        value_is_dict=True,
+        value_columns=[group_column, index_column],
+        value_of=_pair_value(group_column, index_column),
+        considered=F.col(index_column).isNotNull(),
+        violations=missing_pred,
     )
-    cw.considered = F.col(index_column).isNotNull()
-    # plan-contract hook: tests assert the violating-pairs frame contains
-    # no Window operator and no join (the skew-proofness claim)
-    cw.violation_frame = missing_pred
-    return cw
 
 
 @register_window("expect_column_values_to_be_increasing")

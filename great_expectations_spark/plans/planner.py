@@ -27,9 +27,13 @@ Physical plan of ``validate(df, suite)``:
     window-strategy contiguity, and uniqueness adopted onto a shared
     window spec) are grouped by (partition_by, order_by, row_condition):
     ONE job per group computes every member's flag, over windows
-    partitioned by ``[*group_by, *partition_by]``.  Set windows
-    (uniqueness, join-strategy contiguity) run one two-phase hash
-    aggregation each, grouped by ``[*group_by, *keys]``.
+    partitioned by ``[*group_by, *partition_by]``, and takes every
+    member's count and violation sample (``_fused_window_group``) — at
+    BOOLEAN_ONLY too, so there is one window plan for every format.  Set
+    windows (uniqueness, join-strategy contiguity) run one two-phase hash
+    aggregation each (``set_window_counts``): their ``violations`` frame,
+    grouped by ``[*group_by, *keys]``, weighted, and its weights summed
+    per group.
   Phase C: job expectations (user SQL, referential joins, drift).  Each
     has ONE evaluator, ``CompiledJob.evaluate``, called with the same
     group prefix: its ``groupBy(*group_by, ...)`` jobs serve every group
@@ -51,10 +55,16 @@ Physical plan of ``validate(df, suite)``:
     exchange and Final after it.  Flag-window groups sample inside their
     phase-B job (``_fused_window_group``), whose per-(group, member)
     count rides the same window.  A set window with violations takes
-    one top-k sample job for every group.  COMPLETE's cap
-    (``max_complete_collect``) is above
-    ``spark.sql.optimizer.windowGroupLimitThreshold``, so Spark plans
-    only the Final limit there.
+    one top-k sample job for every group (``_set_window_samples``); when
+    index or row columns are asked for, its violating keys join back to
+    the batch rows first.  COMPLETE's cap (``max_complete_collect``) is
+    above ``spark.sql.optimizer.windowGroupLimitThreshold``, so Spark
+    plans only the Final limit there.  One formatter, ``sample_entry``,
+    turns every family's top-k rows into ``unexpected_list``,
+    ``unexpected_index_list`` (the requested
+    ``unexpected_index_column_names``) and ``unexpected_rows`` (with
+    ``include_unexpected_rows``), so those options mean the same for map,
+    flag-window and set-window expectations.
 
 Driver-side job orchestration: the phases above are *independent Spark
 jobs* with a small dependency DAG (samples and aggregate followups need
@@ -83,11 +93,12 @@ from __future__ import annotations
 
 import datetime
 import functools
+import itertools
 import traceback
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Any, Dict, List, Optional, Sequence, Tuple, Union
+from typing import Any, Callable, Dict, List, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -105,8 +116,8 @@ from great_expectations_spark.core.result_format import (
 from great_expectations_spark.core.results import (
     ExpectationSuiteValidationResult,
     ExpectationValidationResult,
-    build_suite_statistics,
     convert_to_json_serializable,
+    suite_result,
 )
 from great_expectations_spark.core.suite import (
     ExpectationConfiguration,
@@ -127,6 +138,7 @@ from great_expectations_spark.plans.specs import (
     CompiledMap,
     CompiledSchemaCheck,
     CompiledWindow,
+    group_key,
 )
 
 Compiled = Union[
@@ -197,8 +209,8 @@ def plan_window_groups(
     ``flag_builder``, so planning is the same with or without one.
 
     Returns ``(groups, set_windows)``; adoption sets the adopted items'
-    ``flag_builder`` in place.  ``set_windows`` are the items left to
-    their own ``execute``.
+    ``flag_builder`` in place.  ``set_windows`` are the items counted
+    from their ``violations`` frame.
     """
     groups: Dict[Any, List["_PlannedItem"]] = {}
     singles: List["_PlannedItem"] = []
@@ -222,13 +234,12 @@ def plan_window_groups(
     for item in singles:
         c = item.compiled
         adopted = False
-        # only true uniqueness expectations (marked by the compiler) may
-        # be rewritten as a duplicate flag over a shared window; the other
-        # set window (join-strategy contiguity) keeps its own execute path
-        unique_keys = getattr(c, "uniqueness_keys", None)
-        if unique_keys is None:
+        # only uniqueness may be rewritten as a duplicate flag over a
+        # shared window; join-strategy contiguity keeps its pair frame
+        if not c.uniqueness:
             still_single.append(item)
             continue
+        unique_keys = c.value_columns
         for (signature, domain_key), members in groups.items():
             partition_by, order_by = signature
             if (
@@ -269,52 +280,60 @@ def unexpected_flag(item: "_PlannedItem") -> Column:
     return considered_flag(item) & domain_gate(item.compiled.unexpected)
 
 
-def window_group_counts(
-    df: DataFrame,
-    members: List["_PlannedItem"],
-    group_by: Sequence[str] = (),
-) -> Dict[tuple, Dict[str, int]]:
-    """ONE count job for a flag-window group at BOOLEAN_ONLY, which takes
-    no samples: project every member's flag (windows partitioned by
-    ``[*group_by, *partition_by]``) and sum them per ``group_by`` key.
-    Returns ``{group key tuple: {window_metric: unexpected_count}}`` — a
-    single ``()`` key for a whole-table ``validate``, one
-    ``(partition,)`` key per partition for a grouped call.  Null handling stays correct when members
-    share the pass because the flag builders are null-transparent
-    (``window_ops._prev_nonnull``) rather than relying on pre-filtered
-    frames."""
-    scoped = df
-    if members[0].domain is not None:
-        scoped = scoped.filter(domain_gate(members[0].domain))
-    # window expressions can't sit inside agg — project the flags first,
-    # then sum
-    flagged = scoped.select(
-        *group_by,
-        *[
-            domain_gate(m.compiled.flag_builder(group_by)).alias(f"__gx_f{i}")
-            for i, m in enumerate(members)
-        ],
-    )
+def set_window_counts(
+    item: "_PlannedItem", df: DataFrame, group_by: Sequence[str] = ()
+) -> Dict[tuple, int]:
+    """A set window's unexpected count per group key: its ``violations``
+    weights summed over ``group_by`` — with the ``groupBy(*group_by,
+    *keys)`` inside ``violations``, a two-phase hash aggregation."""
     rows = (
-        flagged.groupBy(*group_by)
-        .agg(
-            *[
-                F.coalesce(
-                    F.sum(F.when(F.col(f"__gx_f{i}"), 1).otherwise(0)),
-                    F.lit(0),
-                ).alias(f"__gx_w{i}")
-                for i in range(len(members))
-            ]
-        )
+        item.compiled.violations(df, item.domain, group_by)
+        .groupBy(*group_by)
+        .agg(F.coalesce(F.sum("__gx_w"), F.lit(0)).alias("__gx_u"))
         .collect()
     )
-    return {
-        tuple(r[g] for g in group_by): {
-            window_metric(m): int(r[f"__gx_w{i}"])
-            for i, m in enumerate(members)
-        }
-        for r in rows
-    }
+    return {group_key(r, group_by): int(r["__gx_u"]) for r in rows}
+
+
+def sample_entry(
+    rows: List[Dict[str, Any]],
+    value_of: Callable[[Dict[str, Any]], Any],
+    limit: int,
+    index_cols: Sequence[str],
+    row_cols: Sequence[str],
+) -> Dict[str, Any]:
+    """The one violation-sample formatter of every row-level expectation:
+    from the top-k row dicts of one (group, expectation), in rank order,
+    the first ``limit`` violations' ``unexpected_list`` entries
+    (``value_of``), and when asked their ``unexpected_index_list`` dicts
+    and ``unexpected_rows``.  A row weighted ``__gx_w`` (a set window's
+    duplicated key) stands for that many violations."""
+    rows = list(
+        itertools.islice(
+            (r for r in rows for _ in range(r.get("__gx_w", 1))), limit
+        )
+    )
+    entry: Dict[str, Any] = {"unexpected_list": [value_of(r) for r in rows]}
+    if index_cols:
+        entry["unexpected_index_list"] = [
+            {c: r[c] for c in index_cols} for r in rows
+        ]
+    if row_cols:
+        entry["unexpected_rows"] = [{c: r[c] for c in row_cols} for r in rows]
+    return entry
+
+
+def _map_value(column: str, value_is_dict: bool):
+    """``value_of`` of a map expectation whose value rides as ``column``:
+    a multicolumn struct becomes a dict, any other struct a tuple."""
+
+    def value_of(r: Dict[str, Any]) -> Any:
+        v = r[column]
+        if value_is_dict and v is not None:
+            return v.asDict()
+        return tuple(v.asDict().values()) if hasattr(v, "asDict") else v
+
+    return value_of
 
 
 def _flagged_members(
@@ -438,29 +457,14 @@ class SuiteValidator:
             for item in items
         ]
 
-        statistics = build_suite_statistics(results)
-        finished = datetime.datetime.now(datetime.timezone.utc)
-        meta = {
-            "great_expectations_version": "gx-spark-0.1",
-            "expectation_suite_name": suite.expectation_suite_name,
-            "run_id": run_id or str(uuid.uuid4()),
-            "validation_time": started.isoformat(),
-            "validation_duration_sec": (finished - started).total_seconds(),
-            # reference result-meta shape (validator.py meta: batch_spec /
-            # batch_markers always present); callers with real lineage
-            # (fluent assets, checkpoint runner) override via batch_meta
-            "batch_spec": {"type": "runtime_dataframe"},
-            "batch_markers": {
-                "ge_load_time": started.strftime("%Y%m%dT%H%M%S.%fZ")
-            },
-            **(batch_meta or {}),
-        }
-        return ExpectationSuiteValidationResult(
-            success=all(r.success for r in results),
-            results=results,
-            statistics=statistics,
-            meta=meta,
-            evaluation_parameters=eval_params,
+        return suite_result(
+            suite.expectation_suite_name,
+            results,
+            eval_params,
+            run_id or str(uuid.uuid4()),
+            started,
+            datetime.datetime.now(datetime.timezone.utc),
+            batch_meta,
         )
 
     # ------------------------------------------------------------------
@@ -566,12 +570,6 @@ class SuiteValidator:
                     )))
             fut_samples = None
             if rf["result_format"] != "BOOLEAN_ONLY":
-                limit = (
-                    self.max_complete_collect
-                    if rf["result_format"] == "COMPLETE"
-                    else rf["partial_unexpected_count"]
-                )
-                index_cols = rf.get("unexpected_index_column_names")
                 # flag-window members were served counts AND samples by
                 # the fused wave-1 window job (already in ``prefetched``);
                 # each set window failing in some group takes one sample
@@ -588,8 +586,8 @@ class SuiteValidator:
                         )
                     ):
                         futs.append((item, submit(
-                            guarded, c.sample, df, item.domain, limit,
-                            index_cols, group_by,
+                            guarded, self._set_window_samples, item, df, rf,
+                            group_by,
                         )))
                 fut_samples = submit(
                     self._collect_samples, df, items, metrics, rf, group_by
@@ -833,25 +831,19 @@ class SuiteValidator:
         domain evaluate together: one job per group computes every flag
         column — one shuffle for the whole group (e.g. the transcript
         suite's ts-monotonicity + turn-contiguity share the (conv_id,
-        turn_idx) window).  Counts land in ``metrics`` per group key.
-
-        BOOLEAN_ONLY takes the counts alone (``window_group_counts``);
-        every other format also takes the group's violation SAMPLES in
-        that same job (``_fused_window_group``).  A failing group job
-        marks every member's ``error`` (or raises without
-        ``catch_exceptions``).  Set windows run their own ``execute``."""
+        turn_idx) window) — and serves every member's count and violation
+        sample at every result format (``_fused_window_group``).  Counts
+        land in ``metrics`` per group key.  A failing group job marks
+        every member's ``error`` (or raises without
+        ``catch_exceptions``).  Set windows sum their ``violations``
+        weights (``set_window_counts``)."""
         groups, set_windows = plan_window_groups(items)
 
         for members in groups.values():
             try:
-                if rf["result_format"] == "BOOLEAN_ONLY":
-                    counts = window_group_counts(df, members, group_by)
-                    for key, vals in counts.items():
-                        metrics.setdefault(key, {}).update(vals)
-                else:
-                    self._fused_window_group(
-                        df, members, metrics, rf, prefetched, group_by
-                    )
+                self._fused_window_group(
+                    df, members, metrics, rf, prefetched, group_by
+                )
             except Exception as exc:
                 if not catch_exceptions:
                     raise
@@ -860,7 +852,7 @@ class SuiteValidator:
 
         for item in set_windows:
             try:
-                counts = item.compiled.execute(df, item.domain, group_by)
+                counts = set_window_counts(item, df, group_by)
                 for key, count in counts.items():
                     metrics.setdefault(key, {})[window_metric(item)] = count
             except Exception as exc:
@@ -899,22 +891,24 @@ class SuiteValidator:
         The count keeps Spark from planning a partial top-k before the
         member exchange: every flagged (row, member) pair crosses it.
         That is at most the flagged share of the window shuffle's rows,
-        narrowed to the sample columns."""
-        limit = (
-            self.max_complete_collect
-            if rf["result_format"] == "COMPLETE"
-            else max(int(rf["partial_unexpected_count"] or 0), 1)
-        )
-        index_cols = rf.get("unexpected_index_column_names")
+        narrowed to the sample columns: every member's value columns,
+        then the requested index or row columns.  BOOLEAN_ONLY runs the
+        same job (its samples go unused), so ``warm_up`` compiles the
+        plan the other formats run."""
+        limit, index_cols, row_cols = self._sample_spec(df, rf)
         scoped = df
         if members[0].domain is not None:
             scoped = scoped.filter(domain_gate(members[0].domain))
         flag_names = [f"__gx_pf{i}" for i in range(len(members))]
-        cols = list(group_by)
-        for m in members:
-            for c in m.compiled.sample_columns(index_cols):
-                if c not in cols:
-                    cols.append(c)
+        cols = list(
+            dict.fromkeys(
+                [
+                    *group_by,
+                    *(c for m in members for c in m.compiled.value_columns),
+                    *(row_cols or index_cols),
+                ]
+            )
+        )
         proj = scoped.select(
             *cols,
             *[
@@ -925,7 +919,8 @@ class SuiteValidator:
         top = window_ops.top_k(
             _flagged_members(proj, cols, flag_names),
             [*group_by, "__gx_m"],
-            limit,
+            # one row per (group, member) at least, to carry its count
+            max(limit, 1),
             count=True,
         )
         for key, rows in top.items():
@@ -933,9 +928,70 @@ class SuiteValidator:
             metrics.setdefault(group, {})[window_metric(m)] = int(
                 rows[0]["__gx_n"]
             )
-            prefetched.setdefault(group, {})[id(m)] = m.compiled.pool_sample(
-                rows, index_cols
+            prefetched.setdefault(group, {})[id(m)] = sample_entry(
+                rows, m.compiled.value_of, limit, index_cols, row_cols
             )
+
+    def _set_window_samples(
+        self,
+        item: _PlannedItem,
+        df: DataFrame,
+        rf: dict,
+        group_by: Sequence[str] = (),
+    ) -> Dict[tuple, Dict[str, Any]]:
+        """A set window's violation sample per group key, in ONE top-k
+        job (``window_ops.top_k``): each group's smallest ``violations``
+        rows, a duplicated key standing for its rows.  With index or row
+        columns the violating keys join back to the batch rows
+        (null-safe, so the NULL partition keeps its rows), a key weighted
+        ``w`` standing for its ``w`` smallest rows (all rows of a
+        duplicated key, one row of a missing contiguity pair), and the
+        sample is each group's smallest of them, as for every other
+        row-level expectation."""
+        c = item.compiled
+        limit, index_cols, row_cols = self._sample_spec(df, rf)
+        frame = c.violations(df, item.domain, group_by)
+        if index_cols or row_cols:
+            keys = list(dict.fromkeys([*group_by, *c.value_columns]))
+            aliases = [f"__gx_k{i}" for i in range(len(keys))]
+            violating = F.broadcast(
+                frame.select(
+                    *[F.col(k).alias(a) for k, a in zip(keys, aliases)],
+                    "__gx_w",
+                )
+            )
+            on = [F.col(k).eqNullSafe(F.col(a)) for k, a in zip(keys, aliases)]
+            cols = list(dict.fromkeys([*keys, *(row_cols or index_cols)]))
+            batch_rows = (
+                df.filter(considered_flag(item))
+                .join(violating, on)
+                .select(*cols, *aliases, "__gx_w")
+            )
+            frame = window_ops.ranked(
+                batch_rows, aliases, F.col("__gx_w")
+            ).select(*cols)
+        return {
+            key: sample_entry(rows, c.value_of, limit, index_cols, row_cols)
+            for key, rows in window_ops.top_k(frame, group_by, limit).items()
+        }
+
+    def _sample_spec(
+        self, df: DataFrame, rf: dict
+    ) -> Tuple[int, List[str], List[str]]:
+        """``(limit, index_cols, row_cols)`` of the violation samples
+        ``rf`` asks for: at most ``max_complete_collect`` rows at
+        COMPLETE, else ``partial_unexpected_count``; the
+        ``unexpected_index_column_names``; and every batch column with
+        ``include_unexpected_rows`` (reference
+        map_condition_auxilliary_methods.py:664-694)."""
+        limit = (
+            self.max_complete_collect
+            if rf["result_format"] == "COMPLETE"
+            else rf["partial_unexpected_count"]
+        )
+        index_cols = list(rf.get("unexpected_index_column_names") or [])
+        row_cols = list(df.columns) if rf.get("include_unexpected_rows") else []
+        return limit, index_cols, row_cols
 
     # ------------------------------------------------------------------
 
@@ -958,8 +1014,6 @@ class SuiteValidator:
         (``window_ops.top_k``, a JVM top-k).  Samples are deterministic,
         ordered by the sample columns, and a group's sample equals the
         one a ``validate`` of its slice takes."""
-        if rf["result_format"] == "BOOLEAN_ONLY":
-            return {}
         needing = [
             item
             for item in items
@@ -972,17 +1026,7 @@ class SuiteValidator:
         if not needing:
             return {}
 
-        limit = (
-            self.max_complete_collect
-            if rf["result_format"] == "COMPLETE"
-            else rf["partial_unexpected_count"]
-        )
-        index_cols = rf.get("unexpected_index_column_names") or []
-        include_rows = bool(rf.get("include_unexpected_rows"))
-        # full original rows ride along so violating records can be
-        # returned verbatim (reference
-        # map_condition_auxilliary_methods.py:664-694)
-        row_cols = list(df.columns) if include_rows else []
+        limit, index_cols, row_cols = self._sample_spec(df, rf)
         keep = list(dict.fromkeys([*group_by, *(row_cols or index_cols)]))
         values = [f"__gx_val_{i}" for i in range(len(needing))]
         flags = [f"__gx_flag_{i}" for i in range(len(needing))]
@@ -1016,25 +1060,10 @@ class SuiteValidator:
             exploded, [*group_by, "__gx_m"], limit
         ).items():
             i = key[-1]
-            item = needing[i]
-            unexpected: List[Any] = []
-            for r in rows:
-                v = r[values[i]]
-                if item.compiled.value_is_dict and v is not None:
-                    v = v.asDict()
-                elif hasattr(v, "asDict"):
-                    v = tuple(v.asDict().values())
-                unexpected.append(v)
-            entry: Dict[str, Any] = {"unexpected_list": unexpected}
-            if index_cols:
-                entry["unexpected_index_list"] = [
-                    {ic: r[ic] for ic in index_cols} for r in rows
-                ]
-            if include_rows:
-                entry["unexpected_rows"] = [
-                    {rc: r[rc] for rc in row_cols} for r in rows
-                ]
-            samples.setdefault(key[:-1], {})[id(item)] = entry
+            value_of = _map_value(values[i], needing[i].compiled.value_is_dict)
+            samples.setdefault(key[:-1], {})[id(needing[i])] = sample_entry(
+                rows, value_of, limit, index_cols, row_cols
+            )
         return samples
 
     # ------------------------------------------------------------------
@@ -1067,10 +1096,10 @@ class SuiteValidator:
         try:
             if isinstance(pre, Exception):
                 raise pre
-            if isinstance(c, CompiledMap):
-                return self._assemble_map(item, c, metrics, pre, rf, config_dict)
-            if isinstance(c, CompiledWindow):
-                return self._assemble_window(item, metrics, rf, config_dict, pre)
+            if isinstance(c, (CompiledMap, CompiledWindow)):
+                return self._assemble_row_level(
+                    item, c, metrics, pre, rf, config_dict
+                )
             if isinstance(c, CompiledAggregate):
                 return self._assemble_aggregate(
                     item, c, df, metrics, config_dict, pre
@@ -1117,21 +1146,29 @@ class SuiteValidator:
             and isinstance(item.compiled, (CompiledAggregate, CompiledJob))
         )
 
-    def _assemble_map(
+    def _assemble_row_level(
         self,
         item: _PlannedItem,
-        c: CompiledMap,
+        c: Union[CompiledMap, CompiledWindow],
         metrics: Dict[str, Any],
         sample: Optional[Dict[str, Any]],
         rf: dict,
         config_dict: Dict[str, Any],
     ) -> ExpectationValidationResult:
+        """A map or window result from one group's counters — phase A's
+        element and considered counts, and phase A's unexpected count
+        (map) or phase B's ``window_metric`` (window) — and, when served,
+        its violation sample (``sample_entry``)."""
+        is_map = isinstance(c, CompiledMap)
         element_count = int(metrics.get(item.element_alias) or 0)
         considered_count = int(metrics.get(item.considered_alias) or 0)
-        unexpected_count = int(metrics.get(item.unexpected_alias) or 0)
+        unexpected_count = int(
+            metrics.get(item.unexpected_alias if is_map else window_metric(item))
+            or 0
+        )
         mostly = item.config.mostly
 
-        if c.denominator == "element":
+        if is_map and c.denominator == "element":
             success = (
                 True
                 if element_count == 0
@@ -1146,7 +1183,7 @@ class SuiteValidator:
 
         sample = sample or {}
         unexpected_index_query: Optional[str] = None
-        if rf["result_format"] == "COMPLETE" and rf.get(
+        if is_map and rf["result_format"] == "COMPLETE" and rf.get(
             "return_unexpected_index_query", True
         ) is not False:
             # reference map_condition_auxilliary_methods.py:785-824: render
@@ -1180,52 +1217,6 @@ class SuiteValidator:
                 "unexpected_rows",
                 [] if rf.get("include_unexpected_rows") else None,
             ),
-        )
-        return ExpectationValidationResult(
-            success=bool(out["success"]),
-            expectation_config=config_dict,
-            result=convert_to_json_serializable(out.get("result", {})),
-        )
-
-    def _assemble_window(
-        self,
-        item: _PlannedItem,
-        metrics: Dict[str, Any],
-        rf: dict,
-        config_dict: Dict[str, Any],
-        sample: Optional[Dict[str, Any]] = None,
-    ) -> ExpectationValidationResult:
-        """Window result from the phase-A element/considered counters, the
-        phase-B ``window_metric`` count and, when served, the violation
-        sample."""
-        element_count = int(metrics.get(item.element_alias) or 0)
-        considered_count = int(
-            (metrics.get(item.considered_alias) or 0)
-            if item.considered_alias
-            else element_count
-        )
-        unexpected_count = int(metrics.get(window_metric(item)) or 0)
-        success = map_expectation_success(
-            element_count,
-            considered_count,
-            unexpected_count,
-            item.config.mostly,
-        )
-        sample = sample or {}
-        index_cols = rf.get("unexpected_index_column_names")
-        out = format_map_output(
-            rf,
-            success=success,
-            element_count=element_count,
-            nonnull_count=considered_count,
-            unexpected_count=unexpected_count,
-            unexpected_list=(
-                None
-                if rf["result_format"] == "BOOLEAN_ONLY"
-                else sample.get("unexpected_list", [])
-            ),
-            unexpected_index_list=sample.get("unexpected_index_list"),
-            unexpected_index_column_names=index_cols,
         )
         return ExpectationValidationResult(
             success=bool(out["success"]),

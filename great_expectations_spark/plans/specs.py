@@ -48,42 +48,40 @@ class CompiledWindow:
     whole-table ``validate``, ``[partition_column]`` for
     ``validate_by_partition``), so both callers compute the same flags.
 
-    Two shapes:
+    Two shapes, one violation-sample path: the planner alone turns
+    violations into counts and samples, so an expectation only says what
+    a violation is and which value it reports.
 
     * Flag windows (monotonicity, window-strategy contiguity, and a
       uniqueness adopted onto a shared window): ``flag_builder(group_by)``
       returns the row-level unexpected Column over a window partitioned by
       ``[*group_by, *partition_by]``; ``window_signature`` groups members
-      that share a (partition_by, order_by) spec into one pass.  Their
-      samples come from the group's fused job: ``sample_columns
-      (index_cols)`` lists the row columns a member needs, and
-      ``pool_sample(row_dicts, index_cols)`` formats its flagged rows.
+      that share a (partition_by, order_by) spec into one pass.
     * Set windows (uniqueness, join-strategy contiguity):
-      ``execute(df, domain_cond, group_by)`` returns ``{group key tuple:
-      unexpected_count}`` from a ``groupBy(*group_by, *keys)``
-      aggregation, and ``sample(df, domain_cond, n, index_cols,
-      group_by)`` ``{group key tuple: {"unexpected_list": ...,
-      "unexpected_index_list": ...}}`` holding each group's ``n``
-      smallest violations (``window_ops.top_k``).
+      ``violations(df, domain_cond, group_by)`` is a frame of
+      ``[*group_by, *value_columns, "__gx_w"]`` rows from a
+      ``groupBy(*group_by, *keys)`` aggregation: the duplicated keys
+      weighted by their row count, or the (group, index) pairs missing
+      their predecessor, weighted 1.  The unexpected count is the
+      weights' sum per group.
+
+    Every kind declares ``value_columns``, the row columns its
+    ``unexpected_list`` entries come from, and ``value_of(row_dict)``,
+    the entry of one violating row.  ``uniqueness`` marks the set windows
+    the planner may adopt as a duplicate flag onto a flag window whose
+    ``partition_by + order_by`` equal their value columns.
     """
 
-    kind: str
     domain_columns: List[str]
-    denominator: str
-    execute: Optional[
-        Callable[[DataFrame, Optional[Column], Sequence[str]], Dict[tuple, int]]
-    ] = None
-    sample: Optional[Callable[..., Dict[tuple, Dict[str, List[Any]]]]] = None
-    value_is_dict: bool = False
-    considered: Optional[Column] = None  # counted in the bundled agg phase
+    value_columns: List[str]
+    value_of: Callable[[Dict[str, Any]], Any]
+    considered: Column  # counted in the bundled agg phase
     flag_builder: Optional[Callable[[Sequence[str]], Column]] = None
     window_signature: Optional[tuple] = None
-    sample_columns: Optional[
-        Callable[[Optional[List[str]]], List[str]]
+    violations: Optional[
+        Callable[[DataFrame, Optional[Column], Sequence[str]], DataFrame]
     ] = None
-    pool_sample: Optional[
-        Callable[[List[dict], Optional[List[str]]], Dict[str, Any]]
-    ] = None
+    uniqueness: bool = False
 
 
 @dataclass

@@ -3,7 +3,12 @@ same result on every path: ``validate_by_partition``, the results
 ``run_checkpoint`` stores, and ``validate`` of each partition's slice —
 success, the whole result dict (samples and ``details`` included) and
 whether it raised.  The table has a NULL partition and a partition that
-the expectations' ``row_condition`` filters to empty."""
+the expectations' ``row_condition`` filters to empty.
+
+Every row-level family (map, flag window, set window) takes its
+violation samples the same way: ``unexpected_index_column_names`` and
+``include_unexpected_rows`` mean the same thing for each, on every
+path."""
 
 from __future__ import annotations
 
@@ -228,3 +233,91 @@ def test_job_expectation_same_result_on_every_path(
         got = json.loads(grouped[str(day)].to_json())["results"][0]
         assert _comparable(got) == _comparable(basic), (case, day)
         assert _comparable(stored[str(day)]) == _comparable(summ), (case, day)
+
+
+# --- row-level violation samples ---------------------------------------------
+
+ROW_LEVEL = {
+    "not_null": ("expect_column_values_to_not_be_null", dict(column="x")),
+    "in_set": (
+        "expect_column_values_to_be_in_set",
+        dict(column="cat", value_set=["u", "v", "w"]),
+    ),
+    "increasing": (
+        "expect_column_values_to_be_increasing",
+        dict(column="x", partition_by="key", order_by="i"),
+    ),
+    "contiguous_window": (
+        "expect_sequence_to_be_contiguous",
+        dict(group_column="key", index_column="i"),
+    ),
+    "contiguous_join": (
+        "expect_sequence_to_be_contiguous",
+        dict(group_column="key", index_column="i", strategy="join"),
+    ),
+    # adopted onto the (key, i) window of the two expectations above
+    "compound_unique_adopted": (
+        "expect_compound_columns_to_be_unique",
+        dict(column_list=["key", "i"]),
+    ),
+    "unique_set": ("expect_column_values_to_be_unique", dict(column="cat")),
+}
+INDEX_COLS = ["text", "i"]
+SAMPLE_FORMATS = {
+    "index": {
+        "result_format": "SUMMARY",
+        "unexpected_index_column_names": INDEX_COLS,
+    },
+    "rows": {"result_format": "SUMMARY", "include_unexpected_rows": True},
+    "complete": {"result_format": "COMPLETE"},
+}
+
+
+@pytest.mark.parametrize("fmt", sorted(SAMPLE_FORMATS))
+def test_row_level_samples_same_shape_for_every_family(
+    spark, table, tmp_path, fmt
+):
+    # exact copies of some rows: duplicated (key, i) pairs for the
+    # uniqueness families, ties the window families must sample the
+    # same way on every path
+    df = table.unionByName(table.filter("i % 7 == 1"))
+    suite = ExpectationSuite("row_level")
+    for expectation_type, kwargs in ROW_LEVEL.values():
+        suite.add(expectation_type, **kwargs)
+    rf = SAMPLE_FORMATS[fmt]
+    summary = run_checkpoint(
+        df, suite, "day", str(tmp_path / "ckpt"), result_format=rf
+    )
+    stored = {}
+    for entry in summary["entries"]:
+        with open(entry["result_path"]) as f:
+            stored[entry["partition_id"]] = json.load(f)["results"]
+    assert sorted(stored) == sorted(map(str, DAYS))
+    v = SuiteValidator()
+    violated = set()
+    for day in DAYS:
+        part = df.filter(F.col("day").eqNullSafe(day))
+        got = json.loads(v.validate(part, suite, rf).to_json())["results"]
+        for name, r, kept in zip(ROW_LEVEL, got, stored[str(day)]):
+            assert _comparable(r) == _comparable(kept), (name, day)
+            assert not r["exception_info"]["raised_exception"], (name, day)
+            res = r["result"]
+            n = res["unexpected_count"]
+            if n:
+                violated.add(name)
+            if fmt == "index":
+                # absent where nothing violates, as for every format
+                index_list = res.get("partial_unexpected_index_list", [])
+                assert len(index_list) == min(n, 20), (name, day)
+                for d in index_list:
+                    assert sorted(d) == sorted(INDEX_COLS), (name, day, d)
+            elif fmt == "rows":
+                rows = res["unexpected_rows"]
+                assert isinstance(rows, list), (name, day)
+                assert len(rows) == min(n, 20), (name, day)
+                for row in rows:
+                    assert sorted(row) == sorted(df.columns), (name, day)
+            else:
+                assert "unexpected_index_list" not in res, (name, day)
+                assert len(res["unexpected_list"]) == n, (name, day)
+    assert violated == set(ROW_LEVEL)

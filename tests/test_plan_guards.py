@@ -246,12 +246,15 @@ def transcripts(spark):
 
 
 def test_window_samples_plan_is_jvm_top_k(transcripts, monkeypatch):
-    """The fused window job caps each member's violation sample with a
-    JVM top-k: ``WindowGroupLimit`` Partial before the exchange (at most
-    ``limit`` rows per member per task cross the shuffle) and Final
-    after it.  No plan on the validate path has an Arrow/Python stage,
-    and with ``mapInPandas`` unusable ``validate`` still succeeds with
-    every window sample served — no Python worker starts."""
+    """The map-sample job is the one ``WindowGroupLimit`` plan of a
+    SUMMARY ``validate``: a JVM top-k, Partial before the member
+    exchange (at most ``limit`` rows per member per task cross the
+    shuffle) and Final after it.  The fused window job plans no limit
+    (its ``__gx_n`` count needs every flagged row), yet still caps the
+    adopted uniqueness sample at ``partial_unexpected_count``.  No plan
+    on the validate path has an Arrow/Python stage, and with
+    ``mapInPandas`` unusable ``validate`` still succeeds with every
+    window sample served — no Python worker starts."""
     from great_expectations_spark.datagen.transcripts import default_suite
     from great_expectations_spark.plans.planner import SuiteValidator
 
@@ -294,6 +297,52 @@ def test_window_samples_plan_is_jvm_top_k(transcripts, monkeypatch):
     assert len(uniq.result["partial_unexpected_list"]) == min(
         20, uniq.result["unexpected_count"]
     )
+
+
+@pytest.mark.parametrize("fmt", ["BOOLEAN_ONLY", "SUMMARY"])
+def test_window_phase_job_counts(spark, transcripts, fmt):
+    """Spark jobs of one ``validate`` (AQE on, so each shuffle stage is a
+    job of its own): the default suite, whose single flag-window group
+    runs the same fused job at every format, and a suite whose set
+    uniqueness and join-strategy contiguity both fail (count jobs, then
+    one sample job each above BOOLEAN_ONLY)."""
+    from great_expectations_spark.core.suite import ExpectationSuite
+    from great_expectations_spark.datagen.transcripts import default_suite
+    from great_expectations_spark.plans.planner import SuiteValidator
+
+    sets = (
+        ExpectationSuite("sets")
+        .add("expect_column_values_to_be_unique", column="role")
+        .add(
+            "expect_sequence_to_be_contiguous",
+            group_column="conv_id", index_column="turn_idx",
+            first_index=1, strategy="join",
+        )
+    )
+    gaps = transcripts.filter("turn_idx != 3")
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for name, df, suite in (
+            ("default", transcripts, default_suite()),
+            ("sets", gaps, sets),
+        ):
+            group = f"gx_window_jobs_{name}_{fmt}"
+            sc.setJobGroup(group, group)
+            res = SuiteValidator().validate(df, suite, fmt)
+            assert not any(
+                r.exception_info["raised_exception"] for r in res.results
+            )
+            if name == "sets":
+                assert not any(r.success for r in res.results)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+    expected = {
+        "BOOLEAN_ONLY": {"default": 6, "sets": 10},
+        "SUMMARY": {"default": 9, "sets": 15},
+    }[fmt]
+    assert jobs == expected
 
 
 # --- sketch merges and the result log ---------------------------------------

@@ -115,14 +115,15 @@ def test_fused_job_serves_counts_and_all_samples(
 ):
     from great_expectations_spark.operators import window_ops
 
-    # the adopted uniqueness keeps its set-window sampler; it must not run
+    # the adopted uniqueness keeps its set-window violations frame; it
+    # must not run (no count job, no sample job of its own)
     dedicated = []
     orig = window_ops._uniqueness_window
 
     def spy_uniqueness(*args):
         cw = orig(*args)
-        sample = cw.sample
-        cw.sample = lambda *a: dedicated.append(a) or sample(*a)
+        violations = cw.violations
+        cw.violations = lambda *a: dedicated.append(a) or violations(*a)
         return cw
 
     monkeypatch.setattr(window_ops, "_uniqueness_window", spy_uniqueness)

@@ -294,7 +294,7 @@ def test_contiguity_join_plan_has_no_per_group_window(spark):
     df = spark.createDataFrame([("a", 1), ("a", 3)], "g string, i int")
     cw = _sequence_contiguous_join("g", "i", 1)
     plan = (
-        cw.violation_frame(df, None)
+        cw.violations(df, None)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
